@@ -24,11 +24,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from zonal_datacube_spark.functions.grain_cache import (
-    STATS as GRAIN_STATS,
-    warm_family_grains,
-)
+from zonal_datacube_spark.functions.grain_cache import warm_family_grains
 from zonal_datacube_spark.registry import all_queries
+from zonal_datacube_spark.sources.derived import cache_stats
 from zonal_datacube_spark.session import get_spark
 
 
@@ -169,20 +167,20 @@ def main() -> int:
                     "after": [round(x, 2) for x in load_after],
                 },
                 "suspect_under_load": suspect,
-                # grain-cache visibility (VERDICT r12 nit #3): eviction
-                # is silent-but-slow (recompute), so thrash must be
+                # cache visibility (VERDICT r12 nit #3): eviction is
+                # silent-but-slow (recompute), so thrash must be
                 # observable — a full suite run should show evictions=0
-                "grain_cache": dict(GRAIN_STATS),
+                "caches": cache_stats(),
                 "total": round(sum(timings.values()), 4),
             },
             f,
         )
-    print(
-        f"grain cache: {GRAIN_STATS['hits']} hits / "
-        f"{GRAIN_STATS['misses']} misses / "
-        f"{GRAIN_STATS['evictions']} evictions",
-        file=sys.stderr,
-    )
+    for name, stats in cache_stats().items():
+        print(
+            f"{name} cache: {stats['hits']} hits / {stats['misses']} misses / "
+            f"{stats['evictions']} evictions",
+            file=sys.stderr,
+        )
     print(bench_json_line(timings, sf))
     return 0
 

@@ -13,10 +13,8 @@ from zonal_datacube_spark.operators.analytics_ext import (
     PAGE_SIZE,
     q_sort_keyset_pagination,
 )
-from zonal_datacube_spark.operators.warehouse import (
-    _source_fingerprint,
-    daily_events_mv_path,
-)
+from zonal_datacube_spark.operators.warehouse import daily_events_mv_path
+from zonal_datacube_spark.sources.derived import corpus_tag
 
 
 def _mk_sf(tmp_path, name, tables=("events",)):
@@ -31,10 +29,10 @@ class TestMvCacheFingerprint:
     def test_fingerprint_changes_on_mtime_bump(self, tmp_path):
         d = _mk_sf(tmp_path, "a")
         src = os.path.join(d, "events.parquet")
-        f1 = _source_fingerprint(src)
+        f1 = corpus_tag(d, ("events",))
         st = os.stat(src)
         os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-        assert _source_fingerprint(src) != f1
+        assert corpus_tag(d, ("events",)) != f1
 
     def test_same_basename_different_roots_do_not_alias(self, spark, tmp_path):
         # two dataset roots named identically (".../x/sf" and ".../y/sf")

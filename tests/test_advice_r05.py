@@ -54,10 +54,15 @@ class TestDynamicOverwritePerDayBlend:
         # the crafted fixture still needs purchases SOMEWHERE in the tail
         # (otherwise the scenario is vacuous)
         sf_dir = _mk_events_dir(spark, tmp_path, crafted)
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        mode_before = spark.conf.get(mode_key)
         got = {
             r.event_type: r
             for r in q_sink_dynamic_overwrite(spark, sf_dir).collect()
         }
+        # the dynamic mode is a per-write option: the session conf that
+        # every other writer in the session reads is never touched
+        assert spark.conf.get(mode_key) == mode_before
         con = _duck_on(sf_dir)
         want = {
             r[0]: r
@@ -119,16 +124,13 @@ class TestSsspCacheHygiene:
         empty' but 'exactly the one shared rollup survives, and repeat
         runs do not ACCUMULATE anything'. A growing count across
         invocations is the r04 leak class this test exists to catch."""
-        from zonal_datacube_spark.operators.graph import (
-            _EDGE_CACHE,
-            q_graph_sssp,
-        )
+        from zonal_datacube_spark.operators.graph import _EDGES, q_graph_sssp
 
         # clean slate: clearCache() drops persists under memoized entries,
         # so drop the memo too (trade_edges_cached re-persists on a
         # cleared hit, but the test wants an attributable post-condition)
         spark.catalog.clearCache()
-        _EDGE_CACHE.clear()
+        _EDGES.clear()
         jsc = spark.sparkContext._jsc
 
         def n_persisted() -> int:
@@ -139,7 +141,7 @@ class TestSsspCacheHygiene:
         q_graph_sssp(spark, SF_SMOKE).collect()
         after_second = n_persisted()
         # the shared rollup is the ONLY survivor, and it does not grow
-        assert after_first == len(_EDGE_CACHE) == 1, (
+        assert after_first == len(_EDGES) == 1, (
             f"expected only the shared trade-edge rollup cached, "
             f"found {after_first} persisted RDDs"
         )

@@ -5,8 +5,8 @@ corpus under the temp dir were tagged by the sf_dir BASENAME alone — two
 corpora sharing a basename (the rehearsal relayout of sf0.01 vs the
 fixture sf0.01) aliased each other's caches, and a regenerated fixture
 would silently serve the stale copy: the same silent-wrong-answer class
-as the r11 streaming-glob weak mark. ``corpus_cache_tag`` embeds the
-source table's (path, mtime, size); these tests pin the de-aliasing."""
+as the r11 streaming-glob weak mark. ``derived.corpus_tag`` embeds the
+source tables' (path, mtime, size); these tests pin the de-aliasing."""
 
 from __future__ import annotations
 
@@ -16,7 +16,8 @@ import shutil
 import pytest
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.sources.loader import corpus_cache_tag, load_table
+from zonal_datacube_spark.sources.derived import corpus_tag
+from zonal_datacube_spark.sources.loader import load_table
 
 
 @pytest.fixture(scope="module")
@@ -42,18 +43,12 @@ def test_same_basename_different_corpus_gets_different_tag(twin_dir):
     assert os.path.basename(twin_dir) == os.path.basename(
         os.path.normpath(SF_SMOKE)
     )
-    assert corpus_cache_tag(SF_SMOKE, "events") != corpus_cache_tag(
-        twin_dir, "events"
-    )
-    assert corpus_cache_tag(SF_SMOKE, "orders") != corpus_cache_tag(
-        twin_dir, "orders"
-    )
+    assert corpus_tag(SF_SMOKE, ("events",)) != corpus_tag(twin_dir, ("events",))
+    assert corpus_tag(SF_SMOKE, ("orders",)) != corpus_tag(twin_dir, ("orders",))
 
 
 def test_same_corpus_tag_is_stable():
-    assert corpus_cache_tag(SF_SMOKE, "events") == corpus_cache_tag(
-        SF_SMOKE, "events"
-    )
+    assert corpus_tag(SF_SMOKE, ("events",)) == corpus_tag(SF_SMOKE, ("events",))
 
 
 def test_partitioned_events_paths_do_not_alias(spark, twin_dir):

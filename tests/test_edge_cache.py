@@ -19,7 +19,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 from zonal_datacube_spark.operators.graph import (
-    _EDGE_CACHE,
+    _EDGES,
     _trade_edges,
     trade_edges_cached,
 )
@@ -52,10 +52,10 @@ def test_cached_rollup_matches_uncached(spark):
 
 def test_repeat_call_is_a_hit_same_object(spark):
     a = trade_edges_cached(spark, SF_SMOKE)
-    n_entries = len(_EDGE_CACHE)
+    n_entries = len(_EDGES)
     b = trade_edges_cached(spark, SF_SMOKE)
     assert a is b
-    assert len(_EDGE_CACHE) == n_entries
+    assert len(_EDGES) == n_entries
     assert a.storageLevel.useMemory  # really persisted
 
 
@@ -89,5 +89,5 @@ def test_lru_eviction_unpersists(spark, edge_twin, tmp_path):
     victim = trade_edges_cached(spark, filler_roots[0])
     for r in filler_roots[1:]:
         trade_edges_cached(spark, r)
-    assert len(_EDGE_CACHE) <= _EDGE_CACHE_CAP
+    assert len(_EDGES) <= _EDGE_CACHE_CAP
     assert not victim.storageLevel.useMemory  # evicted AND unpersisted

@@ -227,7 +227,7 @@ def test_mv_rewrite_matches_direct_aggregate(spark):
 
 def test_mv_rewrite_reads_mv_not_base(spark):
     plan = formatted_plan(q_mv_rewrite(spark, SF_SMOKE))
-    assert "zds_mv_daily_events" in plan
+    assert "zds_layouts" in plan and "mv_daily_events" in plan
     assert "events.parquet" not in plan
 
 

@@ -7,7 +7,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.functions.pq import PQ_K, PQ_M, pq_ann, pq_encode, pq_train
+from zonal_datacube_spark.functions.pq import (
+    PQ_K,
+    PQ_M,
+    pq_ann,
+    pq_encode,
+    pq_fit,
+    pq_train,
+)
 from zonal_datacube_spark.operators.similarity import _dot
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -86,6 +93,23 @@ def test_pq_train_degrades_to_small_corpus(spark):
     assert len(codes) == 5
     for r in codes:
         assert all(0 <= c < 5 for c in r.codes)
+
+
+def test_pq_encode_takes_exactly_one_codebook(spark):
+    """The driver-side rows (pq_fit) and the DataFrame (pq_train) of the
+    same fit encode identically; passing both or neither is an error."""
+    import pytest
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    rows = pq_fit(emb, iters=2)
+    codebook = pq_train(emb, iters=2)
+    via_rows = pq_encode(emb, codebook_rows=rows).collect()
+    via_df = pq_encode(emb, codebook).collect()
+    assert sorted(map(tuple, via_rows)) == sorted(map(tuple, via_df))
+    with pytest.raises(ValueError, match="exactly one"):
+        pq_encode(emb, codebook, codebook_rows=rows)
+    with pytest.raises(ValueError, match="exactly one"):
+        pq_encode(emb)
 
 
 def test_pq_encode_kernel_matches_join_formulation(spark):

@@ -11,7 +11,6 @@ from zonal_datacube_spark.streaming.demo import (
     tumbling_counts,
 )
 from zonal_datacube_spark.streaming.scale_config import (
-    kafka_source_options,
     restore_confs,
     use_rocksdb_state_store,
 )
@@ -31,12 +30,3 @@ def test_rocksdb_state_store_matches_batch(spark):
     batch_rows = {tuple(r) for r in q_stream_tumbling(spark, SF_SMOKE).collect()}
     assert stream_rows == batch_rows
 
-
-def test_kafka_source_options_shape():
-    opts = kafka_source_options("broker:9092", "events", max_offsets_per_trigger=500)
-    assert opts["kafka.bootstrap.servers"] == "broker:9092"
-    assert opts["subscribe"] == "events"
-    assert opts["maxOffsetsPerTrigger"] == "500"
-    assert opts["failOnDataLoss"] == "false"
-    no_cap = kafka_source_options("b:9092", "t", max_offsets_per_trigger=None)
-    assert "maxOffsetsPerTrigger" not in no_cap

@@ -31,13 +31,12 @@ def test_compaction_produces_n_files(spark):
 
     from zonal_datacube_spark.operators.sources_ext import (
         COMPACT_FILES,
+        compacted_events_path,
         q_source_compaction,
     )
 
-    q_source_compaction(spark, SF_SMOKE).collect()  # builds the cache
-    from zonal_datacube_spark.operators.sources_ext import _cache_path
-
-    files = glob.glob(os.path.join(_cache_path(SF_SMOKE, "events_compacted"), "part-*"))
+    q_source_compaction(spark, SF_SMOKE).collect()  # builds the layout
+    files = glob.glob(os.path.join(compacted_events_path(spark, SF_SMOKE), "part-*"))
     assert len(files) == COMPACT_FILES
 
 

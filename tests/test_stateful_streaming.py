@@ -25,46 +25,3 @@ def test_stateful_profiles_match_batch(spark):
     }
     assert final == batch
 
-
-def test_transform_with_state_profile_matches_batch(spark):
-    """transformWithStateInPandas twin of the GroupState profile — skipped
-    where the state-server protocol's protobuf dependency is absent (this
-    container); runs green on any standard Spark 4 distribution."""
-    import importlib.util
-
-    import pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("transformWithState needs google.protobuf in workers")
-    from pyspark.sql import functions as F
-
-    from zonal_datacube_spark.sources.loader import load_table
-    from zonal_datacube_spark.streaming.stateful import run_stateful_tws_demo
-
-    sink = run_stateful_tws_demo(spark, SF_SMOKE, table="zds_tws_test")
-    final = {
-        r.user_id: (r.n_events, r.sum_value, r.last_us)
-        for r in sink.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.expr("max_by(sum_value, n_events)").alias("sum_value"),
-            F.expr("max_by(last_us, n_events)").alias("last_us"),
-        )
-        .collect()
-    }
-    batch = {
-        r.user_id: (r.n_events, r.sum_value, r.last_us)
-        for r in load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.max(F.unix_micros("ts")).alias("last_us"),
-        )
-        .collect()
-    }
-    assert final == batch

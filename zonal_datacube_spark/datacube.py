@@ -17,21 +17,12 @@ Pipeline (the Raptor decomposition, PAPERS.md:9):
 2. pixel→zone assignment: broadcast join on bbox containment;
 3. per-zone aggregate: partial per-partition + final combine.
 
-Two execution paths are provided and tested equal:
-- ``zonal_stats``        — pure relational (the default; whole-stage codegen);
-- ``zonal_stats_tiled``  — applyInPandas per-tile partial kernels + final
-  combine (the reference's per-tile analysis-function model, for custom
-  NumPy statistics that SQL can't express).
-
 Scale: pixels are generated/laid out so one tile ≈ one task; nothing ever
 materializes a global raster. 100 TB of pixels = more tiles, same plan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from zonal_datacube_spark.functions.local_rel import local_relation
@@ -129,7 +120,7 @@ def assign_zones(pixels: DataFrame, zones: DataFrame) -> DataFrame:
 
 
 def zonal_stats(pixels: DataFrame, zones: DataFrame, value_col: str = "elevation") -> DataFrame:
-    """Relational zonal statistics (the default path)."""
+    """Relational zonal statistics (whole-stage codegen)."""
     return (
         assign_zones(pixels, zones)
         .groupBy("zone_id", "zone_name")
@@ -139,48 +130,6 @@ def zonal_stats(pixels: DataFrame, zones: DataFrame, value_col: str = "elevation
             F.round(F.avg(value_col), 6).alias("mean_v"),
             F.round(F.min(value_col), 3).alias("min_v"),
             F.round(F.max(value_col), 3).alias("max_v"),
-        )
-        .orderBy("zone_id")
-    )
-
-
-def zonal_stats_tiled(
-    pixels: DataFrame, zones: DataFrame, value_col: str = "elevation"
-) -> DataFrame:
-    """Per-tile kernel path: applyInPandas computes *partial* statistics
-    per (tile, zone) group — the slot where the reference runs arbitrary
-    NumPy per tile — then a relational final combine merges partials.
-
-    The combine is exact: sums/counts/min/max merge associatively, mean is
-    derived at the end (never averaged across tiles)."""
-    assigned = assign_zones(pixels, zones).select(
-        "tile_id", "zone_id", "zone_name", F.col(value_col).alias("v")
-    )
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf["v"].dropna()
-        return pd.DataFrame(
-            {
-                "zone_id": [pdf["zone_id"].iloc[0]],
-                "zone_name": [pdf["zone_name"].iloc[0]],
-                "n": [int(v.size)],
-                "s": [float(v.sum())],
-                "mn": [float(v.min()) if v.size else None],
-                "mx": [float(v.max()) if v.size else None],
-            }
-        )
-
-    partials = assigned.groupBy("tile_id", "zone_id").applyInPandas(
-        partial, "zone_id INT, zone_name STRING, n BIGINT, s DOUBLE, mn DOUBLE, mx DOUBLE"
-    )
-    return (
-        partials.groupBy("zone_id", "zone_name")
-        .agg(
-            F.sum("n").alias("n_pixels"),
-            F.round(F.sum("s"), 2).alias("sum_v"),
-            F.round(F.sum("s") / F.sum("n"), 6).alias("mean_v"),
-            F.round(F.min("mn"), 3).alias("min_v"),
-            F.round(F.max("mx"), 3).alias("max_v"),
         )
         .orderBy("zone_id")
     )

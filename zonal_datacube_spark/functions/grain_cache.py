@@ -18,10 +18,10 @@ every percentile/fence/outlier readout from it, rather than re-scanning
 100 TB per dashboard tile.
 
 Safety rails:
-- The cache key embeds the SparkContext applicationId, so a fresh
-  session can never be handed a DataFrame bound to a dead context.
-- Entries are LRU-evicted (unpersist) beyond a small cap; eviction is
-  safe mid-use — an unpersisted DataFrame silently recomputes.
+- Entries live in one ``DerivedCache`` (sources/derived.py): keyed by
+  the SparkContext applicationId and the source table's content stamp,
+  LRU-evicted (unpersist) beyond a small cap; eviction is safe mid-use —
+  an unpersisted DataFrame silently recomputes.
 - Only fixture tables via ``load_table`` are cacheable here, and the
   value axis is a caller-supplied SQL expression that becomes part of
   the key — two different derivations can never collide.
@@ -33,14 +33,12 @@ Safety rails:
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from zonal_datacube_spark.sources.loader import load_table, source_stamp
+from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
+from zonal_datacube_spark.sources.loader import load_table
 
 GRAIN_COUNT = "_gc_c"
 
@@ -54,18 +52,18 @@ SWEPT_COUNT = "_gp_c"
 SWEPT_CUM = "_gp_cum"
 SWEPT_TOTAL = "_gp_n"
 
-_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
 # r13: the swept-grain tier doubles the live entries per corpus (3 value
 # + 3 swept); a two-corpus interleave (fixture + rehearsal relayout)
 # must still fit without evict-thrash, so the cap is 2 × 2 × 4.
 _CAP = 16
+_GRAINS = DerivedCache("grains", _CAP)
 
 # Observability (VERDICT r12 nit #3): eviction at _CAP is SILENT — an
 # unpersisted grain recomputes correctly, so thrash shows up only as
-# time. Counters make it visible; bench.py prints them in its tail and
-# tests/test_grain_cache_stats.py interleaves two corpora to prove the
+# time. The live counters make it visible; bench.py prints them in its
+# tail and tests/test_grain_cache.py interleaves two corpora to prove the
 # cap holds without evict-thrash.
-STATS = {"hits": 0, "misses": 0, "evictions": 0}
+STATS = _GRAINS.stats
 
 # The canonical shared grain axes — every percentile-family key requests
 # EXACTLY one of these specs (table, part_cols, val_expr, val_name), so
@@ -109,50 +107,25 @@ def table_value_grain(
     read-only and must NOT unpersist it — lifecycle belongs to the LRU
     here. Folds over it (sweeps, fence joins, weighted counts) read the
     cache instead of re-scanning the fact table."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        # source-content stamp: a corpus REBUILT under the same path
-        # within one process (scale_rehearsal relayouts do exactly this)
-        # must miss the cache, never serve the stale persisted grain.
-        # Directory sources fold the per-part listing (ADVICE r12: the
-        # dir's own stat survives an in-place part rewrite).
-        source_stamp(src),
-        table,
-        tuple(part_cols),
-        val_expr,
-        val_name,
-    )
-    hit = _CACHE.get(key)
-    if hit is not None:
-        STATS["hits"] += 1
-        _CACHE.move_to_end(key)
-        return hit
-    STATS["misses"] += 1
-    grain = (
-        load_table(spark, sf_dir, table)
-        .groupBy(*part_cols, F.expr(val_expr).alias(val_name))
-        .agg(F.count("*").alias(GRAIN_COUNT))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # materialize NOW, under the session conf: this is the one
-    # fact-table-scaled shuffle — downstream folds then read the cache
-    # at grain-scale parallelism (percentiles.GRAIN_FOLD_PARTITIONS)
-    grain.count()
-    _CACHE[key] = grain
-    while len(_CACHE) > _CAP:
-        STATS["evictions"] += 1
-        _, evicted = _CACHE.popitem(last=False)
-        try:
-            evicted.unpersist()
-        except Exception:
-            # an entry keyed by a STOPPED SparkContext (new session in
-            # the same process) cannot be unpersisted — dropping the
-            # reference is all the cleanup that remains possible, and
-            # eviction must never break the live caller
-            pass
-    return grain
+    # the key folds the source's content stamp: a corpus REBUILT under
+    # the same path within one process (scale_rehearsal relayouts do
+    # exactly this) must miss, never serve the stale persisted grain
+    key = (corpus_key(sf_dir, (table,)), tuple(part_cols), val_expr, val_name)
+
+    def build() -> DataFrame:
+        grain = (
+            load_table(spark, sf_dir, table)
+            .groupBy(*part_cols, F.expr(val_expr).alias(val_name))
+            .agg(F.count("*").alias(GRAIN_COUNT))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # materialize NOW, under the session conf: this is the one
+        # fact-table-scaled shuffle — downstream folds then read the
+        # cache at grain-scale parallelism (percentiles.GRAIN_FOLD_PARTITIONS)
+        grain.count()
+        return grain
+
+    return _GRAINS.get_or_build(spark, key, build)
 
 
 def table_swept_grain(
@@ -182,54 +155,31 @@ def table_swept_grain(
     interpolation downstream."""
     from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
 
-    src = os.path.join(sf_dir, f"{table}.parquet")
     key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        source_stamp(src),
-        table,
-        tuple(part_cols),
-        val_expr,
-        val_name,
-        "swept",
+        corpus_key(sf_dir, (table,)), tuple(part_cols), val_expr, val_name, "swept"
     )
-    hit = _CACHE.get(key)
-    if hit is not None:
-        STATS["hits"] += 1
-        _CACHE.move_to_end(key)
-        return hit
-    STATS["misses"] += 1
-    grain = table_value_grain(spark, sf_dir, table, part_cols, val_expr, val_name)
-    counts = grain.select(
-        *part_cols,
-        val_name,
-        F.col(GRAIN_COUNT).cast("bigint").alias(SWEPT_COUNT),
-    )
-    swept = prefix_sweep(
-        counts,
-        list(part_cols),
-        val_name,
-        sum_cols={SWEPT_CUM: SWEPT_COUNT},
-        total_sum_cols={SWEPT_TOTAL: SWEPT_COUNT},
-        boundaries="width",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    swept.count()
-    _CACHE[key] = swept
-    while len(_CACHE) > _CAP:
-        STATS["evictions"] += 1
-        _, evicted = _CACHE.popitem(last=False)
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass
-    return swept
+
+    def build() -> DataFrame:
+        grain = table_value_grain(spark, sf_dir, table, part_cols, val_expr, val_name)
+        counts = grain.select(
+            *part_cols,
+            val_name,
+            F.col(GRAIN_COUNT).cast("bigint").alias(SWEPT_COUNT),
+        )
+        swept = prefix_sweep(
+            counts,
+            list(part_cols),
+            val_name,
+            sum_cols={SWEPT_CUM: SWEPT_COUNT},
+            total_sum_cols={SWEPT_TOTAL: SWEPT_COUNT},
+            boundaries="width",
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        swept.count()
+        return swept
+
+    return _GRAINS.get_or_build(spark, key, build)
 
 
 def clear_grain_cache() -> None:
     """Unpersist and drop every cached grain (test hook)."""
-    while _CACHE:
-        _, df = _CACHE.popitem(last=False)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    _GRAINS.clear()

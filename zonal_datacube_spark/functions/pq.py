@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.operators.similarity import _dot
+from zonal_datacube_spark.sources.derived import DerivedCache
 
 # 16 subspaces x 4 dims x 4-bit codes = 8 bytes/vector (32x compression).
 # At a fixed code budget, narrower subspaces quantize better: k-means
@@ -101,7 +102,10 @@ def _assign(sv: DataFrame, codebook: DataFrame, d: int) -> DataFrame:
     )
 
 
-def _codebook_df(spark, rows: dict[tuple[int, int], list[float]]) -> DataFrame:
+Codebook = dict[tuple[int, int], list[float]]  # (sub, code) -> cvec
+
+
+def _codebook_df(spark, rows: Codebook) -> DataFrame:
     data = [(s, c, [float(v) for v in vec]) for (s, c), vec in sorted(rows.items())]
     return spark.createDataFrame(data, "sub INT, code INT, cvec ARRAY<DOUBLE>")
 
@@ -137,9 +141,20 @@ def pq_train(
     ksub: int = PQ_K,
     iters: int = 3,
     dim: int | None = None,
-    with_rows: bool = False,
-):
-    """Fit per-subspace codebooks; returns (sub, code, cvec ARRAY<DOUBLE>).
+) -> DataFrame:
+    """Fit per-subspace codebooks (``pq_fit``) as a (sub, code, cvec
+    ARRAY<DOUBLE>) DataFrame."""
+    return _codebook_df(emb.sparkSession, pq_fit(emb, m, ksub, iters, dim))
+
+
+def pq_fit(
+    emb: DataFrame,
+    m: int = PQ_M,
+    ksub: int = PQ_K,
+    iters: int = 3,
+    dim: int | None = None,
+) -> Codebook:
+    """Fit per-subspace codebooks; returns ``{(sub, code): cvec}``.
 
     Codebook fitting runs DRIVER-SIDE in numpy over a bounded
     deterministic sample (≤ ``PQ_TRAIN_CAP`` vectors — capped
@@ -171,15 +186,12 @@ def pq_train(
     ``len(sample)``-entry codebook (ADVICE r09: the seed slice, update
     loop, and output dict all use the effective count).
 
-    ``with_rows=True`` additionally returns the ``{(sub, code): cvec}``
-    dict the DataFrame was built FROM (r14, guide §1.2): the codebook is
-    fitted driver-side, so consumers that need its values on the driver
-    (LUT folds, ``pq_encode``'s kernel) should take this dict instead of
-    round-tripping a ``codebook.collect()`` job over the LogicalRDD the
-    same values were just parallelized into."""
+    The codebook is fitted driver-side, so consumers that need its
+    values on the driver (LUT folds, ``pq_encode``'s kernel) take this
+    dict directly instead of round-tripping a ``collect()`` job over a
+    DataFrame built from it (r14, guide §1.2)."""
     import numpy as np
 
-    spark = emb.sparkSession
     sample = (
         emb.select("vec_id", "embedding")
         .orderBy(F.xxhash64("vec_id"), "vec_id")
@@ -203,24 +215,24 @@ def pq_train(
                 mask = assign[s] == c
                 if mask.any():
                     cb[s, c] = sub[s][mask].mean(axis=0)
-    current = {
+    return {
         (s, c): [float(v) for v in cb[s, c]]
         for s in range(m)
         for c in range(ksub_eff)
     }
-    df = _codebook_df(spark, current)
-    return (df, current) if with_rows else df
 
 
 def pq_encode(
     emb: DataFrame,
-    codebook: DataFrame,
+    codebook: DataFrame | None = None,
     m: int = PQ_M,
     dim: int | None = None,
-    codebook_rows: dict[tuple[int, int], list[float]] | None = None,
+    codebook_rows: Codebook | None = None,
 ) -> DataFrame:
     """(vec_id, codes ARRAY<INT>) — the compressed corpus representation:
-    m small ints instead of dim floats.
+    m small ints instead of dim floats. The codebook comes as exactly one
+    of a ``codebook`` DataFrame (``pq_train``) or the driver-side
+    ``codebook_rows`` dict (``pq_fit``).
 
     Encode is a MAP-ONLY Arrow kernel (r11): the codebook is
     control-plane sized (m×ksub×(dim/m) doubles ≈ 8 KB) and ships
@@ -240,13 +252,12 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
+    if (codebook is None) == (codebook_rows is None):
+        raise ValueError("pass exactly one of codebook or codebook_rows")
     if dim is None:
         dim = len(emb.select("embedding").first()[0])
     d = dim // m
     if codebook_rows is not None:
-        # the codebook was fitted driver-side (pq_train with_rows=True):
-        # use its values directly instead of a collect() job over the
-        # LogicalRDD they were just parallelized into (r14, guide §1.2)
         entries = [(s, c, v) for (s, c), v in codebook_rows.items()]
     else:
         rows = codebook.collect()  # bounded: m × ksub_eff codebook entries
@@ -343,9 +354,26 @@ def _exact_rerank(
 # table) is constructed offline and amortized over queries; re-training
 # per query would misstate the serving cost. Keyed by a caller-provided
 # corpus key + every training parameter; entries hold KB-sized local
-# relations plus the persisted code table, all bound to the building
-# SparkSession (callers in a fresh session must use a fresh key or None).
-_INDEX_CACHE: dict[tuple, tuple] = {}
+# relations plus the persisted code table. Two index kinds per corpus,
+# two corpora live at once.
+_INDEX_CAP = 4
+_INDEXES = DerivedCache("ann_indexes", _INDEX_CAP)
+
+
+def _cached_index(emb: DataFrame, cache_key, params: tuple, build) -> tuple:
+    """``build()``'s index tuple, whose last member is the code table.
+    With a ``cache_key`` it is built once per (key, params) with the code
+    table persisted, and served from ``_INDEXES`` afterwards."""
+    if cache_key is None:
+        return build()
+
+    def build_persisted() -> tuple:
+        *head, codes = build()
+        return (*head, codes.persist())
+
+    return _INDEXES.get_or_build(
+        emb.sparkSession, (*params, cache_key), build_persisted
+    )
 
 
 def ivf_pq_ann(
@@ -361,7 +389,7 @@ def ivf_pq_ann(
     train_mod: int = 1,
     dim: int | None = None,
     kmeans_iters: int = 2,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """The full production ANN stack: IVF cell pruning × PQ compression.
 
@@ -373,29 +401,26 @@ def ivf_pq_ann(
     DataFrame joins: every stage is an equi-join or aggregate; the only
     broadcast state is centroids + codebook + per-probe LUT (all KB-sized).
 
-    ``cache_key`` (e.g. the corpus path) enables the build/serve split:
-    training + encoding run once per (key, params) and later calls serve
+    ``cache_key`` (the corpus identity, ``derived.corpus_key``) enables
+    the build/serve split: training + encoding run once per (key, params)
+    and later calls serve
     from the cached index — the offline-build lifecycle every production
     ANN deployment uses."""
     from zonal_datacube_spark.functions.kmeans import assign_cells, kmeans_fit
 
-    ckey = ("ivfpq", cache_key, n_cells, m, ksub, iters, train_mod, kmeans_iters)
-    cached = _INDEX_CACHE.get(ckey) if cache_key is not None else None
-    if cached is not None:
-        quantizer, codebook, codes = cached
-    else:
-        if dim is None:
-            dim = len(emb.select("embedding").first()[0])
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
+        d = dim if dim is not None else len(emb.select("embedding").first()[0])
         quantizer = kmeans_fit(emb, k=n_cells, iters=kmeans_iters)
-        assigned = assign_cells(emb, quantizer, dim=dim).select("vec_id", "cell")
+        assigned = assign_cells(emb, quantizer, dim=d).select("vec_id", "cell")
         train_emb = (
             emb.filter(F.col("vec_id") % train_mod == 0) if train_mod > 1 else emb
         )
-        codebook = pq_train(train_emb, m, ksub, iters, dim=dim)
-        codes = pq_encode(emb, codebook, m, dim=dim).join(assigned, "vec_id")
-        if cache_key is not None:
-            codes = codes.persist()
-            _INDEX_CACHE[ckey] = (quantizer, codebook, codes)
+        codebook = pq_train(train_emb, m, ksub, iters, dim=d)
+        codes = pq_encode(emb, codebook, m, dim=d).join(assigned, "vec_id")
+        return quantizer, codebook, codes
+
+    params = ("ivfpq", n_cells, m, ksub, iters, train_mod, kmeans_iters)
+    quantizer, codebook, codes = _cached_index(emb, cache_key, params, build)
     probes = emb.filter(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
@@ -449,7 +474,7 @@ def pq_ann(
     refine: int = 10,
     train_mod: int = 1,
     dim: int | None = None,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Top-k ANN over the PQ-compressed corpus: train → encode → ADC
     shortlist of ``refine·k`` per probe → exact re-rank of the shortlist
@@ -461,21 +486,16 @@ def pq_ann(
     ``train_mod`` > 1 trains codebooks on the deterministic 1/train_mod
     slice ``vec_id % train_mod == 0`` — codebooks need ~100·K points per
     subspace, not the corpus; production PQ always trains on a sample."""
-    ckey = ("pq", cache_key, m, ksub, iters, train_mod)
-    cached = _INDEX_CACHE.get(ckey) if cache_key is not None else None
-    if cached is not None:
-        codebook, codes = cached
-    else:
-        if dim is None:
-            dim = len(emb.select("embedding").first()[0])
+    def build() -> tuple[DataFrame, DataFrame]:
+        d = dim if dim is not None else len(emb.select("embedding").first()[0])
         train_emb = (
             emb.filter(F.col("vec_id") % train_mod == 0) if train_mod > 1 else emb
         )
-        codebook = pq_train(train_emb, m, ksub, iters, dim=dim)
-        codes = pq_encode(emb, codebook, m, dim=dim)
-        if cache_key is not None:
-            codes = codes.persist()
-            _INDEX_CACHE[ckey] = (codebook, codes)
+        codebook = pq_train(train_emb, m, ksub, iters, dim=d)
+        return codebook, pq_encode(emb, codebook, m, dim=d)
+
+    params = ("pq", m, ksub, iters, train_mod)
+    codebook, codes = _cached_index(emb, cache_key, params, build)
     probes = emb.filter(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )

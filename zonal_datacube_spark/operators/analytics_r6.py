@@ -341,7 +341,7 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means is independent, so the combined loop produces bit-identical
     codebooks while halving the driver round-trips that dominate this
     key's cost). Only the ADC fold splits by variant afterwards."""
-    from zonal_datacube_spark.functions.pq import pq_encode, pq_train
+    from zonal_datacube_spark.functions.pq import pq_encode, pq_fit
     from zonal_datacube_spark.operators.similarity import _dot
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -378,15 +378,12 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-joined the rotated output back on vec_id, paying a shuffle for
     # data the GEMV batch already held)
     both = _rotate(emb, concat_raw=True).persist()
-    # with_rows: the codebook is fitted DRIVER-side, so take its values
-    # directly for the LUT fold and the encode kernel — the r13 shape
-    # re-collected the LogicalRDD the same values were parallelized into,
-    # two pure round-trip jobs (r14, guide §1.2 job-count discipline)
-    cb, cb_fit = pq_train(
-        both, 2 * OPQ_M, OPQ_KSUB, iters=OPQ_ITERS, dim=2 * OPQ_DIM,
-        with_rows=True,
-    )
-    codes = pq_encode(both, cb, 2 * OPQ_M, dim=2 * OPQ_DIM, codebook_rows=cb_fit)
+    # the codebook is fitted DRIVER-side, so its values feed the LUT fold
+    # and the encode kernel directly — the r13 shape re-collected the
+    # LogicalRDD the same values were parallelized into, two pure
+    # round-trip jobs (r14, guide §1.2 job-count discipline)
+    cb_fit = pq_fit(both, 2 * OPQ_M, OPQ_KSUB, iters=OPQ_ITERS, dim=2 * OPQ_DIM)
+    codes = pq_encode(both, m=2 * OPQ_M, dim=2 * OPQ_DIM, codebook_rows=cb_fit)
 
     # ADC with a per-variant split. The LUT is CONTROL-PLANE sized
     # (probes × 2M × K = 5×32×16 partials — the object faiss ships to

@@ -29,13 +29,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
 from zonal_datacube_spark.sources.loader import load_table
 from zonal_datacube_spark.functions.local_rel import local_relation
 
@@ -69,53 +67,22 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem-scaled at 100 TB). The rollup itself is SCHEMA-bounded
 # (≤ |nations|² = 625 rows at any SF — nations don't scale with data),
 # so persisting it is a control-plane-sized cache, never a data-scaled
-# one. Content-stamped on all four source tables (ADVICE r12 class: a
-# regenerated corpus must miss, even rewritten in place); LRU-capped;
-# evicted entries are unpersisted. bench.py's warm-up pagerank call
-# fills it, billing the one fact scan to suite warm-up exactly like the
-# percentile-family grains.
-# SINGLE-THREADED-DRIVER assumption (ADVICE r13, same contract as
-# percentiles._fold_partitions): this OrderedDict is unsynchronized and
-# its persist/unpersist side effects are not atomic — the engine's
-# harnesses run keys sequentially on one driver thread; a future
-# multi-threaded caller must add a lock before sharing it.
-_EDGE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+# one. Keyed on all four source tables' content stamps (ADVICE r12
+# class: a regenerated corpus must miss, even rewritten in place).
+# bench.py's warm-up pagerank call fills it, billing the one fact scan
+# to suite warm-up exactly like the percentile-family grains.
 _EDGE_CACHE_CAP = 4
+_EDGES = DerivedCache("trade_edges", _EDGE_CACHE_CAP)
+_EDGE_TABLES = ("lineitem", "orders", "customer", "supplier")
 
 
 def trade_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zonal_datacube_spark.sources.loader import source_stamp
+    def build() -> DataFrame:
+        df = _trade_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()  # materialize eagerly: ≤ nations² rows by construction
+        return df
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        tuple(
-            source_stamp(os.path.join(sf_dir, f"{t}.parquet"))
-            for t in ("lineitem", "orders", "customer", "supplier")
-        ),
-    )
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        _EDGE_CACHE.move_to_end(key)
-        # a spark.catalog.clearCache() elsewhere (tests, interactive use)
-        # drops the persist UNDER the memoized DataFrame — without this
-        # guard the hit would silently recompute the fact join on every
-        # downstream use (the silent-slow twin of the ADVICE-r12 stale
-        # -cache class)
-        if hit.storageLevel == StorageLevel.NONE:
-            hit.persist(StorageLevel.MEMORY_AND_DISK)
-            hit.count()
-        return hit
-    df = _trade_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()  # materialize eagerly: ≤ nations² rows by construction
-    _EDGE_CACHE[key] = df
-    while len(_EDGE_CACHE) > _EDGE_CACHE_CAP:
-        _, old = _EDGE_CACHE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # a stopped session's entry just drops
-    return df
+    return _EDGES.get_or_build(spark, (corpus_key(sf_dir, _EDGE_TABLES),), build)
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,17 +17,13 @@ oracle-checked keys.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-_EVO_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_schema_evo_cache")
 
 
 def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,19 +65,17 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def evolved_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Two-generation orders layout: gen1 (even orderkeys) lacks
     o_orderpriority; gen2 (odd orderkeys) carries it."""
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
 
-    tag = corpus_cache_tag(sf_dir, "orders")  # corpus identity, not basename
-    path = os.path.join(_EVO_CACHE_ROOT, tag, "orders_evolved")
-    if not os.path.exists(os.path.join(path, "gen=2", "_SUCCESS")):
+    def build(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
         )
         gen1 = orders.filter(F.col("o_orderkey") % 2 == 0).drop("o_orderpriority")
         gen2 = orders.filter(F.col("o_orderkey") % 2 == 1)
-        gen1.write.mode("overwrite").parquet(os.path.join(path, "gen=1"))
-        gen2.write.mode("overwrite").parquet(os.path.join(path, "gen=2"))
-    return path
+        gen1.write.mode("overwrite").parquet(f"{path}/gen=1")
+        gen2.write.mode("overwrite").parquet(f"{path}/gen=2")
+
+    return layout(sf_dir, ("orders",), "orders_evolved", build)
 
 
 def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,13 +26,13 @@ correctness artifact*, not just in library code + unit tests:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.merge import upsert
 from zonal_datacube_spark.functions.salting import salted_join, salted_zonal_stats
+from zonal_datacube_spark.sources.derived import corpus_tag, layout
 from zonal_datacube_spark.sources.loader import load_orc, load_table
 from zonal_datacube_spark.sources.sinks import write_orc
 
@@ -146,36 +146,23 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "event_type", "value", F.col("rn").cast("int").alias("rn"))
 
 
-_ORC_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_orc_cache")
-
-
 def orc_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir) an ORC copy of orders under the system
-    temp dir — the ORC-side twin of partitioned_events_path (and like it,
-    tagged by corpus identity, not basename — r12 review)."""
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, "orders")
-    path = os.path.join(_ORC_CACHE_ROOT, tag, "orders_orc")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_orc(load_table(spark, sf_dir, "orders"), path)
-    return path
-
-
-_ZORDER_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_zorder_cache")
+    """Materialize (once per corpus) an ORC copy of orders — the ORC-side
+    twin of partitioned_events_path."""
+    return layout(
+        sf_dir, ("orders",), "orders_orc",
+        lambda p: write_orc(load_table(spark, sf_dir, "orders"), p),
+    )
 
 
 def zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir) events laid out in Morton order over
+    """Materialize (once per corpus) events laid out in Morton order over
     (user bucket, value bucket) — the multi-dimensional data-skipping
     layout (functions/zorder.py); filters on EITHER dimension prune files
     by footer statistics (proven in tests/test_zorder.py)."""
     from zonal_datacube_spark.functions.zorder import write_zordered
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
 
-    tag = corpus_cache_tag(sf_dir, "events")
-    path = os.path.join(_ZORDER_CACHE_ROOT, tag, "events_zorder")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         ev = (
             load_table(spark, sf_dir, "events")
             .withColumn("ub", F.pmod("user_id", F.lit(64)).cast("int"))
@@ -187,7 +174,8 @@ def zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         write_zordered(ev, path, "ub", "vb", bits=6, n_files=8)
-    return path
+
+    return layout(sf_dir, ("events",), "events_zorder", build)
 
 
 def q_source_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,7 +242,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per sf_dir) orders and lineitem as bucketed+sorted
+    """Materialize (once per corpus) orders and lineitem as bucketed+sorted
     managed tables on the join key — the choose-the-partitioning-once
     storage layout that every later equi-join/aggregation on that key reads
     shuffle-free."""
@@ -262,12 +250,13 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import shutil
 
     from zonal_datacube_spark.sources.bucketing import write_bucketed
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
 
     # corpus-identity tag (r12 review: basename-only table names meant a
     # session touching two same-named corpora would silently serve the
     # first one's buckets to the second), sanitized for the catalog
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", corpus_cache_tag(sf_dir, "orders"))
+    tag = re.sub(
+        r"[^A-Za-z0-9_]", "_", corpus_tag(sf_dir, ("orders", "lineitem"))
+    )
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")

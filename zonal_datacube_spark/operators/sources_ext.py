@@ -22,17 +22,15 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table
 from zonal_datacube_spark.sources.sinks import write_csv, write_json, write_parquet
 from zonal_datacube_spark.functions.local_rel import local_relation
-
-_SRC_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_sources_cache")
 
 ORDERS_CSV_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
@@ -43,48 +41,27 @@ DOCS_JSON_SCHEMA = (
 )
 
 
-_CACHE_SRC_TABLE = {
-    # which fixture table each derived copy is materialized FROM — the
-    # corpus_cache_tag identity source (basename-only tags aliased
-    # same-named corpora; r12 review)
-    "orders_csv": "orders",
-    "orders_csv_corrupt": "orders",
-    "documents_jsonl": "documents",
-    "documents_txt": "documents",
-    "events_by_type": "events",
-    "events_by_type_1f": "events",
-    "events_compacted": "events",
-}
-
-
-def _cache_path(sf_dir: str, name: str) -> str:
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, _CACHE_SRC_TABLE[name])
-    return os.path.join(_SRC_CACHE_ROOT, tag, name)
-
-
 def csv_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _cache_path(sf_dir, "orders_csv")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_csv(load_table(spark, sf_dir, "orders"), path)
-    return path
+    return layout(
+        sf_dir, ("orders",), "orders_csv",
+        lambda p: write_csv(load_table(spark, sf_dir, "orders"), p),
+    )
 
 
 def jsonl_documents_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _cache_path(sf_dir, "documents_jsonl")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_json(load_table(spark, sf_dir, "documents"), path)
-    return path
+    return layout(
+        sf_dir, ("documents",), "documents_jsonl",
+        lambda p: write_json(load_table(spark, sf_dir, "documents"), p),
+    )
 
 
 def partitioned_events_by_type_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _cache_path(sf_dir, "events_by_type")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_parquet(
-            load_table(spark, sf_dir, "events"), path, partition_by=["event_type"]
-        )
-    return path
+    return layout(
+        sf_dir, ("events",), "events_by_type",
+        lambda p: write_parquet(
+            load_table(spark, sf_dir, "events"), p, partition_by=["event_type"]
+        ),
+    )
 
 
 def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -142,11 +119,11 @@ def corrupt_csv_orders_path(spark: SparkSession, sf_dir: str) -> str:
     deliberately malformed lines — wrong arity / unparseable types, the
     rows every real ingest meets."""
     base = csv_orders_path(spark, sf_dir)
-    path = _cache_path(sf_dir, "orders_csv_corrupt")
-    if not os.path.exists(os.path.join(path, "_marker")):
+
+    def build(path: str) -> None:
         import shutil
 
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(path)
         for f in os.listdir(base):
             if f.endswith(".csv"):
                 shutil.copy(os.path.join(base, f), os.path.join(path, f))
@@ -161,9 +138,8 @@ def corrupt_csv_orders_path(spark: SparkSession, sf_dir: str) -> str:
             fh.write("o_orderkey,o_custkey,o_orderstatus,o_totalprice,"
                      "o_orderdate,o_orderpriority\n")
             fh.write("\n".join(bad[:N_CORRUPT]) + "\n")
-        with open(os.path.join(path, "_marker"), "w") as fh:
-            fh.write("ok")
-    return path
+
+    return layout(sf_dir, ("orders",), "orders_csv_corrupt", build)
 
 
 def q_source_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,20 +169,24 @@ def q_source_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
+    # repartition (not coalesce): exact file-count control with
+    # round-robin balancing — the one shuffle is the compaction's price
+    return layout(
+        sf_dir, ("events",), "events_compacted",
+        lambda p: write_parquet(
+            load_table(spark, sf_dir, "events").repartition(COMPACT_FILES), p
+        ),
+    )
+
+
 def q_source_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction: rewrite the (many-file) events table into
     COMPACT_FILES parquet files and prove content equality through the
     rewrite. Small-files is THE silent killer of 100 TB scans (one task +
     one footer fetch per file); compaction is a repartition-write whose
     only observable change is the file count (asserted in tests)."""
-    path = _cache_path(sf_dir, "events_compacted")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # repartition (not coalesce): exact file-count control with
-        # round-robin balancing — the one shuffle is the compaction's price
-        write_parquet(
-            load_table(spark, sf_dir, "events").repartition(COMPACT_FILES), path
-        )
-    ev = spark.read.parquet(path)
+    ev = spark.read.parquet(compacted_events_path(spark, sf_dir))
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(F.col("event_id") % 9973).alias("id_checksum"),
@@ -217,11 +197,13 @@ def q_source_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_lines_path(spark: SparkSession, sf_dir: str) -> str:
     """documents.text exported one line per document (fixture text is
     single-line), the raw-corpus form text pipelines start from."""
-    path = _cache_path(sf_dir, "documents_txt")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents").select("text")
-        docs.write.mode("overwrite").text(path)
-    return path
+    return layout(
+        sf_dir, ("documents",), "documents_txt",
+        lambda p: load_table(spark, sf_dir, "documents")
+        .select("text")
+        .write.mode("overwrite")
+        .text(p),
+    )
 
 
 def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,8 +308,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUNCATE the whole table — the classic production data-loss
     footgun). Demonstrated end-to-end: a full daily×type rollup lands
     partitioned by day; a corrected job (purchases only) then rewrites
-    the last 3 day-partitions under
-    spark.sql.sources.partitionOverwriteMode=dynamic; the read-back
+    the last 3 day-partitions with the write option
+    partitionOverwriteMode=dynamic; the read-back
     shows old days intact and tail days fully replaced. The oracle
     computes that exact blend relationally."""
     ev = load_table(spark, sf_dir, "events")
@@ -347,12 +329,11 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrected = daily.filter(
         (F.col("day") >= cutoff) & (F.col("event_type") == "purchase")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        corrected.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # a per-write option, not the session conf: nothing session-global
+    # changes, so concurrent writers never see each other's mode
+    corrected.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("day").parquet(out)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")

@@ -40,6 +40,7 @@ from zonal_datacube_spark.functions.prefix_sweep import (
     ntile_from_row_number,
     prefix_sweep,
 )
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 VAR_MIN_QTY = 30.0
@@ -479,20 +480,14 @@ def _metadata_layout_path(spark: SparkSession, sf_dir: str) -> str:
     """events partitioned by type, ONE file per partition directory
     (repartition by the partition key first) — deterministic file counts
     so the oracle can pin them."""
-    import os
-
-    from zonal_datacube_spark.operators.sources_ext import _cache_path
-
-    path = _cache_path(sf_dir, "events_by_type_1f")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .repartition("event_type")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    return path
+    return layout(
+        sf_dir, ("events",), "events_by_type_1f",
+        lambda p: load_table(spark, sf_dir, "events")
+        .repartition("event_type")
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(p),
+    )
 
 
 def q_scan_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:

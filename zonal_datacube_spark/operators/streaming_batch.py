@@ -17,12 +17,11 @@ Spark's 1-day/6-hour windows are epoch-aligned, so window starts equal
 from __future__ import annotations
 
 import contextlib
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
@@ -64,29 +63,19 @@ def _skip_no_data_batch(spark: SparkSession):
     finally:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
 
-_PART_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_partitioned_events")
-
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir, cached under the system temp dir) a
-    day-partitioned copy of events — the on-disk fishnet-tile analogue:
-    ``day=YYYY-MM-DD/`` directories let a time predicate prune whole
-    partitions at planning time instead of filtering rows at runtime.
-
-    The cache tag embeds the SOURCE's identity (``corpus_cache_tag`` —
-    absolute path + events mtime/size), not just the dir basename (r12
-    review): two corpora sharing a basename must never alias each
-    other's cached copy, and regenerated fixtures must invalidate it."""
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, "events")
-    path = os.path.join(_PART_CACHE_ROOT, tag, "events_by_day")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.date_format("ts", "yyyy-MM-dd")
-        )
-        ev.write.mode("overwrite").partitionBy("day").parquet(path)
-    return path
+    """Materialize (once per corpus) a day-partitioned copy of events —
+    the on-disk fishnet-tile analogue: ``day=YYYY-MM-DD/`` directories let a time predicate prune whole
+    partitions at planning time instead of filtering rows at runtime."""
+    return layout(
+        sf_dir, ("events",), "events_by_day",
+        lambda p: load_table(spark, sf_dir, "events")
+        .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+        .write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(p),
+    )
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,76 +14,28 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 EVENT_TYPES = ("signup", "click", "error", "view", "purchase")
 
-_MV_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_mv_daily_events")
-
-
-def _source_fingerprint(src: str) -> str:
-    """Cheap content fingerprint of a parquet source (file or directory):
-    md5 over every file's (relpath, size, mtime_ns). Regenerating the
-    fixture — even with identical byte size — bumps mtime and therefore
-    the fingerprint, so a stale MV can never shadow fresh base data.
-    Walk order is sorted for determinism."""
-    h = hashlib.md5(os.path.abspath(src).encode())
-    if os.path.isdir(src):
-        for root, dirs, files in sorted(os.walk(src)):
-            dirs.sort()
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                rel = os.path.relpath(os.path.join(root, f), src)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
-
 
 def daily_events_mv_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per source-content fingerprint) the daily-grain
-    continuous aggregate of events — the materialized view every warehouse
-    keeps under its time-series tables. Unrounded partial sums/counts are
-    stored so any coarser rollup can be answered from the MV exactly.
-
-    The cache path is keyed on a fingerprint of the source parquet
-    (size+mtime of every file), not on the directory basename, so a
-    regenerated fixture or two dataset roots sharing a basename can never
-    alias. The build writes to a unique temp path and atomically renames
-    into place; a concurrent builder that loses the race just discards its
-    temp output — no reader ever observes a half-written MV."""
-    src = os.path.join(sf_dir, "events.parquet")
-    path = os.path.join(_MV_CACHE_ROOT, _source_fingerprint(src))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        ev = load_table(spark, sf_dir, "events")
-        (
-            ev.groupBy(
-                F.date_trunc("day", "ts").alias("day"), "event_type"
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("value").alias("sv"),
-            )
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # lost the build race: a complete MV already sits at `path`
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    """Materialize (once per corpus) the daily-grain continuous aggregate
+    of events — the materialized view every warehouse keeps under its
+    time-series tables. Unrounded partial sums/counts are stored so any
+    coarser rollup can be answered from the MV exactly."""
+    return layout(
+        sf_dir, ("events",), "mv_daily_events",
+        lambda p: load_table(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("sv"))
+        .write.mode("overwrite")
+        .parquet(p),
+    )
 
 
 BRIDGE_YEAR_A, BRIDGE_YEAR_B = 1996, 1997

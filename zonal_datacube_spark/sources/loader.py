@@ -9,12 +9,11 @@ analogue of the reference's fishnet tile pruning + windowed reads
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
 
 TABLES = (
     "region",
@@ -62,59 +61,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
     _CONFS_PINNED.add(app)
 
 
-def source_stamp(path: str) -> tuple:
-    """Content-identity stamp of a fixture source: (mtime_ns, size) for a
-    plain file; for a DIRECTORY of part files, the folded sorted
-    (name, mtime_ns, size) listing of its entries. The directory's own
-    stat is NOT sufficient (ADVICE r12): rewriting part-file CONTENTS in
-    place — same filenames, e.g. ``cp`` over an existing part — leaves
-    the directory's mtime and size unchanged, so a regenerated corpus
-    would silently serve a stale cached grain or derived-layout copy,
-    exactly the aliasing class the r12 content-stamp change closed."""
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    parts = []
-    for name in sorted(os.listdir(path)):
-        pst = os.stat(os.path.join(path, name))
-        parts.append((name, pst.st_mtime_ns, pst.st_size))
-    return (len(parts), tuple(parts))
-
-
-def corpus_cache_tag(sf_dir: str, table: str) -> str:
-    """Identity tag for derived-layout caches (CSV/ORC/partitioned/
-    z-ordered/bucketed copies materialized once per corpus under the
-    temp dir): the dir basename PLUS a hash of the source table's
-    identity (absolute path + ``source_stamp`` — for a directory of
-    part files the stamp folds the per-part listing, so an in-place
-    part rewrite misses the cache too, ADVICE r12).
-
-    Basename-only tags were the r12 review's silent-wrong-answer find:
-    two corpora sharing a basename — the rehearsal relayout of sf0.01
-    vs the fixture sf0.01 — would alias each other's cached copies, and
-    a regenerated fixture would silently serve the stale one (the same
-    failure class as the r11 streaming-glob weak mark; it only ever
-    passed because the aliased copies happened to hold identical
-    data)."""
-    import hashlib
-
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    stamp = source_stamp(os.path.join(sf_dir, f"{table}.parquet"))
-    ident = f"{os.path.abspath(sf_dir)}:{stamp}"
-    return f"{base}-{hashlib.md5(ident.encode()).hexdigest()[:10]}"
-
-
-# Memo of the lazy table DataFrames, keyed by (session, corpus path,
-# table, source content stamp). This caches the RELATION — file listing
-# + footer schema inference, each a driver-side py4j + filesystem pass
-# that `spark.read.parquet` repeats on every call (~40–80 ms; r13,
-# guide §6 listing cost / §1.2 fixed overhead: several loads × 345 bench
-# keys) — never data or results: every action on the returned DataFrame
-# re-reads the parquet from disk. The stamp folds the per-part (name,
-# mtime, size) listing, so a rewritten corpus (even in place) misses,
-# exactly like the grain cache (ADVICE r12).
-_RELATION_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_RELATION_CAP = 64
+# Memo of the lazy table DataFrames. This caches the RELATION — file
+# listing + footer schema inference, each a driver-side py4j + filesystem
+# pass that `spark.read.parquet` repeats on every call (~40–80 ms) —
+# never data or results: every action on the returned DataFrame re-reads
+# the parquet from disk.
+_RELATIONS = DerivedCache("relations", 64)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -124,16 +76,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        name,
-        source_stamp(f"{sf_dir}/{name}.parquet"),
+    return _RELATIONS.get_or_build(
+        spark, corpus_key(sf_dir, (name,)), lambda: _read_table(spark, sf_dir, name)
     )
-    hit = _RELATION_CACHE.get(key)
-    if hit is not None:
-        _RELATION_CACHE.move_to_end(key)
-        return hit
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # TIMESTAMP(NANOS) fixtures surface as raw int64 under the
@@ -148,9 +96,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
             ),
         )
-    _RELATION_CACHE[key] = df
-    while len(_RELATION_CACHE) > _RELATION_CAP:
-        _RELATION_CACHE.popitem(last=False)
     return df
 
 

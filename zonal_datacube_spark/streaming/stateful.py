@@ -104,102 +104,3 @@ def run_stateful_demo(spark, sf_dir: str, table: str = "zds_stateful_demo") -> D
     )
     q.awaitTermination(120)
     return spark.table(table)
-
-
-def _make_profile_processor():
-    """The transformWithState twin of ``_update_profile`` — Spark 4's
-    successor API for arbitrary stateful operators: state is declared as
-    named, typed handles (value/list/map state, timers, TTL) on a
-    processor object instead of one opaque GroupState tuple, and the
-    runtime requires the RocksDB state store (the off-heap 100 TB tier)
-    rather than permitting the in-heap HDFS store. Built lazily inside a
-    function so importing this module never touches the API on clusters
-    that predate it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._profile = handle.getValueState("profile", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            prev = self._profile.get() if self._profile.exists() else None
-            n, total, last_us = prev if prev is not None else (0, 0.0, None)
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                mx = pdf["ts_us"].max()
-                if pd.notna(mx):
-                    mx = int(mx)
-                    last_us = mx if last_us is None else max(last_us, mx)
-            self._profile.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "sum_value": [round(total, 2)],
-                    "last_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserProfileProcessor()
-
-
-def user_profiles_tws(stream: DataFrame) -> DataFrame:
-    """events stream → per-user evolving profile via
-    ``transformWithStateInPandas`` (same semantics as ``user_profiles``)."""
-    from pyspark.sql import functions as F
-
-    prepared = stream.select(
-        "user_id",
-        "value",
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_profile_processor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_stateful_tws_demo(
-    spark, sf_dir: str, table: str = "zds_tws_demo"
-) -> DataFrame:
-    """Drive the transformWithState operator under the RocksDB state store
-    (required by the API; also the store a 100 TB deployment runs).
-
-    ENVIRONMENT CONSTRAINT: transformWithState's state-server protocol
-    needs the ``google.protobuf`` Python package in the workers; this
-    container does not ship it (and installs are disallowed), so this
-    path is library surface with a skip-gated test, not a declared
-    key — the declared custom-stateful key (q_stream_stateful_profile)
-    runs on applyInPandasWithState, which needs no protobuf."""
-    from zonal_datacube_spark.streaming.demo import events_stream
-    from zonal_datacube_spark.streaming.scale_config import (
-        restore_confs,
-        use_rocksdb_state_store,
-    )
-
-    prev = use_rocksdb_state_store(spark)
-    try:
-        q = (
-            user_profiles_tws(events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        restore_confs(spark, prev)
-    return spark.table(table)
