@@ -24,10 +24,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from zonal_datacube_spark.functions.grain_cache import warm_family_grains
 from zonal_datacube_spark.registry import all_queries
 from zonal_datacube_spark.sources.derived import cache_stats
 from zonal_datacube_spark.session import get_spark
+from zonal_datacube_spark.warmup import warm_up
 
 
 def main() -> int:
@@ -51,59 +51,7 @@ def main() -> int:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
 
-    # Warm the JVM + parquet footers with the flagship query, and the
-    # shared dedup caches (shingle arrays + signature tables) with one
-    # shingle consumer — BASELINE.md measures warm steady-state timings,
-    # so one-time cache population belongs to warm-up, not to whichever
-    # dedup key happens to run first.
-    queries["q_zonal_stats"](spark, sf_dir).toPandas()
-    # Shared percentile-family grains (functions/grain_cache.py): ONE
-    # fact-scaled scan per canonical axis serves the whole
-    # mad/iqr/percentile/quantiles/winsorized/sketch family. Building
-    # them here bills the scan to warm-up, not to whichever family key
-    # the harness order runs first — BENCH_r12's only two keys over the
-    # 6.2 s bar were exactly that first-touch attribution (11.8 s cold
-    # vs a 3.6 s warm median; VERDICT r12 next-round #1). One family key
-    # runs after the grains to JIT the sweep/fold codepath itself.
-    warm_family_grains(spark, sf_dir)
-    queries["q_dq_outlier_mad"](spark, sf_dir).toPandas()
-    queries["q_dedup_minhash"](spark, sf_dir).toPandas()
-    queries["q_dedup_span"](spark, sf_dir).count()  # span-hash cache build
-    queries["q_mv_rewrite"](spark, sf_dir).count()  # daily-MV layout build
-    # custom Python DataSource registration + worker spin-up is connector
-    # setup, not query work (the streaming variant also pays one-time
-    # StreamingQuery machinery startup)
-    queries["q_source_python_ds"](spark, sf_dir).count()
-    queries["q_source_python_stream"](spark, sf_dir).count()
-    # the custom Python SINK's machinery (DataSourceStreamWriter commit
-    # runner + registration) is the same connector-setup class as the
-    # source twin above — the feed is 8192 synthetic rows, never
-    # fact-scaled, so this stays inside the sanctioned warm-up boundary
-    queries["q_stream_python_sink"](spark, sf_dir).count()
-    # the pagerank edge rollup persists and is reused across calls
-    # (CacheManager dedupes by plan) — population is index construction,
-    # the measured run times the 5 rank iterations over the cached edges
-    queries["q_graph_pagerank"](spark, sf_dir).count()
-    # spawn the Python worker pool (first Arrow-UDF query otherwise pays it)
-    queries["q_media_decode_stats"](spark, sf_dir).toPandas()
-    # one-time storage-layout builds (bucketed tables, ORC/partitioned
-    # copies) are index construction, not query work — build them here so
-    # the measured run reads warm layouts
-    queries["q_join_bucketed"](spark, sf_dir).count()
-    queries["q_source_orc_roundtrip"](spark, sf_dir).count()
-    queries["q_source_zorder_roundtrip"](spark, sf_dir).count()
-    queries["q_stream_tumbling_partitioned"](spark, sf_dir).count()
-    queries["q_source_csv_roundtrip"](spark, sf_dir).count()
-    queries["q_source_jsonl_roundtrip"](spark, sf_dir).count()
-    queries["q_source_partitioned_pruning"](spark, sf_dir).count()
-    queries["q_source_schema_evolution"](spark, sf_dir).count()
-    queries["q_source_csv_corrupt"](spark, sf_dir).count()
-    queries["q_source_compaction"](spark, sf_dir).count()
-    # ANN index build (k-means quantizer, PQ codebooks, encoded code
-    # table) is offline index construction — build once here, measure
-    # the serving path below
-    queries["q_sim_ivfpq"](spark, sf_dir).count()
-    queries["q_sim_pq_ann"](spark, sf_dir).count()
+    warmed = warm_up(spark, sf_dir)
 
     # Materialize via Arrow (toPandas): full result transfer at columnar
     # speed — collect()'s per-Row Python object construction would bench
@@ -167,6 +115,7 @@ def main() -> int:
                     "after": [round(x, 2) for x in load_after],
                 },
                 "suspect_under_load": suspect,
+                "warmup_keys": list(warmed),
                 # cache visibility (VERDICT r12 nit #3): eviction is
                 # silent-but-slow (recompute), so thrash must be
                 # observable — a full suite run should show evictions=0

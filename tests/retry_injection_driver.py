@@ -94,7 +94,7 @@ def scenario_a(spark) -> dict:
 
 
 def scenario_b(spark) -> dict:
-    from zonal_datacube_spark.operators.analytics_r5d import _audit_and_publish
+    from zonal_datacube_spark.operators.warehouse import _audit_and_publish
 
     root = tempfile.mkdtemp(prefix="zds_retry_wap_")
     rows = [

@@ -9,7 +9,7 @@ import shutil
 import pytest
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_ext import (
+from zonal_datacube_spark.operators.sorts_sets import (
     PAGE_SIZE,
     q_sort_keyset_pagination,
 )

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_ext import (
+from zonal_datacube_spark.operators.dedup import (
     _er_fuzzy_grain,
     _er_fuzzy_naive,
     _er_parts,

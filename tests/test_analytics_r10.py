@@ -6,12 +6,12 @@ from __future__ import annotations
 import pandas as pd
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r10 import (
+from zonal_datacube_spark.operators.joins import q_join_skew_split
+from zonal_datacube_spark.operators.similarity import (
     SIM_AUTO_MAX_BITS,
     SIM_AUTO_MIN_BITS,
     SIM_AUTO_TARGET_OCC,
     _auto_bits,
-    q_join_skew_split,
     q_sim_join_auto,
 )
 from zonal_datacube_spark.operators.similarity import SIM_JOIN_TAU
@@ -65,10 +65,7 @@ def test_skew_split_fires_and_preserves_results(spark):
     skew=true sort-merge join, and the split run's rows are identical
     to the default-conf declared key's (AQE re-plans the exchange,
     never the answer)."""
-    from zonal_datacube_spark.operators.analytics_r10 import (
-        _skew_join_fold,
-        _skewed_fact,
-    )
+    from zonal_datacube_spark.operators.joins import _skew_join_fold, _skewed_fact
     from zonal_datacube_spark.sources.loader import load_table
 
     baseline = sorted(map(tuple, q_join_skew_split(spark, SF_SMOKE).collect()))
@@ -112,9 +109,9 @@ def test_hard_negatives_match_bruteforce(spark):
     tiebreak."""
     import math
 
-    from zonal_datacube_spark.operators.analytics_r10 import (
-        HARDNEG_K,
+    from zonal_datacube_spark.operators.embedding_eval import (
         _HARDNEG_PROBES,
+        HARDNEG_K,
         q_sim_hard_negatives,
     )
 
@@ -159,10 +156,7 @@ def test_bpe_pairs_match_python_referee(spark):
     term frequency, top-20 with the pair tiebreak."""
     from collections import Counter
 
-    from zonal_datacube_spark.operators.analytics_r10 import (
-        BPE_TOPK,
-        q_text_bpe_pairs,
-    )
+    from zonal_datacube_spark.operators.text import BPE_TOPK, q_text_bpe_pairs
 
     docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
     tok_counts = Counter(
@@ -185,10 +179,7 @@ def test_skew_fold_exact_past_int64(spark):
     """The DECIMAL(38,0) revenue fold must stay exact where a BIGINT
     accumulator overflows: five rows of 4e18 rev_e4 sum to 2e19 > 2^63,
     and the emitted digit string must be Python-exact."""
-    from zonal_datacube_spark.operators.analytics_r10 import (
-        SKEW_HOT_KEY,
-        _skew_join_fold,
-    )
+    from zonal_datacube_spark.operators.joins import SKEW_HOT_KEY, _skew_join_fold
 
     big = 4_000_000_000_000_000_000  # 4e18; 5x sum = 2e19 > int64 max
     li = spark.createDataFrame(

@@ -10,7 +10,7 @@ from collections import Counter
 import pandas as pd
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r10b import (
+from zonal_datacube_spark.operators.pipeline_ext import (
     CURRICULUM_BUDGET_DIV,
     DSIR_TARGET_LANG,
     q_data_curriculum_tokens,

@@ -1,4 +1,5 @@
-"""Round-5 operator invariants (operators/analytics_r5.py) beyond the
+"""Operator invariants (timeseries, stats_ext, aggregations, behavior,
+reports and joins keys) beyond the
 driver's oracle hash: algebraic identities, numpy differentials for the
 moment statistics, and plan shape for the prefix-sweep consumers."""
 
@@ -8,15 +9,18 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r5 import (
-    RFM_TILES,
-    q_agg_boolean,
-    q_agg_skew_kurt,
-    q_agg_winsorized_mean,
-    q_behavior_rfm,
-    q_join_nearest_event,
+from zonal_datacube_spark.operators.aggregations import q_agg_boolean
+from zonal_datacube_spark.operators.behavior import RFM_TILES, q_behavior_rfm
+from zonal_datacube_spark.operators.joins import q_join_nearest_event
+from zonal_datacube_spark.operators.reports import (
     q_report_order_gap_stats,
     q_report_yoy_growth,
+)
+from zonal_datacube_spark.operators.stats_ext import (
+    q_agg_skew_kurt,
+    q_agg_winsorized_mean,
+)
+from zonal_datacube_spark.operators.timeseries import (
     q_ts_autocorr,
     q_ts_cusum,
     q_ts_sessionize,
@@ -193,7 +197,7 @@ def test_nearest_event_matches_bruteforce_sample(spark):
 
 
 def test_ols_multi_matches_numpy(spark):
-    from zonal_datacube_spark.operators.analytics_r5 import q_agg_ols_multi
+    from zonal_datacube_spark.operators.stats_ext import q_agg_ols_multi
 
     got = {r.l_returnflag: r for r in q_agg_ols_multi(spark, SF_SMOKE).collect()}
     pdf = (
@@ -216,9 +220,7 @@ def test_ols_multi_matches_numpy(spark):
 
 
 def test_percentile_disc_returns_actual_values(spark):
-    from zonal_datacube_spark.operators.analytics_r5 import (
-        q_agg_percentile_disc,
-    )
+    from zonal_datacube_spark.operators.aggregations import q_agg_percentile_disc
 
     rows = q_agg_percentile_disc(spark, SF_SMOKE).collect()
     vals = {

@@ -1,4 +1,5 @@
-"""Round-5b operator invariants (operators/analytics_r5b.py) beyond the
+"""Operator invariants (stats_tests, timeseries, geometry, dedup,
+behavior, sql_surface and windows keys) beyond the
 driver's oracle hash: numpy differentials for the hypothesis tests, a
 brute-force python referee for the interval merge and the grid-blocked
 nearest-neighbor join, and plan-shape guards for the join strategies."""
@@ -9,20 +10,21 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r5b import (
-    CORR_WINDOW_MIN,
-    NN_CELL_SQ,
-    q_behavior_stickiness,
-    q_dedup_cross_source,
-    q_geo_nearest_neighbor,
-    q_sql_pipe_syntax,
+from zonal_datacube_spark.operators.behavior import q_behavior_stickiness
+from zonal_datacube_spark.operators.dedup import q_dedup_cross_source
+from zonal_datacube_spark.operators.geometry import NN_CELL_SQ, q_geo_nearest_neighbor
+from zonal_datacube_spark.operators.sql_surface import q_sql_pipe_syntax
+from zonal_datacube_spark.operators.stats_tests import (
     q_stats_chi2,
     q_stats_mannwhitney,
     q_stats_ttest,
+)
+from zonal_datacube_spark.operators.timeseries import (
+    CORR_WINDOW_MIN,
     q_ts_interval_merge,
     q_ts_rolling_corr,
-    q_window_percent_rank,
 )
+from zonal_datacube_spark.operators.windows import q_window_percent_rank
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 from zonal_datacube_spark.sources.loader import load_table
 

@@ -1,4 +1,5 @@
-"""Round-5c operator invariants (operators/analytics_r5c.py) beyond the
+"""Operator invariants (stats_tests, stats_ext, text and pipeline_ext
+keys) beyond the
 driver's oracle hash: numpy differentials for KS / ANOVA / the
 correlation matrix, python referees for the funnel classification and
 tokenizer fertility, conservation laws for the mixture allocation, and a
@@ -12,14 +13,16 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r5c import (
-    FUNNEL_MIN_TOKENS,
+from zonal_datacube_spark.operators.pipeline_ext import q_data_mixture_weights
+from zonal_datacube_spark.operators.stats_ext import q_stats_corr_matrix
+from zonal_datacube_spark.operators.stats_tests import (
     KS_A,
     KS_B,
-    q_data_mixture_weights,
     q_stats_anova,
-    q_stats_corr_matrix,
     q_stats_ks_test,
+)
+from zonal_datacube_spark.operators.text import (
+    FUNNEL_MIN_TOKENS,
     q_text_filter_funnel,
     q_tokenizer_fertility,
 )

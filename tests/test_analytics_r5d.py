@@ -1,4 +1,4 @@
-"""Round-5d operator invariants (operators/analytics_r5d.py) beyond the
+"""Operator invariants (warehouse, timeseries and graph keys) beyond the
 driver's oracle hash: python referees for time-travel version states and
 LOCF carry-forward, the WAP all-audits-pass contract, numpy
 assortativity/ACF differentials, and the ACF single-scan plan guard."""
@@ -11,17 +11,19 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r5d import (
+from zonal_datacube_spark.operators.graph import q_graph_assortativity
+from zonal_datacube_spark.operators.timeseries import (
     ACF_MAX_LAG,
     LOCF_MOD,
     LOCF_RESIDUE,
+    q_ts_acf_multi,
+    q_ts_locf_repair,
+)
+from zonal_datacube_spark.operators.warehouse import (
     TT_PURGE_CUT,
     TT_V1_CUT,
     TT_V2_CUT,
-    q_graph_assortativity,
     q_sink_write_audit_publish,
-    q_ts_acf_multi,
-    q_ts_locf_repair,
     q_warehouse_time_travel,
 )
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
@@ -207,7 +209,7 @@ def test_wap_failing_audit_publishes_nothing(spark, tmp_path):
     the ledger records exactly which audit failed."""
     import os
 
-    from zonal_datacube_spark.operators.analytics_r5d import _audit_and_publish
+    from zonal_datacube_spark.operators.warehouse import _audit_and_publish
 
     # poisoned candidate: one null day key (audit 2) and a count of 0
     # (audit 3); totals also fail reconciliation against n_src=999
@@ -240,7 +242,7 @@ def test_wap_empty_batch_emits_failed_ledger(spark, tmp_path):
     audit 4, and publishes nothing."""
     import os
 
-    from zonal_datacube_spark.operators.analytics_r5d import _audit_and_publish
+    from zonal_datacube_spark.operators.warehouse import _audit_and_publish
 
     cand = spark.createDataFrame(
         [],

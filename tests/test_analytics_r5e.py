@@ -1,4 +1,5 @@
-"""Round-5e operator invariants (operators/analytics_r5e.py) beyond the
+"""Operator invariants (privacy, text_retrieval, warehouse and
+timeseries_forecast keys) beyond the
 driver's oracle hash: python referees for the k-anonymity census, the
 randomized-response mechanism (exact coin replay + debias accuracy),
 the control-chart decision rule, BM25 ranking vs a straight float
@@ -13,18 +14,20 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r5e import (
-    BM25_TERMS,
-    BM25_TOPK,
+from zonal_datacube_spark.operators.privacy import (
     K_ANON_K,
     RR_FLIP_NUM,
     RR_TYPES,
-    q_dq_control_chart,
     q_privacy_k_anon,
     q_privacy_rr_count,
-    q_text_bm25,
-    q_ts_theil_sen,
 )
+from zonal_datacube_spark.operators.text_retrieval import (
+    BM25_TERMS,
+    BM25_TOPK,
+    q_text_bm25,
+)
+from zonal_datacube_spark.operators.timeseries_forecast import q_ts_theil_sen
+from zonal_datacube_spark.operators.warehouse import q_dq_control_chart
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -181,12 +184,12 @@ def test_bm25_wand_prune_is_lossless_and_actually_prunes(spark):
     rescored doc set versus naive all-matching-docs scoring."""
     from pyspark.sql import functions as F
 
-    from zonal_datacube_spark.operators.analytics_r5e import (
-        BM25_TERMS,
-        WAND_TOPK,
+    from zonal_datacube_spark.operators.text_retrieval import (
         _W_IDF,
         _W_LEN,
         _W_SAT,
+        BM25_TERMS,
+        WAND_TOPK,
         q_text_bm25_wand,
     )
     from zonal_datacube_spark.sources.loader import load_table

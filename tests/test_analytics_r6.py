@@ -1,4 +1,4 @@
-"""Round-6 operator invariants (operators/analytics_r6.py) beyond the
+"""Operator invariants (text_retrieval and embedding_eval keys) beyond the
 driver's oracle hash: a python referee for the chunk geometry, md5
 chunk-fingerprint spot checks, RRF sentinel/score semantics, and the OPQ
 rotation's orthogonality / inner-product-preservation / determinism
@@ -13,19 +13,21 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r6 import (
-    CHUNK_SIZE,
-    CHUNK_STRIDE,
+from zonal_datacube_spark.operators.embedding_eval import (
     OPQ_DIM,
     OPQ_K,
     OPQ_PROBE_IDS,
+    _rotation_rows,
+    q_sim_opq_eval,
+)
+from zonal_datacube_spark.operators.text_retrieval import (
+    CHUNK_SIZE,
+    CHUNK_STRIDE,
     RRF_C,
     RRF_OUT,
     RRF_TERM,
     RRF_TOPN,
-    _rotation_rows,
     q_rag_chunk_dedup,
-    q_sim_opq_eval,
     q_text_chunking,
     q_text_rrf_fusion,
 )

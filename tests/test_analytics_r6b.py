@@ -1,4 +1,5 @@
-"""Round-6b operator invariants (operators/analytics_r6b.py) beyond the
+"""Operator invariants (timeseries_forecast, embedding_eval and graph
+keys) beyond the
 driver's oracle hash: python referees for the changepoint gain argmax,
 the STL trend/seasonal arithmetic, the ANN recall eval's set algebra,
 and the k-core peeling fixpoint."""
@@ -12,20 +13,21 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r6b import (
+from zonal_datacube_spark.operators.embedding_eval import (
     ANN_EVAL_K,
-    KCORE_K,
-    STL_HALF_WINDOW,
-    _daily,
-    q_graph_kcore,
     q_sim_ann_recall_eval,
+)
+from zonal_datacube_spark.operators.graph import KCORE_K, q_graph_kcore
+from zonal_datacube_spark.operators.timeseries_forecast import (
+    STL_HALF_WINDOW,
+    daily_grain,
     q_ts_changepoint,
     q_ts_stl_decompose,
 )
 
 
 def _daily_series(spark):
-    rows = _daily(spark, SF_SMOKE).collect()
+    rows = daily_grain(spark, SF_SMOKE).collect()
     series: dict[str, list] = collections.defaultdict(list)
     for r in rows:
         series[r.event_type].append((r.d, r.nd, r.sd))

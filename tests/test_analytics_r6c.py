@@ -311,7 +311,7 @@ def test_spearman_fold_with_nulls_matches_pandas(spark):
     OTHER variable's tie-averaged ranks exactly as the single-column
     grain sees them. Referee = pandas average ranks over the non-null
     row universe."""
-    from zonal_datacube_spark.operators.analytics_r6c import _spearman_fold
+    from zonal_datacube_spark.operators.stats_tests import _spearman_fold
 
     rows = []
     rng_vals = [

@@ -9,16 +9,15 @@ import re
 import pandas as pd
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_r8 import (
-    INC_BATCH_MOD,
+from zonal_datacube_spark.operators.dedup import INC_BATCH_MOD, q_dedup_incremental
+from zonal_datacube_spark.operators.text_retrieval import (
     PROBE_MOD,
     PROBE_START,
     QUERY_TERMS,
     RETR_TOPK,
-    q_dedup_incremental,
     q_text_retrieval_eval,
 )
-from zonal_datacube_spark.operators.analytics_r6 import CHUNK_SIZE, CHUNK_STRIDE
+from zonal_datacube_spark.operators.text_retrieval import CHUNK_SIZE, CHUNK_STRIDE
 from zonal_datacube_spark.operators.dedup import NEAR_DUP_TAU, q_dedup_minhash
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 
@@ -130,7 +129,7 @@ def test_retrieval_topk_window_is_probe_keyed(spark):
 
 
 def _py_padding_eval(sf_dir: str) -> dict:
-    from zonal_datacube_spark.operators.analytics_r8 import BATCH_SIZE
+    from zonal_datacube_spark.operators.pipeline_ext import BATCH_SIZE
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     lens = {
@@ -153,7 +152,7 @@ def _py_padding_eval(sf_dir: str) -> dict:
 
 
 def test_padding_eval_matches_pure_python(spark):
-    from zonal_datacube_spark.operators.analytics_r8 import q_batch_padding_eval
+    from zonal_datacube_spark.operators.pipeline_ext import q_batch_padding_eval
 
     rows = {r["strategy"]: r for r in q_batch_padding_eval(spark, SF_SMOKE).collect()}
     want = _py_padding_eval(SF_SMOKE)
@@ -170,7 +169,7 @@ def test_padding_eval_matches_pure_python(spark):
 
 
 def test_padding_eval_rides_the_prefix_sweep(spark):
-    from zonal_datacube_spark.operators.analytics_r8 import q_batch_padding_eval
+    from zonal_datacube_spark.operators.pipeline_ext import q_batch_padding_eval
 
     plan = formatted_plan(q_batch_padding_eval(spark, SF_SMOKE))
     assert "_zds_ps_bucket" in plan  # no global sort anywhere
@@ -180,10 +179,7 @@ def test_padding_eval_rides_the_prefix_sweep(spark):
 def _py_slope_classes() -> dict:
     import numpy as np
 
-    from zonal_datacube_spark.operators.analytics_r8 import (
-        SLOPE_CLASS_W,
-        SLOPE_N,
-    )
+    from zonal_datacube_spark.operators.zonal import SLOPE_CLASS_W, SLOPE_N
 
     n = SLOPE_N
     xs, ys = np.meshgrid(np.arange(n), np.arange(n), indexing="xy")
@@ -207,7 +203,7 @@ def _py_slope_classes() -> dict:
 
 
 def test_raster_slope_matches_numpy_referee(spark):
-    from zonal_datacube_spark.operators.analytics_r8 import q_raster_slope
+    from zonal_datacube_spark.operators.zonal import q_raster_slope
 
     rows = {
         r["steep_class"]: (
@@ -219,10 +215,7 @@ def test_raster_slope_matches_numpy_referee(spark):
 
 
 def test_psi_drift_bins_are_complete_and_consistent(spark):
-    from zonal_datacube_spark.operators.analytics_r8 import (
-        PSI_BINS,
-        q_dq_psi_drift,
-    )
+    from zonal_datacube_spark.operators.pipeline_ext import PSI_BINS, q_dq_psi_drift
 
     rows = q_dq_psi_drift(spark, SF_SMOKE).collect()
     assert sorted(r["bin"] for r in rows) == list(range(PSI_BINS))
@@ -240,10 +233,8 @@ def test_psi_drift_bins_are_complete_and_consistent(spark):
 
 
 def test_slope_and_psi_plans(spark):
-    from zonal_datacube_spark.operators.analytics_r8 import (
-        q_dq_psi_drift,
-        q_raster_slope,
-    )
+    from zonal_datacube_spark.operators.pipeline_ext import q_dq_psi_drift
+    from zonal_datacube_spark.operators.zonal import q_raster_slope
 
     slope = formatted_plan(q_raster_slope(spark, SF_SMOKE))
     assert "CartesianProduct" not in slope

@@ -6,11 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_ext import (
-    ER_MAX_DIST,
-    q_er_fuzzy_block,
-    q_window_running_distinct,
-)
+from zonal_datacube_spark.operators.dedup import ER_MAX_DIST, q_er_fuzzy_block
+from zonal_datacube_spark.operators.windows import q_window_running_distinct
 from zonal_datacube_spark.operators.scale_ops import q_join_salted
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 from zonal_datacube_spark.sources.loader import load_table
@@ -76,7 +73,7 @@ def test_ivm_join_delta_terms_all_nonempty(spark):
 
 
 def test_keyset_pagination_matches_offset_semantics(spark):
-    from zonal_datacube_spark.operators.analytics_ext import (
+    from zonal_datacube_spark.operators.sorts_sets import (
         PAGE_SIZE,
         q_sort_keyset_pagination,
     )
@@ -100,7 +97,7 @@ def test_keyset_pagination_matches_offset_semantics(spark):
 def test_decimal_exact_sums_are_exact_strings(spark):
     from decimal import Decimal
 
-    from zonal_datacube_spark.operators.analytics_ext import q_agg_decimal_exact
+    from zonal_datacube_spark.operators.aggregations import q_agg_decimal_exact
 
     rows = q_agg_decimal_exact(spark, SF_SMOKE).collect()
     li = load_table(spark, SF_SMOKE, "lineitem").collect()

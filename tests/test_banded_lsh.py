@@ -11,11 +11,11 @@ from zonal_datacube_spark.functions.banded_lsh import (
     banded_cosine_join,
     sign_band_keys,
 )
+from zonal_datacube_spark.functions.exact import dot
 from zonal_datacube_spark.operators.similarity import (
     SIM_JOIN_BAND_BITS,
     SIM_JOIN_BANDS,
     SIM_JOIN_TAU,
-    _dot,
 )
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -34,7 +34,7 @@ def _exact_label_join(emb):
     return (
         a.join(b, "lbl")
         .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("score", F.round(_dot("va", "vb"), 6))
+        .withColumn("score", F.round(dot("va", "vb"), 6))
         .filter(F.col("score") >= SIM_JOIN_TAU)
         .select(F.col("lbl").alias("label"), "a_id", "b_id", "score")
     )

@@ -109,7 +109,7 @@ def test_family_keys_hit_after_warm(spark):
     """The bench prologue contract: after warm_family_grains, every
     percentile-family key's grain request is a HIT — the fact-scaled
     build never bills to a measured key (VERDICT r12 next-round #1)."""
-    from zonal_datacube_spark.operators.analytics_ext import q_agg_percentile
+    from zonal_datacube_spark.operators.aggregations import q_agg_percentile
     from zonal_datacube_spark.operators.stats_ext import (
         q_agg_quantiles_multi,
         q_dq_outlier_iqr,

@@ -69,10 +69,16 @@ def test_no_open_vocabulary_broadcast_hint_anywhere_in_text_ops():
     allowed = {
         # file -> max permitted F.broadcast( occurrences, all audited
         # scalar (1-row aggregates) or K-bounded (top-K caps) frames:
-        # text.py:53 tfidf n_docs (1 row), :268 vocab_coverage top-K
-        # (K-bounded), :466 pmi n_docs (1 row); dedup.py:347
-        # minhash_eval n_truth (1 row)
-        "text.py": 3,
+        # text.py:55 tfidf n_docs (1 row), :270 vocab_coverage top-K
+        # (K-bounded), :468 pmi n_docs (1 row), :536 filter_funnel total
+        # (1 row), :622 rake stopwords (top RAKE_STOPWORDS), :674
+        # js_divergence per-language totals (language enum);
+        # text_retrieval.py:99/:239 bm25 corpus stats (1 row), :132 bm25
+        # per-term thresholds (one row per query term), :270 wand theta
+        # (1 row), :450 rrf probe (1 row), :597 retrieval n_probes
+        # (1 row); dedup.py:348 minhash_eval n_truth (1 row)
+        "text.py": 6,
+        "text_retrieval.py": 6,
         "dedup.py": 1,
         "similarity.py": None,  # centroid/codebook frames: k-bounded
     }

@@ -8,11 +8,8 @@ from __future__ import annotations
 import re
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.analytics_ext import (
-    q_ab_wilson,
-    q_window_pareto,
-    q_window_streaks,
-)
+from zonal_datacube_spark.operators.stats_tests import q_ab_wilson
+from zonal_datacube_spark.operators.windows import q_window_pareto, q_window_streaks
 from zonal_datacube_spark.operators.scale_ops import q_view_ivm_join
 from zonal_datacube_spark.operators.timeseries import (
     q_ts_ohlc,

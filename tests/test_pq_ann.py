@@ -7,6 +7,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from zonal_datacube_spark.functions.exact import dot
 from zonal_datacube_spark.functions.pq import (
     PQ_K,
     PQ_M,
@@ -15,7 +16,6 @@ from zonal_datacube_spark.functions.pq import (
     pq_fit,
     pq_train,
 )
-from zonal_datacube_spark.operators.similarity import _dot
 from zonal_datacube_spark.sources.loader import load_table
 
 PROBES = [0, 1, 2, 3, 4]
@@ -30,7 +30,7 @@ def _brute_topk(emb, k):
     return (
         probes.crossJoin(emb.select("vec_id", "embedding"))
         .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("score", _dot("probe_vec", "embedding"))
+        .withColumn("score", dot("probe_vec", "embedding"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("probe_id", F.col("vec_id").alias("neighbor_id"))

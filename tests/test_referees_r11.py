@@ -152,7 +152,7 @@ def _daily_grain(spark):
 
 
 def test_changepoint_matches_python_segment_scan(spark):
-    from zonal_datacube_spark.operators.analytics_r6b import q_ts_changepoint
+    from zonal_datacube_spark.operators.timeseries_forecast import q_ts_changepoint
 
     got = {
         r.event_type: r for r in q_ts_changepoint(spark, SF_SMOKE).collect()
@@ -197,7 +197,7 @@ def test_changepoint_matches_python_segment_scan(spark):
 
 
 def test_kendall_matches_python_pair_scan(spark):
-    from zonal_datacube_spark.operators.analytics_r6c import q_stats_kendall
+    from zonal_datacube_spark.operators.stats_tests import q_stats_kendall
 
     got = {r.event_type: r for r in q_stats_kendall(spark, SF_SMOKE).collect()}
     daily = _daily_grain(spark)
@@ -448,7 +448,7 @@ def test_gini_matches_direct_rank_formula(spark):
 
 
 def test_theil_sen_matches_pair_scan(spark):
-    from zonal_datacube_spark.operators.analytics_r5e import q_ts_theil_sen
+    from zonal_datacube_spark.operators.timeseries_forecast import q_ts_theil_sen
 
     got = {r.event_type: r for r in q_ts_theil_sen(spark, SF_SMOKE).collect()}
     daily = _daily_grain(spark)

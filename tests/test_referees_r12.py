@@ -84,10 +84,7 @@ def test_stream_outer_join_matches_python_interval_scan(spark):
 
 
 def test_window_funnel_matches_python_replay(spark):
-    from zonal_datacube_spark.operators.analytics_r6c import (
-        FUNNEL_STEPS,
-        FUNNEL_WINDOW_US,
-    )
+    from zonal_datacube_spark.operators.behavior import FUNNEL_STEPS, FUNNEL_WINDOW_US
 
     ev = load_table(spark, SF_SMOKE, "events").selectExpr(
         "user_id",

@@ -57,32 +57,32 @@ DENSE_IDX_ORDER = re.compile(r"\bidx#\d+L? ASC")
 BOUNDED_GROUPS = {
     "q_behavior_stickiness": (
         "collect_set(week) per user: bounded by the CALENDAR span "
-        "(~52/yr), not by event count (behavior.py:76)"
+        "(~52/yr), not by event count (behavior.py:81)"
     ),
     "q_cohort_retention": (
         "collect_set(week) per user: the same calendar-span bound as "
-        "stickiness (behavior.py:72-76 pattern, one user pass)"
+        "stickiness (behavior.py:77-81 pattern, one user pass)"
     ),
     "q_dedup_cross_source": (
         "collect_set(source) per shingle digest: bounded by the source "
         "enum (~20), the fold that replaced the digest self-join "
-        "(analytics_r5b.py:460)"
+        "(dedup.py:779)"
     ),
     "q_agg_listagg": (
         "collect_set(o_orderpriority) per group: the 5-value priority "
-        "enum (analytics_ext.py:100)"
+        "enum (aggregations.py:412)"
     ),
     "q_sim_pq_ann": (
         "collect_list((sub, code)) per vector: one element per PQ "
-        "subspace (M=8, functions/pq.py:185)"
+        "subspace (M=8, functions/pq.py:299)"
     ),
     "q_sim_opq_eval": (
         "collect_list((sub, code)) per vector: one element per PQ "
-        "subspace (M=8, functions/pq.py:185)"
+        "subspace (M=8, functions/pq.py:299)"
     ),
     "q_sim_ivfpq": (
         "collect_list((sub, code)) / ((pos, m)) per vector: one element "
-        "per subspace (functions/pq.py:185, ivf_ann.py:33)"
+        "per subspace (functions/pq.py:299, ivf_ann.py:33)"
     ),
 }
 

@@ -19,9 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from zonal_datacube_spark.functions.grain_cache import warm_family_grains
 from zonal_datacube_spark.registry import all_queries
 from zonal_datacube_spark.session import get_spark
+from zonal_datacube_spark.warmup import warm_up
 
 
 def main() -> int:
@@ -41,11 +41,9 @@ def main() -> int:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
 
-    # same warm-up surface as bench.py: flagship + shared family grains
+    # the same warm-up bench.py runs
     spark.sparkContext.setJobGroup("warmup", "warmup")
-    queries["q_zonal_stats"](spark, sf_dir).collect()
-    queries["q_dedup_exact"](spark, sf_dir).collect()
-    warm_family_grains(spark, sf_dir)
+    warm_up(spark, sf_dir)
     tracker = spark.sparkContext.statusTracker()
 
     print(f"{'key':34s} {'wall_s':>7s} {'jobs':>5s}")

@@ -69,27 +69,27 @@ GRAIN_BOUNDED = {
 NO_PARTITION_BOUNDED = {
     "q_behavior_window_funnel": (
         "cohort-share total over the depth census (≤ 4 rows, "
-        "analytics_r6c.py)"
+        "behavior.py:464)"
     ),
     "q_report_ltv_deciles": (
         "revenue-share total over the decile-grain rollup (≤ 10 rows, "
-        "stats_ext.py:421)"
+        "stats_ext.py:540)"
     ),
     "q_sort_limit_with_ties": (
         "rank over the threshold-filtered WITH TIES candidate set — "
-        "output-sized by the lazy top-n threshold (analytics_ext.py:649)"
+        "output-sized by the lazy top-n threshold (sorts_sets.py:236)"
     ),
     "q_text_rrf_fusion": (
         "two rank windows over orderBy().limit(RRF_TOPN) candidate sets "
-        "(TakeOrderedAndProject feeds ≤ N rows, analytics_r6.py:189,218)"
+        "(TakeOrderedAndProject feeds ≤ N rows, text_retrieval.py:437,464)"
     ),
     "q_text_bm25_wand": (
         "rank over the final orderBy().limit(k) result (≤ k rows, "
-        "analytics_r5e.py — the WAND rescue's TakeOrdered output)"
+        "text_retrieval.py:283 — the WAND rescue's TakeOrdered output)"
     ),
     "q_window_running_distinct": (
         "running sum over the day spine (post-aggregation, ≤ ~10³ rows "
-        "for years of days, analytics_ext.py:396)"
+        "for years of days, windows.py:180)"
     ),
 }
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.operators.similarity import _dot
+from zonal_datacube_spark.functions.exact import dot
 
 
 def build_centroids(emb: DataFrame) -> DataFrame:
@@ -63,7 +63,7 @@ def ivf_ann_quantized(
     probe_cells = (
         F.broadcast(probes)
         .crossJoin(F.broadcast(quantizer))
-        .withColumn("c_score", F.round(_dot("probe_vec", "centroid"), 9))
+        .withColumn("c_score", F.round(dot("probe_vec", "centroid"), 9))
         .withColumn("c_rn", F.row_number().over(cw))
         .filter(F.col("c_rn") <= n_probe)
         .select("probe_id", "probe_vec", "cell")
@@ -73,7 +73,7 @@ def ivf_ann_quantized(
         F.broadcast(probe_cells)
         .join(assigned, "cell")
         .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("score", F.round(_dot("probe_vec", "embedding"), 6))
+        .withColumn("score", F.round(dot("probe_vec", "embedding"), 6))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("probe_id", F.col("vec_id").alias("neighbor_id"), "cell", "score", "rn")
@@ -97,7 +97,7 @@ def ivf_ann(
     probe_cells = (
         F.broadcast(probes)
         .crossJoin(centroids)
-        .withColumn("c_score", F.round(_dot("probe_vec", "centroid"), 9))
+        .withColumn("c_score", F.round(dot("probe_vec", "centroid"), 9))
         .withColumn("c_rn", F.row_number().over(cw))
         .filter(F.col("c_rn") <= n_probe)
         .select("probe_id", "probe_vec", "label")
@@ -108,7 +108,7 @@ def ivf_ann(
         F.broadcast(probe_cells)
         .join(emb, "label")
         .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("score", F.round(_dot("probe_vec", "embedding"), 6))
+        .withColumn("score", F.round(dot("probe_vec", "embedding"), 6))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("probe_id", F.col("vec_id").alias("neighbor_id"), "label", "score", "rn")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.operators.similarity import _dot
+from zonal_datacube_spark.functions.exact import dot
 
 
 def _normalize(vec: list[float]) -> list[float]:
@@ -42,7 +42,7 @@ def _centroids_to_rows(spark, centroids: list[tuple[int, list[float]]]) -> DataF
 def _dot_unrolled(a: str, b: str, d: int) -> F.Column:
     """Dot product unrolled into element_at arithmetic — stays inside
     whole-stage codegen (zip_with/aggregate lambdas evaluate interpreted),
-    and the left-to-right addition order matches the HOF _dot exactly, so
+    and the left-to-right addition order matches the HOF dot exactly, so
     values are bit-identical."""
     return F.expr(
         " + ".join(
@@ -73,7 +73,7 @@ def assign_cells(
     sim = (
         _dot_unrolled("embedding", "centroid", dim)
         if dim is not None
-        else _dot("embedding", "centroid")
+        else dot("embedding", "centroid")
     )
     carry = [F.first(c).alias(c) for c in emb.columns if c != "vec_id"]
     assigned = (
@@ -216,7 +216,7 @@ def inertia(emb: DataFrame, centroids: DataFrame) -> float:
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell").asc())
     best = (
         emb.crossJoin(F.broadcast(centroids))
-        .withColumn("sim", _dot("embedding", "centroid"))
+        .withColumn("sim", dot("embedding", "centroid"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.operators.similarity import _dot
+from zonal_datacube_spark.functions.exact import dot, half_up
 from zonal_datacube_spark.sources.derived import DerivedCache
 
 # 16 subspaces x 4 dims x 4-bit codes = 8 bytes/vector (32x compression).
@@ -94,7 +94,7 @@ def _assign(sv: DataFrame, codebook: DataFrame, d: int) -> DataFrame:
         sv.join(F.broadcast(codebook), "sub")
         .withColumn(
             "dist",
-            F.floor(_l2("sv", "cvec", d) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9),
+            half_up(_l2("sv", "cvec", d), F.lit(1e9)) / F.lit(1e9),
         )
         .groupBy("vec_id", "sub")
         .agg(F.min(F.struct("dist", "code")).alias("best"))
@@ -314,7 +314,7 @@ def pq_score(
         .withColumn(
             "qsub", F.slice("probe_vec", F.col("sub") * dim_d + 1, dim_d)
         )
-        .withColumn("partial", _dot("qsub", "cvec"))
+        .withColumn("partial", dot("qsub", "cvec"))
         .select("probe_id", "sub", "code", "partial")
     )
     exploded = codes.select("vec_id", F.posexplode("codes").alias("sub", "code"))
@@ -336,7 +336,7 @@ def _exact_rerank(
     return (
         shortlist.join(F.broadcast(probes), "probe_id")
         .join(emb.select("vec_id", "embedding"), "vec_id")
-        .withColumn("score", F.round(_dot("probe_vec", "embedding"), 6))
+        .withColumn("score", F.round(dot("probe_vec", "embedding"), 6))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(
@@ -430,7 +430,7 @@ def ivf_pq_ann(
     probe_cells = (
         F.broadcast(probes)
         .crossJoin(F.broadcast(quantizer))
-        .withColumn("c_score", F.round(_dot("probe_vec", "centroid"), 9))
+        .withColumn("c_score", F.round(dot("probe_vec", "centroid"), 9))
         .withColumn("c_rn", F.row_number().over(cw))
         .filter(F.col("c_rn") <= n_probe)
         .select("probe_id", "cell")
@@ -440,7 +440,7 @@ def ivf_pq_ann(
         F.broadcast(probes)
         .crossJoin(F.broadcast(codebook))
         .withColumn("qsub", F.slice("probe_vec", F.col("sub") * dim_d + 1, dim_d))
-        .withColumn("partial", _dot("qsub", "cvec"))
+        .withColumn("partial", dot("qsub", "cvec"))
         .select("probe_id", "sub", "code", "partial")
     )
     exploded = (

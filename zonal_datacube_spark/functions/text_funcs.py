@@ -2,13 +2,16 @@
 
 All JVM-side column expressions (no Python UDFs): these run inside
 whole-stage codegen on the hot path of every text operator. The DuckDB
-twins live next to each oracle query.
+twins live next to each oracle query, except ``TOKENS_SQL``, the twin of
+``tokens()`` that every text oracle shares.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+TOKENS_SQL = "string_split(lower(text), ' ')"
 
 
 def tokens(text_col: str = "text") -> Column:

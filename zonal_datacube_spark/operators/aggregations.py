@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import cents, g6, revenue
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -29,7 +30,7 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     it flipping the 6dp rounding on a boundary value; FIXTURES.md rule
     6)."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_c = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("bigint")
+    disc_c = cents(F.col("l_discount"))
     return li.agg(
         F.count("*").alias("n_rows"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -50,17 +51,13 @@ def q_agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-                "sum_disc_price"
-            ),
+            F.round(F.sum(revenue()), 4).alias("sum_disc_price"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
             # exact cent-grid fold (q_agg_global r11 discipline — a raw
             # double avg's 6dp rounding is partition-order dependent)
             F.round(
                 F.sum(
-                    F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast(
-                        "bigint"
-                    )
+                    cents(F.col("l_discount"))
                 ).cast("double")
                 / F.count("*")
                 / 100,
@@ -353,6 +350,242 @@ def q_agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact interpolated percentiles (median / p90) per group — folded
+    from the (flag, value)-grain prefix sweeps of functions/
+    percentiles.py (round-10 exact-percentile rewrite: the old buffered
+    percentile() held every quantity AND every price in flag-keyed
+    executor buffers; the quantity grain is ~50 rows, the price grain is
+    the domain-bounded weighted-median class). Identical interpolation,
+    same DuckDB oracle."""
+    from zonal_datacube_spark.functions.grain_cache import table_swept_grain
+    from zonal_datacube_spark.functions.percentiles import (
+        cached_swept_percentiles,
+    )
+
+    # r13: BOTH variables extract from their shared SWEPT per-axis grains
+    # (functions/grain_cache.table_swept_grain) — the stacked per-key
+    # sweep of the r12 shape is gone (guide §2.4: the sweep depends only
+    # on the axis, so one swept grain per axis serves the whole family).
+    # Interpolated cells are identical: each (flag, var, p) cell folds
+    # from exactly the grain rows and exact integer cumulative counts of
+    # its own axis, which the per-axis sweep produces bit-for-bit (the
+    # stacked sweep partitioned by (flag, var), so its cum counts never
+    # mixed axes either). Grains are fetched under their CANONICAL
+    # (val_expr, val_name) specs (grain_cache.FAMILY_GRAINS, ADVICE r12
+    # medium) and the long results are unioned under the old var tags.
+    price = table_swept_grain(
+        spark, sf_dir, "lineitem", ("l_returnflag",),
+        "l_extendedprice", "l_extendedprice",
+    )
+    qty = table_swept_grain(
+        spark, sf_dir, "lineitem", ("l_returnflag",),
+        "CAST(l_quantity AS DOUBLE)", "l_quantity",
+    )
+    qs = cached_swept_percentiles(
+        qty, ["l_returnflag"], "l_quantity", (0.5, 0.9)
+    ).select("l_returnflag", F.lit("qty").alias("var"), "p", "q").unionByName(
+        cached_swept_percentiles(
+            price, ["l_returnflag"], "l_extendedprice", (0.5,)
+        ).select("l_returnflag", F.lit("price").alias("var"), "p", "q")
+    )
+
+    def _cell(var: str, p: float) -> F.Column:
+        return F.max(
+            F.when(
+                (F.col("var") == var) & (F.col("p") == F.lit(p)), F.col("q")
+            )
+        )
+
+    return qs.groupBy("l_returnflag").agg(
+        F.round(_cell("qty", 0.5), 4).alias("median_qty"),
+        F.round(_cell("qty", 0.9), 4).alias("p90_qty"),
+        F.round(_cell("price", 0.5), 4).alias("median_price"),
+    )
+
+
+def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered distinct list aggregation (listagg/string_agg semantics) —
+    deterministic via sort-before-join."""
+    orders = load_table(spark, sf_dir, "orders")
+    return orders.groupBy("o_orderstatus").agg(
+        F.array_join(F.array_sort(F.collect_set("o_orderpriority")), ",").alias(
+            "priorities"
+        ),
+        F.count("*").alias("n_orders"),
+    )
+
+
+def q_agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNPIVOT / melt: wide per-group measure columns → long (measure, val)
+    rows via ``stack`` — the inverse of q_agg_pivot, and the standard
+    reshape before feeding generic per-measure pipelines."""
+    li = load_table(spark, sf_dir, "lineitem")
+    wide = li.groupBy("l_returnflag").agg(
+        F.round(F.sum("l_quantity"), 2).alias("qty"),
+        F.round(F.sum("l_extendedprice"), 2).alias("price"),
+        F.round(F.sum("l_discount"), 2).alias("disc"),
+    )
+    return wide.select(
+        "l_returnflag",
+        F.expr("stack(3, 'qty', qty, 'price', price, 'disc', disc) AS (measure, val)"),
+    )
+
+
+def q_agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boolean and filtered aggregates: bool_and/bool_or and conditional
+    counts per group (count_if ≡ FILTER (WHERE ...))."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.expr("bool_and(value >= 0)").alias("all_nonneg"),
+        F.expr("bool_or(value > 150)").alias("any_large"),
+        F.expr("count_if(value > 100)").alias("n_over_100"),
+        F.count("*").alias("n_total"),
+    )
+
+
+def q_agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT money aggregation: sum in DECIMAL, not double — the
+    principled fix for the engine's #1 parity trap (distributed FP sums
+    are reducer-order-dependent; SURVEY §5.4 works around it by rounding,
+    this key removes the nondeterminism at the source). Fixed-point
+    decimal addition is associative, so any partition order and either
+    engine produces the IDENTICAL sum — emitted as its exact decimal
+    string, no round() and no double anywhere. (A final cast-to-double
+    is NOT portable: DuckDB's decimal→double conversion divides after an
+    int128→double rounding and can land one ulp off Spark's correctly-
+    rounded BigDecimal conversion — measured at sf0.1. Exact in, exact
+    out.) Same partial+final hash-aggregate plan as the double sum."""
+    li = load_table(spark, sf_dir, "lineitem")
+    dec = F.col("l_extendedprice").cast("decimal(18,2)")
+    disc_rev = dec * (
+        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
+    )
+    return li.groupBy("l_returnflag").agg(
+        F.sum(dec).cast("string").alias("sum_price"),
+        F.sum(disc_rev).cast("string").alias("sum_revenue"),
+        F.count("*").alias("n_items"),
+    )
+
+
+BOOL_HI_PRICE = 400_000.0
+BOOL_LO_PRICE = 1_000.0
+
+
+def q_agg_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boolean aggregates per order priority: BOOL_AND / BOOL_OR /
+    COUNT_IF — the SQL:2023 EVERY/ANY surface DQ rules compile to
+    ("every row priced", "any whale order", "how many finished").
+    Integer/boolean-exact, fully partial-aggregable."""
+    orders = load_table(spark, sf_dir, "orders")
+    return orders.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        F.expr(f"bool_and(o_totalprice > {BOOL_LO_PRICE})").alias(
+            "all_priced"
+        ),
+        F.expr(f"bool_or(o_totalprice > {BOOL_HI_PRICE})").alias(
+            "any_whale"
+        ),
+        F.expr("count_if(o_orderstatus = 'F')").alias("n_finished"),
+    )
+
+
+PDISC_PS = (0.25, 0.5, 0.75)
+
+
+def q_agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DISCRETE percentiles (percentile_disc / SQL:2008 inverse
+    distribution WITHIN GROUP): the smallest ACTUAL data value whose
+    cumulative distribution reaches p — the right quantile when the
+    domain is categorical-ish (quantities, latencies bucketed to ms)
+    and an interpolated fraction would be a value that never occurred.
+    Returned values are real data points, so engines compare exactly
+    with no rounding at all."""
+    li = load_table(spark, sf_dir, "lineitem")
+    aggs = [
+        F.expr(
+            f"percentile_disc({p}) WITHIN GROUP (ORDER BY l_quantity)"
+        ).alias(f"p{int(p * 100)}")
+        for p in PDISC_PS
+    ]
+    return li.groupBy("l_returnflag").agg(
+        F.count("*").alias("n_rows"), *aggs
+    )
+
+
+# --------------------------------------------------------------------------
+# sketch error eval
+# --------------------------------------------------------------------------
+
+
+def q_agg_sketch_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-accuracy eval per event type: exact distinct users vs
+    approx_count_distinct (HLL++) and the exact interpolated median vs
+    percentile_approx (KLL-style), with the relative distinct-count
+    error — the audit a production rollup tier ships next to its
+    sketches (the q_dedup_minhash_eval pattern for the aggregate
+    family). Rows-only by design: sketch estimates are engine-specific
+    (no DuckDB oracle can reproduce Spark's register layout), but they
+    are DETERMINISTIC for fixed data — HLL/KLL merges commute — so the
+    test pins cross-run equality and the exact side against pandas."""
+    ev = load_table(spark, sf_dir, "events")
+    # Two separate aggregations, joined on the 5-row type grain: mixing
+    # count_distinct with percentile in ONE agg makes Catalyst's
+    # distinct rewrite evaluate percentile partials per (type, user)
+    # group — thousands of sketch buffers where five suffice (measured
+    # 5 s vs 0.1 s at sf0.1, and a per-user memory blowup at 100 TB).
+    distincts = ev.groupBy("event_type").agg(
+        F.count_distinct("user_id").alias("distinct_exact"),
+        F.approx_count_distinct("user_id").alias("distinct_approx"),
+    )
+    # the EXACT side folds from the (type, value) grain (functions/
+    # percentiles.py, round-10 exact-percentile rewrite — the referee
+    # must not itself be the OOM class it audits); the approx side is
+    # the bounded KLL-style sketch under test
+    from zonal_datacube_spark.functions.grain_cache import table_swept_grain
+    from zonal_datacube_spark.functions.percentiles import (
+        cached_swept_percentiles,
+        pivot_percentiles,
+    )
+
+    # r13: extracts from the shared SWEPT (type, value) grain — no
+    # per-key prefix sweep (one sweep per axis per process).
+    p50e = pivot_percentiles(
+        cached_swept_percentiles(
+            table_swept_grain(
+                spark, sf_dir, "events", ("event_type",), "value", "value"
+            ),
+            ["event_type"],
+            "value",
+            (0.5,),
+        ),
+        ["event_type"],
+        {0.5: "p50_exact"},
+    )
+    pcts = (
+        ev.groupBy("event_type")
+        .agg(
+            F.percentile_approx("value", F.lit(0.5), F.lit(10_000)).alias(
+                "p50_approx"
+            )
+        )
+        .join(p50e, "event_type")
+    )
+    per_type = distincts.join(F.broadcast(pcts), "event_type")
+    return per_type.select(
+        "event_type",
+        "distinct_exact",
+        "distinct_approx",
+        g6(
+            F.abs(F.col("distinct_approx") - F.col("distinct_exact"))
+            .cast("double")
+            / F.col("distinct_exact").cast("double")
+        ).alias("distinct_rel_err"),
+        g6(F.col("p50_exact")).alias("p50_exact"),
+        g6(F.col("p50_approx")).alias("p50_approx"),
+    ).orderBy("event_type")
+
+
 QUERIES = {
     "q_agg_hll_rollup": q_agg_hll_rollup,
     "q_agg_global": q_agg_global,
@@ -367,6 +600,14 @@ QUERIES = {
     "q_agg_cube": q_agg_cube,
     "q_agg_grouping_sets": q_agg_grouping_sets,
     "q_agg_pivot": q_agg_pivot,
+    "q_agg_decimal_exact": q_agg_decimal_exact,
+    "q_agg_percentile": q_agg_percentile,
+    "q_agg_listagg": q_agg_listagg,
+    "q_agg_unpivot": q_agg_unpivot,
+    "q_agg_filtered": q_agg_filtered,
+    "q_agg_percentile_disc": q_agg_percentile_disc,
+    "q_agg_boolean": q_agg_boolean,
+    "q_agg_sketch_error_eval": q_agg_sketch_error_eval,
 }
 
 ORACLE = {
@@ -454,5 +695,68 @@ ORACLE = {
                count(CASE WHEN event_type = 'signup' THEN 1 END) AS n_signup,
                count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view
         FROM events GROUP BY user_id
+    """,
+    "q_agg_decimal_exact": """
+        SELECT l_returnflag,
+               (sum(l_extendedprice::DECIMAL(18,2)))::VARCHAR AS sum_price,
+               (sum(l_extendedprice::DECIMAL(18,2)
+                    * (1::DECIMAL(18,6) - l_discount::DECIMAL(18,6))))::VARCHAR
+                   AS sum_revenue,
+               count(*) AS n_items
+        FROM lineitem
+        GROUP BY l_returnflag
+    """,
+    "q_agg_percentile": """
+        SELECT l_returnflag,
+               round(quantile_cont(l_quantity, 0.5), 4) AS median_qty,
+               round(quantile_cont(l_quantity, 0.9), 4) AS p90_qty,
+               round(quantile_cont(l_extendedprice, 0.5), 4) AS median_price
+        FROM lineitem GROUP BY l_returnflag
+    """,
+    "q_agg_listagg": """
+        SELECT o_orderstatus,
+               string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority)
+                   AS priorities,
+               count(*) AS n_orders
+        FROM orders GROUP BY o_orderstatus
+    """,
+    "q_agg_unpivot": """
+        WITH wide AS (
+            SELECT l_returnflag,
+                   round(sum(l_quantity), 2) AS qty,
+                   round(sum(l_extendedprice), 2) AS price,
+                   round(sum(l_discount), 2) AS disc
+            FROM lineitem GROUP BY 1
+        )
+        SELECT l_returnflag, 'qty' AS measure, qty AS val FROM wide
+        UNION ALL
+        SELECT l_returnflag, 'price', price FROM wide
+        UNION ALL
+        SELECT l_returnflag, 'disc', disc FROM wide
+    """,
+    "q_agg_filtered": """
+        SELECT event_type,
+               bool_and(value >= 0) AS all_nonneg,
+               bool_or(value > 150) AS any_large,
+               count(*) FILTER (WHERE value > 100) AS n_over_100,
+               count(*) AS n_total
+        FROM events GROUP BY 1
+    """,
+    "q_agg_percentile_disc": f"""
+        SELECT l_returnflag,
+               count(*) AS n_rows,
+               {", ".join(
+                   f"quantile_disc(l_quantity, {p}) AS p{int(p * 100)}"
+                   for p in PDISC_PS
+               )}
+        FROM lineitem GROUP BY l_returnflag
+    """,
+    "q_agg_boolean": f"""
+        SELECT o_orderpriority,
+               count(*) AS n_orders,
+               bool_and(o_totalprice > {BOOL_LO_PRICE}) AS all_priced,
+               bool_or(o_totalprice > {BOOL_HI_PRICE}) AS any_whale,
+               count_if(o_orderstatus = 'F')::BIGINT AS n_finished
+        FROM orders GROUP BY o_orderpriority
     """,
 }

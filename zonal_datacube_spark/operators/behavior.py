@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import G6_SQL, g6
+from zonal_datacube_spark.functions.prefix_sweep import (
+    ntile_from_row_number,
+    prefix_sweep,
+)
 from zonal_datacube_spark.sources.loader import load_table
 
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
@@ -267,13 +272,309 @@ def q_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+RFM_TILES = 5
+
+
+def q_behavior_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM segmentation: every customer scored 1–5 on Recency (days
+    since last order — lower is better), Frequency (order count), and
+    Monetary (total spend), then the segment census — the classic
+    marketing cube. Each quintile assignment is a distributed
+    row_number through the range-bucketed prefix sweep plus the
+    arithmetic ANSI ntile (functions/prefix_sweep.py) — the
+    customer-grain table never enters a global window. Ties split
+    deterministically on custkey.
+
+    r13 (guide §2.4; the q_stats_spearman stacking trick): the three
+    per-axis quintile assignments ran as three separate quantile sweeps
+    (a GK-sketch aggregate + bucketed window each) joined back on
+    custkey — 30 sequential jobs at sf0.1. The axis now rides the
+    sweep's PARTITION key: per_cust stacks to (axis, custkey, v) with v
+    negated on the descending axes (descending=True orders by (val
+    DESC, custkey ASC); ordering -val ASC with the same tiebreak is the
+    identical total order, and recency/frequency/monetary are
+    integer-or-2dp-grid values whose negation is exact), ONE sweep
+    ranks all three axes (quantile edges are drawn per part key, so
+    each axis keeps its own boundaries), and the scores pivot back by
+    axis — one sketch job + one sweep + one pivot shuffle instead of
+    three of each."""
+    orders = load_table(spark, sf_dir, "orders")
+    anchor = orders.agg(F.max("o_orderdate").alias("maxd"))
+    per_cust = (
+        orders.crossJoin(F.broadcast(anchor))
+        .groupBy("o_custkey")
+        .agg(
+            F.datediff(F.first("maxd"), F.max("o_orderdate")).alias(
+                "recency_d"
+            ),
+            F.count("*").alias("frequency"),
+            F.round(F.sum("o_totalprice"), 2).alias("monetary"),
+        )
+        # customer-grain and consumed by TEN branches (three sweeps at
+        # three references each + the score join): one-shot
+        # materialization keeps the orders scan/rollup single and the
+        # plan linear in the branch count
+        .localCheckpoint()
+    )
+
+    # stack the three axes so ONE sweep ranks them all (docstring r13
+    # note): ascending -frequency / -monetary == descending original,
+    # custkey tiebreak unchanged; values are grid-exact so negation is
+    # lossless
+    stacked = per_cust.selectExpr(
+        "o_custkey",
+        "stack(3,"
+        " 'r', CAST(recency_d AS DOUBLE),"
+        " 'f', -CAST(frequency AS DOUBLE),"
+        " 'm', -monetary) AS (axis, v)",
+    )
+    swept = prefix_sweep(
+        stacked,
+        ["axis"],
+        "v",
+        tiebreak=["o_custkey"],
+        row_number_col="_rn",
+        total_count_col="_n",
+        boundaries="quantile",
+    )
+    tiles = swept.select(
+        "axis",
+        "o_custkey",
+        ntile_from_row_number(F.col("_rn"), F.col("_n"), RFM_TILES).alias(
+            "_tile"
+        ),
+    )
+    # pivot the per-axis scores back to one row per customer; every
+    # customer appears on all three axes, so the pivoted columns are
+    # never null and the old three-way inner join is reproduced exactly
+    scores = tiles.groupBy("o_custkey").agg(
+        F.max(F.when(F.col("axis") == "r", F.col("_tile"))).alias("r_score"),
+        F.max(F.when(F.col("axis") == "f", F.col("_tile"))).alias("f_score"),
+        F.max(F.when(F.col("axis") == "m", F.col("_tile"))).alias("m_score"),
+    )
+    scored = per_cust.select("o_custkey", "monetary").join(scores, "o_custkey")
+    # cell SUM, not avg: monetary sits on the 1e-2 decimal grid, so the
+    # sum rounds exactly at 2dp on both engines — an avg divides by the
+    # cell count and can land exactly on a half-cent midpoint, where
+    # Spark (HALF_UP) and DuckDB (half-to-even) disagree (hit at sf0.001)
+    return scored.groupBy("r_score", "f_score", "m_score").agg(
+        F.count("*").alias("n_customers"),
+        F.round(F.sum("monetary"), 2).alias("cell_monetary"),
+    )
+
+
+def q_behavior_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU/WAU stickiness per ISO week: average daily active users over
+    weekly active users — the engagement-health ratio every product
+    dashboard carries. Two distinct-user aggregations (day grain, week
+    grain) joined on the bounded week axis; every input to the ratio is
+    an exact integer, and the single derived ratio floors half-up at 6dp
+    on both engines (cookbook rule 15)."""
+    ev = load_table(spark, sf_dir, "events").select(
+        F.expr("extract(YEAROFWEEK FROM ts)").cast("int").alias("iso_year"),
+        F.weekofyear("ts").cast("int").alias("iso_week"),
+        F.dayofmonth("ts").alias("dom"),
+        F.month("ts").alias("mo"),
+        "user_id",
+    )
+    dau = (
+        ev.groupBy("iso_year", "iso_week", "mo", "dom")
+        .agg(F.count_distinct("user_id").alias("dau"))
+        .groupBy("iso_year", "iso_week")
+        .agg(F.sum("dau").alias("sum_dau"), F.count("*").alias("n_days"))
+    )
+    wau = ev.groupBy("iso_year", "iso_week").agg(
+        F.count_distinct("user_id").alias("wau")
+    )
+    j = dau.join(wau, ["iso_year", "iso_week"])
+    ratio = F.col("sum_dau") / (F.col("n_days") * F.col("wau"))
+    return j.select(
+        "iso_year",
+        "iso_week",
+        "sum_dau",
+        "n_days",
+        "wau",
+        g6(ratio).alias("stickiness"),
+    ).orderBy("iso_year", "iso_week")
+
+
+# --------------------------------------------------------------------------
+# windowFunnel
+# --------------------------------------------------------------------------
+
+FUNNEL_STEPS = ("view", "click", "purchase")
+FUNNEL_WINDOW_US = 72 * 3600 * 1_000_000  # 72 h, integer microseconds
+
+
+def q_behavior_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ClickHouse-style windowFunnel(72h): per user, the deepest prefix
+    of view → click → purchase completed strictly in order within 72
+    hours of the FIRST view. Three conditional-min windows stack over
+    ONE user_id hash partitioning (t2 conditions on t1, t3 on t2 —
+    Catalyst plans consecutive same-partitioning windows with a single
+    exchange) and the per-user rollup reuses that partitioning. Times
+    are integer epoch-microseconds (rules 7/11), so every comparison is
+    exact. Output: users per depth with the cohort share."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        "event_type",
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP '1970-01-01 00:00:00', ts)"
+        ).alias("us"),
+    )
+    w = Window.partitionBy("user_id")
+    s1, s2, s3 = FUNNEL_STEPS
+    t1 = ev.withColumn(
+        "t1",
+        F.min(F.when(F.col("event_type") == s1, F.col("us"))).over(w),
+    )
+    t2 = t1.withColumn(
+        "t2",
+        F.min(
+            F.when(
+                (F.col("event_type") == s2)
+                & (F.col("us") > F.col("t1"))
+                & (F.col("us") <= F.col("t1") + FUNNEL_WINDOW_US),
+                F.col("us"),
+            )
+        ).over(w),
+    )
+    t3 = t2.withColumn(
+        "t3",
+        F.min(
+            F.when(
+                (F.col("event_type") == s3)
+                & (F.col("us") > F.col("t2"))
+                & (F.col("us") <= F.col("t1") + FUNNEL_WINDOW_US),
+                F.col("us"),
+            )
+        ).over(w),
+    )
+    per_user = t3.groupBy("user_id").agg(
+        F.max(
+            F.when(F.col("t3").isNotNull(), 3)
+            .when(F.col("t2").isNotNull(), 2)
+            .when(F.col("t1").isNotNull(), 1)
+            .otherwise(0)
+        ).alias("depth")
+    )
+    census = per_user.groupBy("depth").agg(
+        F.count("*").alias("n_users")
+    )
+    tot = Window.partitionBy()  # depth grain: ≤ 4 rows, schema-bounded
+    return census.select(
+        "depth",
+        "n_users",
+        g6(
+            F.col("n_users").cast("double")
+            / F.sum("n_users").over(tot).cast("double")
+        ).alias("user_share"),
+    ).orderBy("depth")
+
+
+# --------------------------------------------------------------------------
+# top path triples
+# --------------------------------------------------------------------------
+
+PATH_TOP = 10
+
+
+def q_behavior_path_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top event-path triples — the 'what do users do next' census
+    behind sankey/path-analysis dashboards: every consecutive
+    (step1, step2, step3) along each user's time-ordered stream,
+    counted corpus-wide. Two leads share ONE user_id ordering (single
+    exchange over a data-scaled key; ties broken by event_id), the
+    census is a partial-agg groupBy on the path tuple, and the top-10
+    is a TakeOrdered heap with the full path as tiebreak."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    paths = ev.select(
+        F.col("event_type").alias("step1"),
+        F.lead("event_type", 1).over(w).alias("step2"),
+        F.lead("event_type", 2).over(w).alias("step3"),
+    ).filter(F.col("step3").isNotNull())
+    return (
+        paths.groupBy("step1", "step2", "step3")
+        .agg(F.count("*").alias("n_paths"))
+        .orderBy(
+            F.col("n_paths").desc(),
+            F.col("step1").asc(),
+            F.col("step2").asc(),
+            F.col("step3").asc(),
+        )
+        .limit(PATH_TOP)
+    )
+
+
 QUERIES = {
     "q_basket_affinity": q_basket_affinity,
     "q_ts_diurnal_profile": q_ts_diurnal_profile,
     "q_behavior_time_to_convert": q_behavior_time_to_convert,
     "q_funnel_conversion": q_funnel_conversion,
     "q_cohort_retention": q_cohort_retention,
+    "q_behavior_rfm": q_behavior_rfm,
+    "q_behavior_stickiness": q_behavior_stickiness,
+    "q_behavior_window_funnel": q_behavior_window_funnel,
+    "q_behavior_path_triples": q_behavior_path_triples,
 }
+
+_FUNNEL_SQL = f"""
+        WITH e AS (
+            SELECT user_id, event_type,
+                   date_diff('microsecond', TIMESTAMP '1970-01-01',
+                             ts)::BIGINT AS us
+            FROM events
+        ),
+        s1 AS (
+            SELECT user_id,
+                   min(CASE WHEN event_type = '{FUNNEL_STEPS[0]}'
+                            THEN us END) AS t1
+            FROM e GROUP BY user_id
+        ),
+        s2 AS (
+            SELECT e.user_id,
+                   min(CASE WHEN event_type = '{FUNNEL_STEPS[1]}'
+                            AND us > t1
+                            AND us <= t1 + {FUNNEL_WINDOW_US}
+                            THEN us END) AS t2
+            FROM e JOIN s1 ON e.user_id = s1.user_id
+            GROUP BY e.user_id
+        ),
+        s3 AS (
+            SELECT e.user_id,
+                   min(CASE WHEN event_type = '{FUNNEL_STEPS[2]}'
+                            AND us > t2
+                            AND us <= t1 + {FUNNEL_WINDOW_US}
+                            THEN us END) AS t3
+            FROM e
+            JOIN s1 ON e.user_id = s1.user_id
+            JOIN s2 ON e.user_id = s2.user_id
+            GROUP BY e.user_id
+        ),
+        depths AS (
+            SELECT s1.user_id,
+                   CASE WHEN t3 IS NOT NULL THEN 3
+                        WHEN t2 IS NOT NULL THEN 2
+                        WHEN t1 IS NOT NULL THEN 1
+                        ELSE 0 END AS depth
+            FROM s1
+            JOIN s2 ON s1.user_id = s2.user_id
+            JOIN s3 ON s1.user_id = s3.user_id
+        ),
+        census AS (
+            SELECT depth, count(*)::BIGINT AS n_users
+            FROM depths GROUP BY depth
+        )
+        SELECT depth, n_users,
+               {G6_SQL.format(
+                   x="n_users::DOUBLE / sum(n_users) OVER ()::DOUBLE"
+               )} AS user_share
+        FROM census
+        ORDER BY depth
+"""
 
 ORACLE = {
     "q_basket_affinity": f"""
@@ -414,5 +715,70 @@ ORACLE = {
                c.week_k, s.cohort_size, c.n_active,
                (c.n_active * 1000000) // s.cohort_size AS retained_ppm
         FROM cells c JOIN sizes s USING (cohort_week)
+    """,
+    "q_behavior_rfm": f"""
+        WITH anchor AS (SELECT max(o_orderdate) AS maxd FROM orders),
+        per_cust AS (
+            SELECT o_custkey,
+                   date_diff('day', max(o_orderdate), any_value(maxd))
+                       AS recency_d,
+                   count(*) AS frequency,
+                   round(sum(o_totalprice), 2) AS monetary
+            FROM orders, anchor
+            GROUP BY o_custkey
+        ),
+        scored AS (
+            SELECT monetary,
+                   ntile({RFM_TILES}) OVER (ORDER BY recency_d ASC,
+                                            o_custkey ASC) AS r_score,
+                   ntile({RFM_TILES}) OVER (ORDER BY frequency DESC,
+                                            o_custkey ASC) AS f_score,
+                   ntile({RFM_TILES}) OVER (ORDER BY monetary DESC,
+                                            o_custkey ASC) AS m_score
+            FROM per_cust
+        )
+        SELECT r_score, f_score, m_score,
+               count(*) AS n_customers,
+               round(sum(monetary), 2) AS cell_monetary
+        FROM scored GROUP BY 1, 2, 3
+    """,
+    "q_behavior_stickiness": """
+        WITH ev AS (
+            SELECT isoyear(ts)::INT AS iso_year, week(ts)::INT AS iso_week,
+                   month(ts) AS mo, day(ts) AS dom, user_id
+            FROM events
+        ),
+        dau AS (
+            SELECT iso_year, iso_week, sum(dau)::BIGINT AS sum_dau,
+                   count(*)::BIGINT AS n_days
+            FROM (SELECT iso_year, iso_week, mo, dom,
+                         count(DISTINCT user_id) AS dau
+                  FROM ev GROUP BY 1, 2, 3, 4)
+            GROUP BY 1, 2
+        ),
+        wau AS (
+            SELECT iso_year, iso_week, count(DISTINCT user_id)::BIGINT AS wau
+            FROM ev GROUP BY 1, 2
+        )
+        SELECT iso_year, iso_week, sum_dau, n_days, wau,
+               floor(sum_dau / (n_days * wau)::DOUBLE * 1000000 + 0.5)
+                   / 1000000 AS stickiness
+        FROM dau JOIN wau USING (iso_year, iso_week)
+        ORDER BY iso_year, iso_week
+    """,
+    "q_behavior_window_funnel": _FUNNEL_SQL,
+    "q_behavior_path_triples": f"""
+        WITH paths AS (
+            SELECT event_type AS step1,
+                   lead(event_type, 1) OVER w AS step2,
+                   lead(event_type, 2) OVER w AS step3
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        )
+        SELECT step1, step2, step3, count(*)::BIGINT AS n_paths
+        FROM paths WHERE step3 IS NOT NULL
+        GROUP BY step1, step2, step3
+        ORDER BY n_paths DESC, step1 ASC, step2 ASC, step3 ASC
+        LIMIT {PATH_TOP}
     """,
 }

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from zonal_datacube_spark.functions.exact import dot
 from zonal_datacube_spark.functions.text_funcs import shingles, tokens
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -265,7 +266,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs-row signature is persisted; bands come from one explode (not a
     3-way union), so the signature subplan appears once per join side and
     computes once. Shared by q_dedup_minhash (full pairwise tier) and
-    q_dedup_incremental (batch-probe maintenance tier, analytics_r8.py)."""
+    q_dedup_incremental (batch-probe maintenance tier, below)."""
     sh = _doc_shingles(spark, sf_dir)
     rows_per_band = MINHASH_SEEDS // MINHASH_BANDS
     sig = (
@@ -510,7 +511,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification joins are pair⋈doc equi-joins on the doc key — the corpus
     token table shuffles once per side at most and the expensive lexical
     compare runs only on candidates, not on n² pairs."""
-    from zonal_datacube_spark.operators.similarity import _dot, _sign_bucket
+    from zonal_datacube_spark.operators.similarity import _sign_bucket
 
     emb = load_table(spark, sf_dir, "embeddings").withColumn(
         "bucket", _sign_bucket("embedding")
@@ -524,7 +525,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.join(b, "bk")
         .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("cos", F.round(_dot("va", "vb"), 6))
+        .withColumn("cos", F.round(dot("va", "vb"), 6))
         .filter(F.col("cos") >= SEMANTIC_COS_TAU)
         .select("a_id", "b_id", "cos")
     )
@@ -557,6 +558,288 @@ _SH_CTE = """
         sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
 """
 
+
+ER_MAX_DIST = 2
+
+
+def _er_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "part").select(
+        "p_partkey",
+        "p_brand",
+        "p_name",
+        F.substring("p_name", 1, 1).alias("blk"),
+    )
+
+
+def _er_fuzzy_naive(parts: DataFrame) -> DataFrame:
+    """The row-grain formulation (every (brand, blk)-colocated part pair
+    through levenshtein) — kept as the differential referee for the
+    name-grain rewrite below. Correct at any SF, quadratic in duplicate
+    density: with d copies per name the PAIR SET itself is Θ(d²), which
+    the round-10 full-coverage SCALING run measured as a 9.95× marginal
+    ratio (0.24 s → 2.42 s per 10× data) — the plan that does not
+    survive scale-up."""
+    a = parts.select(
+        F.col("p_partkey").alias("a_key"),
+        F.col("p_brand").alias("p_brand"),
+        F.col("blk").alias("blk"),
+        F.col("p_name").alias("a_name"),
+    )
+    b = parts.select(
+        F.col("p_partkey").alias("b_key"),
+        F.col("p_brand").alias("b_brand"),
+        F.col("blk").alias("b_blk"),
+        F.col("p_name").alias("b_name"),
+    )
+    pairs = a.join(
+        b,
+        (a.p_brand == b.b_brand)
+        & (a.blk == b.b_blk)
+        & (a.a_key < b.b_key),
+    ).withColumn("dist", F.levenshtein("a_name", "b_name"))
+    return (
+        pairs.filter(F.col("dist") <= ER_MAX_DIST)
+        .groupBy("p_brand", "dist")
+        .agg(
+            F.count("*").alias("n_pairs"),
+            F.countDistinct("a_key").alias("n_left_entities"),
+        )
+    )
+
+
+def q_er_fuzzy_block(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked fuzzy entity resolution (record linkage): for every part
+    pair within a (brand, first-letter) block whose names are within
+    levenshtein distance 2, report per (brand, dist) the pair count and
+    the distinct left (smaller-key) entities — the catalog-dedup shape.
+
+    Computed on the NAME GRAIN (the q_text_bpe_pairs types-not-tokens
+    discipline, round-10 rewrite): real catalogs carry heavy duplicate
+    groups, so the row-grain pair set is Θ(d²) in per-name duplication d
+    — enumerating it is the plan that dies at 100 TB (measured 9.95×
+    wall per 10× data on the fixture's ~31-copy groups). Instead, one
+    groupBy collapses parts to (brand, blk, name) → (m, max_key); the
+    fuzzy join + levenshtein runs on DISTINCT NAME PAIRS (name-type
+    grain — vocabulary-bounded, and the open-vocabulary production tier
+    would signature-block this same type join); the row-grain aggregates
+    fold back EXACTLY:
+
+    - n_pairs(brand, d) = Σ_{name pairs g<h, lev=d} m_g·m_h, plus the
+      within-name term Σ_g m_g·(m_g−1) div 2 at d=0 (a_key < b_key picks
+      each unordered pair once — pure integer arithmetic);
+    - a part is a LEFT entity of (brand, d) iff some partner has a
+      larger key, i.e. iff its key < max over partner name-groups of
+      that group's max key — so one bounded (brand, name, d)-keyed
+      partner-max table joins back to the heavy table and a key < pmax
+      filter counts the distinct left entities without materializing a
+      single pair.
+
+    The heavy table is touched twice (one groupBy, one grain-keyed join
+    + filter), both linear; tests/test_analytics_ext_er.py proves the
+    fold bit-identical to the row-grain referee on the fixture and on
+    engineered duplicate/edge corpora; the DuckDB oracle keeps the
+    row-grain SQL, so driver parity attests the equivalence at every
+    SF. Bound note: n_pairs is inherently quadratic in block size — the
+    BIGINT count saturates once a (brand, dist) cell holds ~4.3e9
+    mutually-matching rows (n_pairs ≈ n²/2 > 2^63), the same bound the
+    enumerated row-grain count has; blocks that large are a blocking-
+    key-design failure upstream of this operator."""
+    return _er_fuzzy_grain(_er_parts(spark, sf_dir))
+
+
+def _er_fuzzy_grain(parts: DataFrame) -> DataFrame:
+    """The name-grain fold (see q_er_fuzzy_block); split out so the
+    differential test can feed engineered duplicate corpora."""
+    grain = parts.groupBy("p_brand", "blk", "p_name").agg(
+        F.count("*").alias("m"), F.max("p_partkey").alias("max_key")
+    )
+    a = grain.select(
+        "p_brand",
+        "blk",
+        F.col("p_name").alias("a_name"),
+        F.col("m").alias("a_m"),
+        F.col("max_key").alias("a_max"),
+    )
+    b = grain.select(
+        F.col("p_brand").alias("b_brand"),
+        F.col("blk").alias("b_blk"),
+        F.col("p_name").alias("b_name"),
+        F.col("m").alias("b_m"),
+        F.col("max_key").alias("b_max"),
+    )
+    # distinct unordered name pairs (a_name < b_name ⇒ dist ≥ 1)
+    cross = (
+        a.join(
+            b,
+            (a.p_brand == b.b_brand)
+            & (a.blk == b.b_blk)
+            & (a.a_name < b.b_name),
+        )
+        .withColumn("dist", F.levenshtein("a_name", "b_name"))
+        .filter(F.col("dist") <= ER_MAX_DIST)
+    )
+    dup_groups = grain.filter(F.col("m") >= 2)
+    n_pairs = (
+        cross.select(
+            "p_brand",
+            "dist",
+            (F.col("a_m") * F.col("b_m")).cast("bigint").alias("np"),
+        )
+        .unionByName(
+            dup_groups.select(
+                "p_brand",
+                F.lit(0).alias("dist"),
+                F.expr("CAST(m * (m - 1) DIV 2 AS BIGINT)").alias("np"),
+            )
+        )
+        .groupBy("p_brand", "dist")
+        .agg(F.sum("np").alias("n_pairs"))
+    )
+    # per (brand, name, dist): the max key over all partner groups —
+    # a part is a left entity iff its key is below that
+    partners = (
+        cross.select(
+            "p_brand",
+            "blk",
+            F.col("a_name").alias("p_name"),
+            "dist",
+            F.col("b_max").alias("pmax"),
+        )
+        .unionByName(
+            cross.select(
+                "p_brand",
+                F.col("b_blk").alias("blk"),
+                F.col("b_name").alias("p_name"),
+                "dist",
+                F.col("a_max").alias("pmax"),
+            )
+        )
+        .unionByName(
+            dup_groups.select(
+                "p_brand",
+                "blk",
+                "p_name",
+                F.lit(0).alias("dist"),
+                F.col("max_key").alias("pmax"),
+            )
+        )
+        .groupBy("p_brand", "blk", "p_name", "dist")
+        .agg(F.max("pmax").alias("pmax"))
+    )
+    # grain-keyed attach (open-vocabulary name key — un-hinted; AQE
+    # broadcasts the bounded partner table at runtime when it fits)
+    left = (
+        parts.join(partners, ["p_brand", "blk", "p_name"])
+        .filter(F.col("p_partkey") < F.col("pmax"))
+        .groupBy("p_brand", "dist")
+        .agg(F.count("*").alias("n_left_entities"))
+    )
+    return n_pairs.join(left, ["p_brand", "dist"]).select(
+        "p_brand", "dist", "n_pairs", "n_left_entities"
+    )
+
+
+CROSS_SOURCE_TOP = 25
+CROSS_SHINGLE_N = 8
+
+
+def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-source n-gram leakage matrix: which source pairs share the
+    most distinct 8-token shingles? The contamination audit every corpus
+    pipeline runs before splitting train/eval by source (full-text md5
+    match finds almost nothing — the fixture's copied SPANS live inside
+    otherwise-distinct documents, the q_dedup_span signal). Documents
+    explode to (shingle-digest, source) rows — the shuffle key is the
+    16-byte md5 of the shingle, never the text — then ONE digest-keyed
+    aggregation collects each digest's distinct source set (bounded by
+    the source count, ≤20 here) and the unordered pairs expand IN-ROW
+    from that bounded array: no self-join ever touches the data-scaled
+    table, and a shingle copied a million times still contributes at
+    most |sources|²/2 pair rows. (The first cut self-joined the distinct
+    (digest, source) table — correct, but its 10×-data wall-time ratio
+    was 3.3× vs ~1.5× for this shape: the join re-shuffled the whole
+    pair table a second time; SCALING.md tracks the fix.)"""
+    from zonal_datacube_spark.functions.text_funcs import shingles, tokens
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", tokens("text").alias("t")
+    )
+    src_sets = (
+        docs.filter(F.size("t") >= CROSS_SHINGLE_N)
+        .select(
+            "source",
+            F.explode(shingles("t", CROSS_SHINGLE_N)).alias("sh"),
+        )
+        # 16-byte binary digest, not the 32-char hex string: the digest
+        # is a pure grouping key (never output), and unhex(md5) is
+        # bijective on md5's range — same groups, half the shuffle key
+        # bytes on the data-scaled exchange
+        .select(F.unhex(F.md5("sh")).alias("dg"), "source")
+        .groupBy("dg")
+        .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
+        .filter(F.size("srcs") >= 2)
+    )
+    pairs = (
+        src_sets.select(F.posexplode("srcs").alias("pa", "src_a"), "srcs")
+        .select("src_a", "pa", F.posexplode("srcs").alias("pb", "src_b"))
+        .filter(F.col("pa") < F.col("pb"))
+    )
+    return (
+        pairs.groupBy("src_a", "src_b")
+        .agg(F.count("*").alias("n_shared"))
+        .orderBy(F.desc("n_shared"), "src_a", "src_b")
+        .limit(CROSS_SOURCE_TOP)
+    )
+
+# ---------------------------------------------------------------------------
+# incremental near-dup maintenance
+# ---------------------------------------------------------------------------
+
+INC_BATCH_MOD = 10  # doc_id % 10 == 0 → the incoming batch (~10% of corpus)
+
+
+def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental MinHash-LSH maintenance: the incoming batch's band
+    values probe the EXISTING corpus' band index; only (batch, base)
+    candidates are generated and exact-Jaccard-verified — never a
+    base × base pair, so per-ingest work is O(|batch| + candidates), not
+    O(|corpus|²-blocked). Output: every verified (batch, base) pair with
+    its exact Jaccard and the dedup verdict at the production threshold.
+
+    Scale: the band join shuffles on (band, bv) — the index's natural
+    bucketing key, so at 100 TB the probe co-locates with a bucketed
+    band table and the batch never rescans the corpus; verification
+    joins only the candidate ids back to the shingle arrays (the
+    q_dedup_minhash discipline). Equivalence: a batch×base band match
+    in the blended-corpus recompute is exactly a probe hit (band values
+    are per-doc), so incremental ≡ full-recompute-restricted — the
+    DuckDB oracle computes the latter."""
+    bands = _minhash_bands(spark, sf_dir)
+    batch = bands.filter(F.col("doc_id") % INC_BATCH_MOD == 0).alias("a")
+    base = bands.filter(F.col("doc_id") % INC_BATCH_MOD != 0).alias("b")
+    cand = (
+        batch.join(
+            base,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bv") == F.col("b.bv")),
+        )
+        .select(
+            F.col("a.doc_id").alias("a_id"),
+            F.col("b.doc_id").alias("b_id"),
+            F.col("a.n_sh").alias("na"),
+            F.col("b.n_sh").alias("nb"),
+        )
+        .distinct()
+    )
+    j = _verify_jaccard(cand, _doc_shingle_arrays(spark, sf_dir))
+    jr = F.round("jaccard", 6)
+    return j.select(
+        F.col("a_id").alias("batch_id"),
+        F.col("b_id").alias("base_id"),
+        jr.alias("jaccard"),
+        (jr >= F.lit(NEAR_DUP_TAU)).alias("is_dup"),
+    )
+
 QUERIES = {
     "q_distinct_rows": q_distinct_rows,
     "q_dedup_exact": q_dedup_exact,
@@ -567,6 +850,9 @@ QUERIES = {
     "q_dedup_simhash": q_dedup_simhash,
     "q_dedup_clusters": q_dedup_clusters,
     "q_dedup_semantic": q_dedup_semantic,
+    "q_er_fuzzy_block": q_er_fuzzy_block,
+    "q_dedup_cross_source": q_dedup_cross_source,
+    "q_dedup_incremental": q_dedup_incremental,
 }
 
 ORACLE = {
@@ -772,6 +1058,81 @@ ORACLE = {
         FROM inter
         JOIN sz sa ON a_id = sa.doc_id
         JOIN sz sb ON b_id = sb.doc_id
+    """,
+    "q_er_fuzzy_block": f"""
+        WITH p AS (
+            SELECT p_partkey, p_brand, p_name, substr(p_name, 1, 1) AS blk
+            FROM part
+        )
+        SELECT a.p_brand,
+               levenshtein(a.p_name, b.p_name)::INT AS dist,
+               count(*) AS n_pairs,
+               count(DISTINCT a.p_partkey) AS n_left_entities
+        FROM p a JOIN p b
+          ON a.p_brand = b.p_brand AND a.blk = b.blk
+         AND a.p_partkey < b.p_partkey
+        WHERE levenshtein(a.p_name, b.p_name) <= {ER_MAX_DIST}
+        GROUP BY 1, 2
+    """,
+    "q_dedup_cross_source": f"""
+        WITH toks AS (
+            SELECT source, string_split(lower(text), ' ') AS t
+            FROM documents
+        ),
+        sh AS (
+            SELECT source,
+                   array_to_string(
+                       t[i:i + {CROSS_SHINGLE_N - 1}], ' ') AS s
+            FROM toks, unnest(range(1, len(t) - {CROSS_SHINGLE_N - 2}))
+                 AS u(i)
+            WHERE len(t) >= {CROSS_SHINGLE_N}
+        ),
+        d AS (SELECT DISTINCT md5(s) AS dg, source FROM sh)
+        SELECT a.source AS src_a, b.source AS src_b,
+               count(DISTINCT a.dg)::BIGINT AS n_shared
+        FROM d a JOIN d b ON a.dg = b.dg AND a.source < b.source
+        GROUP BY 1, 2
+        ORDER BY n_shared DESC, src_a, src_b LIMIT {CROSS_SOURCE_TOP}
+    """,
+    "q_dedup_incremental": f"""
+        WITH {_SH_CTE},
+        sig AS (
+            SELECT doc_id,
+                   min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
+                   min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
+                   min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
+                   min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7,
+                   min(md5('8|' || sh)) AS h8
+            FROM sh GROUP BY doc_id
+        ),
+        bands AS (
+            SELECT doc_id, 0 AS band, h0 || h1 || h2 AS bv FROM sig
+            UNION ALL
+            SELECT doc_id, 1 AS band, h3 || h4 || h5 AS bv FROM sig
+            UNION ALL
+            SELECT doc_id, 2 AS band, h6 || h7 || h8 AS bv FROM sig
+        ),
+        cand AS (
+            SELECT DISTINCT a.doc_id AS batch_id, b.doc_id AS base_id
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.bv = b.bv
+            WHERE a.doc_id % {INC_BATCH_MOD} = 0
+              AND b.doc_id % {INC_BATCH_MOD} != 0
+        ),
+        inter AS (
+            SELECT c.batch_id, c.base_id, count(*) AS inter
+            FROM cand c
+            JOIN sh sa ON sa.doc_id = c.batch_id
+            JOIN sh sb ON sb.doc_id = c.base_id AND sb.sh = sa.sh
+            GROUP BY 1, 2
+        )
+        SELECT batch_id, base_id,
+               round(inter * 1.0 / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard,
+               round(inter * 1.0 / (sa.n_sh + sb.n_sh - inter), 6)
+                   >= {NEAR_DUP_TAU} AS is_dup
+        FROM inter
+        JOIN sz sa ON batch_id = sa.doc_id
+        JOIN sz sb ON base_id = sb.doc_id
     """,
 }
 

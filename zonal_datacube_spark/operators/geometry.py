@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.functions.exact import micro_units
 from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.sources.loader import load_table
 
 # (x: 0-200, y: 0-200) point space: px = events.value, py = event_id % 200.
 # P0 pentagon, P1 triangle, P2 concave hexagon; .5 offsets keep every
@@ -105,7 +106,7 @@ def q_zonal_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside = points_in_polygons(pts, edges_df(spark))
     # 6dp mean folds on the exact 1e-6 grid (q_zonal_stats r11
     # discipline — order-independent integer sums, one trailing division)
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     return inside.withColumn("_v6", v6).groupBy("zone_id").agg(
         F.count("*").alias("n_points"),
         F.round(F.sum("value"), 2).alias("sum_value"),
@@ -231,11 +232,113 @@ def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+NN_CELL = 0.1
+NN_CELL_SQ = 0.01  # same literal on both sides of the resolve predicate
+
+
+def q_geo_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT nearest-neighbor join via grid blocking: every probe point
+    (labels 0–4, coords = first two embedding dims) finds its true
+    nearest base point (labels 5–9). Candidates come from a 3×3
+    neighbor-cell equi-join on the probe's grid cell (side NN_CELL);
+    geometry guarantees any point OUTSIDE that neighborhood is ≥ NN_CELL
+    away, so a best candidate with d² < NN_CELL² is provably the global
+    nearest. Probes the grid cannot certify (none at observed densities —
+    tests/test_analytics_r5b.py pins the fraction) fall back to one
+    broadcast brute-force pass, keeping the operator exact at ANY
+    density while the hot path stays a cell-keyed equi-join that scales
+    with local density, not n². Per-probe argmin ties break on base id
+    via a struct min (same (d², id) lexicographic rule as the oracle's
+    row_number)."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        F.element_at("embedding", 1).cast("double").alias("x"),
+        F.element_at("embedding", 2).cast("double").alias("y"),
+    )
+    probes = emb.filter(F.col("label") <= 4).select(
+        F.col("vec_id").alias("a_id"),
+        F.col("label").alias("a_label"),
+        F.col("x").alias("ax"),
+        F.col("y").alias("ay"),
+        F.floor(F.col("x") / NN_CELL).alias("cx"),
+        F.floor(F.col("y") / NN_CELL).alias("cy"),
+    )
+    base = emb.filter(F.col("label") >= 5).select(
+        F.col("vec_id").alias("b_id"),
+        F.col("x").alias("bx"),
+        F.col("y").alias("by"),
+        F.floor(F.col("x") / NN_CELL).alias("bcx"),
+        F.floor(F.col("y") / NN_CELL).alias("bcy"),
+    )
+    neighborhood = (
+        probes.select(
+            "*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx")
+        )
+        .select("*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"))
+        .select(
+            "a_id",
+            "a_label",
+            "ax",
+            "ay",
+            (F.col("cx") + F.col("dx")).alias("tcx"),
+            (F.col("cy") + F.col("dy")).alias("tcy"),
+        )
+    )
+    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
+        F.col("ay") - F.col("by")
+    ) * (F.col("ay") - F.col("by"))
+    grid_best = (
+        neighborhood.join(
+            base,
+            (F.col("tcx") == F.col("bcx")) & (F.col("tcy") == F.col("bcy")),
+        )
+        .select(
+            "a_id",
+            "a_label",
+            F.struct(d2.alias("d2"), F.col("b_id").alias("b_id")).alias(
+                "cand"
+            ),
+        )
+        .groupBy("a_id", "a_label")
+        .agg(F.min("cand").alias("best"))
+    )
+    resolved = grid_best.filter(F.col("best.d2") < F.lit(NN_CELL_SQ))
+    # probes with no certifiable in-neighborhood winner (none at fixture
+    # density): one broadcast brute-force pass keeps the result exact
+    unresolved = probes.join(resolved.select("a_id"), "a_id", "left_anti")
+    brute = (
+        unresolved.crossJoin(F.broadcast(base))
+        .select(
+            "a_id",
+            "a_label",
+            F.struct(d2.alias("d2"), F.col("b_id").alias("b_id")).alias(
+                "cand"
+            ),
+        )
+        .groupBy("a_id", "a_label")
+        .agg(F.min("cand").alias("best"))
+    )
+    nn = resolved.unionByName(brute)
+    return (
+        nn.select("a_label", F.sqrt(F.col("best.d2")).alias("d"))
+        .groupBy("a_label")
+        .agg(
+            F.count("*").alias("n_probes"),
+            F.round(F.avg("d"), 6).alias("avg_nn_dist"),
+            F.round(F.min("d"), 6).alias("min_nn_dist"),
+            F.round(F.max("d"), 6).alias("max_nn_dist"),
+        )
+        .orderBy("a_label")
+    )
+
+
 QUERIES = {
     "q_zonal_polygon": q_zonal_polygon,
     "q_zonal_polygon_categorical": q_zonal_polygon_categorical,
     "q_geo_polygon_metrics": q_geo_polygon_metrics,
     "q_geo_radius_join": q_geo_radius_join,
+    "q_geo_nearest_neighbor": q_geo_nearest_neighbor,
 }
 
 ORACLE = {
@@ -307,5 +410,32 @@ ORACLE = {
                           AS DOUBLE) / count(*) / 1000000, 6) AS mean_value
         FROM inside
         GROUP BY zone_id
+    """,
+    "q_geo_nearest_neighbor": """
+        WITH p AS (
+            SELECT vec_id, label,
+                   embedding[1]::DOUBLE AS x, embedding[2]::DOUBLE AS y
+            FROM embeddings
+        ),
+        pr AS (SELECT * FROM p WHERE label <= 4),
+        ba AS (SELECT * FROM p WHERE label >= 5),
+        scored AS (
+            SELECT pr.vec_id AS a_id, pr.label AS a_label,
+                   (pr.x - ba.x) * (pr.x - ba.x)
+                       + (pr.y - ba.y) * (pr.y - ba.y) AS d2,
+                   row_number() OVER (
+                       PARTITION BY pr.vec_id
+                       ORDER BY (pr.x - ba.x) * (pr.x - ba.x)
+                                + (pr.y - ba.y) * (pr.y - ba.y),
+                                ba.vec_id) AS rn
+            FROM pr CROSS JOIN ba
+        )
+        SELECT a_label,
+               count(*)::BIGINT AS n_probes,
+               round(avg(sqrt(d2)), 6) AS avg_nn_dist,
+               round(min(sqrt(d2)), 6) AS min_nn_dist,
+               round(max(sqrt(d2)), 6) AS max_nn_dist
+        FROM scored WHERE rn = 1
+        GROUP BY a_label ORDER BY a_label
     """,
 }

@@ -33,9 +33,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from zonal_datacube_spark.functions.exact import G6_SQL, g6
+from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
 from zonal_datacube_spark.sources.loader import load_table
-from zonal_datacube_spark.functions.local_rel import local_relation
 
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as a ratio — keeps everything integer
 UNIT = 1_000_000_000_000  # rank fixed-point scale: 1e-12
@@ -320,10 +321,376 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_graph_2hop_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop reach over the HEAVY-route trade graph: for each nation,
+    the count of DISTINCT nations reachable in exactly two heavy hops
+    but NOT one (friend-of-friend discovery — the link-prediction
+    candidate set). The full nation graph is complete, so the same
+    SF-invariant top-quartile rank cut q_graph_sssp uses sparsifies it
+    first; then one self-equi-join on the edge rollup, a distinct, an
+    anti-join against the direct edges — every step hash-join sized on
+    the nation-grain table."""
+    all_edges = trade_edges_cached(spark, sf_dir).filter(
+        F.col("src") != F.col("dst")
+    )
+    w_rank = Window.orderBy(
+        F.col("w").desc(), F.col("src").asc(), F.col("dst").asc()
+    )
+    cnt = Window.partitionBy()
+    edges_cut = (
+        all_edges.select(
+            "src",
+            "dst",
+            F.row_number().over(w_rank).alias("rnk"),
+            F.count("*").over(cnt).alias("n_e"),
+        )
+        .filter(F.col("rnk") * 4 <= F.col("n_e"))
+        .select("src", "dst")
+    )
+    # the nation-grain edge list is SCHEMA-bounded (≤ n_nations² = 625
+    # rows at any SF — nations don't scale with data volume), but its
+    # derivation is a 4-table fact join. The self-join + anti-join below
+    # reference it three times, and Spark re-evaluates shared subtrees
+    # per reference — so materialize the bounded rollup ONCE and rebuild
+    # it as a local relation (the same eager-bounded pattern as
+    # q_graph_sssp's frontier loop; cost: one fact pass instead of three)
+    collected = edges_cut.collect()
+    # defensive: the collect is only safe because the edge grain is
+    # schema-bounded (nations² ≤ 625). If _trade_edges is ever rewired to
+    # a data-scaled key space, fail loudly instead of OOMing the driver.
+    if len(collected) > 10_000:
+        raise AssertionError(
+            "q_graph_2hop_neighbors: edge rollup is no longer "
+            f"schema-bounded ({len(collected)} rows collected); the "
+            "driver-side materialization assumes a nation-grain graph"
+        )
+    # LocalRelation, not createDataFrame's LogicalRDD (functions/
+    # local_rel.py): the self-join + anti-join reference this ≤625-row
+    # table three times, and each LogicalRDD reference paid a 32-task
+    # scan stage over near-empty partitions (event-log profile: 1.8 s
+    # of the key's wall in those stages)
+    edges = local_relation(spark, collected, "src long, dst long")
+    e2 = edges.select(
+        F.col("src").alias("mid"), F.col("dst").alias("dst2")
+    )
+    two_hop = (
+        edges.join(e2, edges.dst == e2.mid)
+        .select("src", "dst2")
+        .filter(F.col("src") != F.col("dst2"))
+        .distinct()
+        .join(
+            edges.select("src", F.col("dst").alias("dst2")),
+            ["src", "dst2"],
+            "left_anti",
+        )
+    )
+    nation = F.broadcast(
+        load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    )
+    return (
+        two_hop.groupBy("src")
+        .agg(F.count("*").alias("n_two_hop_only"))
+        .join(nation, F.col("src") == F.col("n_nationkey"))
+        .select(F.col("n_name").alias("nation"), "n_two_hop_only")
+    )
+
+
+# --------------------------------------------------------------------------
+# degree assortativity
+# --------------------------------------------------------------------------
+
+
+def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the nation trade graph (do high-volume
+    exporters sell to high-volume importers?): the Pearson correlation,
+    across edges, of source weighted out-degree vs destination weighted
+    in-degree — edge-weighted and unweighted variants side by side
+    (Newman 2002's r, directed out-in flavor). Degrees are integer edge
+    weights, so every moment is exact: products ride DECIMAL(38,0) /
+    HUGEINT (rule 12 — deg³ passes 2^63 well below 100 TB), and both
+    engines convert the same exact integers to doubles for the one
+    closed form. Two broadcast joins against the 25-row degree tables;
+    one moment fold."""
+    edges = trade_edges_cached(spark, sf_dir)
+    outw = edges.groupBy("src").agg(F.sum("w").alias("x"))
+    inw = edges.groupBy("dst").agg(F.sum("w").alias("y"))
+    e = edges.join(F.broadcast(outw), "src").join(F.broadcast(inw), "dst")
+    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    m = e.agg(
+        F.count("*").alias("n_edges"),
+        F.sum("w").alias("w_tot"),
+        F.sum(dec("w") * dec("x")).alias("wsx"),
+        F.sum(dec("w") * dec("y")).alias("wsy"),
+        F.sum(dec("w") * dec("x") * dec("x")).alias("wsxx"),
+        F.sum(dec("w") * dec("y") * dec("y")).alias("wsyy"),
+        F.sum(dec("w") * dec("x") * dec("y")).alias("wsxy"),
+        F.sum(dec("x")).alias("sx"),
+        F.sum(dec("y")).alias("sy"),
+        F.sum(dec("x") * dec("x")).alias("sxx"),
+        F.sum(dec("y") * dec("y")).alias("syy"),
+        F.sum(dec("x") * dec("y")).alias("sxy"),
+    )
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst")))
+        .distinct()
+        .agg(F.count("*").alias("n_nodes"))
+    )
+    d = lambda c: F.col(c).cast("double")  # noqa: E731
+
+    def pearson(n, sx, sy, sxx, syy, sxy):
+        return (d(n) * d(sxy) - d(sx) * d(sy)) / F.sqrt(
+            (d(n) * d(sxx) - d(sx) * d(sx))
+            * (d(n) * d(syy) - d(sy) * d(sy))
+        )
+
+    return m.crossJoin(F.broadcast(nodes)).select(
+        "n_nodes",
+        "n_edges",
+        "w_tot",
+        g6(pearson("w_tot", "wsx", "wsy", "wsxx", "wsyy", "wsxy")).alias(
+            "r_weighted"
+        ),
+        g6(pearson("n_edges", "sx", "sy", "sxx", "syy", "sxy")).alias(
+            "r_unweighted"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# k-core peeling
+# --------------------------------------------------------------------------
+
+KCORE_K = 5
+
+
+def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-core (k=5) of the undirected HEAVY-route trade graph — the
+    dense-backbone extraction community detection and fraud pipelines
+    run after edge filtering. The full nation graph saturates to a
+    complete graph by sf0.01 (every core trivial), so the same
+    SF-invariant top-quartile rank cut q_graph_sssp/q_graph_2hop use
+    sparsifies it first; k-core then iteratively peels: drop sub-k
+    nodes, recompute degrees, repeat to fixpoint (≤ nodes rounds; the
+    driver-side emptiness check + localCheckpoint lineage truncation
+    follow the q_graph_sssp loop discipline). Rows-only by design:
+    iterative deletion has no monotone recursive-CTE form DuckDB can
+    express; the python peeling referee in tests/test_analytics_r6b.py
+    pins exact membership and degrees. Output: surviving nations with
+    their within-core degree and the rounds-to-converge audit
+    column."""
+    edges = trade_edges_cached(spark, sf_dir).filter(F.col("src") != F.col("dst"))
+    w_rank = Window.orderBy(
+        F.col("w").desc(), F.col("src").asc(), F.col("dst").asc()
+    )
+    cnt = Window.partitionBy()
+    cut = (
+        edges.select(
+            "src",
+            "dst",
+            F.row_number().over(w_rank).alias("rnk"),
+            F.count("*").over(cnt).alias("n_e"),
+        )
+        .filter(F.col("rnk") * 4 <= F.col("n_e"))
+        .select("src", "dst")
+    )
+    und = (
+        cut.union(
+            cut.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .coalesce(1)
+        .localCheckpoint()
+    )
+    rounds = 0
+    while True:
+        deg = und.groupBy("src").agg(F.count("*").alias("deg"))
+        weak = deg.filter(F.col("deg") < KCORE_K).select("src")
+        if not weak.take(1):
+            break
+        rounds += 1
+        keep = deg.filter(F.col("deg") >= KCORE_K).select("src")
+        und = (
+            und.join(keep, "src", "left_semi")
+            .join(
+                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+            )
+            .coalesce(1)
+            .localCheckpoint()
+        )
+        if not und.take(1):  # graph peeled away entirely
+            break
+    nation = F.broadcast(
+        load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    )
+    return (
+        und.groupBy("src")
+        .agg(F.count("*").alias("core_degree"))
+        .join(nation, F.col("src") == F.col("n_nationkey"))
+        .select(
+            F.col("n_name").alias("nation"),
+            "core_degree",
+            F.lit(rounds).cast("bigint").alias("peel_rounds"),
+        )
+        .orderBy("nation")
+    )
+
+
+# --------------------------------------------------------------------------
+# link-prediction Jaccard
+# --------------------------------------------------------------------------
+
+LINK_TOP = 10
+
+
+def _und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected top-quartile trade edges (the q_graph_sssp /
+    q_graph_kcore sparsification), one row per direction."""
+    from pyspark.sql import Window
+
+    edges = trade_edges_cached(spark, sf_dir).filter(
+        F.col("src") != F.col("dst")
+    )
+    w_rank = Window.orderBy(
+        F.col("w").desc(), F.col("src").asc(), F.col("dst").asc()
+    )
+    cnt = Window.partitionBy()
+    cut = (
+        edges.select(
+            "src",
+            "dst",
+            F.row_number().over(w_rank).alias("rnk"),
+            F.count("*").over(cnt).alias("n_e"),
+        )
+        .filter(F.col("rnk") * 4 <= F.col("n_e"))
+        .select("src", "dst")
+    )
+    return cut.union(
+        cut.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def q_graph_link_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Link prediction by neighborhood Jaccard (the classic
+    common-neighbors baseline): for every NON-adjacent nation pair on
+    the sparsified trade graph, |N(a)∩N(b)| / |N(a)∪N(b)| — the pairs
+    a recommender would propose wiring next. Common neighbors come
+    from one self-join of the undirected edge list on the shared
+    endpoint (bounded² — the graph is nation-grain); adjacency is an
+    anti-join back onto the edges; the score is ONE division of exact
+    integer set sizes, ranked (score desc, pair asc) for a
+    deterministic top-10. The edge list is referenced four times
+    (self-join x2, adjacency, degrees), so like q_graph_2hop_neighbors
+    it materializes the SCHEMA-bounded rollup once and rebuilds it as a
+    local relation — one fact pass instead of four (guarded: fails
+    loudly if the edge grain ever stops being nation-bounded)."""
+    collected = _und_edges(spark, sf_dir).collect()
+    if len(collected) > 10_000:
+        raise AssertionError(
+            "q_graph_link_jaccard: edge rollup is no longer "
+            f"schema-bounded ({len(collected)} rows collected)"
+        )
+    # LocalRelation, not LogicalRDD — same rationale as
+    # q_graph_2hop_neighbors (four references, each was a 32-task scan)
+    und = local_relation(spark, collected, "src long, dst long")
+    deg = und.groupBy("src").agg(F.count("*").alias("deg"))
+    e1 = und.select(F.col("src").alias("a"), F.col("dst").alias("n"))
+    e2 = und.select(F.col("src").alias("b"), F.col("dst").alias("n"))
+    common = (
+        e1.join(e2, "n")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    adj = und.select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    )
+    cand = common.join(adj, ["a", "b"], "left_anti")
+    da = deg.select(F.col("src").alias("a"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("src").alias("b"), F.col("deg").alias("deg_b"))
+    scored = (
+        cand.join(F.broadcast(da), "a")
+        .join(F.broadcast(db), "b")
+        .select(
+            "a",
+            "b",
+            "n_common",
+            (F.col("deg_a") + F.col("deg_b") - F.col("n_common")).alias(
+                "n_union"
+            ),
+        )
+    )
+    score = F.col("n_common").cast("double") / F.col("n_union").cast(
+        "double"
+    )
+    return (
+        scored.select(
+            "a", "b", "n_common", "n_union", g6(score).alias("jaccard")
+        )
+        .orderBy(
+            F.col("jaccard").desc(), F.col("a").asc(), F.col("b").asc()
+        )
+        .limit(LINK_TOP)
+    )
+
+
+# --------------------------------------------------------------------------
+# reciprocity
+# --------------------------------------------------------------------------
+
+
+def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocity of the DIRECTED nation trade graph: the share of
+    directed edges whose reverse edge exists, and the weighted variant
+    Σ min(w_ab, w_ba) / Σ w — how symmetric trade flows are. One
+    self-join of the nation-grain rollup on the reversed key (bounded);
+    exact integer counts and weights until the two display divisions."""
+    edges = trade_edges_cached(spark, sf_dir).filter(
+        F.col("src") != F.col("dst")
+    )
+    rev = edges.select(
+        F.col("dst").alias("src"),
+        F.col("src").alias("dst"),
+        F.col("w").alias("w_rev"),
+    )
+    joined = edges.join(F.broadcast(rev), ["src", "dst"], "left")
+    return joined.agg(
+        F.count("*").alias("n_edges"),
+        F.sum(F.col("w_rev").isNotNull().cast("bigint")).alias(
+            "n_reciprocated"
+        ),
+        F.sum("w").alias("total_weight"),
+        F.sum(
+            F.when(
+                F.col("w_rev").isNotNull(),
+                F.least(F.col("w"), F.col("w_rev")),
+            ).otherwise(0)
+        ).alias("reciprocated_weight"),
+    ).select(
+        "n_edges",
+        "n_reciprocated",
+        g6(
+            F.col("n_reciprocated").cast("double")
+            / F.col("n_edges").cast("double")
+        ).alias("edge_reciprocity"),
+        "total_weight",
+        "reciprocated_weight",
+        g6(
+            F.col("reciprocated_weight").cast("double")
+            / F.col("total_weight").cast("double")
+        ).alias("weight_reciprocity"),
+    )
+
+
 QUERIES = {
     "q_graph_pagerank": q_graph_pagerank,
     "q_graph_triangles": q_graph_triangles,
     "q_graph_sssp": q_graph_sssp,
+    "q_graph_2hop_neighbors": q_graph_2hop_neighbors,
+    "q_graph_assortativity": q_graph_assortativity,
+    "q_graph_kcore": q_graph_kcore,
+    "q_graph_link_jaccard": q_graph_link_jaccard,
+    "q_graph_reciprocity": q_graph_reciprocity,
 }
 
 _EDGES_SQL = """
@@ -444,8 +811,169 @@ _SSSP_ORACLE = f"""
     GROUP BY n.n_name
 """
 
+# the trade-graph edge rollup, mirroring graph._trade_edges / _EDGES_SQL
+_EDGES_ONLY_SQL = """
+        edges AS (
+            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+                   count(*)::BIGINT AS w
+            FROM lineitem l
+            JOIN orders o ON l.l_orderkey = o.o_orderkey
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            JOIN supplier s ON l.l_suppkey = s.s_suppkey
+            GROUP BY 1, 2
+        )
+"""
+
+
+_EDGE_WEIGHTS_SQL = """
+            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+                   count(*)::BIGINT AS w
+            FROM lineitem l
+            JOIN orders o ON l.l_orderkey = o.o_orderkey
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            JOIN supplier s ON l.l_suppkey = s.s_suppkey
+            GROUP BY 1, 2
+"""
+
+_UND_SQL = f"""
+        edges AS MATERIALIZED (
+            SELECT * FROM ({_EDGE_WEIGHTS_SQL}) WHERE src <> dst
+        ),
+        cut AS MATERIALIZED (
+            SELECT src, dst FROM (
+                SELECT src, dst,
+                       row_number() OVER (
+                           ORDER BY w DESC, src ASC, dst ASC
+                       ) AS rnk,
+                       count(*) OVER () AS n_e
+                FROM edges
+            ) WHERE rnk * 4 <= n_e
+        ),
+        und AS MATERIALIZED (
+            SELECT src, dst FROM cut
+            UNION
+            SELECT dst AS src, src AS dst FROM cut
+        )
+"""
+
 ORACLE = {
     "q_graph_pagerank": _pagerank_oracle(),
     "q_graph_triangles": _TRIANGLE_ORACLE,
     "q_graph_sssp": _SSSP_ORACLE,
+    "q_graph_2hop_neighbors": """
+        WITH """ + _EDGES_SQL + """,
+        ranked AS (
+            SELECT src, dst,
+                   row_number() OVER (ORDER BY w DESC, src ASC, dst ASC)
+                       AS rnk,
+                   count(*) OVER () AS n_e
+            FROM edges WHERE src <> dst
+        ),
+        direct AS (
+            SELECT DISTINCT src, dst FROM ranked WHERE rnk * 4 <= n_e
+        ),
+        two_hop AS (
+            SELECT DISTINCT a.src, b.dst AS dst2
+            FROM direct a JOIN direct b ON a.dst = b.src
+            WHERE a.src <> b.dst
+        ),
+        only2 AS (
+            SELECT t.src, t.dst2 FROM two_hop t
+            WHERE NOT EXISTS (
+                SELECT 1 FROM direct d
+                WHERE d.src = t.src AND d.dst = t.dst2
+            )
+        )
+        SELECT n.n_name AS nation, count(*) AS n_two_hop_only
+        FROM only2 o JOIN nation n ON o.src = n.n_nationkey
+        GROUP BY n.n_name
+    """,
+    "q_graph_assortativity": f"""
+        WITH {_EDGES_ONLY_SQL.strip()},
+        outw AS (SELECT src, sum(w)::BIGINT AS x FROM edges GROUP BY src),
+        inw AS (SELECT dst, sum(w)::BIGINT AS y FROM edges GROUP BY dst),
+        e AS (
+            SELECT edges.w, outw.x, inw.y
+            FROM edges JOIN outw USING (src) JOIN inw USING (dst)
+        ),
+        m AS (
+            SELECT count(*)::BIGINT AS n_edges, sum(w)::BIGINT AS w_tot,
+                   sum(w::HUGEINT * x::HUGEINT) AS wsx,
+                   sum(w::HUGEINT * y::HUGEINT) AS wsy,
+                   sum(w::HUGEINT * x::HUGEINT * x::HUGEINT) AS wsxx,
+                   sum(w::HUGEINT * y::HUGEINT * y::HUGEINT) AS wsyy,
+                   sum(w::HUGEINT * x::HUGEINT * y::HUGEINT) AS wsxy,
+                   sum(x::HUGEINT) AS sx, sum(y::HUGEINT) AS sy,
+                   sum(x::HUGEINT * x::HUGEINT) AS sxx,
+                   sum(y::HUGEINT * y::HUGEINT) AS syy,
+                   sum(x::HUGEINT * y::HUGEINT) AS sxy
+            FROM e
+        ),
+        nodes AS (
+            SELECT count(*)::BIGINT AS n_nodes FROM (
+                SELECT src AS node FROM edges
+                UNION SELECT dst FROM edges
+            )
+        )
+        SELECT nodes.n_nodes, m.n_edges, m.w_tot,
+               {G6_SQL.format(x='(w_tot::DOUBLE * wsxy::DOUBLE - wsx::DOUBLE * wsy::DOUBLE) / sqrt((w_tot::DOUBLE * wsxx::DOUBLE - wsx::DOUBLE * wsx::DOUBLE) * (w_tot::DOUBLE * wsyy::DOUBLE - wsy::DOUBLE * wsy::DOUBLE))')}
+                   AS r_weighted,
+               {G6_SQL.format(x='(n_edges::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE) / sqrt((n_edges::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE) * (n_edges::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE))')}
+                   AS r_unweighted
+        FROM m, nodes
+    """,
+    "q_graph_link_jaccard": f"""
+        WITH {_UND_SQL},
+        deg AS (SELECT src, count(*)::BIGINT AS deg FROM und GROUP BY src),
+        common AS (
+            SELECT e1.src AS a, e2.src AS b, count(*)::BIGINT AS n_common
+            FROM und e1 JOIN und e2
+              ON e1.dst = e2.dst AND e1.src < e2.src
+            GROUP BY 1, 2
+        ),
+        cand AS (
+            -- hash anti-join, not a correlated NOT EXISTS: DuckDB
+            -- re-evaluated the whole und pipeline per probe (196 s)
+            SELECT c.a, c.b, c.n_common
+            FROM common c
+            LEFT JOIN und u ON u.src = c.a AND u.dst = c.b
+            WHERE u.src IS NULL
+        )
+        SELECT a, b, n_common,
+               (da.deg + db.deg - n_common)::BIGINT AS n_union,
+               {G6_SQL.format(
+                   x="n_common::DOUBLE"
+                   " / (da.deg + db.deg - n_common)::DOUBLE"
+               )} AS jaccard
+        FROM cand
+        JOIN deg da ON da.src = cand.a
+        JOIN deg db ON db.src = cand.b
+        ORDER BY jaccard DESC, a ASC, b ASC
+        LIMIT {LINK_TOP}
+    """,
+    "q_graph_reciprocity": f"""
+        WITH edges AS MATERIALIZED (
+            SELECT * FROM ({_EDGE_WEIGHTS_SQL}) WHERE src <> dst
+        ),
+        joined AS (
+            SELECT e.w, r.w AS w_rev
+            FROM edges e
+            LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src
+        )
+        SELECT count(*)::BIGINT AS n_edges,
+               sum(CASE WHEN w_rev IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+                   AS n_reciprocated,
+               {G6_SQL.format(
+                   x="sum(CASE WHEN w_rev IS NOT NULL THEN 1 ELSE 0 "
+                   "END)::DOUBLE / count(*)::DOUBLE"
+               )} AS edge_reciprocity,
+               sum(w)::BIGINT AS total_weight,
+               sum(CASE WHEN w_rev IS NOT NULL THEN least(w, w_rev)
+                        ELSE 0 END)::BIGINT AS reciprocated_weight,
+               {G6_SQL.format(
+                   x="sum(CASE WHEN w_rev IS NOT NULL THEN least(w, w_rev)"
+                   " ELSE 0 END)::DOUBLE / sum(w)::DOUBLE"
+               )} AS weight_reciprocity
+        FROM joined
+    """,
 }

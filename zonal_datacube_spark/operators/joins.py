@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import half_up, revenue
+from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.operators.zonal import ZONES_SQL_VALUES, zones_df
 from zonal_datacube_spark.sources.loader import load_table
-from zonal_datacube_spark.functions.local_rel import local_relation
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -39,7 +40,7 @@ def q_join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round to 4 (the product's true decimal precision): rounding a
         # 4-decimal quantity to 2 hits exact half-cent ties where Spark
         # (HALF_UP) and DuckDB disagree — SURVEY.md §5.4
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("net_price"),
+        F.round(revenue(), 4).alias("net_price"),
     )
 
 
@@ -83,9 +84,7 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue"),
+            F.round(F.sum(revenue()), 4).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -324,9 +323,7 @@ def q_join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").alias("n_items"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            F.round(F.sum(revenue()), 2).alias("revenue"),
         )
     )
 
@@ -359,6 +356,227 @@ def q_join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit cross join of two small dims (the only sane cardinality for
+    a cross product — anything larger is a plan bug, see §4.3)."""
+    reg = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return reg.crossJoin(nat).select(
+        "r_regionkey",
+        "n_nationkey",
+        F.concat_ws("/", "r_name", "n_name").alias("pair_name"),
+    )
+
+
+def q_join_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated EXISTS subquery — Catalyst rewrites it into a left-semi
+    join (same physical plan as q_join_semi; the surface is the point)."""
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("zds_cust_ex")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("zds_orders_ex")
+    return spark.sql(
+        """
+        SELECT c_custkey, c_name
+        FROM zds_cust_ex c
+        WHERE EXISTS (
+            SELECT 1 FROM zds_orders_ex o
+            WHERE o.o_custkey = c.c_custkey
+              AND o.o_orderpriority = '1-URGENT'
+        )
+        """
+    )
+
+
+def q_join_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NEAREST-event alignment: each purchase pairs with the temporally
+    closest non-purchase event of the same user, BEFORE or AFTER (ties
+    go to the earlier side) — the bidirectional generalization of the
+    as-of join that attribution and root-cause tooling ask for. One
+    user-keyed window pass computes both candidates (carry-forward and
+    carry-backward IGNORE NULLS), plain arithmetic picks the nearer;
+    never a per-purchase range join."""
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "eps",
+        F.expr(
+            "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        ),
+    )
+    touch = F.when(
+        F.col("event_type") != "purchase",
+        F.struct(F.col("eps").alias("t"), F.col("event_type").alias("ty")),
+    )
+    fwd = (
+        Window.partitionBy("user_id")
+        .orderBy("eps", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bwd = (
+        Window.partitionBy("user_id")
+        .orderBy("eps", "event_id")
+        .rowsBetween(1, Window.unboundedFollowing)
+    )
+    paired = ev.select(
+        "user_id",
+        "event_type",
+        "eps",
+        F.last(touch, ignorenulls=True).over(fwd).alias("prev_t"),
+        F.first(touch, ignorenulls=True).over(bwd).alias("next_t"),
+    ).filter(F.col("event_type") == "purchase")
+    d_prev = F.col("eps") - F.col("prev_t.t")
+    d_next = F.col("next_t.t") - F.col("eps")
+    pick_prev = F.col("next_t").isNull() | (
+        F.col("prev_t").isNotNull() & (d_prev <= d_next)
+    )
+    chosen = paired.filter(
+        F.col("prev_t").isNotNull() | F.col("next_t").isNotNull()
+    ).select(
+        F.when(pick_prev, F.col("prev_t.ty"))
+        .otherwise(F.col("next_t.ty"))
+        .alias("nearest_type"),
+        F.when(pick_prev, d_prev).otherwise(d_next).alias("dist_s"),
+        F.when(pick_prev, F.lit("before"))
+        .otherwise(F.lit("after"))
+        .alias("side"),
+    )
+    return chosen.groupBy("nearest_type", "side").agg(
+        F.count("*").alias("n_purchases"),
+        F.round(F.avg("dist_s"), 2).alias("avg_dist_s"),
+        F.max("dist_s").alias("max_dist_s"),
+    )
+
+
+# --------------------------------------------------------------------------
+# as-of join with tolerance
+# --------------------------------------------------------------------------
+
+ASOF_TOLERANCE_US = 48 * 3600 * 1_000_000  # 48 h
+
+
+def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join with a 48 h match tolerance (pandas
+    merge_asof(tolerance=...) / kdb wj semantics): each non-signup
+    event matches the latest prior-or-equal signup of its user ONLY if
+    that signup is at most 48 h old — stale anchors are not matches.
+    Same scalable shape as q_join_asof (joins.py:160): one window
+    carry over the user_id shuffle, zero self-joins; the tolerance is
+    one integer-microsecond filter on top. Output: matched events with
+    their exact lag in microseconds."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP '1970-01-01 00:00:00', ts)"
+        ).alias("us"),
+    )
+    is_signup = (F.col("event_type") == "signup").cast("int")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("us").asc(), is_signup.desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = ev.withColumn(
+        "signup_us",
+        F.last(
+            F.when(F.col("event_type") == "signup", F.col("us")),
+            ignorenulls=True,
+        ).over(w),
+    )
+    return carried.filter(
+        (F.col("event_type") != "signup")
+        & F.col("signup_us").isNotNull()
+        & (F.col("us") - F.col("signup_us") <= ASOF_TOLERANCE_US)
+    ).select(
+        "event_id",
+        "user_id",
+        (F.col("us") - F.col("signup_us")).alias("lag_us"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# engineered-skew join (the AQE skew-split shape)
+# ---------------------------------------------------------------------------
+
+SKEW_HOT_KEY = 1  # every l_linenumber >= 4 row collapses onto this orderkey
+
+
+def _rev_e4() -> F.Column:
+    # revenue on the 1e4 integer grid: floor(x + 0.5) of one identical
+    # IEEE chain (mul, mul, add) per row in both engines; Spark floor on
+    # DOUBLE is already BIGINT
+    return half_up(revenue(), 10000)
+
+
+def q_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fact⋈fact join on an engineered hot key — the skew-split stress
+    shape. ~57% of lineitem rows (every l_linenumber ≥ 4) remap their
+    join key to one hot orderkey, so the shuffle partition holding that
+    key carries the majority of the fact table: the exact pathology
+    ``spark.sql.adaptive.skewJoin`` exists to split (one oversized
+    partition → N sub-partitions, the matching build rows replicated).
+
+    The query itself is declarative and conf-free — the point is the
+    DATA shape, not a hint: at fixture scale AQE broadcasts the
+    dim-sized orders side (skew in a broadcast join is harmless — no
+    partition boundary exists to overload); at 100 TB orders is
+    fact-sized, the join sort-merges, and the skewed partition splits.
+    tests/test_analytics_r10.py proves the split fires (executed plan
+    ``skew=true``) by lowering the skew thresholds to fixture-reachable
+    bytes with the broadcast path disabled, and that the split run's
+    result is row-identical to the default run — AQE only re-plans
+    the exchange, never the answer. Revenue folds on the 1e4 integer
+    grid into an exact DECIMAL(38,0) sum emitted as its decimal string
+    (the hot group's int64 sum would overflow near 2.6e10 rows/group;
+    a double sum would round above 2^53 — see _skew_join_fold)."""
+    li = _skewed_fact(load_table(spark, sf_dir, "lineitem"))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    return _skew_join_fold(li, orders)
+
+
+def _skewed_fact(lineitem: DataFrame) -> DataFrame:
+    """(jk, rev_e4) projection with the engineered hot key."""
+    return lineitem.select(
+        F.when(F.col("l_linenumber") >= 4, F.lit(SKEW_HOT_KEY))
+        .otherwise(F.col("l_orderkey"))
+        .alias("jk"),
+        _rev_e4().alias("rev_e4"),
+    )
+
+
+def _skew_join_fold(li: DataFrame, orders: DataFrame) -> DataFrame:
+    """The join + fold, split out so the test can feed a MULTI-MAPPER
+    fact side: AQE splits a skewed reducer partition by regrouping MAP
+    outputs (PartialReducerPartitionSpec), so the split's granularity
+    is one mapper — a single-file/single-row-group fixture scan yields
+    ONE mapper and an unsplittable hot partition no matter the
+    thresholds. At 100 TB the fact side arrives from thousands of
+    mappers and the same plan splits freely; the test reproduces that
+    precondition with a repartition on the fixture."""
+    return (
+        li.join(orders, li.jk == orders.o_orderkey)
+        .groupBy(
+            (F.col("jk") == SKEW_HOT_KEY).alias("is_hot"), "o_orderpriority"
+        )
+        .agg(
+            F.count("*").alias("n_items"),
+            # DECIMAL(38,0) accumulation, not BIGINT: the hot group holds
+            # ~57% of the corpus, and at ~3.6e8 mean rev_e4 an int64 sum
+            # overflows near 2.6e10 rows per group (~4 TB of lineitem) —
+            # far below the 100 TB regime this key stress-tests. The
+            # decimal fold is exact to 1e38; emitted as its exact decimal
+            # string (the q_agg_decimal_exact convention — a cast back to
+            # BIGINT would re-introduce the overflow, a double would
+            # round above 2^53). DuckDB accumulates HUGEINT and renders
+            # the same digits.
+            F.sum(F.col("rev_e4").cast("decimal(38,0)"))
+            .cast("string")
+            .alias("revenue_e4"),
+        )
+        .orderBy("is_hot", "o_orderpriority")
+    )
+
+
 QUERIES = {
     "q_join_null_safe": q_join_null_safe,
     "q_join_bloom_semi": q_join_bloom_semi,
@@ -375,6 +593,11 @@ QUERIES = {
     "q_join_asof": q_join_asof,
     "q_join_interval": q_join_interval,
     "q_join_range_bucketed": q_join_range_bucketed,
+    "q_join_cross": q_join_cross,
+    "q_join_exists": q_join_exists,
+    "q_join_nearest_event": q_join_nearest_event,
+    "q_join_asof_tolerance": q_join_asof_tolerance,
+    "q_join_skew_split": q_join_skew_split,
 }
 
 _NULLSAFE_VALUES = ", ".join(
@@ -496,5 +719,109 @@ ORACLE = {
         SELECT interval_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
         FROM events JOIN iv ON ts >= lo AND ts < hi
         GROUP BY interval_id
+    """,
+    "q_join_cross": """
+        SELECT r_regionkey, n_nationkey, r_name || '/' || n_name AS pair_name
+        FROM region CROSS JOIN nation
+    """,
+    "q_join_exists": """
+        SELECT c_custkey, c_name
+        FROM customer c
+        WHERE EXISTS (
+            SELECT 1 FROM orders o
+            WHERE o.o_custkey = c.c_custkey
+              AND o.o_orderpriority = '1-URGENT'
+        )
+    """,
+    "q_join_nearest_event": """
+        WITH base AS (
+            SELECT user_id, event_id, event_type,
+                   date_diff('second', TIMESTAMP '1970-01-01 00:00:00', ts)
+                       AS eps
+            FROM events
+        ),
+        paired AS (
+            SELECT user_id, event_type, eps,
+                   last_value(CASE WHEN event_type <> 'purchase'
+                                   THEN struct_pack(t := eps,
+                                                    ty := event_type)
+                              END IGNORE NULLS)
+                       OVER (PARTITION BY user_id ORDER BY eps, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND 1 PRECEDING) AS prev_t,
+                   first_value(CASE WHEN event_type <> 'purchase'
+                                    THEN struct_pack(t := eps,
+                                                     ty := event_type)
+                               END IGNORE NULLS)
+                       OVER (PARTITION BY user_id ORDER BY eps, event_id
+                             ROWS BETWEEN 1 FOLLOWING
+                                   AND UNBOUNDED FOLLOWING) AS next_t
+            FROM base
+        ),
+        chosen AS (
+            SELECT CASE WHEN next_t IS NULL
+                          OR (prev_t IS NOT NULL
+                              AND eps - prev_t.t <= next_t.t - eps)
+                        THEN prev_t.ty ELSE next_t.ty END AS nearest_type,
+                   CASE WHEN next_t IS NULL
+                          OR (prev_t IS NOT NULL
+                              AND eps - prev_t.t <= next_t.t - eps)
+                        THEN eps - prev_t.t ELSE next_t.t - eps
+                   END AS dist_s,
+                   CASE WHEN next_t IS NULL
+                          OR (prev_t IS NOT NULL
+                              AND eps - prev_t.t <= next_t.t - eps)
+                        THEN 'before' ELSE 'after' END AS side
+            FROM paired
+            WHERE event_type = 'purchase'
+              AND (prev_t IS NOT NULL OR next_t IS NOT NULL)
+        )
+        SELECT nearest_type, side,
+               count(*) AS n_purchases,
+               round(avg(dist_s), 2) AS avg_dist_s,
+               max(dist_s) AS max_dist_s
+        FROM chosen GROUP BY 1, 2
+    """,
+    "q_join_asof_tolerance": f"""
+        WITH e AS (
+            SELECT event_id, user_id, event_type,
+                   date_diff('microsecond', TIMESTAMP '1970-01-01',
+                             ts)::BIGINT AS us
+            FROM events
+        ),
+        carried AS (
+            SELECT event_id, user_id, event_type, us,
+                   last_value(
+                       CASE WHEN event_type = 'signup' THEN us END
+                       IGNORE NULLS
+                   ) OVER (
+                       PARTITION BY user_id
+                       ORDER BY us ASC,
+                                CASE WHEN event_type = 'signup'
+                                     THEN 0 ELSE 1 END ASC
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS signup_us
+            FROM e
+        )
+        SELECT event_id, user_id, us - signup_us AS lag_us
+        FROM carried
+        WHERE event_type <> 'signup'
+          AND signup_us IS NOT NULL
+          AND us - signup_us <= {ASOF_TOLERANCE_US}
+    """,
+    "q_join_skew_split": f"""
+        WITH l AS (
+            SELECT CASE WHEN l_linenumber >= 4 THEN {SKEW_HOT_KEY}
+                        ELSE l_orderkey END AS jk,
+                   floor(l_extendedprice * (1 - l_discount) * 10000
+                         + 0.5)::BIGINT AS rev_e4
+            FROM lineitem
+        )
+        SELECT (jk = {SKEW_HOT_KEY}) AS is_hot, o_orderpriority,
+               count(*)::BIGINT AS n_items,
+               sum(rev_e4)::DECIMAL(38,0)::VARCHAR AS revenue_e4
+        FROM l JOIN orders ON o_orderkey = jk
+        GROUP BY 1, 2
+        ORDER BY 1, 2
     """,
 }

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.multimodal import decode_media_stats, synthetic_media
+from zonal_datacube_spark.functions.multimodal import (
+    decode_media_stats,
+    synthetic_media,
+)
+from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
+from zonal_datacube_spark.sources.loader import load_table
 
 N_MEDIA = 96  # deterministic synthetic payloads — fixture-independent
 
@@ -150,11 +155,61 @@ def q_media_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --------------------------------------------------------------------------
+# decode-shard planner
+# --------------------------------------------------------------------------
+
+SHARD_CHARS = 32_000
+
+
+def q_media_decode_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decode-shard planner — the scheduling step before a multimodal
+    decode pass: pack documents (stand-ins for binary media items,
+    sized by n_chars) into size-balanced shards in doc_id order, shard
+    = floor(chars_before / 32k), so every shard holds a contiguous
+    id-range totalling ≈32k chars and a decode executor gets even work.
+    The global ordered prefix sum rides the range-bucketed prefix sweep
+    (no single-reducer sort); the per-shard rollup is shard-grain.
+    Output: each shard's item count, char total, and id range."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "n_chars"
+    )
+    swept = prefix_sweep(
+        docs,
+        [],
+        "doc_id",
+        strict_sum_cols={"chars_before": "n_chars"},
+    )
+    # explicit floor on both engines: DuckDB CAST(DOUBLE AS BIGINT)
+    # rounds to nearest while Spark's cast truncates
+    sharded = swept.select(
+        "doc_id",
+        "n_chars",
+        F.floor(
+            F.coalesce(F.col("chars_before"), F.lit(0))
+            / F.lit(SHARD_CHARS)
+        )
+        .cast("bigint")
+        .alias("shard_id"),
+    )
+    return (
+        sharded.groupBy("shard_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        )
+        .orderBy("shard_id")
+    )
+
+
 QUERIES = {
     "q_media_decode_stats": q_media_decode_stats,
     "q_media_frame_sample": q_media_frame_sample,
     "q_media_audio_chunks": q_media_audio_chunks,
     "q_media_image_patches": q_media_image_patches,
+    "q_media_decode_shards": q_media_decode_shards,
 }
 
 ORACLE: dict[str, str] = {
@@ -203,5 +258,22 @@ ORACLE: dict[str, str] = {
         SELECT media_id, dur_ms, chunk_start,
                least(chunk_start + {CHUNK_MS}, dur_ms) AS chunk_end
         FROM starts
+    """,
+    "q_media_decode_shards": f"""
+        WITH swept AS (
+            SELECT doc_id, n_chars,
+                   coalesce(sum(n_chars) OVER (
+                       ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                   ), 0) AS chars_before
+            FROM documents
+        )
+        SELECT CAST(floor(chars_before / {SHARD_CHARS}) AS BIGINT)
+                   AS shard_id,
+               count(*)::BIGINT AS n_docs,
+               sum(n_chars)::BIGINT AS total_chars,
+               min(doc_id)::BIGINT AS first_doc,
+               max(doc_id)::BIGINT AS last_doc
+        FROM swept GROUP BY 1 ORDER BY 1
     """,
 }

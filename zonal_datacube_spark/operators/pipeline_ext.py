@@ -1,6 +1,7 @@
-"""Training-data-pipeline operators, round 3 (SURVEY.md §2.13 cont.):
-span-level dedup, benchmark decontamination, mixture sampling, sequence
-packing, and embedding quantization — the ops between "raw corpus" and
+"""Training-data-pipeline operators (SURVEY.md §2.13 cont.): span-level
+dedup, benchmark decontamination, mixture weights and sampling, sequence
+packing, padding and drift evals, embedding quantization, and DSIR /
+curriculum data selection — the ops between "raw corpus" and
 "training batches" that SURVEY's LLM-pipeline mandate (BASELINE.json:6)
 calls for beyond doc-level dedup.
 
@@ -16,12 +17,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
-from zonal_datacube_spark.functions.text_funcs import tokens
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.functions.exact import G6_SQL, g6, half_up
 from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
+from zonal_datacube_spark.functions.text_funcs import TOKENS_SQL, stopword_count, tokens
+from zonal_datacube_spark.sources.loader import load_table
 
-_TOKS = "string_split(lower(text), ' ')"  # DuckDB-side tokenizer (≡ tokens())
 
 SPAN_N = 5  # n-gram span width for cross-doc span dedup
 
@@ -397,6 +398,334 @@ def q_prep_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --------------------------------------------------------------------------
+# training-data curation economics
+# --------------------------------------------------------------------------
+
+
+def q_data_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled training-mixture allocation (τ = 0.5, the
+    multilingual-sampling standard): per-source token counts → sampling
+    shares ∝ sqrt(tokens) → per-source epoch counts against a token
+    budget of half the corpus. This is the planning query a pretraining
+    data pipeline runs before building its sampler — upsampling factors
+    for small sources, downsampling for large ones. Token counts are
+    map-only (F.size over the split; the text never shuffles) and the
+    allocation arithmetic runs on the bounded 20-source rollup."""
+    docs = load_table(spark, sf_dir, "documents")
+    per_src = docs.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(tokens()).cast("bigint")).alias("tokens"),
+    )
+    w = F.sqrt(F.col("tokens").cast("double"))
+    scored = per_src.withColumn("w", w)
+    totals = scored.agg(
+        F.sum("tokens").alias("total_tokens"), F.sum("w").alias("z")
+    )
+    joined = scored.crossJoin(F.broadcast(totals))
+    budget = F.floor(F.col("total_tokens") / 2).cast("double")
+    samp_share = F.col("w") / F.col("z")
+    return joined.select(
+        "source",
+        "n_docs",
+        "tokens",
+        g6(F.col("tokens").cast("double") / F.col("total_tokens")).alias(
+            "nat_share"
+        ),
+        g6(samp_share).alias("samp_share"),
+        g6(budget * samp_share / F.col("tokens").cast("double")).alias(
+            "epochs"
+        ),
+    ).orderBy("source")
+
+
+# ---------------------------------------------------------------------------
+# batch padding-efficiency evaluation
+# ---------------------------------------------------------------------------
+
+BATCH_SIZE = 16  # documents per training batch
+
+
+def q_batch_padding_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-bucketed batching evaluation: how many PAD tokens does the
+    batcher burn? Each batch of {B} docs pads every member to the
+    batch's max token length; compares NATURAL (doc_id) order against
+    LENGTH-SORTED order (the standard bucketing trick — sorting by
+    length makes batches length-homogeneous, collapsing padding waste).
+    Reports batches, padded tokens, and pad share per strategy — the
+    number a training-efficiency dashboard tracks before/after enabling
+    bucketed batching. All-integer arithmetic: padded = Σ(max·count −
+    Σlen) per batch, one terminal division for the share.
+
+    Scale: both global row numbers ride the range-bucketed prefix sweep
+    (64 value-range buckets over doc_id / token length — NO global sort,
+    the sweep's entire reason to exist); the batch grain then groups on
+    the data-scaled batch_id. Production note: a distributed trainer
+    batches per (shard, local rank) — same arithmetic with the sweep's
+    bucket id as the shard, zero plan change."""
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "n_tok", F.size(tokens()).cast("bigint")
+    )
+    base = docs.select("doc_id", "n_tok")
+    nat = prefix_sweep(base, [], "doc_id", row_number_col="rn")
+    srt = prefix_sweep(
+        base, [], "n_tok", tiebreak=["doc_id"], row_number_col="rn"
+    )
+
+    def pad_stats(df: DataFrame, strategy: str) -> DataFrame:
+        per = (
+            df.withColumn(
+                "batch_id", F.floor((F.col("rn") - 1) / BATCH_SIZE)
+            )
+            .groupBy("batch_id")
+            .agg(
+                F.max("n_tok").alias("mx"),
+                F.sum("n_tok").alias("s"),
+                F.count("*").alias("c"),
+            )
+        )
+        grid = F.sum(F.col("mx") * F.col("c"))
+        return per.agg(
+            F.count("*").alias("n_batches"),
+            (grid - F.sum("s")).alias("padded_tokens"),
+            F.round((grid - F.sum("s")) / grid, 6).alias("pad_share"),
+        ).select(
+            F.lit(strategy).alias("strategy"),
+            "n_batches",
+            "padded_tokens",
+            "pad_share",
+        )
+
+    return pad_stats(nat, "natural").unionByName(
+        pad_stats(srt, "length_sorted")
+    )
+
+
+# ---------------------------------------------------------------------------
+# PSI distribution-drift detection
+# ---------------------------------------------------------------------------
+
+PSI_BINS = 10
+PSI_REF_BEFORE = 1998  # reference period: order years < 1998 (fixture spans 1995-2001)
+_PSI_GRID = 1_000_000_000  # 1e-9 quantization grid (the JS-divergence trick)
+
+
+def q_dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population Stability Index drift monitor: the order-value
+    distribution of the CURRENT period (years ≥ 1998) against the
+    REFERENCE period (< 1998) over 10 fixed-width bins — the standard
+    model-monitoring drift metric (PSI = Σ (p−q)·ln(p/q); < 0.1 stable,
+    > 0.25 drifted). Reported at bin grain (the dashboard artifact),
+    with each bin's PSI contribution.
+
+    Determinism (rule 8): bin edges come from integer CENTS (DECIMAL
+    (15,2) × 100 is exact) with pure integer bin arithmetic; counts are
+    Laplace-smoothed (+1 per bin) so empty bins stay defined; p, q, and
+    ln(p/q) are built from two exact-integer divisions and ONE ln call,
+    and the contribution quantizes to a 1e-9 grid before the 1e-6
+    output rounding — the same ulp-absorbing ladder q_text_js_divergence
+    uses. Scale: one broadcast bounds aggregate, one partial+final
+    count keyed by (bin), a 10-row spine join — map-side everything."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        (F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        (F.year("o_orderdate") < PSI_REF_BEFORE).alias("is_ref"),
+    )
+    bounds = orders.agg(
+        F.min("cents").alias("lo"), F.max("cents").alias("hi")
+    )
+    binned = orders.crossJoin(F.broadcast(bounds)).select(
+        F.expr(
+            f"least({PSI_BINS - 1}L,"
+            f" ((cents - lo) * {PSI_BINS}) div (hi - lo + 1))"
+        ).alias("bin"),
+        "is_ref",
+    )
+    counts = binned.groupBy("bin").agg(
+        F.sum(F.col("is_ref").cast("bigint")).alias("n_ref"),
+        F.sum((~F.col("is_ref")).cast("bigint")).alias("n_cur"),
+    )
+    spine = spark.range(PSI_BINS).select(F.col("id").alias("bin"))
+    full = (
+        spine.join(counts, "bin", "left")
+        .fillna(0, subset=["n_ref", "n_cur"])
+    )
+    totals = full.agg(
+        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
+    )
+    p = (F.col("n_ref") + 1) / (F.col("t_ref") + PSI_BINS)
+    q = (F.col("n_cur") + 1) / (F.col("t_cur") + PSI_BINS)
+    contrib = (p - q) * F.log(p / q)
+    return full.crossJoin(F.broadcast(totals)).select(
+        "bin",
+        "n_ref",
+        "n_cur",
+        F.round(p, 6).alias("p_ref"),
+        F.round(q, 6).alias("p_cur"),
+        F.round(half_up(contrib, _PSI_GRID) / _PSI_GRID, 6).alias("psi_term"),
+    )
+
+# ---------------------------------------------------------------------------
+# DSIR importance-resampling weights
+# ---------------------------------------------------------------------------
+
+DSIR_TARGET_LANG = "en"  # the target-domain slice the ratio model favors
+
+
+def q_data_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR-style importance weight per document: the occurrence-weighted
+    mean over the doc's bigrams of ``ln(p_target(b)) − ln(p_raw(b))``,
+    where p_target is the add-1-smoothed bigram distribution of the
+    ``lang = 'en'`` slice and p_raw the same over the whole corpus (both
+    smoothed over the raw bigram-type universe V, so target-unseen
+    bigrams contribute a well-defined negative evidence term instead of
+    −inf). This is the scoring half of importance resampling: the
+    downstream sampler draws documents with probability ∝ exp(weight).
+
+    Scale shape: ONE (doc, bigram) explode (persisted — it feeds the raw
+    counts, the target counts, and the per-doc attach), two bigram-keyed
+    count tables folded map-side, scalar totals broadcast from a one-row
+    aggregate, and an un-hinted bigram equi-join back to the occurrence
+    table (open-vocabulary key — the q_text_lm_score contract; AQE
+    broadcasts the ratio table at runtime whenever it fits). The heavy
+    text column never shuffles; every shuffled row is fixed-width."""
+    from pyspark.storagelevel import StorageLevel
+
+    t = (
+        load_table(spark, sf_dir, "documents")
+        .withColumn("t", tokens())
+        .filter(F.size("t") >= 2)
+    )
+    doc_bi = (
+        t.select(
+            "doc_id",
+            "source",
+            (F.col("lang") == DSIR_TARGET_LANG).alias("is_target"),
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(t) - 1),"
+                    " i -> named_struct('w1', element_at(t, i),"
+                    "                   'w2', element_at(t, i + 1)))"
+                )
+            ).alias("b"),
+        )
+        .select("doc_id", "source", "is_target", "b.w1", "b.w2")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    raw = doc_bi.groupBy("w1", "w2").agg(
+        F.count("*").alias("c_raw"),
+        F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("c_tgt"),
+    )
+    totals = raw.agg(
+        F.sum("c_raw").alias("n_raw"),
+        F.sum("c_tgt").alias("n_tgt"),
+        F.count("*").alias("v_types"),
+    )
+    # one identical IEEE chain per bigram in both engines: exact integer
+    # counts -> (c + 1.0) / (N + V) -> ln; the subtraction is the ratio
+    ratios = raw.crossJoin(F.broadcast(totals)).select(
+        "w1",
+        "w2",
+        (
+            F.log(
+                (F.col("c_tgt") + F.lit(1.0))
+                / (F.col("n_tgt") + F.col("v_types"))
+            )
+            - F.log(
+                (F.col("c_raw") + F.lit(1.0))
+                / (F.col("n_raw") + F.col("v_types"))
+            )
+        ).alias("lr"),
+    )
+    # Scale contract: `ratios` is bigram-keyed and open-vocabulary — NOT
+    # broadcast-hinted (the r09/r10 policy for vocabulary-scaled tables);
+    # the shuffle hash join is the 100 TB plan, AQE upgrades it at
+    # fixture scale.
+    return (
+        doc_bi.join(ratios, ["w1", "w2"])
+        .groupBy("doc_id", "source")
+        .agg(
+            F.count("*").alias("n_bigrams"),
+            F.round(F.avg("lr"), 6).alias("dsir_logratio"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# token-budgeted quality curriculum selection
+# ---------------------------------------------------------------------------
+
+CURRICULUM_BUDGET_DIV = 4  # keep the top-quality quarter of corpus tokens
+
+
+def _quality_e6() -> F.Column:
+    """The q_text_quality composite on an exact e6 integer grid:
+    ``floor(quality · 1e6 + 0.5)`` of ``least(1, n/101) · (1 − stop) ·
+    ttr`` — the same expression chain (and the same prime-101 tie
+    avoidance) as operators/text.py:98-104, snapped to BIGINT so the
+    curriculum ORDER KEY is integer-exact in both engines."""
+    n_tok = F.size("t").cast("double")
+    ttr = F.size(F.array_distinct("t")) / n_tok
+    stop_ratio = stopword_count("t") / n_tok
+    quality = F.least(F.lit(1.0), n_tok / 101.0) * (1.0 - stop_ratio) * ttr
+    return half_up(quality, 1e6).cast("bigint")
+
+
+def q_data_curriculum_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-budgeted quality selection: documents ordered by the integer
+    quality grid (ties by doc_id), selected while the tokens BEFORE each
+    document stay under ``floor(total_tokens / 4)`` — i.e. the crossing
+    document is kept, so the slice always covers the budget. The output
+    is the per-source composition of the selected slice (docs, tokens,
+    and the source's lowest admitted quality), with the budget riding
+    every row so the driver's hash compare attests the cut itself.
+
+    Scale shape: the global quality-ordered cumulative token sum is a
+    ONE-REDUCER window if written naively; here it runs through the
+    range-bucketed prefix sweep in quantile mode (per-bucket windows +
+    one bucket-grain offset sweep — functions/prefix_sweep.py), and the
+    rollup that follows is a bounded groupBy on source. All selection
+    arithmetic is integer-exact: token counts are BIGINTs, the quality
+    key is an e6 integer, the budget is one integer floor of a global
+    sum (exact below 2^53 tokens — ~9e15, two decades above a 100 TB
+    corpus)."""
+    per_doc = (
+        load_table(spark, sf_dir, "documents")
+        .withColumn("t", tokens())
+        .select(
+            "doc_id",
+            "source",
+            F.size("t").cast("bigint").alias("n_tokens"),
+            _quality_e6().alias("q_e6"),
+        )
+    )
+    swept = prefix_sweep(
+        per_doc,
+        [],
+        "q_e6",
+        descending=True,
+        tiebreak=["doc_id"],
+        sum_cols={"cum_tokens": "n_tokens"},
+        total_sum_cols={"total_tokens": "n_tokens"},
+        boundaries="quantile",
+    )
+    budget = F.floor(F.col("total_tokens") / CURRICULUM_BUDGET_DIV).cast(
+        "bigint"
+    )
+    selected = swept.filter(
+        (F.col("cum_tokens") - F.col("n_tokens")) < budget
+    ).withColumn("budget_tokens", budget)
+    return (
+        selected.groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs_selected"),
+            F.sum("n_tokens").alias("tokens_selected"),
+            F.min("q_e6").alias("min_q_e6"),
+            F.any_value("budget_tokens").alias("budget_tokens"),
+        )
+        .orderBy("source")
+    )
+
+
 QUERIES = {
     "q_dedup_span": q_dedup_span,
     "q_split_train_test": q_split_train_test,
@@ -406,17 +735,24 @@ QUERIES = {
     "q_sample_weighted": q_sample_weighted,
     "q_pack_sequences": q_pack_sequences,
     "q_embed_quantize": q_embed_quantize,
+    "q_data_mixture_weights": q_data_mixture_weights,
+    "q_batch_padding_eval": q_batch_padding_eval,
+    "q_dq_psi_drift": q_dq_psi_drift,
+    "q_data_dsir_weights": q_data_dsir_weights,
+    "q_data_curriculum_tokens": q_data_curriculum_tokens,
 }
 
 _BENCH_VALUES = ", ".join(f"('{g}')" for g in BENCH_GRAMS)
 _MIX_VALUES = ", ".join(f"('{k}', {v})" for k, v in MIX_BUCKETS.items())
+
+_STOP_FILTER = "list_filter(toks, x -> x = 'the' OR x = 'a')"
 
 ORACLE = {
     "q_prep_pipeline_full": f"""
         WITH weights(lang, keep_buckets) AS (VALUES {_MIX_VALUES}),
         base AS (
             SELECT doc_id, lang, source, text, md5(text) AS digest,
-                   {_TOKS} AS toks
+                   {TOKENS_SQL} AS toks
             FROM documents
         ),
         sampled AS (
@@ -496,8 +832,8 @@ ORACLE = {
     """,
     "q_dedup_span": f"""
         WITH t AS (
-            SELECT doc_id, {_TOKS} AS toks FROM documents
-            WHERE len({_TOKS}) >= {SPAN_N}
+            SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+            WHERE len({TOKENS_SQL}) >= {SPAN_N}
         ),
         g AS (
             SELECT doc_id,
@@ -518,8 +854,8 @@ ORACLE = {
     "q_text_contamination": f"""
         WITH bench(g) AS (VALUES {_BENCH_VALUES}),
         t AS (
-            SELECT doc_id, {_TOKS} AS toks FROM documents
-            WHERE len({_TOKS}) >= {BENCH_N}
+            SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+            WHERE len({TOKENS_SQL}) >= {BENCH_N}
         ),
         g AS (
             SELECT doc_id,
@@ -550,9 +886,9 @@ ORACLE = {
     "q_pack_sequences": f"""
         WITH placed AS (
             SELECT lang,
-                   len({_TOKS})::BIGINT AS n_tok,
-                   sum(len({_TOKS})) OVER (PARTITION BY lang ORDER BY doc_id)
-                       - len({_TOKS}) AS o
+                   len({TOKENS_SQL})::BIGINT AS n_tok,
+                   sum(len({TOKENS_SQL})) OVER (PARTITION BY lang ORDER BY doc_id)
+                       - len({TOKENS_SQL}) AS o
             FROM documents
         )
         SELECT lang,
@@ -578,5 +914,158 @@ ORACLE = {
                          v -> pow(v - floor(v / s + 0.5) * s, 2)))
                          / len(e) * 1000000), 4) AS mse_e6
         FROM q GROUP BY label
+    """,
+    "q_data_mixture_weights": f"""
+        WITH per_src AS (
+            SELECT source, count(*)::BIGINT AS n_docs,
+                   sum(len({TOKENS_SQL}))::BIGINT AS tokens
+            FROM documents GROUP BY source
+        ),
+        t AS (
+            SELECT sum(tokens)::BIGINT AS total_tokens,
+                   sum(sqrt(tokens::DOUBLE)) AS z
+            FROM per_src
+        )
+        SELECT source, n_docs, tokens,
+               {G6_SQL.format(x='tokens::DOUBLE / t.total_tokens')}
+                   AS nat_share,
+               {G6_SQL.format(x='sqrt(tokens::DOUBLE) / t.z')}
+                   AS samp_share,
+               {G6_SQL.format(x='(t.total_tokens // 2)::DOUBLE * (sqrt(tokens::DOUBLE) / t.z) / tokens::DOUBLE')}
+                   AS epochs
+        FROM per_src, t
+        ORDER BY source
+    """,
+    "q_batch_padding_eval": f"""
+        WITH d AS (
+            SELECT doc_id, len({TOKENS_SQL})::BIGINT AS n_tok FROM documents
+        ),
+        nat AS (
+            SELECT n_tok,
+                   (row_number() OVER (ORDER BY doc_id) - 1)
+                       // {BATCH_SIZE} AS b
+            FROM d
+        ),
+        srt AS (
+            SELECT n_tok,
+                   (row_number() OVER (ORDER BY n_tok, doc_id) - 1)
+                       // {BATCH_SIZE} AS b
+            FROM d
+        ),
+        pn AS (SELECT b, max(n_tok) AS mx, sum(n_tok) AS s,
+                      count(*) AS c FROM nat GROUP BY b),
+        ps AS (SELECT b, max(n_tok) AS mx, sum(n_tok) AS s,
+                      count(*) AS c FROM srt GROUP BY b)
+        SELECT 'natural' AS strategy,
+               count(*) AS n_batches,
+               sum(mx * c - s)::BIGINT AS padded_tokens,
+               round(sum(mx * c - s) * 1.0 / sum(mx * c), 6) AS pad_share
+        FROM pn
+        UNION ALL
+        SELECT 'length_sorted', count(*),
+               sum(mx * c - s)::BIGINT,
+               round(sum(mx * c - s) * 1.0 / sum(mx * c), 6)
+        FROM ps
+    """,
+    "q_dq_psi_drift": f"""
+        WITH o AS (
+            SELECT (o_totalprice * 100)::BIGINT AS cents,
+                   year(o_orderdate) < {PSI_REF_BEFORE} AS is_ref
+            FROM orders
+        ),
+        bounds AS (SELECT min(cents) AS lo, max(cents) AS hi FROM o),
+        binned AS (
+            SELECT least({PSI_BINS - 1},
+                         ((cents - lo) * {PSI_BINS}) // (hi - lo + 1))
+                       AS bin,
+                   is_ref
+            FROM o, bounds
+        ),
+        counts AS (
+            SELECT bin,
+                   sum(CASE WHEN is_ref THEN 1 ELSE 0 END)::BIGINT AS n_ref,
+                   sum(CASE WHEN is_ref THEN 0 ELSE 1 END)::BIGINT AS n_cur
+            FROM binned GROUP BY bin
+        ),
+        spine AS (SELECT unnest(range({PSI_BINS})) AS bin),
+        full_bins AS (
+            SELECT spine.bin,
+                   coalesce(n_ref, 0) AS n_ref,
+                   coalesce(n_cur, 0) AS n_cur
+            FROM spine LEFT JOIN counts ON spine.bin = counts.bin
+        ),
+        tot AS (SELECT sum(n_ref) AS t_ref, sum(n_cur) AS t_cur
+                FROM full_bins)
+        SELECT bin, n_ref, n_cur,
+               round((n_ref + 1) * 1.0 / (t_ref + {PSI_BINS}), 6) AS p_ref,
+               round((n_cur + 1) * 1.0 / (t_cur + {PSI_BINS}), 6) AS p_cur,
+               round(floor(((n_ref + 1) * 1.0 / (t_ref + {PSI_BINS})
+                            - (n_cur + 1) * 1.0 / (t_cur + {PSI_BINS}))
+                     * ln(((n_ref + 1) * 1.0 / (t_ref + {PSI_BINS}))
+                          / ((n_cur + 1) * 1.0 / (t_cur + {PSI_BINS})))
+                     * {_PSI_GRID} + 0.5) / {_PSI_GRID}, 6) AS psi_term
+        FROM full_bins, tot
+    """,
+    "q_data_dsir_weights": f"""
+        WITH t AS (
+            SELECT doc_id, source, (lang = '{DSIR_TARGET_LANG}') AS is_target,
+                   {TOKENS_SQL} AS toks
+            FROM documents
+            WHERE len({TOKENS_SQL}) >= 2
+        ),
+        doc_bi AS (
+            SELECT doc_id, source, is_target, toks[i] AS w1, toks[i + 1] AS w2
+            FROM t, unnest(range(1, len(toks))) AS u(i)
+        ),
+        raw AS (
+            SELECT w1, w2, count(*) AS c_raw,
+                   sum(CASE WHEN is_target THEN 1 ELSE 0 END) AS c_tgt
+            FROM doc_bi GROUP BY w1, w2
+        ),
+        tot AS (
+            SELECT sum(c_raw) AS n_raw, sum(c_tgt) AS n_tgt,
+                   count(*) AS v_types
+            FROM raw
+        ),
+        ratios AS (
+            SELECT w1, w2,
+                   ln((c_tgt + 1.0) / (n_tgt + v_types))
+                   - ln((c_raw + 1.0) / (n_raw + v_types)) AS lr
+            FROM raw CROSS JOIN tot
+        )
+        SELECT d.doc_id, d.source, count(*) AS n_bigrams,
+               round(avg(lr), 6) AS dsir_logratio
+        FROM doc_bi d JOIN ratios USING (w1, w2)
+        GROUP BY d.doc_id, d.source
+    """,
+    "q_data_curriculum_tokens": f"""
+        WITH t AS (SELECT doc_id, source, {TOKENS_SQL} AS toks FROM documents),
+        per_doc AS (
+            SELECT doc_id, source, len(toks)::BIGINT AS n_tokens,
+                   floor(least(1.0, len(toks) / 101.0)
+                         * (1.0 - len({_STOP_FILTER}) * 1.0 / len(toks))
+                         * (len(list_distinct(toks)) * 1.0 / len(toks))
+                         * 1e6 + 0.5)::BIGINT AS q_e6
+            FROM t
+        ),
+        swept AS (
+            SELECT *,
+                   sum(n_tokens) OVER (ORDER BY q_e6 DESC, doc_id
+                                       ROWS UNBOUNDED PRECEDING)
+                       AS cum_tokens,
+                   sum(n_tokens) OVER () AS total_tokens
+            FROM per_doc
+        )
+        SELECT source,
+               count(*) AS n_docs_selected,
+               sum(n_tokens)::BIGINT AS tokens_selected,
+               min(q_e6) AS min_q_e6,
+               any_value(floor(total_tokens / {CURRICULUM_BUDGET_DIV})::BIGINT)
+                   AS budget_tokens
+        FROM swept
+        WHERE cum_tokens - n_tokens
+              < floor(total_tokens / {CURRICULUM_BUDGET_DIV})::BIGINT
+        GROUP BY source
+        ORDER BY source
     """,
 }

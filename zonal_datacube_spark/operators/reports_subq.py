@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import revenue
 from zonal_datacube_spark.sources.loader import load_table
 
 Q8_REGION = 1
@@ -40,10 +41,6 @@ Q15_QUARTER_START = "1997-01-01"
 Q15_QUARTER_END = "1997-04-01"
 Q17_BRAND = "Brand#11"
 Q22_CUTOFF = "1999-01-01"
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def q_report_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,7 +69,7 @@ def q_report_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = F.broadcast(
         load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     )
-    rev = _revenue()
+    rev = revenue()
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -124,7 +121,7 @@ def q_report_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit(Q15_QUARTER_END).cast("timestamp_ntz"))
         )
         .groupBy("l_suppkey")
-        .agg(F.round(F.sum(_revenue()), 4).alias("total_rev"))
+        .agg(F.round(F.sum(revenue()), 4).alias("total_rev"))
     )
     top = F.broadcast(rev.agg(F.max("total_rev").alias("max_rev")))
     return (

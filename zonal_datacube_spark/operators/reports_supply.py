@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import revenue
 from zonal_datacube_spark.sources.loader import load_table
 
 Q2_SIZE = 25
@@ -51,10 +52,6 @@ Q20_SHARE = 0.5
 Q20_NATIONKEY = 7
 Q21_LATE_DAYS = 60
 Q21_TOPN = 20
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def q_report_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,7 +128,7 @@ def q_report_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = F.broadcast(
         load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     )
-    profit = _revenue() - F.lit(Q9_COST_FACTOR) * F.col("p_retailprice") * F.col(
+    profit = revenue() - F.lit(Q9_COST_FACTOR) * F.col("p_retailprice") * F.col(
         "l_quantity"
     )
     return (

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import micro_units
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -117,7 +118,7 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     # 6dp mean on the exact 1e-6 grid (q_zonal_stats r11 discipline)
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     return (
         ev.withColumn("k", k)
         .withColumn("_v6", v6)
@@ -253,6 +254,44 @@ def q_sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_str_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """split_part / reverse / repeat string surface."""
+    part = load_table(spark, sf_dir, "part")
+    return part.select(
+        "p_partkey",
+        F.split_part("p_type", F.lit(" "), F.lit(2)).alias("type_mid"),
+        F.reverse("p_brand").alias("brand_rev"),
+        F.repeat(F.lit("*"), F.col("p_size") % 5).alias("stars"),
+    )
+
+
+def q_explode_ordinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """posexplode with ordinality: token position survives the explode —
+    required by any positional text pipeline (n-grams, windows over
+    tokens). The oracle enumerates positions with unnest(range())."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "de")
+    return docs.select(
+        "doc_id",
+        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "token"),
+    )
+
+
+def q_str_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance fuzzy matching: levenshtein of each part's type
+    against a target string, plus a normalized similarity ratio — the
+    cheap tier of fuzzy entity resolution (blocking + edit distance)."""
+    part = load_table(spark, sf_dir, "part")
+    target = F.lit("PROMO BURNISHED COPPER")
+    dist = F.levenshtein("p_type", target)
+    maxlen = F.greatest(F.length("p_type"), F.length(target))
+    return part.select(
+        "p_partkey",
+        "p_type",
+        dist.alias("edit_dist"),
+        F.round(1 - dist / maxlen, 6).alias("similarity"),
+    ).filter(F.col("edit_dist") <= 18)
+
+
 QUERIES = {
     "q_str_collation": q_str_collation,
     "q_sql_group_by_all": q_sql_group_by_all,
@@ -266,6 +305,9 @@ QUERIES = {
     "q_json_variant": q_json_variant,
     "q_agg_approx_topk": q_agg_approx_topk,
     "q_map_funcs": q_map_funcs,
+    "q_str_split_part": q_str_split_part,
+    "q_explode_ordinality": q_explode_ordinality,
+    "q_str_fuzzy": q_str_fuzzy,
 }
 
 ORACLE = {
@@ -368,5 +410,30 @@ ORACLE = {
         FROM events
         WHERE json_extract(props, '$.k') IS NOT NULL
         GROUP BY event_type
+    """,
+    "q_str_split_part": """
+        SELECT p_partkey,
+               split_part(p_type, ' ', 2) AS type_mid,
+               reverse(p_brand) AS brand_rev,
+               repeat('*', p_size % 5) AS stars
+        FROM part
+    """,
+    "q_explode_ordinality": """
+        WITH toks AS (
+            SELECT doc_id, string_split(lower(text), ' ') AS t
+            FROM documents WHERE lang = 'de'
+        )
+        SELECT doc_id, i - 1 AS pos, t[i] AS token
+        FROM toks, unnest(range(1, len(t) + 1)) AS u(i)
+    """,
+    "q_str_fuzzy": """
+        SELECT p_partkey, p_type,
+               levenshtein(p_type, 'PROMO BURNISHED COPPER') AS edit_dist,
+               round(1 - levenshtein(p_type, 'PROMO BURNISHED COPPER')
+                     * 1.0 / greatest(length(p_type),
+                                      length('PROMO BURNISHED COPPER')),
+                     6) AS similarity
+        FROM part
+        WHERE levenshtein(p_type, 'PROMO BURNISHED COPPER') <= 18
     """,
 }

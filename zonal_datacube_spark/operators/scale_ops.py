@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import micro_units, revenue
 from zonal_datacube_spark.functions.merge import upsert
 from zonal_datacube_spark.functions.salting import salted_join, salted_zonal_stats
 from zonal_datacube_spark.sources.derived import corpus_tag, layout
@@ -66,7 +67,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("p_brand").agg(
         F.count("*").alias("n_items"),
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4)
+        F.round(F.sum(revenue()), 4)
         .alias("revenue"),
     )
 
@@ -303,7 +304,7 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "_v6",
-            F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint"),
+            micro_units(F.col("value")),
         )
         .groupBy("bin")
         .agg(
@@ -407,7 +408,7 @@ def q_view_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count("*").alias("n_items"),
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                F.sum(revenue())
                 .alias("rev"),
             )
         )

@@ -1,4 +1,4 @@
-"""Round-5c surface additions (SURVEY.md §2.17, second wave): the Spark 4
+"""SQL-surface operators (SURVEY.md §2.17): the Spark 4
 SQL-scripting surface (session variables + EXECUTE IMMEDIATE, SQL-macro
 UDFs, lateral column aliases), a custom Python DataSource WRITER proven
 lossless end-to-end, spend-quartile migration through the distributed
@@ -36,6 +36,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import (
+    cents,
+    g6,
+    half_up,
+    revenue,
+    round4_half_up,
+)
 from zonal_datacube_spark.functions.prefix_sweep import (
     ntile_from_row_number,
     prefix_sweep,
@@ -161,14 +168,7 @@ def q_sink_python_ds_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.count("*").alias("n_rows"),
-            (
-                F.floor(
-                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("revenue"),
+            round4_half_up(F.sum(revenue())).alias("revenue"),
         )
     )
     global _LAST_SINK_DIR
@@ -265,10 +265,7 @@ def q_report_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_from",
         "q_to",
         "n_customers",
-        (
-            F.floor(F.col("n_customers") / row_tot * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("row_share"),
+        g6(F.col("n_customers") / row_tot).alias("row_share"),
     ).orderBy("q_from", "q_to")
 
 
@@ -279,7 +276,7 @@ def _bal_c_sum() -> F.Column:
     """Exact cent sum of c_acctbal as a double (order-independent —
     floor-half-up is sign-consistent in both engines for the 2dp grid)."""
     return F.sum(
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint")
+        cents(F.col("c_acctbal"))
     ).cast("double")
 
 
@@ -298,7 +295,7 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     moments = cust.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_h"),
-        (F.floor(F.stddev_samp("c_acctbal") * 100 + F.lit(0.5)) / 100).alias(
+        (half_up(F.stddev_samp("c_acctbal"), 100) / 100).alias(
             "s_h"
         ),
         # exact cent-grid fold (q_agg_global r11 discipline): acctbal is
@@ -377,14 +374,7 @@ def q_agg_grouping_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping("l_linestatus").cast("int").alias("g_status"),
             F.grouping_id().cast("int").alias("gid"),
             F.count("*").alias("n_rows"),
-            (
-                F.floor(
-                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("revenue"),
+            round4_half_up(F.sum(revenue())).alias("revenue"),
         )
         .orderBy("gid", "l_returnflag", "l_linestatus")
     )
@@ -563,30 +553,18 @@ def q_report_pvm_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — a single pass), revenue on its 1e-4 grid before the
     division, all derived doubles identical on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = revenue()
     yr = F.year("l_shipdate")
     base = li.filter(yr.isin(PVM_Y0, PVM_Y1)).groupBy("l_returnflag").agg(
         F.sum(F.when(yr == PVM_Y0, F.col("l_quantity"))).alias("q0"),
-        (
-            F.floor(F.sum(F.when(yr == PVM_Y0, rev)) * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("rev0"),
+        round4_half_up(F.sum(F.when(yr == PVM_Y0, rev))).alias("rev0"),
         F.sum(F.when(yr == PVM_Y1, F.col("l_quantity"))).alias("q1"),
-        (
-            F.floor(F.sum(F.when(yr == PVM_Y1, rev)) * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("rev1"),
+        round4_half_up(F.sum(F.when(yr == PVM_Y1, rev))).alias("rev1"),
     )
     p0 = F.col("rev0") / F.col("q0")
     p1 = F.col("rev1") / F.col("q1")
 
-    # floor-half-up on the 1e-4 grid, the same identical-expression
-    # rounding rev0/rev1 use — F.round's BigDecimal HALF_UP and DuckDB's
-    # round disagree at double midpoints (the 5f7ca77 flake class); a
-    # signed flavor because effects can be negative
-    def _g4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
+    # signed effects round on the same 1e-4 half-up grid as rev0/rev1
     return (
         # flags absent from one of the two years have no price/volume
         # split — drop them instead of emitting NULL effect columns
@@ -595,11 +573,178 @@ def q_report_pvm_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag",
             "rev0",
             "rev1",
-            _g4(F.col("rev1") - F.col("rev0")).alias("delta_rev"),
-            _g4((F.col("q1") - F.col("q0")) * p0).alias("volume_effect"),
-            _g4((p1 - p0) * F.col("q1")).alias("price_effect"),
+            round4_half_up(F.col("rev1") - F.col("rev0")).alias("delta_rev"),
+            round4_half_up((F.col("q1") - F.col("q0")) * p0).alias("volume_effect"),
+            round4_half_up((p1 - p0) * F.col("q1")).alias("price_effect"),
         )
         .orderBy("l_returnflag")
+    )
+
+
+def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Uncorrelated scalar subquery: orders above the global average price.
+    Catalyst plans the subquery as a broadcast single-row join."""
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("zds_orders_sq")
+    return spark.sql(
+        """
+        SELECT o_orderkey,
+               round(o_totalprice, 2) AS price,
+               round(o_totalprice - (SELECT avg(o_totalprice) FROM zds_orders_sq), 4)
+                   AS above_avg_by
+        FROM zds_orders_sq
+        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM zds_orders_sq)
+        """
+    )
+
+
+def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WITH RECURSIVE (Spark 4.x) building a month spine over the order
+    date span, then a left join for per-month counts — recursive calendar
+    gap-fill (q_ts_gapfill does the same with sequence()).
+
+    The recursion DOUBLES its step each round ((m, step) → (m, 2·step) and
+    (m+step, 2·step)), reaching every month as the binary decomposition of
+    its offset — depth O(log span) instead of one round per month. Spark
+    executes each recursive round as a job, so a naive month-at-a-time
+    spine pays ~80 sequential jobs (measured 26 s); the doubling shape
+    pays 8. The same consideration applies to any long recursive spine at
+    scale; DuckDB's oracle mirrors the doubling exactly.
+
+    r13 (guide §1.2 "don't compute things you throw away"): the span
+    bounds are HOISTED to literals before the recursion. As a `bounds`
+    CTE they were re-planned as scalar subqueries over the fact table
+    INSIDE every recursive round (UnionLoop re-executes its step plan
+    per round: 4 subquery slots × 8 rounds ≈ 32 of the key's measured
+    65 jobs at sf0.1 — plans/r13/q_recursive_cte_before.txt nodes 7–10
+    show the per-round Aggregate over the relation). One 2-column
+    aggregate collect replaces them; the spine and every output row are
+    unchanged. The bounds collect is a 1-row fold of min/max — driver
+    traffic is O(1) at any corpus size."""
+    orders = load_table(spark, sf_dir, "orders")
+    orders.createOrReplaceTempView("zds_orders_rc")
+    b = orders.agg(
+        F.date_format(
+            F.date_trunc("month", F.min("o_orderdate")), "yyyy-MM-dd HH:mm:ss"
+        ).alias("lo"),
+        F.date_format(
+            F.date_trunc("month", F.max("o_orderdate")), "yyyy-MM-dd HH:mm:ss"
+        ).alias("hi"),
+    ).collect()[0]
+    return spark.sql(
+        _RECURSIVE_SQL.format(lo=f"TIMESTAMP '{b['lo']}'", hi=f"TIMESTAMP '{b['hi']}'")
+    )
+
+
+_RECURSIVE_SQL = """
+    WITH RECURSIVE months(m, step) AS (
+        SELECT {lo}, 1
+        UNION ALL
+        SELECT new_m, step * 2 FROM (
+            SELECT m AS new_m, step FROM months
+            WHERE {lo} + make_interval(0, step) <= {hi}
+            UNION ALL
+            SELECT m + make_interval(0, step), step FROM months
+            WHERE m + make_interval(0, step) <= {hi}
+        )
+    ),
+    spine AS (SELECT DISTINCT m FROM months),
+    per_month AS (
+        SELECT date_trunc('month', o_orderdate) AS m,
+               count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS sum_total
+        FROM zds_orders_rc GROUP BY 1
+    )
+    SELECT date_format(spine.m, 'yyyy-MM') AS month,
+           coalesce(n_orders, 0) AS n_orders,
+           round(coalesce(sum_total, 0.0), 2) AS sum_total
+    FROM spine LEFT JOIN per_month ON spine.m = per_month.m
+"""
+
+
+def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated scalar subqueries (per-customer count and max) —
+    Catalyst decorrelates both into left-outer aggregate joins; the
+    count subquery's empty-group-is-zero semantics are the classic
+    decorrelation trap, handled identically by both engines."""
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("zds_cust_corr")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("zds_orders_corr")
+    return spark.sql(
+        """
+        SELECT c_custkey,
+               (SELECT count(*) FROM zds_orders_corr o
+                WHERE o.o_custkey = c.c_custkey) AS n_orders,
+               round((SELECT max(o_totalprice) FROM zds_orders_corr o
+                      WHERE o.o_custkey = c.c_custkey), 2) AS max_price
+        FROM zds_cust_corr c
+        """
+    )
+
+
+def q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 SQL pipe syntax (`|>`): the classic pricing-summary shape
+    written as a left-to-right pipeline — FROM |> WHERE |> EXTEND
+    |> AGGREGATE … GROUP BY |> ORDER BY. Catalyst resolves pipe stages
+    to the identical logical plan as the nested form, so pushdown /
+    partial aggregation behave exactly like q_agg_groupby; the revenue
+    sum rounds on its 1e-4 data grid half-up on both engines (rule 6)."""
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
+        "zds_li_pipe"
+    )
+    return spark.sql(
+        """
+        FROM zds_li_pipe
+        |> WHERE l_quantity > 5
+        |> EXTEND l_extendedprice * (1 - l_discount) AS rev
+        |> AGGREGATE
+               floor(SUM(rev) * 10000 + 0.5) / 10000 AS revenue,
+               COUNT(*) AS n_rows,
+               floor(SUM(l_quantity) * 10 + 0.5) / 10 AS sum_qty
+           GROUP BY l_returnflag, l_linestatus
+        |> ORDER BY l_returnflag, l_linestatus
+        """
+    )
+
+
+# --------------------------------------------------------------------------
+# SQL named WINDOW clause
+# --------------------------------------------------------------------------
+
+
+def q_sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL WINDOW-clause surface: two NAMED window specs over the same
+    o_custkey partitioning (a data-scaled key — task count grows with
+    customers, no enum or global sort), shared by three window
+    functions — price rank, running cent spend in order-date order, and
+    days since the previous order. Inputs are exact integers (cent
+    grid, epoch days), the rank tiebreaks on the unique key, and the
+    final filter keeps each customer's top-2 priciest orders."""
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
+        "zds_nw_orders"
+    )
+    return spark.sql(
+        """
+        SELECT o_custkey, o_orderkey, price_rank, cum_cents, gap_days
+        FROM (
+            SELECT o_custkey, o_orderkey,
+                   row_number() OVER w_price AS price_rank,
+                   sum(cents)   OVER w_time  AS cum_cents,
+                   coalesce(od - lag(od) OVER w_time, -1) AS gap_days
+            FROM (
+                SELECT o_custkey, o_orderkey,
+                       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
+                           AS cents,
+                       CAST(datediff(CAST(o_orderdate AS DATE),
+                                     DATE '1970-01-01') AS BIGINT) AS od
+                FROM zds_nw_orders
+            )
+            WINDOW w_price AS (PARTITION BY o_custkey
+                               ORDER BY cents DESC, o_orderkey),
+                   w_time  AS (PARTITION BY o_custkey
+                               ORDER BY od, o_orderkey)
+        )
+        WHERE price_rank <= 2
+        ORDER BY o_custkey, price_rank
+        """
     )
 
 
@@ -616,6 +761,11 @@ QUERIES = {
     "q_scan_metadata_cols": q_scan_metadata_cols,
     "q_sql_scripting_block": q_sql_scripting_block,
     "q_report_pvm_decomposition": q_report_pvm_decomposition,
+    "q_subquery_scalar": q_subquery_scalar,
+    "q_recursive_cte": q_recursive_cte,
+    "q_subquery_correlated": q_subquery_correlated,
+    "q_sql_pipe_syntax": q_sql_pipe_syntax,
+    "q_sql_named_window": q_sql_named_window,
 }
 
 ORACLE = {
@@ -826,5 +976,85 @@ ORACLE = {
         WHERE r.rnk <= a.n_alloc
         GROUP BY r.c_mktsegment
         ORDER BY r.c_mktsegment
+    """,
+    "q_subquery_scalar": """
+        SELECT o_orderkey,
+               round(o_totalprice, 2) AS price,
+               round(o_totalprice - (SELECT avg(o_totalprice) FROM orders), 4)
+                   AS above_avg_by
+        FROM orders
+        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
+    """,
+    "q_recursive_cte": """
+        WITH RECURSIVE bounds AS (
+            SELECT date_trunc('month', min(o_orderdate)) AS lo,
+                   date_trunc('month', max(o_orderdate)) AS hi
+            FROM orders
+        ),
+        months(m, step) AS (
+            SELECT lo, 1 FROM bounds
+            UNION ALL
+            SELECT new_m, step * 2 FROM (
+                SELECT m AS new_m, step FROM months
+                WHERE (SELECT lo FROM bounds) + to_months(step)
+                      <= (SELECT hi FROM bounds)
+                UNION ALL
+                SELECT m + to_months(step), step FROM months
+                WHERE m + to_months(step) <= (SELECT hi FROM bounds)
+            )
+        ),
+        spine AS (SELECT DISTINCT m FROM months),
+        per_month AS (
+            SELECT date_trunc('month', o_orderdate) AS m,
+                   count(*) AS n_orders,
+                   round(sum(o_totalprice), 2) AS sum_total
+            FROM orders GROUP BY 1
+        )
+        SELECT strftime(spine.m, '%Y-%m') AS month,
+               coalesce(n_orders, 0) AS n_orders,
+               round(coalesce(sum_total, 0.0), 2) AS sum_total
+        FROM spine LEFT JOIN per_month ON spine.m = per_month.m
+    """,
+    "q_subquery_correlated": """
+        SELECT c_custkey,
+               (SELECT count(*) FROM orders o
+                WHERE o.o_custkey = c.c_custkey) AS n_orders,
+               round((SELECT max(o_totalprice) FROM orders o
+                      WHERE o.o_custkey = c.c_custkey), 2) AS max_price
+        FROM customer c
+    """,
+    "q_sql_pipe_syntax": """
+        SELECT l_returnflag, l_linestatus,
+               floor(sum(l_extendedprice * (1 - l_discount)) * 10000 + 0.5)
+                   / 10000 AS revenue,
+               count(*) AS n_rows,
+               floor(sum(l_quantity) * 10 + 0.5) / 10 AS sum_qty
+        FROM lineitem
+        WHERE l_quantity > 5
+        GROUP BY l_returnflag, l_linestatus
+        ORDER BY l_returnflag, l_linestatus
+    """,
+    "q_sql_named_window": """
+        SELECT o_custkey, o_orderkey, price_rank, cum_cents, gap_days
+        FROM (
+            SELECT o_custkey, o_orderkey,
+                   row_number() OVER w_price AS price_rank,
+                   CAST(sum(cents) OVER w_time AS BIGINT) AS cum_cents,
+                   coalesce(od - lag(od) OVER w_time, -1) AS gap_days
+            FROM (
+                SELECT o_custkey, o_orderkey,
+                       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
+                           AS cents,
+                       date_diff('day', DATE '1970-01-01',
+                                 CAST(o_orderdate AS DATE))::BIGINT AS od
+                FROM orders
+            )
+            WINDOW w_price AS (PARTITION BY o_custkey
+                               ORDER BY cents DESC, o_orderkey),
+                   w_time  AS (PARTITION BY o_custkey
+                               ORDER BY od, o_orderkey)
+        )
+        WHERE price_rank <= 2
+        ORDER BY o_custkey, price_rank
     """,
 }

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import G6_SQL, g6, half_up
 from zonal_datacube_spark.functions.prefix_sweep import (
     ntile_from_row_number,
     prefix_sweep,
@@ -362,7 +363,7 @@ def q_agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rounding under partition relayout
         F.round(
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
+                half_up(F.col("o_totalprice"), 100).cast(
                     "decimal(38,0)"
                 )
             ).cast("double")
@@ -554,6 +555,220 @@ def q_report_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skewness and excess kurtosis of extended price per return flag,
+    from explicitly-centered moments: broadcast the group mean back onto
+    the scan, aggregate avg((x−m)^k) for k=2,3,4, and fold g1 = m3/m2^1.5,
+    g2 = m4/m2² − 3. Centering first kills the power-sum cancellation
+    (avg(x⁴) carries ~30× the central moment's magnitude here) AND pins
+    both engines to the same population-moment definition — Spark's
+    skewness() and DuckDB's skewness() disagree on sample corrections,
+    so neither builtin is used."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice"
+    )
+    means = li.groupBy("l_returnflag").agg(
+        F.avg("l_extendedprice").alias("m")
+    )
+    d = li.join(F.broadcast(means), "l_returnflag").select(
+        "l_returnflag", (F.col("l_extendedprice") - F.col("m")).alias("d")
+    )
+    mom = d.groupBy("l_returnflag").agg(
+        F.count("*").alias("n_rows"),
+        F.avg(F.col("d") * F.col("d")).alias("m2"),
+        F.avg(F.col("d") * F.col("d") * F.col("d")).alias("m3"),
+        F.avg(F.col("d") * F.col("d") * F.col("d") * F.col("d")).alias("m4"),
+    )
+    return mom.select(
+        "l_returnflag",
+        "n_rows",
+        F.round(F.col("m3") / F.pow("m2", 1.5), 6).alias("skewness_g1"),
+        F.round(F.col("m4") / (F.col("m2") * F.col("m2")) - 3, 6).alias(
+            "excess_kurtosis_g2"
+        ),
+    )
+
+
+WINSOR_LO, WINSOR_HI = 0.05, 0.95
+
+
+def q_agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winsorized mean: clamp each price into [p05, p95] then average —
+    the robust-mean partner of the trimmed mean (q_udaf_zonal_trimmed_
+    mean) that KEEPS the tail rows at the fence instead of dropping
+    them. Exact interpolating percentiles per group — folded from the
+    (flag, price)-grain prefix sweep (functions/percentiles.py, the
+    round-10 exact-percentile rewrite: no flag-keyed executor buffer) —
+    broadcast back onto the same scan, one final aggregate."""
+    from zonal_datacube_spark.functions.grain_cache import table_swept_grain
+    from zonal_datacube_spark.functions.percentiles import (
+        cached_swept_percentiles,
+        pivot_percentiles,
+    )
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice"
+    )
+    # fences from the shared SWEPT (flag, price) grain (functions/
+    # grain_cache.py — one lineitem scan AND one prefix sweep serve the
+    # whole percentile family per process, r13); the clamp+average below
+    # keeps its original per-row arithmetic so the oracle-compared
+    # mean's summation tree is untouched.
+    fences = pivot_percentiles(
+        cached_swept_percentiles(
+            table_swept_grain(
+                spark, sf_dir, "lineitem", ("l_returnflag",),
+                "l_extendedprice", "l_extendedprice",
+            ),
+            ["l_returnflag"],
+            "l_extendedprice",
+            (WINSOR_LO, WINSOR_HI),
+        ),
+        ["l_returnflag"],
+        {WINSOR_LO: "lo", WINSOR_HI: "hi"},
+    )
+    clamped = li.join(F.broadcast(fences), "l_returnflag").select(
+        "l_returnflag",
+        "l_extendedprice",
+        F.greatest(
+            F.col("lo"), F.least(F.col("hi"), F.col("l_extendedprice"))
+        ).alias("wx"),
+        (
+            (F.col("l_extendedprice") < F.col("lo"))
+            | (F.col("l_extendedprice") > F.col("hi"))
+        ).alias("clipped"),
+    )
+    return clamped.groupBy("l_returnflag").agg(
+        F.count("*").alias("n_rows"),
+        F.round(F.avg("wx"), 6).alias("winsorized_mean"),
+        F.round(F.avg("l_extendedprice"), 6).alias("raw_mean"),
+        F.sum(F.col("clipped").cast("bigint")).alias("n_clipped"),
+    )
+
+
+def q_agg_ols_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TWO-regressor OLS per return flag — price on (quantity, discount)
+    via the closed-form normal equations over CENTERED cross-moments:
+    one broadcast of the three means back onto the scan, one aggregate
+    of the five centered sums, driver-free arithmetic for β₁/β₂/β₀/R².
+    This is the distributed multiple-regression shape (the moment-matrix
+    reduction every scalable linear model uses — X'X is k×k regardless
+    of row count); SQL's REGR_* family stops at one regressor, so the
+    oracle spells out the identical closed form."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        F.col("l_extendedprice").alias("y"),
+        F.col("l_quantity").alias("x1"),
+        F.col("l_discount").alias("x2"),
+    )
+    means = li.groupBy("l_returnflag").agg(
+        F.avg("y").alias("my"), F.avg("x1").alias("mx1"), F.avg("x2").alias("mx2")
+    )
+    c = li.join(F.broadcast(means), "l_returnflag").select(
+        "l_returnflag",
+        "my",
+        "mx1",
+        "mx2",
+        (F.col("y") - F.col("my")).alias("dy"),
+        (F.col("x1") - F.col("mx1")).alias("d1"),
+        (F.col("x2") - F.col("mx2")).alias("d2"),
+    )
+    s = c.groupBy("l_returnflag").agg(
+        F.count("*").alias("n_rows"),
+        F.first("my").alias("my"),
+        F.first("mx1").alias("mx1"),
+        F.first("mx2").alias("mx2"),
+        F.sum(F.col("d1") * F.col("d1")).alias("s11"),
+        F.sum(F.col("d2") * F.col("d2")).alias("s22"),
+        F.sum(F.col("d1") * F.col("d2")).alias("s12"),
+        F.sum(F.col("d1") * F.col("dy")).alias("s1y"),
+        F.sum(F.col("d2") * F.col("dy")).alias("s2y"),
+        F.sum(F.col("dy") * F.col("dy")).alias("syy"),
+    )
+    det = F.col("s11") * F.col("s22") - F.col("s12") * F.col("s12")
+    b1 = (F.col("s22") * F.col("s1y") - F.col("s12") * F.col("s2y")) / det
+    b2 = (F.col("s11") * F.col("s2y") - F.col("s12") * F.col("s1y")) / det
+    sse = F.col("syy") - b1 * F.col("s1y") - b2 * F.col("s2y")
+    return s.select(
+        "l_returnflag",
+        "n_rows",
+        F.round(b1, 6).alias("beta_qty"),
+        F.round(b2, 6).alias("beta_disc"),
+        F.round(
+            F.col("my") - b1 * F.col("mx1") - b2 * F.col("mx2"), 6
+        ).alias("intercept"),
+        F.round(1 - sse / F.col("syy"), 6).alias("r2"),
+    )
+
+
+_CORR_MEASURES = (
+    ("quantity", "l_quantity", 1),
+    ("price", "l_extendedprice", 100),
+    ("discount", "l_discount", 100),
+    ("tax", "l_tax", 100),
+)
+
+
+def q_stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Pearson correlation matrix over the four lineitem
+    measures in ONE aggregation pass (the EDA screen `q_agg_corr_regr`
+    computes for a single pair): each measure quantizes onto its own
+    data grid, all 14 moments (4 sums, 4 sums-of-squares, 6 cross
+    products) fold in a single map-side-combined groupBy, and the six
+    correlations assemble from the moment row via explode — the corpus
+    is scanned exactly once however many pairs you ask for. Products
+    ride DECIMAL(38,0) (price-cents² sums overflow BIGINT at sf≥0.1);
+    DuckDB's HUGEINT widening mirrors it, and both convert the same
+    exact integer to the same double before the closed form."""
+    li = load_table(spark, sf_dir, "lineitem")
+    qcols = {
+        name: half_up(F.col(src), scale).cast("decimal(38,0)")
+        for name, src, scale in _CORR_MEASURES
+    }
+    aggs = [F.count("*").alias("n")]
+    names = [name for name, _, _ in _CORR_MEASURES]
+    for a in names:
+        aggs.append(F.sum(qcols[a]).alias(f"s_{a}"))
+        aggs.append(F.sum(qcols[a] * qcols[a]).alias(f"ss_{a}"))
+    pairs = [
+        (names[i], names[j])
+        for i in range(len(names))
+        for j in range(i + 1, len(names))
+    ]
+    for a, b in pairs:
+        aggs.append(F.sum(qcols[a] * qcols[b]).alias(f"sp_{a}_{b}"))
+    row = li.agg(*aggs)
+    pair_structs = F.array(
+        *[
+            F.struct(
+                F.lit(a).alias("m_x"),
+                F.lit(b).alias("m_y"),
+                F.col(f"s_{a}").cast("double").alias("sx"),
+                F.col(f"s_{b}").cast("double").alias("sy"),
+                F.col(f"ss_{a}").cast("double").alias("sxx"),
+                F.col(f"ss_{b}").cast("double").alias("syy"),
+                F.col(f"sp_{a}_{b}").cast("double").alias("sxy"),
+            )
+            for a, b in pairs
+        ]
+    )
+    ex = row.select(
+        F.col("n").cast("double").alias("nd"),
+        F.col("n").alias("n_rows"),
+        F.explode(pair_structs).alias("p"),
+    )
+    nd, p = F.col("nd"), F.col("p")
+    corr = (nd * p.sxy - p.sx * p.sy) / F.sqrt(
+        (nd * p.sxx - p.sx * p.sx) * (nd * p.syy - p.sy * p.sy)
+    )
+    return ex.select(
+        p.m_x.alias("m_x"),
+        p.m_y.alias("m_y"),
+        "n_rows",
+        g6(corr).alias("pearson_r"),
+    ).orderBy("m_x", "m_y")
+
+
 QUERIES = {
     "q_agg_corr_regr": q_agg_corr_regr,
     "q_agg_quantiles_multi": q_agg_quantiles_multi,
@@ -567,7 +782,55 @@ QUERIES = {
     "q_skyline_dominance": q_skyline_dominance,
     "q_agg_bitwise": q_agg_bitwise,
     "q_set_symmetric_diff": q_set_symmetric_diff,
+    "q_agg_ols_multi": q_agg_ols_multi,
+    "q_agg_skew_kurt": q_agg_skew_kurt,
+    "q_agg_winsorized_mean": q_agg_winsorized_mean,
+    "q_stats_corr_matrix": q_stats_corr_matrix,
 }
+
+
+def _corr_oracle() -> str:
+    """The 6-pair correlation matrix oracle, assembled from the same
+    (name, column, grid-scale) table the Spark side uses so the two can
+    never disagree on quantization."""
+    qexpr = {
+        name: f"CAST(floor(({src}) * {scale} + 0.5) AS BIGINT)"
+        for name, src, scale in _CORR_MEASURES
+    }
+    names = [name for name, _, _ in _CORR_MEASURES]
+    moments = ["count(*)::BIGINT AS n"]
+    for a in names:
+        moments.append(f"sum({qexpr[a]}::HUGEINT) AS s_{a}")
+        moments.append(
+            f"sum({qexpr[a]}::HUGEINT * {qexpr[a]}::HUGEINT) AS ss_{a}"
+        )
+    pairs = [
+        (names[i], names[j])
+        for i in range(len(names))
+        for j in range(i + 1, len(names))
+    ]
+    for a, b in pairs:
+        moments.append(
+            f"sum({qexpr[a]}::HUGEINT * {qexpr[b]}::HUGEINT) AS sp_{a}_{b}"
+        )
+    selects = []
+    for a, b in pairs:
+        corr = (
+            f"(n::DOUBLE * sp_{a}_{b}::DOUBLE - s_{a}::DOUBLE * s_{b}::DOUBLE)"
+            f" / sqrt((n::DOUBLE * ss_{a}::DOUBLE - s_{a}::DOUBLE * s_{a}::DOUBLE)"
+            f" * (n::DOUBLE * ss_{b}::DOUBLE - s_{b}::DOUBLE * s_{b}::DOUBLE))"
+        )
+        selects.append(
+            f"SELECT '{a}' AS m_x, '{b}' AS m_y, n AS n_rows, "
+            f"{G6_SQL.format(x=corr)} AS pearson_r FROM m"
+        )
+    return (
+        "WITH m AS (SELECT "
+        + ", ".join(moments)
+        + " FROM lineitem) "
+        + " UNION ALL ".join(selects)
+        + " ORDER BY m_x, m_y"
+    )
 
 ORACLE = {
     "q_agg_quantiles_multi": f"""
@@ -771,4 +1034,81 @@ ORACLE = {
         SELECT o_custkey, 'only_{SYMDIFF_YEAR_B}' AS side
         FROM (SELECT o_custkey FROM b EXCEPT SELECT o_custkey FROM a)
     """,
+    "q_agg_ols_multi": """
+        WITH means AS (
+            SELECT l_returnflag,
+                   avg(l_extendedprice) AS my,
+                   avg(l_quantity) AS mx1,
+                   avg(l_discount) AS mx2
+            FROM lineitem GROUP BY l_returnflag
+        ),
+        s AS (
+            SELECT li.l_returnflag,
+                   count(*) AS n_rows,
+                   any_value(my) AS my,
+                   any_value(mx1) AS mx1,
+                   any_value(mx2) AS mx2,
+                   sum((l_quantity - mx1) * (l_quantity - mx1)) AS s11,
+                   sum((l_discount - mx2) * (l_discount - mx2)) AS s22,
+                   sum((l_quantity - mx1) * (l_discount - mx2)) AS s12,
+                   sum((l_quantity - mx1) * (l_extendedprice - my)) AS s1y,
+                   sum((l_discount - mx2) * (l_extendedprice - my)) AS s2y,
+                   sum((l_extendedprice - my) * (l_extendedprice - my))
+                       AS syy
+            FROM lineitem li JOIN means USING (l_returnflag)
+            GROUP BY li.l_returnflag
+        )
+        SELECT l_returnflag, n_rows,
+               round((s22 * s1y - s12 * s2y) / (s11 * s22 - s12 * s12), 6)
+                   AS beta_qty,
+               round((s11 * s2y - s12 * s1y) / (s11 * s22 - s12 * s12), 6)
+                   AS beta_disc,
+               round(my - (s22 * s1y - s12 * s2y)
+                          / (s11 * s22 - s12 * s12) * mx1
+                        - (s11 * s2y - s12 * s1y)
+                          / (s11 * s22 - s12 * s12) * mx2, 6) AS intercept,
+               round(1 - (syy - (s22 * s1y - s12 * s2y)
+                                / (s11 * s22 - s12 * s12) * s1y
+                              - (s11 * s2y - s12 * s1y)
+                                / (s11 * s22 - s12 * s12) * s2y) / syy, 6)
+                   AS r2
+        FROM s
+    """,
+    "q_agg_skew_kurt": """
+        WITH means AS (
+            SELECT l_returnflag, avg(l_extendedprice) AS m
+            FROM lineitem GROUP BY l_returnflag
+        ),
+        mom AS (
+            SELECT li.l_returnflag,
+                   count(*) AS n_rows,
+                   avg(pow(l_extendedprice - m, 2)) AS m2,
+                   avg(pow(l_extendedprice - m, 3)) AS m3,
+                   avg(pow(l_extendedprice - m, 4)) AS m4
+            FROM lineitem li JOIN means USING (l_returnflag)
+            GROUP BY li.l_returnflag
+        )
+        SELECT l_returnflag, n_rows,
+               round(m3 / pow(m2, 1.5), 6) AS skewness_g1,
+               round(m4 / (m2 * m2) - 3, 6) AS excess_kurtosis_g2
+        FROM mom
+    """,
+    "q_agg_winsorized_mean": f"""
+        WITH fences AS (
+            SELECT l_returnflag,
+                   quantile_cont(l_extendedprice, {WINSOR_LO}) AS lo,
+                   quantile_cont(l_extendedprice, {WINSOR_HI}) AS hi
+            FROM lineitem GROUP BY l_returnflag
+        )
+        SELECT li.l_returnflag,
+               count(*) AS n_rows,
+               round(avg(greatest(lo, least(hi, l_extendedprice))), 6)
+                   AS winsorized_mean,
+               round(avg(l_extendedprice), 6) AS raw_mean,
+               sum(CASE WHEN l_extendedprice < lo OR l_extendedprice > hi
+                        THEN 1 ELSE 0 END)::BIGINT AS n_clipped
+        FROM lineitem li JOIN fences f USING (l_returnflag)
+        GROUP BY li.l_returnflag
+    """,
+    "q_stats_corr_matrix": _corr_oracle(),
 }

@@ -13,7 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import G6_SQL, g6, half_up
 from zonal_datacube_spark.functions.text_funcs import (
+    TOKENS_SQL,
     canonical_fingerprint,
     stopword_count,
     tokens,
@@ -497,6 +499,284 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+FUNNEL_MIN_TOKENS = 12
+FUNNEL_STOPWORDS = ("the", "a")
+
+
+def q_text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-filter funnel ledger: every document is attributed to its
+    FIRST failing rule (lang → min-length → stopword ratio → max-token
+    repetition), the per-stage attrition report a C4/Gopher-style
+    curation pipeline publishes next to its output. One map pass scores
+    all rules, one 5-row groupBy counts; `q_text_prep_pipeline` keeps
+    the survivors, this key accounts for the drops. Ratio rules compare
+    as integer cross-multiplications (7·stop > n, 6·maxrep > n) so the
+    classification is grid-exact on both engines (rule 8)."""
+    docs = load_table(spark, sf_dir, "documents").withColumn("t", tokens())
+    n = F.size("t")
+    stop_arr = F.array(*[F.lit(wd) for wd in FUNNEL_STOPWORDS])
+    stop = F.size(F.filter("t", lambda y: F.array_contains(stop_arr, y)))
+    maxc = F.array_max(
+        F.transform(
+            F.array_distinct("t"),
+            lambda x: F.size(F.filter("t", lambda y: y == x)),
+        )
+    )
+    stage = (
+        F.when(F.col("lang") != "en", "1_lang")
+        .when(n < FUNNEL_MIN_TOKENS, "2_too_short")
+        .when(stop * 7 > n, "3_stopword_ratio")
+        .when(maxc * 6 > n, "4_repetition")
+        .otherwise("5_pass")
+    )
+    staged = docs.select(stage.alias("stage"))
+    counts = staged.groupBy("stage").agg(F.count("*").alias("n_docs"))
+    total = counts.agg(F.sum("n_docs").alias("n_total"))
+    return (
+        counts.crossJoin(F.broadcast(total))
+        .select(
+            "stage",
+            "n_docs",
+            g6(F.col("n_docs").cast("double") / F.col("n_total")).alias(
+                "share"
+            ),
+        )
+        .orderBy("stage")
+    )
+
+
+def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility per language: subword-tokens-per-word and
+    chars-per-subword-token under the BPE-ish regex tokenizer
+    (`q_text_token_regex`'s classes) — the standard readout when
+    deciding whether a tokenizer taxes some languages more than others
+    (fertility ≈ 1 means near-word-level; high fertility means long
+    sequences and higher training cost for that language). Map-only
+    integer sums per bounded lang key; the ratios are exact integer
+    quotients."""
+    docs = load_table(spark, sf_dir, "documents")
+    low = F.lower(F.col("text"))
+    scored = docs.select(
+        "lang",
+        F.size(F.split(low, " ")).cast("bigint").alias("words"),
+        F.size(F.regexp_extract_all(low, F.lit(_BPE_RE), 0))
+        .cast("bigint")
+        .alias("bpe"),
+        F.length("text").cast("bigint").alias("chars"),
+    )
+    g = scored.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("words").alias("n_words"),
+        F.sum("bpe").alias("n_bpe_tokens"),
+        F.sum("chars").alias("n_chars"),
+    )
+    return g.select(
+        "lang",
+        "n_docs",
+        "n_words",
+        "n_bpe_tokens",
+        "n_chars",
+        g6(
+            F.col("n_bpe_tokens").cast("double")
+            / F.col("n_words").cast("double")
+        ).alias("fertility"),
+        g6(
+            F.col("n_chars").cast("double")
+            / F.col("n_bpe_tokens").cast("double")
+        ).alias("chars_per_token"),
+    ).orderBy("lang")
+
+
+# --------------------------------------------------------------------------
+# RAKE-lite keyword extraction
+# --------------------------------------------------------------------------
+
+RAKE_STOPWORDS = 10
+RAKE_TOP = 15
+
+
+def q_text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAKE-lite keyword extraction (Rose 2010): stopwords = the 10
+    most frequent tokens corpus-wide (data-driven, selected with a
+    TakeOrdered heap — never a global rank window), candidate phrases
+    = maximal stopword-free token runs per document (the classic
+    gaps-and-islands row_number difference, windowed by doc_id — a
+    data-scaled key), and each keyword scores degree/frequency where
+    degree sums the lengths of every phrase containing it. Both counts
+    are exact integers, the score is their single correctly-rounded
+    division (rule 8 — identical rank order in both engines), and the
+    top-15 is another TakeOrdered heap over the vocabulary grain."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.split(F.lower("text"), " ")).alias("i", "tok"),
+    )
+    stop = (
+        toks.groupBy("tok")
+        .agg(F.count("*").alias("c"))
+        .orderBy(F.col("c").desc(), F.col("tok").asc())
+        .limit(RAKE_STOPWORDS)
+        .select("tok", F.lit(True).alias("is_stop"))
+    )
+    nonstop = (
+        toks.join(F.broadcast(stop), "tok", "left")
+        .filter(F.col("is_stop").isNull())
+        .select("doc_id", "i", "tok")
+    )
+    w_doc = Window.partitionBy("doc_id").orderBy("i")
+    runs = nonstop.withColumn(
+        "run", F.col("i") - F.row_number().over(w_doc)
+    )
+    w_run = Window.partitionBy("doc_id", "run")
+    with_len = runs.withColumn("plen", F.count("*").over(w_run))
+    stats = with_len.groupBy("tok").agg(
+        F.count("*").alias("freq"),
+        F.sum("plen").alias("degree"),
+    )
+    score = F.col("degree").cast("double") / F.col("freq").cast("double")
+    return (
+        stats.select(
+            "tok",
+            "freq",
+            "degree",
+            g6(score).alias("rake_score"),
+        )
+        .orderBy(F.col("rake_score").desc(), F.col("tok").asc())
+        .limit(RAKE_TOP)
+    )
+
+
+# --------------------------------------------------------------------------
+# Jensen–Shannon divergence between language distributions
+# --------------------------------------------------------------------------
+
+JS_LANGS = ("en", "de", "fr", "es", "zh")
+_JS_GRID = 1_000_000_000  # 1e-9 grid for per-term contributions
+
+
+def q_text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jensen–Shannon divergence between every language pair's unigram
+    token distribution — the symmetric, bounded distribution-shift
+    metric a multilingual corpus pipeline monitors when mixing sources.
+    Probabilities are single divisions of exact integer counts
+    (term count / language total), each pairwise term
+    p·ln(p/m) + q·ln(q/m) with m=(p+q)/2 is the IDENTICAL expression
+    shape in both engines (absent terms contribute with p=0 via the
+    one-sided limit q·ln(2)), and every term quantizes to a 1e-9 grid
+    integer before the vocabulary-grain sum. Output: JS (nats, halved
+    to the standard [0, ln 2] range) per unordered language pair."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok")
+    )
+    counts = toks.groupBy("lang", "tok").agg(F.count("*").alias("c"))
+    totals = toks.groupBy("lang").agg(F.count("*").alias("t"))
+    wc = counts.join(F.broadcast(totals), "lang").select(
+        "lang", "tok", (F.col("c").cast("double") / F.col("t").cast("double")).alias("p")
+    )
+    a = wc.select(
+        F.col("lang").alias("lang_a"), "tok", F.col("p").alias("pa")
+    )
+    b = wc.select(
+        F.col("lang").alias("lang_b"), "tok", F.col("p").alias("pb")
+    )
+    pairs = a.join(b, "tok").filter(F.col("lang_a") < F.col("lang_b"))
+    # full outer union of supports: a term absent from one language
+    # contributes p·ln(2) from the present side only. Model it by
+    # computing per-(pair, tok) contributions for the JOINED support,
+    # then adding each language's leftover mass via the totals of
+    # joined probabilities (Σ p over shared support), since
+    # Σ_absent p·ln(2) = (1 − Σ_shared p)·ln(2).
+    m = (F.col("pa") + F.col("pb")) / 2
+    term = (
+        F.col("pa") * F.log(F.col("pa") / m)
+        + F.col("pb") * F.log(F.col("pb") / m)
+    )
+    shared = pairs.select(
+        "lang_a",
+        "lang_b",
+        half_up(term, _JS_GRID).cast("bigint").alias("tq"),
+        half_up(F.col("pa"), _JS_GRID)
+        .cast("bigint")
+        .alias("paq"),
+        half_up(F.col("pb"), _JS_GRID)
+        .cast("bigint")
+        .alias("pbq"),
+    )
+    agg = shared.groupBy("lang_a", "lang_b").agg(
+        F.count("*").alias("n_shared_terms"),
+        F.sum("tq").alias("sum_tq"),
+        F.sum("paq").alias("sum_paq"),
+        F.sum("pbq").alias("sum_pbq"),
+    )
+    ln2 = 0.6931471805599453
+    js = (
+        F.col("sum_tq").cast("double") / _JS_GRID
+        + (
+            F.lit(2 * _JS_GRID)
+            - F.col("sum_paq")
+            - F.col("sum_pbq")
+        ).cast("double")
+        / _JS_GRID
+        * ln2
+    ) / 2
+    return agg.select(
+        "lang_a",
+        "lang_b",
+        "n_shared_terms",
+        g6(js).alias("js_divergence"),
+    ).orderBy("lang_a", "lang_b")
+
+
+# ---------------------------------------------------------------------------
+# BPE merge-candidate scan (tokenizer training, iteration one)
+# ---------------------------------------------------------------------------
+
+BPE_TOPK = 20
+
+
+def q_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The first merge-candidate scan of BPE tokenizer training: corpus
+    term frequencies collapse the text to the VOCABULARY grain, every
+    distinct token explodes to its adjacent character pairs, and each
+    pair's count is the sum of its hosting tokens' corpus frequencies —
+    exactly the statistic the first BPE merge maximizes. Top-20 by
+    count with the pair itself as tiebreak: all-integer, engine-stable.
+
+    Scale shape: the heavy text never re-tokenizes per pair — the pair
+    explosion runs on the vocabulary grain (types, not tokens), which
+    is sub-linear in the corpus; the only corpus-scaled pass is the
+    token count's map-side partial aggregate. This is the real BPE
+    training layout (HuggingFace tokenizers pre-counts words for the
+    same reason). Single-char tokens host no pair and are filtered
+    explicitly on both engines (Spark's sequence(1, 0) counts DOWN —
+    the shingles() lesson)."""
+    from zonal_datacube_spark.functions.text_funcs import tokens
+
+    vocab = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.explode(tokens()).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").alias("n_tok"))
+        .filter(F.length("tok") >= 2)
+    )
+    pairs = vocab.select(
+        "n_tok",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, length(tok) - 1),"
+                " i -> substring(tok, i, 2))"
+            )
+        ).alias("pair"),
+    )
+    return (
+        pairs.groupBy("pair")
+        .agg(F.sum("n_tok").alias("n_occurrences"))
+        .orderBy(F.col("n_occurrences").desc(), "pair")
+        .limit(BPE_TOPK)
+    )
+
+
 QUERIES = {
     "q_text_pmi": q_text_pmi,
     "q_text_tokens": q_text_tokens,
@@ -514,14 +794,18 @@ QUERIES = {
     "q_text_token_regex": q_text_token_regex,
     "q_text_vocab_coverage": q_text_vocab_coverage,
     "q_text_ngram_lm": q_text_ngram_lm,
+    "q_text_filter_funnel": q_text_filter_funnel,
+    "q_tokenizer_fertility": q_tokenizer_fertility,
+    "q_text_keyword_rake": q_text_keyword_rake,
+    "q_text_js_divergence": q_text_js_divergence,
+    "q_text_bpe_pairs": q_text_bpe_pairs,
 }
 
-_TOKS = "string_split(lower(text), ' ')"
 
 ORACLE = {
     "q_text_pmi": f"""
         WITH dt AS (
-            SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents
+            SELECT DISTINCT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
         ),
         n_docs AS (SELECT count(*) AS n_docs FROM documents),
         uni AS (SELECT tok, count(*) AS n_tok FROM dt GROUP BY tok),
@@ -544,7 +828,7 @@ ORACLE = {
     "q_text_hapax": f"""
         WITH counts AS (
             SELECT tok, count(*) AS c
-            FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
+            FROM (SELECT unnest({TOKENS_SQL}) AS tok FROM documents)
             GROUP BY tok
         )
         SELECT count(*) AS n_vocab,
@@ -557,7 +841,7 @@ ORACLE = {
     "q_text_zipf": f"""
         WITH toks AS (
             SELECT tok, count(*) AS c
-            FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
+            FROM (SELECT unnest({TOKENS_SQL}) AS tok FROM documents)
             GROUP BY tok
         ),
         ranked AS (
@@ -572,8 +856,8 @@ ORACLE = {
     """,
     "q_text_lm_score": f"""
         WITH t AS (
-            SELECT doc_id, {_TOKS} AS toks FROM documents
-            WHERE len({_TOKS}) >= 2
+            SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+            WHERE len({TOKENS_SQL}) >= 2
         ),
         doc_bi AS (
             SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -592,7 +876,7 @@ ORACLE = {
     """,
     "q_text_vocab_coverage": f"""
         WITH toks AS (
-            SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
+            SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
         ),
         top AS (
             SELECT tok FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok)
@@ -605,7 +889,7 @@ ORACLE = {
     """,
     "q_text_ngram_lm": f"""
         WITH t AS (
-            SELECT {_TOKS} AS toks FROM documents WHERE len({_TOKS}) >= 2
+            SELECT {TOKENS_SQL} AS toks FROM documents WHERE len({TOKENS_SQL}) >= 2
         ),
         pairs AS (
             SELECT toks[i] AS w1, toks[i + 1] AS w2
@@ -628,13 +912,13 @@ ORACLE = {
     """,
     "q_text_tokens": f"""
         SELECT token, count(*) AS n_occurrences
-        FROM (SELECT unnest({_TOKS}) AS token FROM documents)
+        FROM (SELECT unnest({TOKENS_SQL}) AS token FROM documents)
         GROUP BY token
     """,
     "q_text_repetition": f"""
         WITH t AS (
-            SELECT doc_id, {_TOKS} AS toks FROM documents
-            WHERE len({_TOKS}) >= 2
+            SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+            WHERE len({TOKENS_SQL}) >= 2
         ),
         tokc AS (
             SELECT doc_id, n_tok, g, count(*) AS c
@@ -665,11 +949,11 @@ ORACLE = {
     "q_text_prep_pipeline": f"""
         WITH scored AS (
             SELECT doc_id, source,
-                   len({_TOKS})::BIGINT AS n_tokens,
-                   round(least(1.0, len({_TOKS}) / 101.0)
-                         * (1.0 - len(list_filter({_TOKS}, x -> x = 'the' OR x = 'a'))
-                                  * 1.0 / len({_TOKS}))
-                         * (len(list_distinct({_TOKS})) * 1.0 / len({_TOKS})), 6)
+                   len({TOKENS_SQL})::BIGINT AS n_tokens,
+                   round(least(1.0, len({TOKENS_SQL}) / 101.0)
+                         * (1.0 - len(list_filter({TOKENS_SQL}, x -> x = 'the' OR x = 'a'))
+                                  * 1.0 / len({TOKENS_SQL}))
+                         * (len(list_distinct({TOKENS_SQL})) * 1.0 / len({TOKENS_SQL})), 6)
                        AS quality,
                    md5(text) AS digest
             FROM documents
@@ -681,7 +965,7 @@ ORACLE = {
         QUALIFY row_number() OVER (PARTITION BY digest ORDER BY doc_id) = 1
     """,
     "q_text_tfidf": f"""
-        WITH terms AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+        WITH terms AS (SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents),
              tf AS (SELECT doc_id, token, count(*) AS tf FROM terms GROUP BY 1, 2),
              df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
              n AS (SELECT count(*) AS n_docs FROM documents)
@@ -693,15 +977,15 @@ ORACLE = {
         SELECT lang, source,
                count(*) AS n_docs,
                round(avg(n_chars), 6) AS avg_chars,
-               round(avg(len({_TOKS})), 6) AS avg_tokens
+               round(avg(len({TOKENS_SQL})), 6) AS avg_tokens
         FROM documents
         GROUP BY lang, source
     """,
     "q_text_langid": f"""
         WITH t AS (
             SELECT lang,
-                   len(list_filter({_TOKS}, x -> x = 'the' OR x = 'a')) * 1.0
-                       / len({_TOKS}) AS r
+                   len(list_filter({TOKENS_SQL}, x -> x = 'the' OR x = 'a')) * 1.0
+                       / len({TOKENS_SQL}) AS r
             FROM documents
         )
         SELECT lang,
@@ -715,7 +999,7 @@ ORACLE = {
         GROUP BY 1, 2
     """,
     "q_text_quality": f"""
-        WITH t AS (SELECT doc_id, n_chars, {_TOKS} AS toks FROM documents)
+        WITH t AS (SELECT doc_id, n_chars, {TOKENS_SQL} AS toks FROM documents)
         SELECT doc_id,
                len(toks)::BIGINT AS n_tokens,
                round(len(list_distinct(toks)) * 1.0 / len(toks), 6) AS type_token_ratio,
@@ -729,7 +1013,7 @@ ORACLE = {
         FROM t
     """,
     "q_text_fingerprint": f"""
-        SELECT md5(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fp,
+        SELECT md5(array_to_string(list_sort(list_distinct({TOKENS_SQL})), ' ')) AS fp,
                count(*) AS n_docs,
                min(doc_id) AS min_doc_id
         FROM documents
@@ -738,7 +1022,163 @@ ORACLE = {
     "q_text_token_regex": f"""
         SELECT doc_id,
                len(regexp_extract_all(lower(text), '{_BPE_RE}'))::BIGINT AS n_bpe_tokens,
-               len({_TOKS})::BIGINT AS n_ws_tokens
+               len({TOKENS_SQL})::BIGINT AS n_ws_tokens
         FROM documents
+    """,
+    "q_text_filter_funnel": f"""
+        WITH f AS (
+            SELECT lang, {TOKENS_SQL} AS toks FROM documents
+        ),
+        scored AS (
+            SELECT lang, len(toks) AS n,
+                   len(list_filter(toks, y -> y = 'the' OR y = 'a'))
+                       AS stop,
+                   list_max(list_transform(list_distinct(toks),
+                       x -> len(list_filter(toks, y -> y = x)))) AS maxc
+            FROM f
+        ),
+        staged AS (
+            SELECT CASE
+                WHEN lang <> 'en' THEN '1_lang'
+                WHEN n < {FUNNEL_MIN_TOKENS} THEN '2_too_short'
+                WHEN stop * 7 > n THEN '3_stopword_ratio'
+                WHEN maxc * 6 > n THEN '4_repetition'
+                ELSE '5_pass' END AS stage
+            FROM scored
+        ),
+        c AS (
+            SELECT stage, count(*)::BIGINT AS n_docs FROM staged
+            GROUP BY stage
+        ),
+        t AS (SELECT sum(n_docs)::BIGINT AS n_total FROM c)
+        SELECT stage, n_docs,
+               {G6_SQL.format(x='n_docs::DOUBLE / t.n_total')} AS share
+        FROM c, t ORDER BY stage
+    """,
+    "q_tokenizer_fertility": f"""
+        WITH s AS (
+            SELECT lang,
+                   len(string_split(lower(text), ' '))::BIGINT AS words,
+                   len(regexp_extract_all(lower(text), '{_BPE_RE}'))::BIGINT
+                       AS bpe,
+                   len(text)::BIGINT AS chars
+            FROM documents
+        ),
+        g AS (
+            SELECT lang, count(*)::BIGINT AS n_docs,
+                   sum(words)::BIGINT AS n_words,
+                   sum(bpe)::BIGINT AS n_bpe_tokens,
+                   sum(chars)::BIGINT AS n_chars
+            FROM s GROUP BY lang
+        )
+        SELECT lang, n_docs, n_words, n_bpe_tokens, n_chars,
+               {G6_SQL.format(x='n_bpe_tokens::DOUBLE / n_words::DOUBLE')}
+                   AS fertility,
+               {G6_SQL.format(x='n_chars::DOUBLE / n_bpe_tokens::DOUBLE')}
+                   AS chars_per_token
+        FROM g ORDER BY lang
+    """,
+    "q_text_keyword_rake": f"""
+        WITH toks AS (
+            SELECT doc_id, i, toks[i] AS tok
+            FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
+                  FROM documents),
+                 unnest(range(1, len(toks) + 1)) AS u(i)
+        ),
+        stop AS (
+            SELECT tok
+            FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok)
+            QUALIFY row_number()
+                OVER (ORDER BY c DESC, tok ASC) <= {RAKE_STOPWORDS}
+        ),
+        ns AS (
+            SELECT doc_id, i, tok,
+                   i - row_number() OVER (
+                       PARTITION BY doc_id ORDER BY i
+                   ) AS run
+            FROM toks WHERE tok NOT IN (SELECT tok FROM stop)
+        ),
+        with_len AS (
+            SELECT tok,
+                   count(*) OVER (PARTITION BY doc_id, run) AS plen
+            FROM ns
+        ),
+        stats AS (
+            SELECT tok, count(*)::BIGINT AS freq,
+                   sum(plen)::BIGINT AS degree
+            FROM with_len GROUP BY tok
+        )
+        SELECT tok, freq, degree,
+               {G6_SQL.format(x="degree::DOUBLE / freq::DOUBLE")}
+                   AS rake_score
+        FROM stats
+        ORDER BY degree::DOUBLE / freq::DOUBLE DESC, tok ASC
+        LIMIT {RAKE_TOP}
+    """,
+    "q_text_js_divergence": f"""
+        WITH toks AS (
+            SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
+            FROM documents
+        ),
+        counts AS (
+            SELECT lang, tok, count(*)::BIGINT AS c
+            FROM toks GROUP BY lang, tok
+        ),
+        totals AS (
+            SELECT lang, count(*)::BIGINT AS t FROM toks GROUP BY lang
+        ),
+        wc AS (
+            SELECT c.lang, c.tok, c.c::DOUBLE / t.t::DOUBLE AS p
+            FROM counts c JOIN totals t ON c.lang = t.lang
+        ),
+        pairs AS (
+            SELECT a.lang AS lang_a, b.lang AS lang_b,
+                   a.p AS pa, b.p AS pb
+            FROM wc a JOIN wc b ON a.tok = b.tok AND a.lang < b.lang
+        ),
+        shared AS (
+            SELECT lang_a, lang_b,
+                   CAST(floor(
+                       (pa * ln(pa / ((pa + pb) / 2))
+                        + pb * ln(pb / ((pa + pb) / 2)))
+                       * {_JS_GRID} + 0.5
+                   ) AS BIGINT) AS tq,
+                   CAST(floor(pa * {_JS_GRID} + 0.5) AS BIGINT) AS paq,
+                   CAST(floor(pb * {_JS_GRID} + 0.5) AS BIGINT) AS pbq
+            FROM pairs
+        ),
+        agg AS (
+            SELECT lang_a, lang_b,
+                   count(*)::BIGINT AS n_shared_terms,
+                   sum(tq)::BIGINT AS sum_tq,
+                   sum(paq)::BIGINT AS sum_paq,
+                   sum(pbq)::BIGINT AS sum_pbq
+            FROM shared GROUP BY lang_a, lang_b
+        )
+        SELECT lang_a, lang_b, n_shared_terms,
+               {G6_SQL.format(
+                   x=f"(sum_tq::DOUBLE / {_JS_GRID}"
+                   f" + (2 * {_JS_GRID} - sum_paq - sum_pbq)::DOUBLE"
+                   f" / {_JS_GRID} * 0.6931471805599453) / 2"
+               )} AS js_divergence
+        FROM agg ORDER BY lang_a, lang_b
+    """,
+    "q_text_bpe_pairs": f"""
+        WITH vocab AS (
+            SELECT tok, count(*)::BIGINT AS n_tok
+            FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok
+                  FROM documents)
+            GROUP BY tok
+            HAVING length(tok) >= 2
+        ),
+        pairs AS (
+            SELECT tok[i : i + 1] AS pair, n_tok
+            FROM vocab, unnest(range(1, length(tok))) AS t(i)
+        )
+        SELECT pair, sum(n_tok)::BIGINT AS n_occurrences
+        FROM pairs
+        GROUP BY pair
+        ORDER BY n_occurrences DESC, pair
+        LIMIT {BPE_TOPK}
     """,
 }

@@ -29,6 +29,7 @@ from zonal_datacube_spark.functions.chunked_window import (
     with_banded_range_window,
     with_trailing_range_window,
 )
+from zonal_datacube_spark.functions.exact import G6_SQL, cents, g6, micro_units
 from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -88,7 +89,7 @@ def q_ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline): v6·dt_us can reach ~1.7e19 per row, so the product is
     # taken IN DECIMAL (casting after a BIGINT multiply would overflow
     # first) and both sums accumulate order-independently
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     spans = spans.withColumn("_v6", v6)
     return spans.groupBy("event_type").agg(
         F.count("*").alias("n_spans"),
@@ -610,6 +611,410 @@ def q_ts_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tallest_peak"),
     )
 
+SESSION_GAP_MIN = 30
+
+
+def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch sessionization: a user's events belong to one session while
+    consecutive gaps stay ≤ 30 minutes (the island starts where the gap
+    exceeds it) — the batch twin of q_stream_session, reported as global
+    session statistics. One user-keyed window pass builds session ids
+    (cumulative sum of gap-break flags), one rollup per session, one
+    global aggregate; durations are integer seconds."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    flagged = ev.select(
+        "user_id",
+        "ts",
+        "event_id",
+        # MICROSECOND diffs: at the storage precision both engines'
+        # boundary-counting and truncating semantics coincide exactly —
+        # a SECOND-granularity diff on sub-second timestamps does not
+        # (DuckDB counts second-boundary crossings, Spark truncates the
+        # true delta; a 1800.2 s gap straddling a boundary flips them)
+        F.when(
+            F.expr("timestampdiff(MICROSECOND, lag(ts) OVER "
+                   "(PARTITION BY user_id ORDER BY ts, event_id), ts)")
+            > SESSION_GAP_MIN * 60 * 1_000_000,
+            1,
+        )
+        .otherwise(0)
+        .alias("brk"),
+    )
+    sess = flagged.select(
+        "user_id",
+        "ts",
+        F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
+            "session_id"
+        ),
+    )
+    per_session = sess.groupBy("user_id", "session_id").agg(
+        F.count("*").alias("n_events"),
+        (
+            F.expr("timestampdiff(MICROSECOND, min(ts), max(ts))")
+            / 1_000_000.0
+        ).alias("dur_s"),
+    )
+    return per_session.agg(
+        F.countDistinct("user_id").alias("n_users"),
+        F.count("*").alias("n_sessions"),
+        F.round(F.avg("n_events"), 6).alias("avg_events_per_session"),
+        F.round(F.avg("dur_s"), 6).alias("avg_session_seconds"),
+        F.max("n_events").alias("max_session_events"),
+        F.round(F.max("dur_s"), 6).alias("max_session_seconds"),
+    )
+
+
+def _minute_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(type, minute) mean value — the bounded series every
+    minute-grain analysis here shares. Means round at 6 BEFORE any
+    downstream arithmetic so both engines start from identical series."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        "event_type",
+        F.expr(
+            "timestampdiff(MINUTE, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        ).alias("epm"),
+    ).agg(F.round(F.avg("value"), 6).alias("mv"))
+
+
+def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lag-1 autocorrelation of each type's minute-mean series — THE
+    one-number memory/whiteness screen (near 0 = noise; near 1 = strong
+    persistence, a different animal for forecasting and anomaly
+    thresholds). The series is the bounded minute grain; the lag pairs
+    come from one type-keyed window over it and feed a plain corr
+    aggregate."""
+    g = _minute_grain(spark, sf_dir)
+    w = Window.partitionBy("event_type").orderBy("epm")
+    paired = g.select(
+        "event_type", "mv", F.lag("mv").over(w).alias("prev")
+    ).filter(F.col("prev").isNotNull())
+    return paired.groupBy("event_type").agg(
+        F.count("*").alias("n_pairs"),
+        F.round(F.corr("mv", "prev"), 6).alias("autocorr_lag1"),
+    )
+
+
+def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM drift detection: the running sum of each minute-mean's
+    deviation from its series mean; the max/min excursions are the
+    standard change-point evidence (a sustained level shift walks the
+    cusum away from zero long before any single point trips a z-score).
+    The cumulative sweep runs over the bounded minute grain THROUGH the
+    range-bucketed prefix sweep — a deliberate second user of
+    functions/prefix_sweep.py on the time axis (cusum at 100 TB is
+    exactly the enum-partition straggler shape q_agg_gini had). One
+    sweep suffices: cusum_i = Σ_{j≤i} mv_j − i·mean folds the centering
+    into the sweep's own totals (running sum, row number, and the
+    series mean's numerator/denominator all ride the same bucket-grain
+    offsets), so the grain subtree is never re-joined against a
+    separate mean aggregate."""
+    swept = prefix_sweep(
+        _minute_grain(spark, sf_dir),
+        ["event_type"],
+        "epm",
+        sum_cols={"cum_mv": "mv"},
+        row_number_col="rn",
+        total_sum_cols={"tot_mv": "mv"},
+        total_count_col="n_min",
+    )
+    cusum = F.col("cum_mv") - F.col("rn") * (
+        F.col("tot_mv") / F.col("n_min")
+    )
+    return swept.groupBy("event_type").agg(
+        F.count("*").alias("n_minutes"),
+        F.round(F.max(cusum), 4).alias("max_cusum"),
+        F.round(F.min(cusum), 4).alias("min_cusum"),
+    )
+
+
+def q_ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Diurnal-seasonality strength per series: 1 − var(value − hour-of-
+    day mean)/var(value) — the variance-explained share of the 24-hour
+    cycle (the STL "strength of seasonality" statistic on the hour
+    component). Hour means broadcast back onto the same scan; both
+    variances aggregate in one pass."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_type", F.hour("ts").alias("hh"), "value"
+    )
+    hmeans = ev.groupBy("event_type", "hh").agg(
+        F.avg("value").alias("hm")
+    )
+    resid = ev.join(F.broadcast(hmeans), ["event_type", "hh"]).select(
+        "event_type", "value", (F.col("value") - F.col("hm")).alias("r")
+    )
+    return resid.groupBy("event_type").agg(
+        F.count("*").alias("n_rows"),
+        F.round(
+            1 - F.var_samp("r") / F.var_samp("value"), 6
+        ).alias("seasonal_strength"),
+    )
+_EPOCH_MIN = "timestampdiff(MINUTE, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+
+
+ISLAND_TOP_USERS = 20
+
+
+def q_ts_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gaps-and-islands interval merge: each event opens a deterministic
+    interval [ts, ts + 60·(1 + event_id % 7) s]; per user, overlapping or
+    touching intervals merge into islands (an interval extends its island
+    while its start ≤ the running max end of everything earlier), and the
+    result is each user's covered-time census. One user-keyed window pass
+    (strict running max of interval end) flags island breaks, a cumulative
+    sum numbers them, two grouped rollups finish — the classic coverage/
+    uptime operator, never a self-join. All comparisons run in integer
+    epoch MICROSECONDS (cookbook rules 7/11); the single /1e6 division
+    happens on identical integers in both engines."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        F.expr(_EPOCH_US).alias("start_us"),
+        (
+            F.expr(_EPOCH_US)
+            + (60 + 60 * F.expr("event_id % 7")) * F.lit(1_000_000)
+        ).alias("end_us"),
+    )
+    order = Window.partitionBy("user_id").orderBy("start_us", "event_id")
+    prev_max_end = F.max("end_us").over(
+        order.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    flagged = ev.select(
+        "user_id",
+        "event_id",
+        "start_us",
+        "end_us",
+        F.when(F.col("start_us") > prev_max_end, 1).otherwise(0).alias("brk"),
+    )
+    islands = flagged.select(
+        "user_id",
+        "start_us",
+        "end_us",
+        F.sum("brk")
+        .over(order.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("island_id"),
+    )
+    per_island = islands.groupBy("user_id", "island_id").agg(
+        F.count("*").alias("n_events"),
+        (F.max("end_us") - F.min("start_us")).alias("span_us"),
+    )
+    per_user = per_island.groupBy("user_id").agg(
+        F.count("*").alias("n_islands"),
+        F.sum("span_us").alias("covered_us"),
+        F.max("n_events").alias("max_island_events"),
+    )
+    return (
+        per_user.select(
+            "user_id",
+            "n_islands",
+            (F.col("covered_us") / F.lit(1_000_000.0)).alias("covered_s"),
+            "max_island_events",
+        )
+        .orderBy(F.desc("covered_s"), "user_id")
+        .limit(ISLAND_TOP_USERS)
+    )
+
+
+CORR_WINDOW_MIN = 60
+
+
+def q_ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 60-minute correlation between per-minute view and click
+    volumes, reported as a per-day profile. Events first collapse to the
+    minute grain with conditional aggregation (bounded by TIME SPAN ×
+    nothing — one row per active minute, the q_ts_anomaly lesson); the
+    rolling frame then slides over that grain and the correlation folds
+    from five windowed INTEGER sums — exact on both engines — with the
+    degenerate zero-variance windows excluded by an integer predicate.
+    Only the per-day averaging of the (identical) per-window doubles
+    rounds, at 6dp.
+
+    Scale shape (r09, VERDICT r08 what's-wrong #3): the minute grain is
+    time-bounded, but the rolling pass no longer rides a single global
+    ``Window.orderBy(epm)`` reducer — the dense row index comes from the
+    range-bucketed prefix sweep and the 60-row trailing frame from the
+    chunk+halo exchange (RANGE over the dense index ≡ ROWS over the
+    grain), so parallelism grows with the time span instead of pinning
+    at 1. Integer sums make the rewrite bit-identical to the direct
+    window."""
+    grain = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin("view", "click"))
+        .groupBy(F.expr(_EPOCH_MIN).alias("epm"))
+        .agg(
+            F.sum(
+                F.when(F.col("event_type") == "view", 1).otherwise(0)
+            ).alias("x"),
+            F.sum(
+                F.when(F.col("event_type") == "click", 1).otherwise(0)
+            ).alias("y"),
+        )
+    )
+    indexed = prefix_sweep(grain, [], "epm", row_number_col="rn")
+    sums = with_trailing_range_window(
+        indexed,
+        [],
+        "rn",
+        CORR_WINDOW_MIN - 1,
+        lambda w: {
+            "sx": F.sum("x").over(w),
+            "sy": F.sum("y").over(w),
+            "sxy": F.sum(F.col("x") * F.col("y")).over(w),
+            "sxx": F.sum(F.col("x") * F.col("x")).over(w),
+            "syy": F.sum(F.col("y") * F.col("y")).over(w),
+        },
+        upper_bound=0,
+    ).filter(F.col("rn") >= CORR_WINDOW_MIN)
+    nw = F.lit(CORR_WINDOW_MIN)
+    varx = nw * F.col("sxx") - F.col("sx") * F.col("sx")
+    vary = nw * F.col("syy") - F.col("sy") * F.col("sy")
+    cov = nw * F.col("sxy") - F.col("sx") * F.col("sy")
+    corr = (
+        sums.filter((varx > 0) & (vary > 0))
+        .select(
+            F.expr("epm div 1440").alias("day_idx"),
+            (cov / F.sqrt(varx * vary)).alias("c"),
+        )
+    )
+    return (
+        corr.groupBy("day_idx")
+        .agg(
+            F.count("*").alias("n_windows"),
+            F.round(F.avg("c"), 6).alias("avg_corr"),
+            F.round(F.min("c"), 6).alias("min_corr"),
+            F.round(F.max("c"), 6).alias("max_corr"),
+        )
+        .orderBy("day_idx")
+    )
+
+
+# --------------------------------------------------------------------------
+# LOCF null repair
+# --------------------------------------------------------------------------
+
+LOCF_MOD, LOCF_RESIDUE = 11, 3
+
+
+def q_ts_locf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-observation-carried-forward null repair — the sensor-dropout
+    fix every telemetry pipeline ships: readings whose event_id ≡ 3
+    (mod 11) are deterministically masked as missing, then repaired per
+    user series with the last non-null value at or before each row
+    (F.last ignorenulls over an incremental growing frame; ordering is
+    integer epoch-µs + event_id tiebreak, rules 7/11). The report counts
+    missing/repaired/unrepairable rows per event type and proves the
+    repaired series' cent-exact sum; leading missings with no prior
+    observation stay null (honest: LOCF cannot invent a first value)."""
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(
+        "event_type",
+        "user_id",
+        "event_id",
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        ).alias("eus"),
+        F.when(
+            F.col("event_id") % LOCF_MOD == LOCF_RESIDUE, F.lit(None)
+        )
+        .otherwise(cents(F.col("value")))
+        .alias("v"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("eus", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    rep = base.select(
+        "event_type", "v", F.last("v", ignorenulls=True).over(w).alias("r")
+    )
+    return (
+        rep.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum(F.col("v").isNull().cast("bigint")).alias("n_missing"),
+            F.sum(
+                (F.col("v").isNull() & F.col("r").isNotNull()).cast("bigint")
+            ).alias("n_repaired"),
+            F.sum(
+                (F.col("v").isNull() & F.col("r").isNull()).cast("bigint")
+            ).alias("n_unrepairable"),
+            F.sum("v").alias("sum_observed_c"),
+            F.sum("r").alias("sum_repaired_c"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# multi-lag ACF
+# --------------------------------------------------------------------------
+
+ACF_MAX_LAG = 6
+
+
+def q_ts_acf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation function at lags 1..6 of each type's minute-mean
+    series — the correlogram read before picking AR terms or seasonal
+    windows (`q_ts_autocorr` is its lag-1 slice). All K lag columns come
+    from ONE window pass over the bounded minute grain, explode to
+    (lag, pair) rows, and each (type, lag) cell folds exact integer
+    moments: the 6-dp-rounded minute means are integers on the 1e-6
+    grid, so Σx, Σx², Σxy are DECIMAL(38,0)/HUGEINT-exact and the
+    Pearson closed form sees identical doubles on both engines — no
+    distributed-FP corr in the loop. Lags index the OBSERVED series
+    (row lag over the grain), the standard gap-skipping correlogram."""
+    g = _minute_grain(spark, sf_dir).select(
+        "event_type",
+        "epm",
+        F.round(F.col("mv") * 1000000, 0).cast("bigint").alias("mvi"),
+    )
+    w = Window.partitionBy("event_type").orderBy("epm")
+    lagged = g.select(
+        "event_type",
+        "mvi",
+        *[
+            F.lag("mvi", k).over(w).alias(f"p{k}")
+            for k in range(1, ACF_MAX_LAG + 1)
+        ],
+    )
+    stacked = (
+        lagged.select(
+            "event_type",
+            "mvi",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(k).alias("lag"),
+                            F.col(f"p{k}").alias("prev"),
+                        )
+                        for k in range(1, ACF_MAX_LAG + 1)
+                    ]
+                )
+            ).alias("s"),
+        )
+        .select("event_type", "mvi", "s.lag", "s.prev")
+        .filter(F.col("prev").isNotNull())
+    )
+    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    m = stacked.groupBy("event_type", "lag").agg(
+        F.count("*").alias("n_pairs"),
+        F.sum(dec("mvi")).alias("sx"),
+        F.sum(dec("prev")).alias("sy"),
+        F.sum(dec("mvi") * dec("mvi")).alias("sxx"),
+        F.sum(dec("prev") * dec("prev")).alias("syy"),
+        F.sum(dec("mvi") * dec("prev")).alias("sxy"),
+    )
+    d = lambda c: F.col(c).cast("double")  # noqa: E731
+    corr = (d("n_pairs") * d("sxy") - d("sx") * d("sy")) / F.sqrt(
+        (d("n_pairs") * d("sxx") - d("sx") * d("sx"))
+        * (d("n_pairs") * d("syy") - d("sy") * d("sy"))
+    )
+    return m.select(
+        "event_type", "lag", "n_pairs", g6(corr).alias("acf")
+    ).orderBy("event_type", "lag")
+
 
 QUERIES = {
     "q_ts_time_weighted_avg": q_ts_time_weighted_avg,
@@ -623,7 +1028,66 @@ QUERIES = {
     "q_ts_ohlc": q_ts_ohlc,
     "q_ts_transitions": q_ts_transitions,
     "q_ts_anomaly": q_ts_anomaly,
+    "q_ts_sessionize": q_ts_sessionize,
+    "q_ts_seasonal_strength": q_ts_seasonal_strength,
+    "q_ts_autocorr": q_ts_autocorr,
+    "q_ts_cusum": q_ts_cusum,
+    "q_ts_interval_merge": q_ts_interval_merge,
+    "q_ts_rolling_corr": q_ts_rolling_corr,
+    "q_ts_locf_repair": q_ts_locf_repair,
+    "q_ts_acf_multi": q_ts_acf_multi,
 }
+
+_MINUTE_GRAIN_SQL = """
+        grain AS (
+            SELECT event_type,
+                   date_diff('minute', TIMESTAMP '1970-01-01 00:00:00', ts)
+                       AS epm,
+                   round(avg(value), 6) AS mv
+            FROM events GROUP BY 1, 2
+        )
+"""
+
+_US = "date_diff('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts)"
+_MIN = "date_diff('minute', TIMESTAMP '1970-01-01 00:00:00', ts)"
+
+
+def _acf_oracle() -> str:
+    branches = []
+    corr = (
+        "(n_pairs::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)"
+        " / sqrt((n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)"
+        " * (n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE))"
+    )
+    for k in range(1, ACF_MAX_LAG + 1):
+        branches.append(
+            f"""
+        SELECT event_type, {k} AS lag, count(*)::BIGINT AS n_pairs,
+               sum(mvi::HUGEINT) AS sx, sum(prev::HUGEINT) AS sy,
+               sum(mvi::HUGEINT * mvi::HUGEINT) AS sxx,
+               sum(prev::HUGEINT * prev::HUGEINT) AS syy,
+               sum(mvi::HUGEINT * prev::HUGEINT) AS sxy
+        FROM (
+            SELECT event_type, mvi,
+                   lag(mvi, {k}) OVER (PARTITION BY event_type ORDER BY epm)
+                       AS prev
+            FROM scaled
+        ) WHERE prev IS NOT NULL GROUP BY event_type"""
+        )
+    union = " UNION ALL ".join(branches)
+    return f"""
+        WITH {_MINUTE_GRAIN_SQL.strip()},
+        scaled AS (
+            SELECT event_type, epm,
+                   CAST(round(mv * 1000000) AS BIGINT) AS mvi
+            FROM grain
+        ),
+        cells AS ({union})
+        SELECT event_type, lag, n_pairs,
+               {G6_SQL.format(x=corr)} AS acf
+        FROM cells
+        ORDER BY event_type, lag
+    """
 
 ORACLE = {
     "q_ts_peaks": f"""
@@ -894,4 +1358,191 @@ ORACLE = {
                      / sum(n_trans) OVER (PARTITION BY from_type), 6) AS p_next
         FROM pairs
     """,
+    "q_ts_seasonal_strength": """
+        WITH hmeans AS (
+            SELECT event_type, hour(ts) AS hh, avg(value) AS hm
+            FROM events GROUP BY 1, 2
+        ),
+        resid AS (
+            SELECT e.event_type, e.value, e.value - h.hm AS r
+            FROM events e
+            JOIN hmeans h ON e.event_type = h.event_type
+                         AND hour(e.ts) = h.hh
+        )
+        SELECT event_type,
+               count(*) AS n_rows,
+               round(1 - var_samp(r) / var_samp(value), 6)
+                   AS seasonal_strength
+        FROM resid GROUP BY event_type
+    """,
+    "q_ts_sessionize": f"""
+        WITH flagged AS (
+            SELECT user_id, ts, event_id,
+                   CASE WHEN date_diff('microsecond',
+                                       lag(ts) OVER (PARTITION BY user_id
+                                                     ORDER BY ts, event_id),
+                                       ts) > {SESSION_GAP_MIN * 60 * 1_000_000}
+                        THEN 1 ELSE 0 END AS brk
+            FROM events
+        ),
+        sess AS (
+            SELECT user_id, ts,
+                   sum(brk) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS session_id
+            FROM flagged
+        ),
+        per_session AS (
+            SELECT user_id, session_id,
+                   count(*) AS n_events,
+                   date_diff('microsecond', min(ts), max(ts)) * 1.0
+                       / 1000000 AS dur_s
+            FROM sess GROUP BY 1, 2
+        )
+        SELECT count(DISTINCT user_id) AS n_users,
+               count(*) AS n_sessions,
+               round(avg(n_events), 6) AS avg_events_per_session,
+               round(avg(dur_s), 6) AS avg_session_seconds,
+               max(n_events) AS max_session_events,
+               round(max(dur_s), 6) AS max_session_seconds
+        FROM per_session
+    """,
+    "q_ts_autocorr": f"""
+        WITH {_MINUTE_GRAIN_SQL.strip()},
+        paired AS (
+            SELECT event_type, mv,
+                   lag(mv) OVER (PARTITION BY event_type ORDER BY epm)
+                       AS prev
+            FROM grain
+        )
+        SELECT event_type,
+               count(*) AS n_pairs,
+               round(corr(mv, prev), 6) AS autocorr_lag1
+        FROM paired WHERE prev IS NOT NULL
+        GROUP BY event_type
+    """,
+    "q_ts_cusum": f"""
+        WITH {_MINUTE_GRAIN_SQL.strip()},
+        centered AS (
+            SELECT event_type, epm,
+                   mv - avg(mv) OVER (PARTITION BY event_type) AS dev
+            FROM grain
+        ),
+        swept AS (
+            SELECT event_type,
+                   sum(dev) OVER (PARTITION BY event_type ORDER BY epm
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS cusum
+            FROM centered
+        )
+        SELECT event_type,
+               count(*) AS n_minutes,
+               round(max(cusum), 4) AS max_cusum,
+               round(min(cusum), 4) AS min_cusum
+        FROM swept GROUP BY event_type
+    """,
+    "q_ts_interval_merge": f"""
+        WITH iv AS (
+            SELECT user_id, event_id,
+                   {_US} AS start_us,
+                   {_US} + (60 + 60 * (event_id % 7)) * 1000000 AS end_us
+            FROM events
+        ),
+        flagged AS (
+            SELECT user_id, start_us, end_us,
+                   CASE WHEN start_us > max(end_us) OVER (
+                       PARTITION BY user_id ORDER BY start_us, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   THEN 1 ELSE 0 END AS brk,
+                   event_id
+            FROM iv
+        ),
+        isl AS (
+            SELECT user_id, start_us, end_us,
+                   sum(brk) OVER (
+                       PARTITION BY user_id ORDER BY start_us, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS island_id
+            FROM flagged
+        ),
+        per_island AS (
+            SELECT user_id, island_id, count(*) AS n_events,
+                   max(end_us) - min(start_us) AS span_us
+            FROM isl GROUP BY 1, 2
+        )
+        SELECT user_id,
+               count(*)::BIGINT AS n_islands,
+               sum(span_us) / 1000000.0 AS covered_s,
+               max(n_events)::BIGINT AS max_island_events
+        FROM per_island GROUP BY user_id
+        ORDER BY covered_s DESC, user_id LIMIT {ISLAND_TOP_USERS}
+    """,
+    "q_ts_rolling_corr": f"""
+        WITH grain AS (
+            SELECT {_MIN} AS epm,
+                   sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+                       ::BIGINT AS x,
+                   sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+                       ::BIGINT AS y
+            FROM events WHERE event_type IN ('view', 'click')
+            GROUP BY 1
+        ),
+        sums AS (
+            SELECT epm,
+                   row_number() OVER (ORDER BY epm) AS rn,
+                   sum(x) OVER w AS sx, sum(y) OVER w AS sy,
+                   sum(x * y) OVER w AS sxy,
+                   sum(x * x) OVER w AS sxx,
+                   sum(y * y) OVER w AS syy
+            FROM grain
+            WINDOW w AS (ORDER BY epm
+                         ROWS BETWEEN {CORR_WINDOW_MIN - 1} PRECEDING
+                         AND CURRENT ROW)
+        ),
+        c AS (
+            SELECT epm // 1440 AS day_idx,
+                   ({CORR_WINDOW_MIN} * sxy - sx * sy)
+                       / sqrt(({CORR_WINDOW_MIN} * sxx - sx * sx)
+                              * ({CORR_WINDOW_MIN} * syy - sy * sy)) AS c
+            FROM sums
+            WHERE rn >= {CORR_WINDOW_MIN}
+              AND {CORR_WINDOW_MIN} * sxx - sx * sx > 0
+              AND {CORR_WINDOW_MIN} * syy - sy * sy > 0
+        )
+        SELECT day_idx::BIGINT AS day_idx,
+               count(*)::BIGINT AS n_windows,
+               round(avg(c), 6) AS avg_corr,
+               round(min(c), 6) AS min_corr,
+               round(max(c), 6) AS max_corr
+        FROM c GROUP BY 1 ORDER BY day_idx
+    """,
+    "q_ts_locf_repair": f"""
+        WITH base AS (
+            SELECT event_type, user_id, event_id,
+                   date_diff('microsecond',
+                             TIMESTAMP '1970-01-01 00:00:00', ts) AS eus,
+                   CASE WHEN event_id % {LOCF_MOD} = {LOCF_RESIDUE}
+                        THEN NULL
+                        ELSE CAST(floor(value * 100 + 0.5) AS BIGINT)
+                   END AS v
+            FROM events
+        ),
+        rep AS (
+            SELECT event_type, v,
+                   last_value(v IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY eus, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS r
+            FROM base
+        )
+        SELECT event_type, count(*)::BIGINT AS n_rows,
+               count_if(v IS NULL)::BIGINT AS n_missing,
+               count_if(v IS NULL AND r IS NOT NULL)::BIGINT AS n_repaired,
+               count_if(v IS NULL AND r IS NULL)::BIGINT AS n_unrepairable,
+               sum(v)::BIGINT AS sum_observed_c,
+               sum(r)::BIGINT AS sum_repaired_c
+        FROM rep GROUP BY event_type ORDER BY event_type
+    """,
+    "q_ts_acf_multi": _acf_oracle(),
 }

@@ -1,0 +1,754 @@
+"""Trend, decomposition and forecast operators over the event-type × day
+grain: Theil–Sen robust trend, changepoint detection, STL-lite seasonal
+decomposition, Holt smoothing, a seasonal-naive backtest, a multi-horizon
+backtest and Bollinger breakouts. Each key has an independent DuckDB
+oracle.
+
+Determinism (FIXTURES.md cookbook): the grain carries exact per-day
+event counts and cent sums (rule 8); squared sums ride DECIMAL(38,0) /
+HUGEINT (rule 12); residuals quantize to the 1e-6 grid BEFORE any
+distributed sum (rule 6); display doubles use the 1e-6 half-up grid
+(functions/exact.py).
+
+Scale notes (100 TB): the fact table folds onto the type × day grain in
+one groupBy (time-bounded — years × 366 — not data-scaled), so every
+window, self-join and recursive smoother after it is grain-sized.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from zonal_datacube_spark.functions.exact import (
+    CENTS_SQL,
+    G6_SQL,
+    cents,
+    g6,
+    micro_units,
+)
+from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
+from zonal_datacube_spark.sources.loader import load_table
+
+
+# --------------------------------------------------------------------------
+# Theil–Sen robust trend
+# --------------------------------------------------------------------------
+
+
+def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil–Sen robust trend per event type: the LOWER MEDIAN of all
+    pairwise slopes between daily mean values — the outlier-proof slope
+    a monitoring system prefers over OLS (one wild day cannot move it).
+    Daily means are single divisions of exact cent/count integers, day
+    distances are exact integer day diffs, so every slope is ONE IEEE
+    division both engines round identically; the median picks the
+    k=(m+1)÷2-th smallest with (slope, day-pair) total order. The
+    pairwise self-join runs on the bounded type×day grain (grain², not
+    rows²).
+
+    Scale (VERDICT r05 weak #2): the pairs table is day-grain² — time-
+    bounded, not data-scaled, but multi-year corpora still put 10⁶–10⁷
+    rows behind each of 5 event_type reducers. The median rank therefore
+    rides the range-bucketed two-level prefix sweep
+    (functions/prefix_sweep.py row_number, the Mann-Whitney precedent):
+    parallelism is type×64 value buckets, and the pair count comes from
+    the sweep's bucket-grain totals for free."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type",
+        F.datediff(
+            F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("date")
+        ).alias("d"),
+    ).agg(
+        F.count("*").alias("nd"),
+        F.sum(cents(F.col("value"))).alias("sd"),
+    )
+    a = daily.select(
+        "event_type",
+        F.col("d").alias("d1"),
+        (F.col("sd").cast("double") / F.col("nd").cast("double")).alias("v1"),
+    )
+    b = daily.select(
+        "event_type",
+        F.col("d").alias("d2"),
+        (F.col("sd").cast("double") / F.col("nd").cast("double")).alias("v2"),
+    )
+    pairs = a.join(b, "event_type").filter(F.col("d1") < F.col("d2"))
+    # nullif-guarded denominator: the d1 < d2 filter makes d2 − d1 > 0
+    # for every SURVIVING row, but under ANSI mode that guarantee is
+    # only as strong as Catalyst's predicate ordering — an added
+    # conjunct (observed with an experimental sampling filter in the
+    # downstream sweep) can evaluate an expression containing this
+    # division before the d1 < d2 conjunct and raise DIVIDE_BY_ZERO on
+    # a d1 == d2 row. nullif makes the expression total (NULL, never an
+    # error) with identical values on all surviving rows.
+    slopes = pairs.select(
+        "event_type",
+        "d1",
+        "d2",
+        (
+            (F.col("v2") - F.col("v1"))
+            / F.nullif((F.col("d2") - F.col("d1")).cast("double"), F.lit(0.0))
+        ).alias("slope"),
+    )
+    ranked = prefix_sweep(
+        slopes,
+        ["event_type"],
+        "slope",
+        tiebreak=["d1", "d2"],
+        row_number_col="rn",
+        total_count_col="n_pairs",
+        boundaries="quantile",
+    )
+    med = ranked.filter(
+        F.col("rn") == F.floor((F.col("n_pairs") + 1) / 2)
+    )
+    days = daily.groupBy("event_type").agg(F.count("*").alias("n_days"))
+    return (
+        med.join(F.broadcast(days), "event_type")
+        .select(
+            "event_type",
+            "n_days",
+            "n_pairs",
+            g6(F.col("slope") / 100).alias("median_slope"),
+        )
+        .orderBy("event_type")
+    )
+
+
+def daily_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """event_type × epoch-day grain: event count + cent-exact value sum."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        "event_type",
+        F.datediff(
+            F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("date")
+        ).alias("d"),
+    ).agg(
+        F.count("*").alias("nd"),
+        F.sum(cents(F.col("value"))).alias("sd"),
+    )
+
+
+DAILY_GRAIN_SQL = f"""
+            SELECT event_type,
+                   date_diff('day', DATE '1970-01-01',
+                             CAST(date_trunc('day', ts) AS DATE))::BIGINT AS d,
+                   count(*)::BIGINT AS nd,
+                   sum({CENTS_SQL.format(x='value')})::BIGINT AS sd
+            FROM events GROUP BY 1, 2
+"""
+
+
+# --------------------------------------------------------------------------
+# changepoint detection
+# --------------------------------------------------------------------------
+
+
+def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Single-changepoint detection per event type (binary segmentation's
+    first split, the building block of PELT-style detectors): the day
+    split maximizing the between-segment sum-of-squares gain
+    SL²/nL + SR²/nR − ST²/nT over per-event cent sums — the split that
+    most reduces squared error when each segment is modeled by its own
+    mean. Cumulative (Σn, Σs) come from one growing-frame window over
+    the bounded day grain (prefix-sum decomposition — every candidate
+    split scores in O(1) from the prefixes); squared sums ride
+    DECIMAL(38,0)/HUGEINT (rule 12) and each gain term is one exact
+    integer division to double, so the (gain, day) argmax order is
+    engine-identical. Output: the split day, segment means, and the
+    gain."""
+    daily = daily_grain(spark, sf_dir)
+    w = Window.partitionBy("event_type").orderBy("d")
+    grow = w.rowsBetween(Window.unboundedPreceding, 0)
+    full = Window.partitionBy("event_type")
+    cum = daily.select(
+        "event_type",
+        "d",
+        F.sum("nd").over(grow).alias("nl"),
+        F.sum("sd").over(grow).alias("sl"),
+        F.sum("nd").over(full).alias("nt"),
+        F.sum("sd").over(full).alias("st"),
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(full).alias("n_days"),
+    ).filter(F.col("rn") < F.col("n_days"))  # right segment non-empty
+    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    nr = F.col("nt") - F.col("nl")
+    sr = F.col("st") - F.col("sl")
+    term = lambda s, n: (s * s).cast("double") / n.cast("double")  # noqa: E731
+    gain = (
+        term(dec("sl"), F.col("nl"))
+        + term(sr.cast("decimal(38,0)"), nr)
+        - term(dec("st"), F.col("nt"))
+    )
+    scored = cum.select(
+        "event_type",
+        "d",
+        "nl",
+        "sl",
+        nr.alias("nr"),
+        sr.alias("sr"),
+        gain.alias("gain"),
+    )
+    pick = Window.partitionBy("event_type").orderBy(
+        F.col("gain").desc(), F.col("d").asc()
+    )
+    return (
+        scored.withColumn("pick_rn", F.row_number().over(pick))
+        .filter(F.col("pick_rn") == 1)
+        .select(
+            "event_type",
+            F.date_format(
+                F.expr("date_add(DATE '1970-01-01', CAST(d AS INT))"),
+                "yyyy-MM-dd",
+            ).alias("split_day"),
+            F.col("nl").alias("n_left"),
+            F.col("nr").alias("n_right"),
+            g6(F.col("sl").cast("double") / F.col("nl") / 100).alias(
+                "mean_left"
+            ),
+            g6(F.col("sr").cast("double") / F.col("nr") / 100).alias(
+                "mean_right"
+            ),
+            g6(F.col("gain") / 10000).alias("gain_usd2"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# STL-lite seasonal decomposition
+# --------------------------------------------------------------------------
+
+STL_HALF_WINDOW = 3  # centered 7-day trend window
+
+
+def q_ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STL-lite seasonal decomposition per event type: trend = pooled
+    7-day centered moving mean (Σcents/Σcount over the frame — ONE
+    exact-integer division per day, no mean-of-means drift), seasonal =
+    per day-of-week average of the detrended daily means, plus the mean
+    absolute detrended residual as the remainder readout. Detrended
+    values quantize to the 1e-6 grid as integer micro-units BEFORE the
+    day-of-week aggregation (rule 6), so the distributed sum is exact
+    and both engines divide the same integers. Day-of-week is the
+    calendar-free epoch-day mod 7 (bucket label, not locale-dependent
+    dayname). Edge days use the frame's available days — the same
+    truncated-window semantics in both engines."""
+    daily = daily_grain(spark, sf_dir)
+    w = Window.partitionBy("event_type").orderBy("d")
+    frame = w.rowsBetween(-STL_HALF_WINDOW, STL_HALF_WINDOW)
+    with_trend = daily.select(
+        "event_type",
+        "d",
+        (F.col("sd").cast("double") / F.col("nd").cast("double")).alias("x"),
+        (
+            F.sum("sd").over(frame).cast("double")
+            / F.sum("nd").over(frame).cast("double")
+        ).alias("trend"),
+    )
+    micro = with_trend.select(
+        "event_type",
+        (F.col("d") % 7).alias("dow"),
+        micro_units((F.col("x") - F.col("trend")))
+        .alias("dt_micro"),
+    )
+    return (
+        micro.groupBy("event_type", "dow")
+        .agg(
+            F.count("*").alias("n_days"),
+            F.sum("dt_micro").alias("sum_dt"),
+            F.sum(F.abs(F.col("dt_micro"))).alias("sum_abs_dt"),
+        )
+        .select(
+            "event_type",
+            "dow",
+            "n_days",
+            g6(
+                F.col("sum_dt").cast("double")
+                / F.col("n_days").cast("double")
+                / 1000000
+                / 100
+            ).alias("seasonal_usd"),
+            g6(
+                F.col("sum_abs_dt").cast("double")
+                / F.col("n_days").cast("double")
+                / 1000000
+                / 100
+            ).alias("mean_abs_resid_usd"),
+        )
+        .orderBy("event_type", "dow")
+    )
+
+
+# --------------------------------------------------------------------------
+# Holt linear exponential smoothing
+# --------------------------------------------------------------------------
+
+
+def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt linear (double) exponential smoothing per event type over
+    daily cent sums, alpha = beta = 1/2: level and trend after the full
+    pass, the one-step forecast, and the mean absolute one-step error.
+    A sequential recurrence cannot be windowed, but the day grain is
+    TIME-bounded, so this is a deliberate applyInPandas python plan
+    (the PLANS.md media-decode class) over ≤ years×366 rows per series.
+    Engine parity without a closed form: both sides run the IDENTICAL
+    IEEE op sequence — s' = 0.5·(x + (s + b)), b' = 0.5·((s' − s) + b),
+    err = x − (s + b) — in day order from the same exact integer cents
+    (multiplying by 0.5 is exact; +,− are correctly rounded in the same
+    order), and per-step |err| quantizes to the 1e-6 grid BEFORE the
+    integer error accumulation (rule 6). The oracle is a recursive CTE
+    walking the same numbered day table. Initialization: s₁ = x₁,
+    b₁ = 0."""
+    import numpy as np
+    import pandas as pd
+
+    def holt(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("d")
+        x = pdf["sd"].to_numpy().astype(np.float64)
+        s = float(x[0])
+        b = 0.0
+        aem = 0
+        for t in range(1, len(x)):
+            xt = float(x[t])
+            pred = s + b
+            err = xt - pred
+            aem += int(np.floor(abs(err) * 1_000_000 + 0.5))
+            s_new = 0.5 * (xt + (s + b))
+            b = 0.5 * ((s_new - s) + b)
+            s = s_new
+        return pd.DataFrame(
+            {
+                "event_type": [pdf["event_type"].iloc[0]],
+                "n_days": [len(x)],
+                "level_c": [s],
+                "trend_c": [b],
+                "aem": [aem],
+            }
+        )
+
+    daily = daily_grain(spark, sf_dir)
+    fitted = daily.groupBy("event_type").applyInPandas(
+        holt,
+        schema="event_type string, n_days long, level_c double, "
+        "trend_c double, aem long",
+    )
+    return fitted.select(
+        "event_type",
+        "n_days",
+        g6(F.col("level_c") / 100).alias("level_usd"),
+        g6(F.col("trend_c") / 100).alias("trend_usd"),
+        g6((F.col("level_c") + F.col("trend_c")) / 100).alias(
+            "forecast_usd"
+        ),
+        F.when(
+            F.col("n_days") > 1,
+            g6(
+                F.col("aem").cast("double")
+                / (F.col("n_days") - 1).cast("double")
+                / 1_000_000
+                / 100
+            ),
+        ).alias("mae_usd"),
+    ).orderBy("event_type")
+
+
+# --------------------------------------------------------------------------
+# seasonal-naive forecast backtest
+# --------------------------------------------------------------------------
+
+
+def q_ts_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forecast backtest per event type: seasonal-naive (ŷ_t = y_{t−7})
+    vs naive (ŷ_t = y_{t−1}) on daily cent sums — the baseline duel
+    every forecasting pipeline runs before anything fancier (and the
+    honesty check for q_ts_holt). Lags are explicit CALENDAR self-joins
+    of the bounded day grain (a missing day yields no pair, exactly the
+    semantics lag-by-rows would get wrong); only days where BOTH
+    forecasts exist score, so the comparison is paired. Absolute errors
+    accumulate as exact integer cents and the winner verdict compares
+    those integer sums — no rounded double ever feeds the decision."""
+    daily = daily_grain(spark, sf_dir)
+    cur = daily.select("event_type", "d", F.col("sd").alias("y"))
+    l1 = daily.select(
+        "event_type", (F.col("d") + 1).alias("d"), F.col("sd").alias("y1")
+    )
+    l7 = daily.select(
+        "event_type", (F.col("d") + 7).alias("d"), F.col("sd").alias("y7")
+    )
+    paired = cur.join(l1, ["event_type", "d"]).join(l7, ["event_type", "d"])
+    scored = paired.groupBy("event_type").agg(
+        F.count("*").alias("n_eval_days"),
+        F.sum(F.abs(F.col("y") - F.col("y1"))).alias("ae1"),
+        F.sum(F.abs(F.col("y") - F.col("y7"))).alias("ae7"),
+    )
+    return scored.select(
+        "event_type",
+        "n_eval_days",
+        g6(
+            F.col("ae1").cast("double")
+            / F.col("n_eval_days").cast("double")
+            / 100
+        ).alias("mae_naive_usd"),
+        g6(
+            F.col("ae7").cast("double")
+            / F.col("n_eval_days").cast("double")
+            / 100
+        ).alias("mae_seasonal_usd"),
+        F.when(F.col("ae7") < F.col("ae1"), F.lit("seasonal_naive"))
+        .when(F.col("ae1") < F.col("ae7"), F.lit("naive"))
+        .otherwise(F.lit("tie"))
+        .alias("better_model"),
+    ).orderBy("event_type")
+
+
+# --------------------------------------------------------------------------
+# multi-horizon backtest
+# --------------------------------------------------------------------------
+
+HORIZONS = (1, 3, 7, 14)
+
+
+def q_ts_horizon_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-horizon naive-forecast backtest per event type: MAE of
+    ŷ_t = y_{t−h} for h ∈ {1, 3, 7, 14} days — the error-vs-horizon
+    curve that tells a capacity planner how far ahead the naive
+    baseline stays usable (and what any model must beat at each
+    horizon). ONE broadcast join against the 4-row horizon table plus
+    one calendar self-join of the bounded day grain; absolute errors
+    accumulate as exact integer cents with a single display division."""
+    daily = daily_grain(spark, sf_dir)
+    horizons = F.broadcast(
+        local_relation(
+            spark, [(h,) for h in HORIZONS], "horizon_days int"
+        )
+    )
+    cur = daily.select("event_type", "d", F.col("sd").alias("y"))
+    lag = daily.select(
+        "event_type", F.col("d").alias("d_lag"), F.col("sd").alias("y_lag")
+    )
+    paired = (
+        cur.crossJoin(horizons)
+        .join(
+            lag,
+            (cur.event_type == lag.event_type)
+            & (F.col("d") - F.col("horizon_days") == F.col("d_lag")),
+        )
+        .select(
+            cur.event_type.alias("event_type"), "horizon_days", "y", "y_lag"
+        )
+    )
+    return (
+        paired.groupBy("event_type", "horizon_days")
+        .agg(
+            F.count("*").alias("n_eval_days"),
+            F.sum(F.abs(F.col("y") - F.col("y_lag"))).alias("abs_err"),
+        )
+        .select(
+            "event_type",
+            "horizon_days",
+            "n_eval_days",
+            g6(
+                F.col("abs_err").cast("double")
+                / F.col("n_eval_days").cast("double")
+                / 100
+            ).alias("mae_usd"),
+        )
+        .orderBy("event_type", "horizon_days")
+    )
+
+
+# --------------------------------------------------------------------------
+# Bollinger breakouts
+# --------------------------------------------------------------------------
+
+BOLL_WINDOW = 7
+BOLL_MIN_N = 4
+
+
+def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bollinger-band breakout census per event type: a day breaks out
+    when its cent total sits more than 2 trailing standard deviations
+    from the trailing 7-day mean (band from the PRIOR days only — the
+    day never smooths itself). The band test runs in pure integer
+    algebra — |x−μ|>2σ ⟺ (x·n−Σx)² > 4·(n·Σx²−(Σx)²) with the squared
+    products on DECIMAL(38,0)/HUGEINT — so the breakout counts are
+    engine-exact with NO rounded double in the predicate. Windows ride
+    the bounded day grain (the changepoint/STL class)."""
+    daily = daily_grain(spark, sf_dir)
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("d")
+        .rowsBetween(-BOLL_WINDOW, -1)
+    )
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    framed = daily.select(
+        "event_type",
+        "d",
+        F.col("sd").alias("x"),
+        F.count("*").over(w).alias("n"),
+        F.sum("sd").over(w).alias("sx"),
+        F.sum(dec(F.col("sd")) * dec(F.col("sd"))).over(w).alias("sxx"),
+    ).filter(F.col("n") >= BOLL_MIN_N)
+    lhs = dec(F.col("x")) * dec(F.col("n")) - dec(F.col("sx"))
+    rhs = 4 * (
+        dec(F.col("n")) * F.col("sxx")
+        - dec(F.col("sx")) * dec(F.col("sx"))
+    )
+    scored = framed.select(
+        "event_type",
+        (lhs * lhs > rhs).alias("breakout"),
+        (lhs > 0).alias("is_up"),
+    )
+    return (
+        scored.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_days_scored"),
+            F.sum(
+                F.when(F.col("breakout") & F.col("is_up"), 1).otherwise(0)
+            ).alias("n_breakouts_up"),
+            F.sum(
+                F.when(F.col("breakout") & ~F.col("is_up"), 1).otherwise(
+                    0
+                )
+            ).alias("n_breakouts_down"),
+        )
+        .orderBy("event_type")
+    )
+
+
+QUERIES = {
+    "q_ts_theil_sen": q_ts_theil_sen,
+    "q_ts_changepoint": q_ts_changepoint,
+    "q_ts_stl_decompose": q_ts_stl_decompose,
+    "q_ts_holt": q_ts_holt,
+    "q_ts_seasonal_naive_eval": q_ts_seasonal_naive_eval,
+    "q_ts_horizon_backtest": q_ts_horizon_backtest,
+    "q_ts_bollinger": q_ts_bollinger,
+}
+
+
+_HORIZONS_SQL = ", ".join(f"({h})" for h in HORIZONS)
+
+
+ORACLE = {
+    "q_ts_theil_sen": f"""
+        WITH daily AS (
+            SELECT event_type,
+                   date_diff('day', DATE '1970-01-01',
+                             CAST(date_trunc('day', ts) AS DATE)) AS d,
+                   count(*)::BIGINT AS nd,
+                   sum({CENTS_SQL.format(x='value')})::BIGINT AS sd
+            FROM events GROUP BY 1, 2
+        ),
+        slopes AS (
+            SELECT a.event_type, a.d AS d1, b.d AS d2,
+                   (b.sd::DOUBLE / b.nd::DOUBLE
+                    - a.sd::DOUBLE / a.nd::DOUBLE)
+                       / (b.d - a.d)::DOUBLE AS slope
+            FROM daily a JOIN daily b
+              ON a.event_type = b.event_type AND a.d < b.d
+        ),
+        ranked AS (
+            SELECT event_type, slope,
+                   row_number() OVER (
+                       PARTITION BY event_type ORDER BY slope, d1, d2
+                   ) AS rn,
+                   count(*) OVER (PARTITION BY event_type) AS n_pairs
+            FROM slopes
+        ),
+        days AS (
+            SELECT event_type, count(*)::BIGINT AS n_days
+            FROM daily GROUP BY event_type
+        )
+        SELECT ranked.event_type, days.n_days,
+               n_pairs::BIGINT AS n_pairs,
+               {G6_SQL.format(x='slope / 100')} AS median_slope
+        FROM ranked JOIN days USING (event_type)
+        WHERE rn = (n_pairs + 1) // 2
+        ORDER BY event_type
+    """,
+    "q_ts_changepoint": f"""
+        WITH daily AS ({DAILY_GRAIN_SQL}),
+        cum AS (
+            SELECT event_type, d,
+                   sum(nd) OVER w AS nl,
+                   sum(sd) OVER w AS sl,
+                   sum(nd) OVER t AS nt,
+                   sum(sd) OVER t AS st,
+                   row_number() OVER (PARTITION BY event_type ORDER BY d)
+                       AS rn,
+                   count(*) OVER t AS n_days
+            FROM daily
+            WINDOW w AS (PARTITION BY event_type ORDER BY d
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+                   t AS (PARTITION BY event_type)
+        ),
+        scored AS (
+            SELECT event_type, d, nl, sl, nt - nl AS nr, st - sl AS sr,
+                   (sl::HUGEINT * sl::HUGEINT)::DOUBLE / nl::DOUBLE
+                   + ((st - sl)::HUGEINT * (st - sl)::HUGEINT)::DOUBLE
+                     / (nt - nl)::DOUBLE
+                   - (st::HUGEINT * st::HUGEINT)::DOUBLE / nt::DOUBLE
+                       AS gain
+            FROM cum WHERE rn < n_days
+        )
+        SELECT event_type,
+               strftime(DATE '1970-01-01' + d::INT, '%Y-%m-%d') AS split_day,
+               nl::BIGINT AS n_left, nr::BIGINT AS n_right,
+               {G6_SQL.format(x="sl::DOUBLE / nl / 100")} AS mean_left,
+               {G6_SQL.format(x="sr::DOUBLE / nr / 100")} AS mean_right,
+               {G6_SQL.format(x="gain / 10000")} AS gain_usd2
+        FROM scored
+        QUALIFY row_number() OVER (PARTITION BY event_type
+                                   ORDER BY gain DESC, d ASC) = 1
+        ORDER BY event_type
+    """,
+    "q_ts_stl_decompose": f"""
+        WITH daily AS ({DAILY_GRAIN_SQL}),
+        with_trend AS (
+            SELECT event_type, d,
+                   sd::DOUBLE / nd::DOUBLE AS x,
+                   sum(sd) OVER f::DOUBLE / sum(nd) OVER f::DOUBLE AS trend
+            FROM daily
+            WINDOW f AS (PARTITION BY event_type ORDER BY d
+                         ROWS BETWEEN {STL_HALF_WINDOW} PRECEDING
+                         AND {STL_HALF_WINDOW} FOLLOWING)
+        ),
+        micro AS (
+            SELECT event_type, d % 7 AS dow,
+                   CAST(floor((x - trend) * 1000000 + 0.5) AS BIGINT)
+                       AS dt_micro
+            FROM with_trend
+        )
+        SELECT event_type, dow,
+               count(*)::BIGINT AS n_days,
+               {G6_SQL.format(x="sum(dt_micro)::DOUBLE / count(*) / 1000000 / 100")}
+                   AS seasonal_usd,
+               {G6_SQL.format(x="sum(abs(dt_micro))::DOUBLE / count(*) / 1000000 / 100")}
+                   AS mean_abs_resid_usd
+        FROM micro GROUP BY event_type, dow
+        ORDER BY event_type, dow
+    """,
+    "q_ts_holt": f"""
+        WITH RECURSIVE daily AS ({DAILY_GRAIN_SQL}),
+        numbered AS (
+            SELECT event_type, sd,
+                   row_number() OVER (PARTITION BY event_type
+                                      ORDER BY d) AS rn
+            FROM daily
+        ),
+        rec AS (
+            SELECT event_type, rn,
+                   sd::DOUBLE AS s, 0.0::DOUBLE AS b, 0::HUGEINT AS aem
+            FROM numbered WHERE rn = 1
+            UNION ALL
+            SELECT n.event_type, n.rn,
+                   0.5 * (n.sd::DOUBLE + (r.s + r.b)) AS s,
+                   0.5 * ((0.5 * (n.sd::DOUBLE + (r.s + r.b)) - r.s)
+                          + r.b) AS b,
+                   r.aem + CAST(floor(
+                       abs(n.sd::DOUBLE - (r.s + r.b)) * 1000000 + 0.5
+                   ) AS HUGEINT) AS aem
+            FROM rec r
+            JOIN numbered n
+              ON n.event_type = r.event_type AND n.rn = r.rn + 1
+        ),
+        final AS (
+            SELECT event_type, rn AS n_days, s, b, aem,
+                   row_number() OVER (PARTITION BY event_type
+                                      ORDER BY rn DESC) AS rev
+            FROM rec
+        )
+        SELECT event_type, n_days::BIGINT AS n_days,
+               {G6_SQL.format(x="s / 100")} AS level_usd,
+               {G6_SQL.format(x="b / 100")} AS trend_usd,
+               {G6_SQL.format(x="(s + b) / 100")} AS forecast_usd,
+               CASE WHEN n_days > 1 THEN
+                   {G6_SQL.format(
+                       x="aem::DOUBLE / (n_days - 1)::DOUBLE"
+                       " / 1000000 / 100"
+                   )}
+               END AS mae_usd
+        FROM final WHERE rev = 1
+        ORDER BY event_type
+    """,
+    "q_ts_seasonal_naive_eval": f"""
+        WITH daily AS ({DAILY_GRAIN_SQL}),
+        paired AS (
+            SELECT c.event_type, c.sd AS y, l1.sd AS y1, l7.sd AS y7
+            FROM daily c
+            JOIN daily l1 ON l1.event_type = c.event_type
+                         AND l1.d = c.d - 1
+            JOIN daily l7 ON l7.event_type = c.event_type
+                         AND l7.d = c.d - 7
+        ),
+        scored AS (
+            SELECT event_type,
+                   count(*)::BIGINT AS n_eval_days,
+                   sum(abs(y - y1))::BIGINT AS ae1,
+                   sum(abs(y - y7))::BIGINT AS ae7
+            FROM paired GROUP BY event_type
+        )
+        SELECT event_type, n_eval_days,
+               {G6_SQL.format(
+                   x="ae1::DOUBLE / n_eval_days::DOUBLE / 100"
+               )} AS mae_naive_usd,
+               {G6_SQL.format(
+                   x="ae7::DOUBLE / n_eval_days::DOUBLE / 100"
+               )} AS mae_seasonal_usd,
+               CASE WHEN ae7 < ae1 THEN 'seasonal_naive'
+                    WHEN ae1 < ae7 THEN 'naive'
+                    ELSE 'tie' END AS better_model
+        FROM scored ORDER BY event_type
+    """,
+    "q_ts_horizon_backtest": f"""
+        WITH daily AS ({DAILY_GRAIN_SQL}),
+        horizons(horizon_days) AS (VALUES {_HORIZONS_SQL}),
+        paired AS (
+            SELECT c.event_type, h.horizon_days,
+                   c.sd AS y, l.sd AS y_lag
+            FROM daily c
+            CROSS JOIN horizons h
+            JOIN daily l ON l.event_type = c.event_type
+                        AND l.d = c.d - h.horizon_days
+        )
+        SELECT event_type, horizon_days,
+               count(*)::BIGINT AS n_eval_days,
+               {G6_SQL.format(
+                   x="sum(abs(y - y_lag))::DOUBLE / count(*)::DOUBLE / 100"
+               )} AS mae_usd
+        FROM paired GROUP BY event_type, horizon_days
+        ORDER BY event_type, horizon_days
+    """,
+    "q_ts_bollinger": f"""
+        WITH daily AS ({DAILY_GRAIN_SQL}),
+        framed AS (
+            SELECT event_type, d, sd AS x,
+                   count(*) OVER w AS n,
+                   sum(sd) OVER w AS sx,
+                   sum(sd::HUGEINT * sd::HUGEINT) OVER w AS sxx
+            FROM daily
+            WINDOW w AS (PARTITION BY event_type ORDER BY d
+                         ROWS BETWEEN {BOLL_WINDOW} PRECEDING
+                         AND 1 PRECEDING)
+        ),
+        scored AS (
+            SELECT event_type,
+                   (x::HUGEINT * n - sx) AS lhs,
+                   4 * (n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT)
+                       AS rhs
+            FROM framed WHERE n >= {BOLL_MIN_N}
+        )
+        SELECT event_type,
+               count(*)::BIGINT AS n_days_scored,
+               sum(CASE WHEN lhs * lhs > rhs AND lhs > 0
+                        THEN 1 ELSE 0 END)::BIGINT AS n_breakouts_up,
+               sum(CASE WHEN lhs * lhs > rhs AND lhs <= 0
+                        THEN 1 ELSE 0 END)::BIGINT AS n_breakouts_down
+        FROM scored GROUP BY event_type ORDER BY event_type
+    """,
+}

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import micro_units
 from zonal_datacube_spark.operators.zonal import ZONES_SQL_VALUES, zones_df
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -43,7 +44,7 @@ def q_udaf_zonal_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") > F.expr("n div 10")) & (F.col("rn") <= F.col("n") - F.expr("n div 10"))
     )
     # 6dp mean on the exact 1e-6 grid (q_zonal_stats r11 discipline)
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     return (
         trimmed.withColumn("_v6", v6)
         .groupBy("zone_id")

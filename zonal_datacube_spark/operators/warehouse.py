@@ -14,9 +14,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import json
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import CENTS_SQL, G6_SQL, cents, g6
+from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -346,6 +353,293 @@ def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_dq_daily_health(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily pipeline-health panel: events, distinct users, null/zero
+    values, and purchase share per day — the first dashboard any
+    ingestion pipeline grows. One day-grain rollup, integer counts plus
+    one rounded ratio."""
+    ev = load_table(spark, sf_dir, "events")
+    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+    return ev.groupBy(day.alias("day")).agg(
+        F.count("*").alias("n_events"),
+        F.countDistinct("user_id").alias("n_users"),
+        F.sum(
+            (F.col("value").isNull() | (F.col("value") == 0)).cast("bigint")
+        ).alias("n_null_or_zero"),
+        F.round(
+            F.avg((F.col("event_type") == "purchase").cast("double")), 6
+        ).alias("purchase_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# snapshot time travel
+# --------------------------------------------------------------------------
+
+TT_V1_CUT = "1997-01-01"
+TT_V2_CUT = "1998-01-01"
+TT_PURGE_CUT = "1996-01-01"
+
+
+def q_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot time travel over a manifest log — the AS OF read every
+    table format (Iceberg/Delta) provides, built from first principles:
+    three versions of an orders extract land as immutable delta parquet
+    files (v0 base load, v1 append of 1997, v2 append of 1998+ PLUS a
+    retention purge tombstoning 'F' orders older than 1996), each
+    version's JSON manifest lists exactly the live delta files and
+    tombstone files visible at that version. Reading AS OF v = union the
+    manifest's delta files, broadcast-anti-join its tombstone keys —
+    file-level pruning, no copy-per-version. The result audits all three
+    versions (row count, cent-exact price sum, rows removed by
+    tombstones); the oracle reconstructs each version relationally."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderdate",
+        "o_orderstatus",
+        cents(F.col("o_totalprice"))
+        .alias("price_c"),
+    )
+    (root,) = fresh_dirs("q_warehouse_time_travel", "zds_timetravel_")
+    deltas = os.path.join(root, "deltas")
+    d0 = os.path.join(deltas, "ver=0")
+    d1 = os.path.join(deltas, "ver=1")
+    d2 = os.path.join(deltas, "ver=2")
+    tomb2 = os.path.join(root, "tomb_v2")
+    v1c = F.lit(TT_V1_CUT).cast("timestamp_ntz")
+    v2c = F.lit(TT_V2_CUT).cast("timestamp_ntz")
+    cols = ("o_orderkey", "o_orderstatus", "o_orderdate", "price_c")
+
+    # r14 (guide §1.2 job count, §2.6 overlap independent jobs): the three
+    # version extracts used to be three sequential write jobs over the
+    # same orders scan; ONE dynamic-partitioned write routes every row to
+    # its delta dir in a single pass (`ver` is a routing column only —
+    # partitionBy excludes it from the data files, so each ver=N dir holds
+    # exactly the old delta schema and as_of() reads are unchanged). The
+    # independent tombstone extract overlaps it from a second driver
+    # thread instead of waiting behind it.
+    def _write_deltas() -> None:
+        orders.withColumn(
+            "ver",
+            F.when(F.col("o_orderdate") < v1c, F.lit(0))
+            .when(F.col("o_orderdate") < v2c, F.lit(1))
+            .otherwise(F.lit(2)),
+        ).select(*cols, "ver").write.mode("overwrite").partitionBy(
+            "ver"
+        ).parquet(deltas)
+
+    def _write_tombstones() -> None:
+        orders.filter(
+            (F.col("o_orderstatus") == "F")
+            & (
+                F.col("o_orderdate")
+                < F.lit(TT_PURGE_CUT).cast("timestamp_ntz")
+            )
+        ).select("o_orderkey").write.mode("overwrite").parquet(tomb2)
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(_write_deltas), pool.submit(_write_tombstones)]
+        for fut in futures:
+            fut.result()  # surface any write failure, don't swallow it
+    manifests = {
+        0: {"deltas": [d0], "tombstones": []},
+        1: {"deltas": [d0, d1], "tombstones": []},
+        2: {"deltas": [d0, d1, d2], "tombstones": [tomb2]},
+    }
+    for v, m in manifests.items():
+        with open(os.path.join(root, f"manifest_v{v}.json"), "w") as fh:
+            json.dump({"version": v, **m}, fh)
+
+    def as_of(v: int) -> DataFrame:
+        with open(os.path.join(root, f"manifest_v{v}.json")) as fh:
+            m = json.load(fh)
+        df = spark.read.parquet(*m["deltas"])
+        removed = df
+        for t in m["tombstones"]:
+            keys = spark.read.parquet(t)
+            df = df.join(F.broadcast(keys), "o_orderkey", "left_anti")
+        stat = df.agg(
+            F.count("*").alias("n_rows"),
+            F.sum("price_c").alias("sum_price_c"),
+        )
+        if m["tombstones"]:
+            gone = removed.join(
+                F.broadcast(spark.read.parquet(*m["tombstones"])),
+                "o_orderkey",
+                "left_semi",
+            ).agg(F.count("*").alias("n_tombstoned"))
+        else:
+            gone = spark.range(1).select(
+                F.lit(0).cast("bigint").alias("n_tombstoned")
+            )
+        return stat.crossJoin(gone).select(
+            F.lit(v).alias("version"), "n_rows", "sum_price_c", "n_tombstoned"
+        )
+
+    out = as_of(0).unionByName(as_of(1)).unionByName(as_of(2))
+    return out.orderBy("version")
+
+
+# --------------------------------------------------------------------------
+# write-audit-publish
+# --------------------------------------------------------------------------
+
+
+def q_sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write-audit-publish — the production sink contract that keeps bad
+    batches out of consumer-visible tables: the daily×type rollup lands
+    in a STAGING dir; four audits run against the staged read-back (row
+    count covers every source day, no null keys, no non-positive counts,
+    staged event total reconciles to the source scan); only when all
+    pass does the publish step write the consumer manifest + data. The
+    result is the audit ledger itself (check, observed value, verdict)
+    plus the published row count read back through the manifest — the
+    artifact an on-call engineer actually looks at."""
+    ev = load_table(spark, sf_dir, "events")
+    cand = ev.groupBy(
+        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
+        "event_type",
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum(cents(F.col("value"))).alias(
+            "sum_v_c"
+        ),
+    )
+    (root,) = fresh_dirs("q_sink_write_audit_publish", "zds_wap_")
+    n_src = ev.count()
+    return _audit_and_publish(spark, cand, n_src, root)
+
+
+def _audit_and_publish(spark, cand: DataFrame, n_src: int, root: str) -> DataFrame:
+    """The stage → audit → publish machinery, factored so the failing
+    path is injectable: tests/test_analytics_r5d.py feeds a candidate
+    batch with a poisoned key and asserts the WAP CONTRACT — a batch
+    that fails any audit leaves NO manifest and NO published data
+    (consumer-invisible), while the ledger records the failure."""
+    staging = os.path.join(root, "staging")
+    publish = os.path.join(root, "published")
+    cand.write.mode("overwrite").parquet(staging)
+    staged = spark.read.parquet(staging)
+    m = staged.agg(
+        F.count("*").alias("n_rows"),
+        F.countDistinct("day").alias("n_days"),
+        # coalesce: F.sum over an EMPTY staged batch returns NULL, and the
+        # ledger build below casts every observed value with int(o) — the
+        # injectable empty-candidate failure must emit a failed ledger row,
+        # never crash on a None.
+        F.coalesce(
+            F.sum(
+                (F.col("day").isNull() | F.col("event_type").isNull()).cast(
+                    "bigint"
+                )
+            ),
+            F.lit(0),
+        ).alias("n_nullkey"),
+        F.coalesce(
+            F.sum((F.col("n") <= 0).cast("bigint")), F.lit(0)
+        ).alias("n_nonpos"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("staged_total"),
+    )
+    row = m.collect()[0]
+    audits = [
+        ("1_row_count", row.n_rows, row.n_rows >= row.n_days),
+        ("2_null_keys", row.n_nullkey, row.n_nullkey == 0),
+        ("3_nonpos_counts", row.n_nonpos, row.n_nonpos == 0),
+        (
+            "4_reconcile_total",
+            (row.staged_total or 0) - n_src,
+            row.staged_total == n_src,
+        ),
+    ]
+    if all(p for _, _, p in audits):
+        staged.write.mode("overwrite").parquet(publish)
+        with open(os.path.join(root, "manifest.json"), "w") as fh:
+            json.dump({"published": publish, "audits": "pass"}, fh)
+        with open(os.path.join(root, "manifest.json")) as fh:
+            published_path = json.load(fh)["published"]
+        n_pub = spark.read.parquet(published_path).count()
+        audits.append(("5_published_rows", n_pub, True))
+    else:
+        audits.append(("5_published_rows", 0, False))
+    return local_relation(
+        spark,
+        [(c, int(o), bool(p)) for c, o, p in audits],
+        "check_name string, observed bigint, passed boolean",
+    ).orderBy("check_name")
+
+
+# --------------------------------------------------------------------------
+# statistical process control
+# --------------------------------------------------------------------------
+
+
+def q_dq_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X-bar control chart per event type: each day is a subgroup, the
+    center line is the pooled mean S/N and the limits are ±3σ/√n_d with
+    the pooled population σ — the monitoring chart a data-quality SLA
+    dashboard renders. Every moment is an exact cent-grid integer; the
+    out-of-control DECISION compares squared deviations ((x̄_d − c)² ·
+    n_d · N² > 9·σ²·N² …) entirely in arithmetic both engines perform
+    identically on the same exact integers — no sqrt, no tolerance.
+    Reports per-type day census, out-of-control day count, and the
+    worst day's deviation."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("d")
+    ).agg(
+        F.count("*").alias("nd"),
+        F.sum(cents(F.col("value"))).alias("sd"),
+    )
+    tot = daily.groupBy("event_type").agg(
+        F.sum("nd").alias("n"),
+        F.sum("sd").alias("s"),
+    )
+    # pooled second moment must come from the raw rows, not daily sums
+    tot2 = ev.groupBy("event_type").agg(
+        F.sum(cents(F.col("value")) * cents(F.col("value"))).alias("ss")
+    )
+    stats = tot.join(tot2, "event_type")
+    j = daily.join(F.broadcast(stats), "event_type")
+    nd, sd = F.col("nd").cast("double"), F.col("sd").cast("double")
+    n, s, ss = (
+        F.col("n").cast("double"),
+        F.col("s").cast("double"),
+        F.col("ss").cast("double"),
+    )
+    xbar = sd / nd
+    center = s / n
+    var = ss / n - center * center  # population variance, exact-int inputs
+    dev_sq = (xbar - center) * (xbar - center)
+    ooc = dev_sq * nd > F.lit(9.0) * var
+    flagged = j.select(
+        "event_type",
+        "nd",
+        ooc.alias("ooc"),
+        dev_sq.alias("dev_sq"),
+        center.alias("center"),
+        var.alias("var"),
+    )
+    return (
+        flagged.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_days"),
+            F.sum(F.col("ooc").cast("bigint")).alias("n_ooc_days"),
+            F.max("dev_sq").alias("max_dev_sq"),
+            F.first("center").alias("c"),
+            F.first("var").alias("v"),
+        )
+        .select(
+            "event_type",
+            "n_days",
+            "n_ooc_days",
+            g6(F.col("c") / 100).alias("center_line"),
+            g6(F.sqrt(F.col("v")) / 100).alias("sigma"),
+            g6(F.sqrt(F.col("max_dev_sq")) / 100).alias("max_day_dev"),
+        )
+        .orderBy("event_type")
+    )
+
+
 QUERIES = {
     "q_cdc_diff": q_cdc_diff,
     "q_scd2_build": q_scd2_build,
@@ -354,9 +648,16 @@ QUERIES = {
     "q_dq_benford": q_dq_benford,
     "q_mv_rewrite": q_mv_rewrite,
     "q_report_revenue_bridge": q_report_revenue_bridge,
+    "q_dq_daily_health": q_dq_daily_health,
+    "q_warehouse_time_travel": q_warehouse_time_travel,
+    "q_sink_write_audit_publish": q_sink_write_audit_publish,
+    "q_dq_control_chart": q_dq_control_chart,
 }
 
 _EVENT_TYPES_SQL = ", ".join(f"'{t}'" for t in EVENT_TYPES)
+
+
+_PC_SQL = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
 
 ORACLE = {
     "q_cdc_diff": f"""
@@ -513,5 +814,103 @@ ORACLE = {
         SELECT check_name, n_violations,
                CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS passed
         FROM checks
+    """,
+    "q_dq_daily_health": """
+        SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+               count(*) AS n_events,
+               count(DISTINCT user_id) AS n_users,
+               sum(CASE WHEN value IS NULL OR value = 0
+                        THEN 1 ELSE 0 END)::BIGINT AS n_null_or_zero,
+               round(avg(CASE WHEN event_type = 'purchase'
+                              THEN 1.0 ELSE 0.0 END), 6) AS purchase_share
+        FROM events GROUP BY 1
+    """,
+    "q_warehouse_time_travel": f"""
+        WITH pc AS (
+            SELECT o_orderkey, o_orderdate, o_orderstatus,
+                   {_PC_SQL} AS price_c
+            FROM orders
+        ),
+        tomb AS (
+            SELECT o_orderkey FROM pc
+            WHERE o_orderstatus = 'F'
+              AND o_orderdate < TIMESTAMP '{TT_PURGE_CUT}'
+        ),
+        v2 AS (
+            SELECT * FROM pc
+            WHERE o_orderkey NOT IN (SELECT o_orderkey FROM tomb)
+        )
+        SELECT 0 AS version, count(*)::BIGINT AS n_rows,
+               sum(price_c)::BIGINT AS sum_price_c, 0::BIGINT AS n_tombstoned
+        FROM pc WHERE o_orderdate < TIMESTAMP '{TT_V1_CUT}'
+        UNION ALL
+        SELECT 1, count(*)::BIGINT, sum(price_c)::BIGINT, 0::BIGINT
+        FROM pc WHERE o_orderdate < TIMESTAMP '{TT_V2_CUT}'
+        UNION ALL
+        SELECT 2, count(*)::BIGINT, sum(price_c)::BIGINT,
+               (SELECT count(*)::BIGINT FROM tomb)
+        FROM v2
+        ORDER BY version
+    """,
+    "q_sink_write_audit_publish": """
+        WITH cand AS (
+            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+                   event_type, count(*)::BIGINT AS n
+            FROM events GROUP BY 1, 2
+        ),
+        m AS (
+            SELECT count(*)::BIGINT AS n_rows,
+                   count(DISTINCT day)::BIGINT AS n_days,
+                   count_if(day IS NULL OR event_type IS NULL)::BIGINT
+                       AS n_nullkey,
+                   count_if(n <= 0)::BIGINT AS n_nonpos,
+                   sum(n)::BIGINT AS staged_total
+            FROM cand
+        ),
+        src AS (SELECT count(*)::BIGINT AS n_src FROM events)
+        SELECT '1_row_count' AS check_name, m.n_rows AS observed,
+               m.n_rows >= m.n_days AS passed FROM m
+        UNION ALL
+        SELECT '2_null_keys', n_nullkey, n_nullkey = 0 FROM m
+        UNION ALL
+        SELECT '3_nonpos_counts', n_nonpos, n_nonpos = 0 FROM m
+        UNION ALL
+        SELECT '4_reconcile_total', staged_total - n_src,
+               staged_total = n_src FROM m, src
+        UNION ALL
+        SELECT '5_published_rows', n_rows, true FROM m
+        ORDER BY check_name
+    """,
+    "q_dq_control_chart": f"""
+        WITH daily AS (
+            SELECT event_type, date_trunc('day', ts) AS d,
+                   count(*)::BIGINT AS nd,
+                   sum({CENTS_SQL.format(x='value')})::BIGINT AS sd
+            FROM events GROUP BY 1, 2
+        ),
+        tot AS (
+            SELECT event_type, count(*)::BIGINT AS n,
+                   sum({CENTS_SQL.format(x='value')})::BIGINT AS s,
+                   sum({CENTS_SQL.format(x='value')}::HUGEINT
+                       * {CENTS_SQL.format(x='value')}::HUGEINT) AS ss
+            FROM events GROUP BY 1
+        ),
+        j AS (
+            SELECT daily.event_type, nd,
+                   (sd::DOUBLE / nd::DOUBLE - s::DOUBLE / n::DOUBLE)
+                       * (sd::DOUBLE / nd::DOUBLE - s::DOUBLE / n::DOUBLE)
+                       AS dev_sq,
+                   s::DOUBLE / n::DOUBLE AS c,
+                   ss::DOUBLE / n::DOUBLE
+                       - (s::DOUBLE / n::DOUBLE) * (s::DOUBLE / n::DOUBLE)
+                       AS v
+            FROM daily JOIN tot USING (event_type)
+        )
+        SELECT event_type, count(*)::BIGINT AS n_days,
+               count_if(dev_sq * nd::DOUBLE > 9.0 * v)::BIGINT AS n_ooc_days,
+               {G6_SQL.format(x='any_value(c) / 100')} AS center_line,
+               {G6_SQL.format(x='sqrt(any_value(v)) / 100')} AS sigma,
+               {G6_SQL.format(x='sqrt(max(dev_sq)) / 100')} AS max_day_dev
+        FROM j GROUP BY event_type ORDER BY event_type
     """,
 }

@@ -24,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.functions.exact import micro_units
 from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.sources.loader import load_table
 
 # Value-band zones over events.value (observed domain ~0–330). Half-open
 # [lo, hi) intervals, deliberately non-uniform width with a catch-all tail.
@@ -65,7 +66,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = cells.join(
         zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
     ).withColumn(
-        "_v6", F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+        "_v6", micro_units(F.col("value"))
     )
     n = F.count("*")
     s1 = F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
@@ -130,7 +131,7 @@ def q_zonal_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4e10 rows/(zone,day) but wraps silently past int64 in non-ANSI
     # Spark, and the inconsistency invited copy-paste of the weaker
     # form). DuckDB's sum(BIGINT) is HUGEINT — already exact.
-    val_e6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    val_e6 = micro_units(F.col("value"))
     return joined.groupBy(
         "zone_id", F.date_trunc("day", "ts").alias("day")
     ).agg(
@@ -195,7 +196,7 @@ def q_zonal_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 6dp means fold on the exact 1e-6 grid (the q_zonal_stats r11
     # discipline): w is integer-valued, so w·v6 is an exact integer and
     # both sums accumulate order-independently as DECIMAL(38,0)
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     wl = F.col("w").cast("bigint")
     joined = joined.withColumn("_v6", v6).withColumn("_wl", wl)
     return joined.groupBy("zone_id").agg(
@@ -250,7 +251,7 @@ def q_zonal_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     p2v = F.when(~F.col("in_p1"), F.col("value"))
     # epoch means fold on the exact 1e-6 grid (q_zonal_stats r11
     # discipline) — conditional integer sums, one trailing division
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
+    v6 = micro_units(F.col("value"))
     p1v6 = F.when(F.col("in_p1"), v6).cast("decimal(38,0)")
     p2v6 = F.when(~F.col("in_p1"), v6).cast("decimal(38,0)")
     mean = lambda s, c: F.round(  # noqa: E731
@@ -331,6 +332,78 @@ def q_raster_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# raster slope (Horn's method) — integer gradient algebra
+# ---------------------------------------------------------------------------
+
+SLOPE_N = 256  # synthetic raster edge; 256² = 65,536 cells
+SLOPE_CLASS_W = 30_000  # slope² units per steepness class (max ≈ 295k)
+
+
+def q_raster_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Terrain slope via Horn's 3×3 gradient (Horn 1981, the
+    slope/aspect kernel every raster engine ships next to focal stats):
+    gx = (E·2 + NE + SE) − (W·2 + NW + SW), gy symmetric, on the same
+    deterministic synthetic raster as q_raster_focal (zonal.py) — and
+    ENTIRELY in integer algebra: the report classifies by slope² =
+    gx² + gy² (monotone in slope, so the class census is identical) and
+    never evaluates the float atan/sqrt, sidestepping rule 8 outright.
+
+    Scale: same scatter-gather as q_raster_focal — each cell explodes
+    to its 8 weighted neighbor contributions and one partial+final
+    aggregate keyed by target cell folds both gradient sums; interior
+    cells identify as contribution-count == 8 (no branchy edge logic).
+    At 100 TB: tile the grid and halo-exchange tile borders — the 2-D
+    instance of functions/chunked_window.py's pattern."""
+    n = SLOPE_N
+    cells = spark.range(0, n * n).select(
+        (F.col("id") % n).alias("x"),
+        F.floor(F.col("id") / n).alias("y"),
+    ).select(
+        "x", "y", ((F.col("x") * 31 + F.col("y") * 17) % 97).alias("val")
+    )
+    offsets = F.expr(
+        "filter(flatten(transform(sequence(-1, 1), dx ->"
+        " transform(sequence(-1, 1), dy -> struct(dx, dy)))),"
+        " o -> o.dx != 0 OR o.dy != 0)"
+    )
+    wx = F.when(F.col("o.dx") == 0, F.lit(0)).otherwise(
+        F.col("o.dx") * F.when(F.col("o.dy") == 0, 2).otherwise(1)
+    )
+    wy = F.when(F.col("o.dy") == 0, F.lit(0)).otherwise(
+        F.col("o.dy") * F.when(F.col("o.dx") == 0, 2).otherwise(1)
+    )
+    scattered = (
+        cells.select("x", "y", "val", F.explode(offsets).alias("o"))
+        .select(
+            (F.col("x") - F.col("o.dx")).alias("tx"),
+            (F.col("y") - F.col("o.dy")).alias("ty"),
+            (wx * F.col("val")).alias("wxv"),
+            (wy * F.col("val")).alias("wyv"),
+        )
+        .filter(
+            (F.col("tx") >= 0) & (F.col("tx") < n)
+            & (F.col("ty") >= 0) & (F.col("ty") < n)
+        )
+    )
+    grad = scattered.groupBy("tx", "ty").agg(
+        F.sum("wxv").alias("gx"),
+        F.sum("wyv").alias("gy"),
+        F.count("*").alias("nc"),
+    )
+    steep = grad.filter(F.col("nc") == 8).select(
+        (F.col("gx") * F.col("gx") + F.col("gy") * F.col("gy")).alias("ss")
+    )
+    return steep.groupBy(
+        F.expr(f"least(9L, ss div {SLOPE_CLASS_W})").alias("steep_class")
+    ).agg(
+        F.count("*").alias("n_cells"),
+        F.min("ss").alias("min_slope_sq"),
+        F.max("ss").alias("max_slope_sq"),
+        F.round(F.avg("ss"), 6).alias("avg_slope_sq"),
+    )
+
+
 QUERIES = {
     "q_zonal_stats": q_zonal_stats,
     "q_zonal_change": q_zonal_change,
@@ -339,6 +412,7 @@ QUERIES = {
     "q_zonal_categorical": q_zonal_categorical,
     "q_zonal_timeseries": q_zonal_timeseries,
     "q_raster_downsample": q_raster_downsample,
+    "q_raster_slope": q_raster_slope,
 }
 
 ORACLE = {
@@ -476,5 +550,40 @@ ORACLE = {
                count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view
         FROM events JOIN zones ON value >= lo AND value < hi
         GROUP BY zone_id
+    """,
+    "q_raster_slope": f"""
+        WITH cells AS (
+            SELECT i % {SLOPE_N} AS x, i // {SLOPE_N} AS y,
+                   ((i % {SLOPE_N}) * 31 + (i // {SLOPE_N}) * 17) % 97 AS val
+            FROM range(0, {SLOPE_N * SLOPE_N}) t(i)
+        ),
+        off(dx, dy) AS (
+            VALUES (-1,-1), (-1,0), (-1,1), (0,-1),
+                   (0,1), (1,-1), (1,0), (1,1)
+        ),
+        scat AS (
+            SELECT x - dx AS tx, y - dy AS ty,
+                   (CASE WHEN dx = 0 THEN 0
+                         ELSE dx * (CASE WHEN dy = 0 THEN 2 ELSE 1 END)
+                    END) * val AS wxv,
+                   (CASE WHEN dy = 0 THEN 0
+                         ELSE dy * (CASE WHEN dx = 0 THEN 2 ELSE 1 END)
+                    END) * val AS wyv
+            FROM cells, off
+            WHERE x - dx BETWEEN 0 AND {SLOPE_N - 1}
+              AND y - dy BETWEEN 0 AND {SLOPE_N - 1}
+        ),
+        g AS (
+            SELECT tx, ty, sum(wxv) AS gx, sum(wyv) AS gy,
+                   count(*) AS nc
+            FROM scat GROUP BY tx, ty
+        ),
+        s AS (SELECT gx * gx + gy * gy AS ss FROM g WHERE nc = 8)
+        SELECT least(9, ss // {SLOPE_CLASS_W})::BIGINT AS steep_class,
+               count(*) AS n_cells,
+               min(ss)::BIGINT AS min_slope_sq,
+               max(ss)::BIGINT AS max_slope_sq,
+               round(avg(ss), 6) AS avg_slope_sq
+        FROM s GROUP BY steep_class
     """,
 }

@@ -45,7 +45,9 @@ TICK_STREAM_NAME = "zds_tick_stream"
 # does in microseconds, while a production feed at millions of rows
 # per tick would have OVERFILLED a 64-tick chunk). A backlog of T ticks
 # at R rows/tick drains in ceil(T*R/CHUNK_ROWS) partitions either way —
-# deep backlogs still fan out cluster-wide.
+# deep backlogs still fan out cluster-wide. A tick is never split across
+# partitions, so a partition holds at most max(CHUNK_ROWS, R) rows: once
+# R exceeds the budget, every partition carries exactly one tick.
 CHUNK_ROWS = 4096
 
 
