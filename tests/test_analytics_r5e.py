@@ -194,7 +194,7 @@ def test_bm25_wand_prune_is_lossless_and_actually_prunes(spark):
     )
     from zonal_datacube_spark.sources.loader import load_table
 
-    got = q_text_bm25_wand(spark, SF_SMOKE).collect()
+    got = sorted(q_text_bm25_wand(spark, SF_SMOKE).collect(), key=lambda r: r.rank)
     assert [r.rank for r in got] == list(range(1, len(got) + 1))
 
     # naive referee: score EVERY matching doc, no pruning

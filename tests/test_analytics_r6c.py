@@ -153,7 +153,9 @@ def test_pca_var_matches_direct_numpy_spectrum(spark):
     cov = gram / n - np.outer(mu, mu)
     evals = np.linalg.eigvalsh(cov)[::-1]
     total = float(evals.sum())
-    rows = Q["q_embed_pca_var"](spark, SF_SMOKE).collect()
+    rows = sorted(
+        Q["q_embed_pca_var"](spark, SF_SMOKE).collect(), key=lambda r: r["component"]
+    )
     assert [r["component"] for r in rows] == list(range(1, 9))
     cum = 0.0
     for r in rows:
@@ -167,7 +169,9 @@ def test_pca_var_matches_direct_numpy_spectrum(spark):
 
 
 def test_pca_var_shares_are_a_valid_spectrum(spark):
-    rows = Q["q_embed_pca_var"](spark, SF_SMOKE).collect()
+    rows = sorted(
+        Q["q_embed_pca_var"](spark, SF_SMOKE).collect(), key=lambda r: r["component"]
+    )
     shares = [r["var_share"] for r in rows]
     assert all(s >= -1e-9 for s in shares)
     assert all(shares[i] >= shares[i + 1] - 1e-9 for i in range(7))

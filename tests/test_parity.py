@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_ORACLE
-from zonal_datacube_spark.compare import compare_query
+from zonal_datacube_spark.compare import compare_query, unobserved_sort_problems
 from zonal_datacube_spark.registry import all_oracle_sql, all_queries
 
 QUERIES = all_queries()
@@ -21,8 +21,9 @@ ORACLE = all_oracle_sql()
 @pytest.mark.parametrize("key", sorted(QUERIES))
 def test_query_parity(key, spark, duck):
     if key not in ORACLE:
-        n = QUERIES[key](spark, SF_ORACLE).count()
-        assert n >= 0  # rows-only contract: runs and returns a stable frame
+        df = QUERIES[key](spark, SF_ORACLE)
+        assert not unobserved_sort_problems(key, df)
+        assert df.count() >= 0  # rows-only contract: runs and returns a stable frame
         return
     res = compare_query(key, spark, duck, QUERIES[key], ORACLE[key], SF_ORACLE)
     assert res.ok, str(res)

@@ -62,9 +62,9 @@ def test_big_orders_threshold_respected(spark):
     rows = q_report_big_orders(spark, SF_SMOKE).collect()
     assert rows, "fixture should contain qualifying big orders"
     assert all(r.total_qty > Q18_QTY_THRESHOLD for r in rows)
-    # descending by total_qty with orderkey tie-break
-    qtys = [r.total_qty for r in rows]
-    assert qtys == sorted(qtys, reverse=True)
+    # an unordered set with one row per qualifying order
+    keys = [r.o_orderkey for r in rows]
+    assert len(set(keys)) == len(keys)
 
 
 def test_text_repetition_single_corpus_pass(spark):

@@ -14,6 +14,7 @@ import os
 import pytest
 
 from tests.conftest import SF_SMOKE
+from zonal_datacube_spark.session import scoped_conf
 
 TOOL = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -63,7 +64,7 @@ def test_plan_class_holds_at_200_partitions(spark, rehearsal_dir):
         k: sr.classify(formatted_plan(queries[k](spark, SF_SMOKE)))
         for k in KEYS
     }
-    with sr._conf(spark, "spark.sql.shuffle.partitions", "200"):
+    with scoped_conf(spark, sr.REHEARSAL_CONFS):
         for k in KEYS:
             reh = sr.classify(formatted_plan(queries[k](spark, rehearsal_dir)))
             for flag in sr.RED_FLAGS:
@@ -77,7 +78,7 @@ def test_parity_holds_on_rehearsed_layout(spark, rehearsal_dir):
     queries, oracles = all_queries(), all_oracle_sql()
     con = duck_connect(rehearsal_dir)
     try:
-        with sr._conf(spark, "spark.sql.shuffle.partitions", "200"):
+        with scoped_conf(spark, sr.REHEARSAL_CONFS):
             for k in KEYS:
                 res = compare_query(
                     k, spark, con, queries[k], oracles[k], rehearsal_dir

@@ -31,9 +31,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.streaming_batch import (
-    _stream_shuffle_partitions,
-)
+from zonal_datacube_spark.operators.streaming_batch import STREAM_SHUFFLE_CONFS
+from zonal_datacube_spark.session import scoped_conf
 from zonal_datacube_spark.sources.loader import load_table
 from zonal_datacube_spark.streaming.demo import (
     view_purchase_join,
@@ -104,7 +103,7 @@ def _run(spark, src, schema, builder, out_dir, max_files):
     def write_batch(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         q = (
             result.writeStream.foreachBatch(write_batch)
             .outputMode("append")

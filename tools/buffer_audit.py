@@ -55,13 +55,9 @@ DENSE_IDX_ORDER = re.compile(r"\bidx#\d+L? ASC")
 # DIMENSION, not by the fact stream — each entry names the bound; a key
 # hitting BUFFER_FNS outside a bounded frame and absent here FLAGS.
 BOUNDED_GROUPS = {
-    "q_behavior_stickiness": (
-        "collect_set(week) per user: bounded by the CALENDAR span "
-        "(~52/yr), not by event count (behavior.py:81)"
-    ),
     "q_cohort_retention": (
-        "collect_set(week) per user: the same calendar-span bound as "
-        "stickiness (behavior.py:77-81 pattern, one user pass)"
+        "collect_set(week) per user: bounded by the CALENDAR span "
+        "(~52/yr), not by event count (behavior.py:81, one user pass)"
     ),
     "q_dedup_cross_source": (
         "collect_set(source) per shingle digest: bounded by the source "
@@ -70,7 +66,7 @@ BOUNDED_GROUPS = {
     ),
     "q_agg_listagg": (
         "collect_set(o_orderpriority) per group: the 5-value priority "
-        "enum (aggregations.py:412)"
+        "enum (aggregations.py:411)"
     ),
     "q_sim_pq_ann": (
         "collect_list((sub, code)) per vector: one element per PQ "

@@ -18,6 +18,7 @@ from zonal_datacube_spark.compare import (
     compare_query,
     driver_unhashable_cols,
     duck_connect,
+    unobserved_sort_problems,
 )
 from zonal_datacube_spark.registry import all_oracle_sql, all_queries
 from zonal_datacube_spark.session import get_spark
@@ -42,9 +43,13 @@ def main() -> int:
         if k not in oracle:
             df = queries[k](spark, sf_dir)
             bad = driver_unhashable_cols(df.schema)
+            unread = unobserved_sort_problems(k, df)
             n = df.count()
             if bad:
                 print(f"[ERR ] {k}: driver-unhashable cols {bad} ({n} rows)")
+                failures += 1
+            elif unread:
+                print(f"[ERR ] {k}: {unread[0]} ({n} rows)")
                 failures += 1
             else:
                 print(f"[ROWS] {k}: {n} rows (rows-only key, no oracle)")

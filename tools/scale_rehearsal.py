@@ -70,18 +70,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from zonal_datacube_spark.compare import compare_query, duck_connect
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 from zonal_datacube_spark.registry import all_oracle_sql, all_queries
-from zonal_datacube_spark.session import get_spark
+from zonal_datacube_spark.session import get_spark, scoped_conf
 from zonal_datacube_spark.sources.loader import TABLES, load_table
 
 REHEARSAL_ROOT = "/tmp/zds_rehearsal"
 REHEARSAL_PARTITIONS = "200"
+REHEARSAL_CONFS = {"spark.sql.shuffle.partitions": REHEARSAL_PARTITIONS}
 FACT_FILES, DIM_FILES = 16, 2
 DIM_TABLES = {"region", "nation"}
 
 # PLAN-phase skips (superset of tools/plan_audit.py's): TRUE-streaming keys
 # EXECUTE a streaming query at plan time and pin their own shuffle
 # partitions (the state-store sizing contract in
-# streaming_batch._stream_shuffle_partitions — the rehearsal conf wouldn't
+# streaming_batch.STREAM_SHUFFLE_CONFS — the rehearsal conf wouldn't
 # even apply), and the two eager keys return local relations — there is no
 # lazy batch plan to classify. They are NOT exempt from the PARITY phase:
 # since r12 the streaming file source is layout-aware (streaming/demo.py
@@ -230,20 +231,6 @@ def build_layout(spark, sf_dir: str, dest: str, rebuild: bool) -> None:
         fh.write(stamp)
 
 
-class _conf:
-    """Set/restore a runtime conf around a block."""
-
-    def __init__(self, spark, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.key)
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.key, self.prev)
-
-
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--rebuild"]
     rebuild = "--rebuild" in sys.argv[1:]
@@ -272,7 +259,7 @@ def main() -> int:
         except Exception as exc:  # pragma: no cover — surfaced in output
             failures += 1
             print(f"[BASE-ERROR] {k}: {type(exc).__name__}: {exc}")
-    with _conf(spark, "spark.sql.shuffle.partitions", REHEARSAL_PARTITIONS):
+    with scoped_conf(spark, REHEARSAL_CONFS):
         for k in plan_keys:
             if k not in base_cls:
                 continue

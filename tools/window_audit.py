@@ -81,11 +81,11 @@ NO_PARTITION_BOUNDED = {
     ),
     "q_text_rrf_fusion": (
         "two rank windows over orderBy().limit(RRF_TOPN) candidate sets "
-        "(TakeOrderedAndProject feeds ≤ N rows, text_retrieval.py:437,464)"
+        "(TakeOrderedAndProject feeds ≤ N rows, text_retrieval.py:433,460)"
     ),
     "q_text_bm25_wand": (
         "rank over the final orderBy().limit(k) result (≤ k rows, "
-        "text_retrieval.py:283 — the WAND rescue's TakeOrdered output)"
+        "text_retrieval.py:282 — the WAND rescue's TakeOrdered output)"
     ),
     "q_window_running_distinct": (
         "running sum over the day spine (post-aggregation, ≤ ~10³ rows "

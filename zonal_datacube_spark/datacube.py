@@ -131,5 +131,4 @@ def zonal_stats(pixels: DataFrame, zones: DataFrame, value_col: str = "elevation
             F.round(F.min(value_col), 3).alias("min_v"),
             F.round(F.max(value_col), 3).alias("max_v"),
         )
-        .orderBy("zone_id")
     )

@@ -81,7 +81,6 @@ themselves (q_dq_outlier_iqr).
 
 from __future__ import annotations
 
-import contextlib
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -90,54 +89,33 @@ from pyspark.storagelevel import StorageLevel
 
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
+from zonal_datacube_spark.session import scoped_conf
 
-# Shuffle partitions for the EAGER grain folds. Their exchanges carry
-# either the domain-bounded grain (the level-1 bucketed window) or the
-# (parts × buckets) pre-aggregates — never the fact table, which is
-# grouped to the grain BEFORE the fold runs (grain_percentiles
+# Confs for the EAGER grain folds, scoped around their collect. Their
+# exchanges carry either the domain-bounded grain (the level-1 bucketed
+# window) or the (parts × buckets) pre-aggregates — never the fact table,
+# which is grouped to the grain BEFORE the fold runs (grain_percentiles
 # materializes the persisted grain under the session conf first;
-# table_value_grain entries arrive already materialized). At fixture
-# scale 32-partition shuffles on a ≤600k-row cached grain are pure
-# scheduling overhead — measured 1.8 → 1.3 s per sweep at 8 (r12, the
-# q_dq_outlier_mad breakdown); at 100 TB this knob scales with GRAIN
-# size (tens of millions of rows ⇒ raise it), not corpus size — the
-# same sizing contract as streaming_batch._stream_shuffle_partitions.
+# table_value_grain entries arrive already materialized).
+# - 8 shuffle partitions: at fixture scale 32-partition shuffles on a
+#   ≤600k-row cached grain are pure scheduling overhead — measured
+#   1.8 → 1.3 s per sweep (r12, the q_dq_outlier_mad breakdown); at
+#   100 TB this knob scales with GRAIN size (tens of millions of rows ⇒
+#   raise it), not corpus size — the same sizing contract as
+#   streaming_batch.STREAM_SHUFFLE_CONFS.
+# - AQE off (r13, guide §1.2): at the fixed 8-partition width AQE has
+#   nothing to coalesce or re-strategize, but with it on every exchange
+#   materializes as its own stage-job with a driver re-optimization
+#   round trip, and the fold queries are JOB-COUNT-bound, not data-bound
+#   (same-process A/B on the q_report_order_gap_stats fold: 0.59 → 0.47 s
+#   median with a much shorter tail). Join strategy is unchanged (the
+#   sweep's bounds/offsets joins carry explicit F.broadcast hints); AQE
+#   never changes results, only scheduling.
 GRAIN_FOLD_PARTITIONS = 8
-
-
-@contextlib.contextmanager
-def _fold_partitions(spark, n: int = GRAIN_FOLD_PARTITIONS):
-    # Session-global override, restored on exit (ADVICE r12): any query
-    # PLANNED concurrently on the shared session during the eager collect
-    # would pick up the 8-partition conf. The engine's harnesses are
-    # single-threaded per session (bench/parity/driver run keys
-    # sequentially; the streaming keys are AvailableNow one-shots that
-    # complete inside their call), so no concurrent planning exists on a
-    # declared path — a future multi-threaded caller should scope the
-    # fold with spark.newSession() instead of widening this.
-    # AQE is ALSO scoped off here (r13, guide §1.2): the fold's exchanges
-    # carry only the domain-bounded grain at the fixed 8-partition width
-    # this module already pins, so AQE has nothing to coalesce or
-    # re-strategize — but with it on, every exchange materializes as its
-    # own stage-job with a driver re-optimization round trip, and the
-    # fold queries are JOB-COUNT-bound, not data-bound (tight same-process
-    # A/B on the q_report_order_gap_stats fold: 0.59 → 0.47 s median with
-    # a much shorter tail). Join strategy is unchanged (the sweep's
-    # bounds/offsets joins carry explicit F.broadcast hints); AQE never
-    # changes results, only scheduling.
-    key = "spark.sql.shuffle.partitions"
-    aqe = "spark.sql.adaptive.enabled"
-    prev, prev_aqe = spark.conf.get(key), spark.conf.get(aqe)
-    try:
-        # both sets INSIDE the try (ADVICE r13): if the second set raised,
-        # the finally must still restore the first — the old shape leaked
-        # the partition override for the session's lifetime in that case
-        spark.conf.set(key, str(n))
-        spark.conf.set(aqe, "false")
-        yield
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(aqe, prev_aqe)
+_FOLD_CONFS = {
+    "spark.sql.shuffle.partitions": str(GRAIN_FOLD_PARTITIONS),
+    "spark.sql.adaptive.enabled": "false",
+}
 
 
 def grain_percentiles(
@@ -218,7 +196,7 @@ def _eager_local(long_df: DataFrame) -> DataFrame:
     because every declared consumer's part axis is a small enum. A
     future caller passing a high-cardinality part column would
     otherwise silently materialize |parts|·|ps| rows on the driver."""
-    with _fold_partitions(long_df.sparkSession):
+    with scoped_conf(long_df.sparkSession, _FOLD_CONFS):
         rows = long_df.collect()
     if len(rows) > 10_000:
         # explicit raise, not assert: the guard must survive python -O

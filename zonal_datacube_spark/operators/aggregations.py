@@ -346,7 +346,6 @@ def q_agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.count("*").alias("n_daily_sketches"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -583,7 +582,7 @@ def q_agg_sketch_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("distinct_rel_err"),
         g6(F.col("p50_exact")).alias("p50_exact"),
         g6(F.col("p50_approx")).alias("p50_approx"),
-    ).orderBy("event_type")
+    )
 
 
 QUERIES = {

@@ -395,7 +395,7 @@ def q_behavior_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "wau",
         g6(ratio).alias("stickiness"),
-    ).orderBy("iso_year", "iso_week")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -469,7 +469,7 @@ def q_behavior_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_users").cast("double")
             / F.sum("n_users").over(tot).cast("double")
         ).alias("user_share"),
-    ).orderBy("depth")
+    )
 
 
 # --------------------------------------------------------------------------

@@ -419,7 +419,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = r2
         if changed == 0:
             break
-    return labels.orderBy("doc_id")
+    return labels
 
 
 SIMHASH_BITS = 16

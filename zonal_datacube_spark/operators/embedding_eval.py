@@ -336,7 +336,6 @@ def q_sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(float(ANN_EVAL_K))
             ).alias("recall_at_k"),
         )
-        .orderBy("probe_id")
     )
 
 
@@ -428,7 +427,7 @@ def q_embed_pca_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "component int, n_vectors int, dim int, "
         "var_share double, cum_share double",
-    ).orderBy("component")
+    )
 
 
 # --------------------------------------------------------------------------

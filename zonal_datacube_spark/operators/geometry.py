@@ -329,7 +329,6 @@ def q_geo_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("d"), 6).alias("min_nn_dist"),
             F.round(F.max("d"), 6).alias("max_nn_dist"),
         )
-        .orderBy("a_label")
     )
 
 

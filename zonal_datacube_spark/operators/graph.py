@@ -532,7 +532,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "core_degree",
             F.lit(rounds).cast("bigint").alias("peel_rounds"),
         )
-        .orderBy("nation")
     )
 
 

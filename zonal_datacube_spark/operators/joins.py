@@ -573,7 +573,6 @@ def _skew_join_fold(li: DataFrame, orders: DataFrame) -> DataFrame:
             .cast("string")
             .alias("revenue_e4"),
         )
-        .orderBy("is_hot", "o_orderpriority")
     )
 
 

@@ -46,7 +46,6 @@ def q_media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("mean_g"), 6).alias("avg_g"),
             F.round(F.avg("mean_b"), 6).alias("avg_b"),
         )
-        .orderBy("kind")
     )
 
 
@@ -200,7 +199,6 @@ def q_media_decode_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.max("doc_id").alias("last_doc"),
         )
-        .orderBy("shard_id")
     )
 
 

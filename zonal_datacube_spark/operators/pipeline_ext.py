@@ -436,7 +436,7 @@ def q_data_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         g6(budget * samp_share / F.col("tokens").cast("double")).alias(
             "epochs"
         ),
-    ).orderBy("source")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -722,7 +722,6 @@ def q_data_curriculum_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("q_e6").alias("min_q_e6"),
             F.any_value("budget_tokens").alias("budget_tokens"),
         )
-        .orderBy("source")
     )
 
 

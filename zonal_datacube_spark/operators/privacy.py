@@ -129,7 +129,7 @@ def q_privacy_rr_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_count",
         g6(est).alias("estimated"),
         g6(est - F.col("true_count").cast("double")).alias("est_error"),
-    ).orderBy("t")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -232,7 +232,7 @@ def q_privacy_generalization(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_rows_risky").cast("double")
             / F.col("n_rows").cast("double")
         ).alias("risky_share"),
-    ).orderBy("level")
+    )
 
 
 QUERIES = {

@@ -88,7 +88,6 @@ def q_report_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -208,7 +207,6 @@ def q_report_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("o_totalprice", 2).alias("o_totalprice"),
             "total_qty",
         )
-        .orderBy(F.col("total_qty").desc(), F.col("o_orderkey").asc())
     )
 
 

@@ -138,7 +138,6 @@ def q_report_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("n_name", F.year("o_orderdate").alias("o_year"))
         .agg(F.round(F.sum(profit), 4).alias("sum_profit"))
-        .orderBy("n_name", F.col("o_year").desc())
     )
 
 
@@ -167,7 +166,6 @@ def q_report_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_part.crossJoin(F.broadcast(total))
         .filter(F.col("value") > Q11_FRACTION * F.col("total_value"))
         .select("l_partkey", F.round("value", 4).alias("value"))
-        .orderBy(F.col("value").desc(), "l_partkey")
     )
 
 
@@ -197,7 +195,6 @@ def q_report_late_shipment_priority(
             F.sum(F.when(crit, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(crit, 0).otherwise(1)).alias("low_line_count"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -230,9 +227,6 @@ def q_report_supplier_part_counts(
         .join(bad_supp, li.l_suppkey == bad_supp.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size"
-        )
     )
 
 
@@ -271,7 +265,6 @@ def q_report_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_nationkey") == Q20_NATIONKEY)
         .join(dominant, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
-        .orderBy("s_name")
     )
 
 

@@ -140,7 +140,7 @@ def q_sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_ann(
         emb, list(PROBE_IDS), k=ANN_K, iters=1, train_mod=4, dim=64,
         cache_key=corpus_key(sf_dir, ("embeddings",)),
-    ).orderBy("probe_id", "rn")
+    )
 
 
 def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,7 +173,7 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=64,
         kmeans_iters=1,
         cache_key=corpus_key(sf_dir, ("embeddings",)),
-    ).orderBy("probe_id", "rn")
+    )
 
 
 EMBED_DUP_TAU = 0.4
@@ -426,7 +426,6 @@ def q_embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_probes"),
             F.round(F.avg("recall"), 6).alias("avg_recall_at_5"),
         )
-        .orderBy("p_label")
     )
 
 # ---------------------------------------------------------------------------

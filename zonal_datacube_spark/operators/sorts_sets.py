@@ -277,7 +277,6 @@ def q_sql_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         .intersectAll(side("F"))
         .groupBy("nationkey")
         .agg(F.count("*").alias("n_surviving"))
-        .orderBy("nationkey")
     )
 
 

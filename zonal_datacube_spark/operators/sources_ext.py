@@ -363,7 +363,6 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "length",
             F.md5("content").alias("content_md5"),
         )
-        .orderBy("file_name")
     )
 
 

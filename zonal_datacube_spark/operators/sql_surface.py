@@ -84,8 +84,7 @@ def q_sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / 10000 AS revenue
          FROM zds_li_var
          WHERE l_quantity >= zds_min_qty AND l_returnflag = zds_flag
-         GROUP BY l_linestatus
-         ORDER BY l_linestatus'
+         GROUP BY l_linestatus'
         """
     )
 
@@ -117,7 +116,6 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / 10000 AS revenue
         FROM zds_li_udf
         GROUP BY zds_qband(l_quantity)
-        ORDER BY band
         """
     )
 
@@ -142,7 +140,6 @@ def q_sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
                floor(net / gross * 1000000 + 0.5) / 1000000 AS net_share
         FROM zds_li_lat
         GROUP BY l_returnflag
-        ORDER BY l_returnflag
         """
     )
 
@@ -192,7 +189,6 @@ def q_sink_python_ds_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             " n_rows bigint, revenue double"
         )
         .json(committed)
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -266,7 +262,7 @@ def q_report_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_to",
         "n_customers",
         g6(F.col("n_customers") / row_tot).alias("row_share"),
-    ).orderBy("q_from", "q_to")
+    )
 
 
 NEYMAN_TOTAL = 100
@@ -355,7 +351,6 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.first("true_mean").alias("true_mean"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -376,7 +371,6 @@ def q_agg_grouping_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             round4_half_up(F.sum(revenue())).alias("revenue"),
         )
-        .orderBy("gid", "l_returnflag", "l_linestatus")
     )
 
 
@@ -421,7 +415,6 @@ def q_ts_range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("s1h").alias("max_hourly_sum"),
             F.round(F.avg("n1h"), 6).alias("avg_hourly_n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -462,7 +455,6 @@ def q_sql_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("safe_cast").alias("n_clean_casts"),
             F.sum("safe_cast").alias("sum_clean_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -502,7 +494,6 @@ def q_scan_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.min("fsize") > 0).alias("files_nonempty"),
             F.count("*").alias("n_rows"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -577,7 +568,6 @@ def q_report_pvm_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             round4_half_up((F.col("q1") - F.col("q0")) * p0).alias("volume_effect"),
             round4_half_up((p1 - p0) * F.col("q1")).alias("price_effect"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -743,7 +733,6 @@ def q_sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY od, o_orderkey)
         )
         WHERE price_rank <= 2
-        ORDER BY o_custkey, price_rank
         """
     )
 

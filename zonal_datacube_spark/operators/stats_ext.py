@@ -766,7 +766,7 @@ def q_stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.m_y.alias("m_y"),
         "n_rows",
         g6(corr).alias("pearson_r"),
-    ).orderBy("m_x", "m_y")
+    )
 
 
 QUERIES = {

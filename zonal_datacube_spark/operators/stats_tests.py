@@ -117,7 +117,7 @@ def q_stats_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(m2, 6).alias("rest_mean"),
         F.round(t, 6).alias("t_stat"),
         F.round(df, 6).alias("welch_df"),
-    ).orderBy("event_type")
+    )
 
 
 def q_stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,7 +574,7 @@ def _spearman_fold(li: DataFrame, ranks: DataFrame | None = None) -> DataFrame:
         "l_returnflag",
         "n_rows",
         g6(num / (F.sqrt(a) * F.sqrt(b))).alias("spearman_rho"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -632,7 +632,7 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concordant",
         "discordant",
         g6(tau).alias("tau_b"),
-    ).orderBy("event_type")
+    )
 
 
 QUERIES = {

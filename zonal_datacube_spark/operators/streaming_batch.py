@@ -16,52 +16,36 @@ Spark's 1-day/6-hour windows are epoch-aligned, so window starts equal
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.session import scoped_conf
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
 
 
-@contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Pin shuffle partitions for a TRUE-streaming run. Each shuffle
-    partition materializes one state-store instance per stateful operator
-    per micro-batch — at fixture scale 32 instances are pure setup
-    overhead (~2-4s/query); 8 keeps the identical plan shape. At 100 TB
-    this knob goes UP with key cardinality, and is pinned thereafter by
-    the first run's checkpoint."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+# Shuffle partitions for a TRUE-streaming run. Each shuffle partition
+# materializes one state-store instance per stateful operator per
+# micro-batch — at fixture scale 32 instances are pure setup overhead
+# (~2-4s/query); 8 keeps the identical plan shape. At 100 TB this knob
+# goes UP with key cardinality, and is pinned thereafter by the first
+# run's checkpoint.
+STREAM_SHUFFLE_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
-
-@contextlib.contextmanager
-def _skip_no_data_batch(spark: SparkSession):
-    """Disable the trailing NO-DATA micro-batch for a streaming run whose
-    OUTPUT cannot depend on it (r14, guide §1.2 — don't run work whose
-    result is discarded). The no-data batch exists to advance the
-    watermark so held state can emit (outer-join nulls, append-mode
-    window finalization) or evict. An INNER stream-stream join emits
-    every row eagerly during data batches and the query stops right
-    after the drain, so its finalize batch only evicts state the stopped
-    query throws away — a full state-store load/commit cycle (8
-    partitions × 4 join stores) with zero observable effect. Callers
-    whose semantics DO need the final watermark pass (q_stream_outer_join,
-    watermarked-append aggregates) must never use this scope."""
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
+# Drop the trailing NO-DATA micro-batch for a streaming run whose OUTPUT
+# cannot depend on it (r14, guide §1.2 — don't run work whose result is
+# discarded). The no-data batch exists to advance the watermark so held
+# state can emit (outer-join nulls, append-mode window finalization) or
+# evict. An INNER stream-stream join emits every row eagerly during data
+# batches and the query stops right after the drain, so its finalize
+# batch only evicts state the stopped query throws away — a full
+# state-store load/commit cycle (8 partitions × 4 join stores) with zero
+# observable effect. Callers whose semantics DO need the final watermark
+# pass (q_stream_outer_join, watermarked-append aggregates) must never
+# use these confs.
+NO_DATA_BATCH_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
@@ -114,7 +98,7 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_foreach_")
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         run_stream_foreach_batch(
             tumbling_counts(events_stream(spark, sf_dir)), spark, out
         )
@@ -138,7 +122,7 @@ def q_stream_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_upsert_")
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         return run_stream_upsert(
             tumbling_counts(events_stream(spark, sf_dir)),
             spark,
@@ -310,7 +294,7 @@ def q_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = enriched_segment_counts(
         events_stream(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         q = (
             result.writeStream.format("memory")
             .queryName("zds_stream_enrich")
@@ -342,7 +326,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the shared 8-partition pin matters double here. The inner join
     # emits matches eagerly, so the trailing no-data batch would only
     # evict state this availableNow run discards — skip it (r14).
-    with _stream_shuffle_partitions(spark), _skip_no_data_batch(spark):
+    with scoped_conf(spark, {**STREAM_SHUFFLE_CONFS, **NO_DATA_BATCH_OFF}):
         run_stream_append(
             view_purchase_join(events_stream(spark, sf_dir)), spark, out
         )
@@ -368,7 +352,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_ssouter_")
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         run_stream_append(
             view_purchase_left_join(events_stream(spark, sf_dir)), spark, out
         )
@@ -415,7 +399,7 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zonal_datacube_spark.streaming.demo import events_stream
 
     ckpt = tempfile.mkdtemp(prefix="zds_statereader_")
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         agg = (
             events_stream(spark, sf_dir)
             .groupBy("user_id")
@@ -448,7 +432,7 @@ def q_stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once contract for custom stateful operators."""
     from zonal_datacube_spark.streaming.stateful import run_stateful_demo
 
-    with _stream_shuffle_partitions(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
         sink = run_stateful_demo(spark, sf_dir, table="zds_stateful_key")
     return sink.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),

@@ -541,7 +541,6 @@ def q_text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "share"
             ),
         )
-        .orderBy("stage")
     )
 
 
@@ -584,7 +583,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars").cast("double")
             / F.col("n_bpe_tokens").cast("double")
         ).alias("chars_per_token"),
-    ).orderBy("lang")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -725,7 +724,7 @@ def q_text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_b",
         "n_shared_terms",
         g6(js).alias("js_divergence"),
-    ).orderBy("lang_a", "lang_b")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -144,7 +144,6 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.filter(F.col("rank") <= BM25_TOPK)
         .select("term", "rank", "doc_id", "tf", "dl", "bm25")
-        .orderBy("term", "rank")
     )
 
 
@@ -291,7 +290,6 @@ def q_text_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .select("rank", "doc_id", "score", "n_terms")
-        .orderBy("rank")
     )
 
 
@@ -349,7 +347,6 @@ def q_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("doc_id").alias("n_docs"),
             F.sum("start").alias("sum_start"),
         )
-        .orderBy("chunk_len")
     )
 
 
@@ -393,7 +390,6 @@ def q_rag_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n_chunks").cast("double")
             ).alias("dup_share"),
         )
-        .orderBy("source")
     )
 
 

@@ -885,7 +885,6 @@ def q_ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("c"), 6).alias("min_corr"),
             F.round(F.max("c"), 6).alias("max_corr"),
         )
-        .orderBy("day_idx")
     )
 
 
@@ -942,7 +941,6 @@ def q_ts_locf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v").alias("sum_observed_c"),
             F.sum("r").alias("sum_repaired_c"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1013,7 +1011,7 @@ def q_ts_acf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         "event_type", "lag", "n_pairs", g6(corr).alias("acf")
-    ).orderBy("event_type", "lag")
+    )
 
 
 QUERIES = {

@@ -114,7 +114,6 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
             g6(F.col("slope") / 100).alias("median_slope"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -214,7 +213,6 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             g6(F.col("gain") / 10000).alias("gain_usd2"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -279,7 +277,6 @@ def q_ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("mean_abs_resid_usd"),
         )
-        .orderBy("event_type", "dow")
     )
 
 
@@ -353,7 +350,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ),
         ).alias("mae_usd"),
-    ).orderBy("event_type")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -402,7 +399,7 @@ def q_ts_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("ae1") < F.col("ae7"), F.lit("naive"))
         .otherwise(F.lit("tie"))
         .alias("better_model"),
-    ).orderBy("event_type")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -457,7 +454,6 @@ def q_ts_horizon_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("mae_usd"),
         )
-        .orderBy("event_type", "horizon_days")
     )
 
 
@@ -516,7 +512,6 @@ def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("n_breakouts_down"),
         )
-        .orderBy("event_type")
     )
 
 

@@ -56,7 +56,6 @@ def q_udaf_zonal_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("trimmed_mean")
         )
-        .orderBy("zone_id")
     )
 
 

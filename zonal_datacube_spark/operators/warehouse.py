@@ -477,7 +477,7 @@ def q_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = as_of(0).unionByName(as_of(1)).unionByName(as_of(2))
-    return out.orderBy("version")
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -565,7 +565,7 @@ def _audit_and_publish(spark, cand: DataFrame, n_src: int, root: str) -> DataFra
         spark,
         [(c, int(o), bool(p)) for c, o, p in audits],
         "check_name string, observed bigint, passed boolean",
-    ).orderBy("check_name")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -636,7 +636,6 @@ def q_dq_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
             g6(F.sqrt(F.col("v")) / 100).alias("sigma"),
             g6(F.sqrt(F.col("max_dev_sq")) / 100).alias("max_day_dev"),
         )
-        .orderBy("event_type")
     )
 
 

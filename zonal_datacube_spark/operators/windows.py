@@ -345,14 +345,16 @@ _IGNORE_NULLS_TEMPLATE = """
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
                ), -1) AS second_purchase_cents
         FROM base
-        ORDER BY event_id
 """
 
 _IGNORE_NULLS_BODY = _IGNORE_NULLS_TEMPLATE.format(
     inner="", outer=" IGNORE NULLS"
 )
-_IGNORE_NULLS_BODY_DUCK = _IGNORE_NULLS_TEMPLATE.format(
-    inner=" IGNORE NULLS", outer=""
+# the oracle keeps its declared trailing ORDER BY; the comparison never
+# reads row order, so only the Spark body drops it
+_IGNORE_NULLS_BODY_DUCK = (
+    _IGNORE_NULLS_TEMPLATE.format(inner=" IGNORE NULLS", outer="")
+    + "        ORDER BY event_id\n"
 )
 
 

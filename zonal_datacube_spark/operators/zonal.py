@@ -89,7 +89,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("value"), 2).alias("max_value"),
             stddev.alias("stddev_value"),
         )
-        .orderBy("zone_id")
     )
 
 
@@ -107,7 +106,7 @@ def q_zonal_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("event_type") == c, F.lit(1))).alias(f"n_{c}")
         for c in cats
     ]
-    return joined.groupBy("zone_id").agg(*aggs).orderBy("zone_id")
+    return joined.groupBy("zone_id").agg(*aggs)
 
 
 def q_zonal_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -76,6 +76,19 @@ def partition_args(spec: str) -> list[str]:
     return parts
 
 
+def unobserved_sort(df: DataFrame) -> bool:
+    """True when ``df`` ends in an unlimited global sort: the root of the
+    analyzed plan, past any ``Project``/``SubqueryAlias``, is a ``Sort``
+    with ``global = true``. The driver hashes results order-insensitively,
+    so such a sort pays a range-partition sample job and a sort stage that
+    nothing reads. A sort feeding a limit, a window or a write sits below
+    that node and is not flagged; ``sortWithinPartitions`` is not global."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "SubqueryAlias"):
+        node = node.child()
+    return node.nodeName() == "Sort" and bool(getattr(node, "global")())
+
+
 def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     plan = formatted_plan(df)
     return {n: (n in plan) for n in needles}

@@ -59,58 +59,77 @@ _MODULES = (
 # staleness ceiling of the attested union rises every round. Keys not
 # listed sort after listed ones, alphabetically.
 KEY_ORDER = (
-    # --- oldest-attested: the last r04 cohort (12) ---
-    "q_set_symmetric_diff",
-    "q_sim_join",
-    "q_sort_keyset_pagination",
+    # --- plan changed: the 68 keys whose unread terminal sort was dropped,
+    # oldest-attested first (1 r04, 4 r05, 24 r07, 12 r08, 7 r09, 5 r10,
+    # 10 r12, 3 r13, 2 r14) ---
     "q_source_binary_files",
-    "q_text_tfidf",
-    "q_text_tokens",
-    "q_ts_diurnal_profile",
-    "q_ts_drawdown",
-    "q_ts_ewma",
-    "q_ts_moving_median",
-    "q_ts_peaks",
-    "q_window_salted",
-    # --- oldest-attested: the r05 cohort (37); after this window nothing
-    # in the registry is older than r07 ---
-    "q_agg_ols_multi",
-    "q_agg_skew_kurt",
-    "q_behavior_rfm",
-    "q_cohort_retention",
-    "q_dedup_embed",
-    "q_dedup_semantic",
-    "q_funnel_conversion",
-    "q_graph_pagerank",
-    "q_join_dpp",
-    "q_join_nearest_event",
-    "q_join_range_bucketed",
-    "q_merge_upsert",
-    "q_report_abc_class",
     "q_report_big_orders",
-    "q_report_customer_distribution",
     "q_report_dominant_suppliers",
-    "q_report_idle_balance",
     "q_report_important_stock",
     "q_report_late_shipment_priority",
-    "q_report_local_supplier_volume",
-    "q_report_ltv_deciles",
-    "q_report_top_supplier",
-    "q_report_waiting_suppliers",
-    "q_report_yoy_growth",
-    "q_scd2_build",
-    "q_sim_label_centroid",
-    "q_sim_lsh_ann",
-    "q_skyline_dominance",
-    "q_sort_limit_with_ties",
-    "q_source_csv_roundtrip",
-    "q_source_partitioned_pruning",
-    "q_text_prep_pipeline",
-    "q_ts_anomaly",
-    "q_ts_autocorr",
-    "q_ts_cusum",
-    "q_ts_sessionize",
-    "q_window_pareto",
+    "q_behavior_window_funnel",
+    "q_dq_control_chart",
+    "q_embed_pca_var",
+    "q_graph_kcore",
+    "q_media_decode_shards",
+    "q_privacy_generalization",
+    "q_privacy_rr_count",
+    "q_rag_chunk_dedup",
+    "q_sim_ann_recall_eval",
+    "q_sql_intersect_all",
+    "q_sql_named_window",
+    "q_stats_kendall",
+    "q_text_bm25",
+    "q_text_chunking",
+    "q_text_js_divergence",
+    "q_ts_acf_multi",
+    "q_ts_bollinger",
+    "q_ts_changepoint",
+    "q_ts_holt",
+    "q_ts_horizon_backtest",
+    "q_ts_seasonal_naive_eval",
+    "q_ts_stl_decompose",
+    "q_ts_theil_sen",
+    "q_window_ignore_nulls",
+    "q_behavior_stickiness",
+    "q_data_mixture_weights",
+    "q_embed_matryoshka_eval",
+    "q_geo_nearest_neighbor",
+    "q_scan_metadata_cols",
+    "q_sink_python_ds_write",
+    "q_sql_lateral_alias",
+    "q_sql_session_variable",
+    "q_sql_try_arithmetic",
+    "q_sql_udf",
+    "q_text_filter_funnel",
+    "q_tokenizer_fertility",
+    "q_report_order_priority",
+    "q_report_product_profit",
+    "q_stats_corr_matrix",
+    "q_stats_ttest",
+    "q_ts_locf_repair",
+    "q_ts_range_interval_window",
+    "q_ts_rolling_corr",
+    "q_agg_grouping_flags",
+    "q_agg_hll_rollup",
+    "q_report_pvm_decomposition",
+    "q_report_segment_migration",
+    "q_report_supplier_part_counts",
+    "q_agg_sketch_error_eval",
+    "q_data_curriculum_tokens",
+    "q_join_skew_split",
+    "q_sample_neyman",
+    "q_sim_ivfpq",
+    "q_sim_pq_ann",
+    "q_sink_write_audit_publish",
+    "q_text_bm25_wand",
+    "q_udaf_zonal_trimmed_mean",
+    "q_zonal_stats",
+    "q_dedup_clusters",
+    "q_media_decode_stats",
+    "q_stats_spearman",
+    "q_warehouse_time_travel",
+    "q_zonal_categorical",
 )
 
 

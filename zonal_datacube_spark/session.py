@@ -16,9 +16,12 @@ Config rationale (SURVEY.md §4.4):
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
+import threading
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -78,6 +81,41 @@ def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
+
+
+# Held by the thread with an open conf scope. A process has one
+# SparkContext, so this is the SparkContext's scope; re-entrant, so
+# scopes nest within a thread.
+_CONF_SCOPE = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the duration of the block, then
+    restore each key's previous value; a key that was unset before is
+    unset again. The conf is session-global, so every query planned
+    while the scope is open sees it: a thread entering a scope while
+    another thread holds one raises instead of leaking the first scope's
+    values into the second (q_warehouse_time_travel already runs a
+    second driver thread)."""
+    if not _CONF_SCOPE.acquire(blocking=False):
+        raise RuntimeError(
+            f"scoped_conf({sorted(confs)}): another thread holds an open "
+            "conf scope on this SparkContext"
+        )
+    prev: dict[str, str | None] = {}
+    try:
+        for k, v in confs.items():
+            prev[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        _CONF_SCOPE.release()
 
 
 def stop_spark() -> None:

@@ -46,8 +46,9 @@ _SESSION_CONFS = {
 # py4j round trip, and ensure_session_confs runs on EVERY table load
 # (r13, guide §1.2 per-task work: ~3 driver round trips × several loads
 # × 345 bench keys was pure fixed overhead). Nothing on a declared path
-# unsets these confs after pinning (the only mid-session conf the engine
-# touches is shuffle.partitions, not in this set).
+# unsets these confs after pinning: every mid-session conf change goes
+# through session.scoped_conf (shuffle partitions, AQE, no-data
+# micro-batches, the RocksDB state store), none of them in this set.
 _CONFS_PINNED: set[str] = set()
 
 

@@ -9,12 +9,11 @@ HDFS-backed state store — right for tests, wrong at scale:
   and checkpoint upload cost. These are plain public Spark confs; the
   provider ships with Spark 4 and runs in this container
   (tests/test_scale_config.py executes a windowed aggregate under it and
-  checks result equality vs the default provider).
+  checks result equality vs the default provider). Apply them for one
+  run with ``session.scoped_conf(spark, ROCKSDB_STATE_STORE_CONFS)``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import SparkSession
 
 ROCKSDB_STATE_STORE_CONFS: dict[str, str] = {
     # off-heap, SSD-spillable per-partition state
@@ -28,20 +27,3 @@ ROCKSDB_STATE_STORE_CONFS: dict[str, str] = {
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
 }
 
-
-def use_rocksdb_state_store(spark: SparkSession) -> dict[str, str | None]:
-    """Apply the RocksDB state-store confs; returns the previous values so
-    callers (tests) can restore them."""
-    previous: dict[str, str | None] = {}
-    for k, v in ROCKSDB_STATE_STORE_CONFS.items():
-        previous[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    return previous
-
-
-def restore_confs(spark: SparkSession, previous: dict[str, str | None]) -> None:
-    for k, v in previous.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
