@@ -113,3 +113,25 @@ def test_binary_files_digests_match_hashlib(spark):
         blob = open(path, "rb").read()
         assert r.length == len(blob)
         assert r.content_md5 == hashlib.md5(blob).hexdigest()
+
+
+def test_binary_files_reads_directory_layouts(spark, tmp_path):
+    import hashlib
+
+    from zonal_datacube_spark.operators.sources_ext import (
+        q_source_binary_files,
+    )
+
+    # two tables in the cluster layout: <table>.parquet/part-*.parquet
+    for name, n in (("a", 40), ("b", 70)):
+        spark.range(n).repartition(2).write.parquet(str(tmp_path / f"{name}.parquet"))
+    parts = {p.name: p for p in tmp_path.glob("*.parquet/part-*.parquet")}
+    assert len(parts) >= 3
+
+    rows = q_source_binary_files(spark, str(tmp_path)).collect()
+    assert len(rows) > 0
+    assert {r.file_name for r in rows} == set(parts)
+    for r in rows:
+        blob = parts[r.file_name].read_bytes()
+        assert r.length == len(blob)
+        assert r.content_md5 == hashlib.md5(blob).hexdigest()

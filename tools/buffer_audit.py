@@ -76,6 +76,18 @@ BOUNDED_GROUPS = {
         "collect_list((sub, code)) per vector: one element per PQ "
         "subspace (M=8, functions/pq.py:299)"
     ),
+    "q_zonal_polygon": (
+        "sort_array(collect_list(c)) per (zone, row): the ray crossings "
+        "of one polygon with one row, at most that zone's edge count -- "
+        "a vector-side size that does not grow with points "
+        "(geometry.py:points_in_polygons)"
+    ),
+    "q_zonal_polygon_categorical": (
+        "sort_array(collect_list(c)) per (zone, row): the ray crossings "
+        "of one polygon with one row, at most that zone's edge count -- "
+        "a vector-side size that does not grow with points "
+        "(geometry.py:points_in_polygons)"
+    ),
     "q_sim_ivfpq": (
         "collect_list((sub, code)) / ((pos, m)) per vector: one element "
         "per subspace (functions/pq.py:299, ivf_ann.py:33)"

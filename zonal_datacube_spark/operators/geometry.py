@@ -1,29 +1,45 @@
-"""True polygon zonal statistics — ray-casting containment, relationally.
+"""True polygon zonal statistics — Raptor scanline intervals, relationally.
 
 The reference's domain is zonal stats over real zone *polygons*; round 1
 stood in bbox containment because no geo stack (GEOS/shapely) exists in
-the container. This module closes that gap without one: even-odd
-ray casting is a per-(point, edge) predicate plus a parity count, which is
-plain relational algebra —
+the container. This module closes that gap without one, using the
+scanline decomposition of Raptor (raster ⋈ vector, VLDB 2019): the vector
+side is turned into x-intervals per (zone, row), and points join them by
+row equality plus an interval range —
 
 1. polygons decompose into an EDGES dimension table (zone_id, x1,y1,x2,y2)
    — tiny, broadcast;
-2. a point is inside iff an eastward ray crosses an ODD number of edges:
-   edge straddles the ray's y ((y1>py) <> (y2>py)) AND the intersection
-   lies east of the point (px < x1 + (x2-x1)·(py-y1)/(y2-y1));
-3. crossings count per (point, zone) via groupBy; parity filter; zonal
-   aggregate.
+2. for every distinct point row ``py``, each edge that straddles it
+   ((y1 > py) <> (y2 > py)) crosses the row at
+   c = x1 + (x2-x1)·(py-y1)/(y2-y1) — the even-odd ray-casting formula;
+3. per (zone, row) the crossings c₀ ≤ c₁ ≤ … ≤ cₙ₋₁ pair up into the
+   intervals [c₂ₖ, c₂ₖ₊₁), and a point is inside the zone iff its px lies
+   in one of them.
 
-No UDF, no HOF: every step is a broadcast join + codegen'd arithmetic +
-hash aggregate, so the 100 TB plan is the zonal-stats plan. Handles
-CONCAVE polygons (parity, not convex membership). Degeneracy policy:
-polygons are authored with .5-offset vertices and no horizontal edges, so
-fixture points (integer-grid y, arbitrary-double x) never land on a
-vertex/edge and the nullif-guarded division never divides by zero.
+Equivalence with ray casting: a point is inside iff an odd number of
+crossings lies east of it (px < c). With j = #{c ≤ px}, that count is
+n − j; a closed ring crosses every row an even number of times, so n − j
+is odd ⇔ j is odd ⇔ c_{j−1} ≤ px < c_j with j = 2k+1 ⇔ px ∈ [c₂ₖ, c₂ₖ₊₁).
+Ties follow from the same identity: px equal to a crossing counts as
+inside on ``lo`` and outside on ``hi``, exactly as ``px < c`` counts it.
 
-The DuckDB oracle runs the SAME algorithm from the same VALUES edge list —
-the whole pipeline is hash-verified, which a GEOS-backed implementation
-could never be in this container.
+Precondition: every ring is closed, so n is even per (zone, row). An odd
+count is an unclosed ring and raises; no crossing is ever dropped.
+
+The interval table holds at most zones × distinct rows × crossings/2
+rows, and crossings per (zone, row) never exceed the zone's edge count —
+a vector-side size that does not grow with the number of points. It is
+broadcast, so the fact side pays one hash probe on the row plus a range
+check per candidate interval instead of one predicate per edge, and no
+per-point aggregate or re-join. Every step is a broadcast join, codegen'd
+arithmetic or a small hash aggregate — no UDF.
+
+Degeneracy policy: polygons are authored with .5-offset vertices and no
+horizontal edges, so fixture points (integer-grid y, arbitrary-double x)
+never land on a vertex and the nullif-guarded division never divides by
+zero. The DuckDB oracles still ray-cast edge by edge from the same VALUES
+edge list, so parity checks the interval join against an independent
+algorithm.
 """
 
 from __future__ import annotations
@@ -70,32 +86,54 @@ def edges_df(spark: SparkSession) -> DataFrame:
     )
 
 
-_CROSSING = (
-    "((y1 > py) <> (y2 > py))"
-    " AND px < x1 + (x2 - x1) * (py - y1) / nullif(y2 - y1, 0.0D)"
+# per (zone_id, py): the sorted x where the zone's edges cross row py
+# (the ray-casting crossing formula), raising on an odd count
+_CROSSINGS = (
+    "sort_array(collect_list(x1 + (x2 - x1) * (py - y1) / nullif(y2 - y1, 0.0D)))"
+)
+_EVEN_CROSSINGS = (
+    f"CASE WHEN size({_CROSSINGS}) % 2 = 0 THEN {_CROSSINGS}"
+    " ELSE raise_error(format_string('points_in_polygons: zone %s crosses"
+    " row %s an odd number of times (unclosed ring)', zone_id, py)) END AS cs"
+)
+# consecutive crossings pair into the inside intervals [c2k, c2k+1)
+_PAIR_INTERVALS = (
+    "inline(transform(sequence(0, size(cs) div 2 - 1),"
+    " k -> named_struct('lo', cs[2 * k], 'hi', cs[2 * k + 1])))"
 )
 
 
 def points_in_polygons(points: DataFrame, edges: DataFrame) -> DataFrame:
     """(point columns…, zone_id) for every point strictly inside a polygon.
-    ``points`` needs (pid, px, py); broadcast the edge table and count ray
-    crossings per (point, zone) — odd parity = inside."""
-    crossings = (
-        points.crossJoin(F.broadcast(edges))
-        .filter(F.expr(_CROSSING))
-        .groupBy("pid", "zone_id")
-        .agg(F.count("*").alias("n_cross"))
-        .filter(F.col("n_cross") % 2 == 1)
-        .select("pid", "zone_id")
+
+    ``points`` needs (pid, px, py). The distinct rows ``py`` join the
+    broadcast edges that straddle them; each zone's crossing x on a row
+    are sorted and paired into intervals [c₂ₖ, c₂ₖ₊₁) — the even-odd rule,
+    since a closed ring crosses a row an even number of times and
+    px ∈ [c₂ₖ, c₂ₖ₊₁) ⇔ an odd number of crossings lie east of px. The
+    interval table (≤ zones × rows × edges/2 rows) is broadcast and the
+    points join it on ``py = row AND lo <= px < hi``. An odd crossing
+    count (an unclosed ring) raises instead of dropping a crossing. A
+    null px or py matches no zone. Expressions are SQL strings: each
+    Column built in Python is a JVM round trip, and this runs per call."""
+    intervals = (
+        points.select("py")
+        .distinct()
+        .join(F.broadcast(edges), F.expr("(y1 > py) <> (y2 > py)"))
+        .groupBy("zone_id", "py")
+        .agg(F.expr(_EVEN_CROSSINGS))
+        .selectExpr("zone_id", "py AS row", _PAIR_INTERVALS)
     )
-    return points.join(crossings, "pid")
+    return points.join(
+        F.broadcast(intervals), F.expr("py = row AND px >= lo AND px < hi")
+    ).select(*points.columns, "zone_id")
 
 
 def q_zonal_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-polygon count/sum/mean of event values under TRUE polygon
-    containment (concave-capable ray casting) — the reference's actual
-    zonal-statistics semantics, scan → broadcast edge join → parity →
-    partial+final aggregate."""
+    containment (concave-capable, even-odd) — the reference's actual
+    zonal-statistics semantics, scan → broadcast join on (row, interval)
+    → partial+final aggregate."""
     ev = load_table(spark, sf_dir, "events")
     pts = ev.select(
         F.col("event_id").alias("pid"),
@@ -122,7 +160,7 @@ def q_zonal_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zonal_polygon_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical zonal histogram under true polygon containment: per
     (polygon zone, event_type) counts — the classed-raster variant of
-    q_zonal_polygon, same broadcast-parity plan with a two-key aggregate."""
+    q_zonal_polygon, same row-interval join with a two-key aggregate."""
     ev = load_table(spark, sf_dir, "events")
     pts = ev.select(
         F.col("event_id").alias("pid"),

@@ -350,13 +350,16 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     door for multimodal corpora (images/audio/video land as binary
     columns with path/length/mtime metadata; operators/media.py picks up
     from exactly this shape). Globbed over the fixture's parquet files
-    as stand-in blobs: name, byte length, and md5 digest per file.
+    as stand-in blobs: name, byte length, and md5 digest per file. The
+    lookup is recursive, so a ``<table>.parquet/part-*.parquet``
+    directory layout yields its part files instead of nothing.
     Rows-only: DuckDB 1.0 cannot hash BLOBs (its BLOB→VARCHAR cast
     escapes bytes), so the digest parity pin lives in
     tests/test_sources_ext.py against hashlib instead."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
         .load(sf_dir)
         .select(
             F.element_at(F.split("path", "/"), -1).alias("file_name"),

@@ -59,6 +59,10 @@ _MODULES = (
 # staleness ceiling of the attested union rises every round. Keys not
 # listed sort after listed ones, alphabetically.
 KEY_ORDER = (
+    # --- plan changed: the polygon keys now join points to per-row
+    # scanline intervals instead of ray-casting every edge ---
+    "q_zonal_polygon",
+    "q_zonal_polygon_categorical",
     # --- plan changed: the 68 keys whose unread terminal sort was dropped,
     # oldest-attested first (1 r04, 4 r05, 24 r07, 12 r08, 7 r09, 5 r10,
     # 10 r12, 3 r13, 2 r14) ---
