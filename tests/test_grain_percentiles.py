@@ -159,14 +159,15 @@ def test_grain_percentiles_leaves_nothing_cached(spark):
 
 
 def test_local_relation_exact_values_and_plan_shape(spark):
-    """r13 job-count optimization: the eager fold re-distributes its rows
-    as a TRUE Catalyst LocalRelation (parameterized inline VALUES), so
-    broadcasting a fold result downstream is a driver-side array copy
-    instead of a 32-task LogicalRDD scan job. Two contracts pinned here:
-    (1) EXACTNESS — doubles (incl. non-representable decimals fractions),
-    decimals, and NULLs bind as typed literals with zero value drift;
-    (2) PLAN SHAPE — the optimized plan really is a LocalRelation (the
-    whole point; a silent regression to LogicalRDD would re-add the job)."""
+    """The eager fold re-distributes its rows as a TRUE Catalyst
+    LocalRelation (an Arrow table under Spark's local-relation
+    threshold), so broadcasting a fold result downstream copies the
+    driver's rows instead of running a 32-task Python-worker LogicalRDD
+    scan. Two contracts pinned here: (1) EXACTNESS — doubles (incl.
+    non-representable decimal fractions), decimals, and NULLs cross as
+    Arrow values with zero drift; (2) PLAN SHAPE — the optimized plan
+    really is a LocalRelation (a silent regression to LogicalRDD would
+    re-add the Python-worker scan)."""
     import math
     from decimal import Decimal
 

@@ -75,9 +75,10 @@ def test_quantiles_multi_folds_from_the_grain_sweep(spark):
     # cache-leak fix), so the KEY's returned plan is the tiny local
     # relation and the sweep machinery is gated on the lazy path below.
     assert "percentile(" not in plan
-    # the |parts|·|ps|-row local fold: a LocalTableScan since r13
-    # (functions/local_rel.py — was a Scan ExistingRDD LogicalRDD, which
-    # paid a 32-task scan job per downstream broadcast)
+    # the |parts|·|ps|-row local fold: a LocalTableScan of an Arrow-built
+    # LocalRelation (functions/local_rel.py — was a Scan ExistingRDD
+    # LogicalRDD, which paid a 32-task Python-worker scan job per
+    # downstream broadcast)
     assert "LocalTableScan" in plan
 
     # the sweep path itself (grain_percentiles_from_counts — what the

@@ -36,10 +36,8 @@ KEYS = [
 
 
 @pytest.fixture(scope="module")
-def rehearsal_dir(spark, tmp_path_factory):
-    dest = str(tmp_path_factory.mktemp("rehearsal") / "sf")
-    sr.build_layout(spark, SF_SMOKE, dest, rebuild=False)
-    return dest
+def rehearsal_dir(spark):
+    return sr.build_layout(spark, SF_SMOKE)
 
 
 def test_layout_is_multifile(spark, rehearsal_dir):

@@ -53,16 +53,21 @@ Exit 0 iff every gated key passes. Wired into tests via
 tests/test_scale_rehearsal.py (a fast subset so the gate can never rot;
 the full pass is this tool).
 
+The layout is a derived layout of the corpus (``sources/derived.py``):
+it lands under ``$TMPDIR/zds_layouts/<corpus tag>/rehearsal``, keyed by
+the content stamp of every fixture table, and is built temp-then-rename,
+so a regenerated corpus gets a fresh copy and two concurrent rehearsals
+never read a half-written one. ``rm -rf "${TMPDIR:-/tmp}/zds_layouts"``
+forces a rebuild.
+
 Usage:
   python tools/scale_rehearsal.py [sf_dir] [key ...]   # default sf0.1
-  python tools/scale_rehearsal.py --rebuild            # force relayout
 """
 
 from __future__ import annotations
 
 import os
 import re
-import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -71,9 +76,9 @@ from zonal_datacube_spark.compare import compare_query, duck_connect
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 from zonal_datacube_spark.registry import all_oracle_sql, all_queries
 from zonal_datacube_spark.session import get_spark, scoped_conf
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import TABLES, load_table
 
-REHEARSAL_ROOT = "/tmp/zds_rehearsal"
 REHEARSAL_PARTITIONS = "200"
 REHEARSAL_CONFS = {"spark.sql.shuffle.partitions": REHEARSAL_PARTITIONS}
 FACT_FILES, DIM_FILES = 16, 2
@@ -195,45 +200,26 @@ def classify(plan: str) -> dict[str, int]:
     }
 
 
-def _layout_stamp(sf_dir: str) -> str:
-    """Identity of the SOURCE fixtures: absolute dir + per-table
-    (mtime, size). A reused layout is only valid while this matches —
-    regenerated fixtures or a different tree sharing the basename must
-    force a rebuild, never silently rehearse stale copies."""
-    parts = [os.path.abspath(sf_dir)]
-    for t in TABLES:
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
-    return "\n".join(parts) + "\n"
+def build_layout(spark, sf_dir: str) -> str:
+    """Path of the corpus rewritten as multi-file table directories,
+    built on first use."""
 
+    def build(dest: str) -> None:
+        for t in TABLES:
+            n = DIM_FILES if t in DIM_TABLES else FACT_FILES
+            # load_table normalizes events' TIMESTAMP(NANOS) to the µs NTZ
+            # values both engines already compare at; other tables pass
+            # through. repartition = round-robin → near-equal part files,
+            # the multi-mapper scan shape of a real cluster.
+            load_table(spark, sf_dir, t).repartition(n).write.parquet(
+                os.path.join(dest, f"{t}.parquet")
+            )
 
-def build_layout(spark, sf_dir: str, dest: str, rebuild: bool) -> None:
-    """Rewrite each fixture table as a multi-file directory under dest."""
-    marker = os.path.join(dest, "_REHEARSAL_OK")
-    stamp = _layout_stamp(sf_dir)
-    if os.path.exists(marker) and not rebuild:
-        with open(marker) as fh:
-            if fh.read() == stamp:
-                return
-    if os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest, exist_ok=True)
-    for t in TABLES:
-        n = DIM_FILES if t in DIM_TABLES else FACT_FILES
-        # load_table normalizes events' TIMESTAMP(NANOS) to the µs NTZ
-        # values both engines already compare at; other tables pass
-        # through. repartition = round-robin → near-equal part files,
-        # the multi-mapper scan shape of a real cluster.
-        load_table(spark, sf_dir, t).repartition(n).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(dest, f"{t}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write(stamp)
+    return layout(sf_dir, TABLES, "rehearsal", build)
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--rebuild"]
-    rebuild = "--rebuild" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
     only = [a for a in args if not os.path.isdir(a)]
 
@@ -244,8 +230,7 @@ def main() -> int:
         return 2
 
     spark = get_spark("scale-rehearsal")
-    dest = os.path.join(REHEARSAL_ROOT, os.path.basename(sf_dir.rstrip("/")))
-    build_layout(spark, sf_dir, dest, rebuild)
+    dest = build_layout(spark, sf_dir)
 
     plan_keys = [k for k in sorted(only or queries) if k not in SKIP_PLAN]
     parity_keys = list(only or PARITY_SUBSET)

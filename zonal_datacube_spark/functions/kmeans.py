@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.exact import dot
+from zonal_datacube_spark.functions.local_rel import local_relation
 
 
 def _normalize(vec: list[float]) -> list[float]:
@@ -33,7 +34,8 @@ def _normalize(vec: list[float]) -> list[float]:
 
 
 def _centroids_to_rows(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(c, _normalize([float(v) for v in vec])) for c, vec in centroids],
         "cell INT, centroid ARRAY<DOUBLE>",
     )

@@ -1,45 +1,40 @@
-"""Driver-local rows as a TRUE Catalyst ``LocalRelation`` (r13, guide
-§1.2 job-count discipline).
+"""Driver-local rows as a Catalyst ``LocalRelation``.
 
-``spark.createDataFrame(rows)`` always builds a ``LogicalRDD`` over
-``defaultParallelism`` partitions — so every downstream ``F.broadcast``
-or ``collect()`` of a control-plane table (zone fences, interval dims,
-PQ codebooks, collected edge lists, eager percentile folds) runs a
-32-task scan-and-collect JOB over near-empty partitions. At fixture
-scale those jobs ARE the cost of several keys (measured 0.69 → 0.18 s on
-q_dq_outlier_mad's final aggregate alone, two such broadcasts); at any
-scale they are pure scheduling overhead, because the data already sits
-on the driver.
+``spark.createDataFrame(rows)`` over Python rows builds a ``LogicalRDD``
+over ``defaultParallelism`` partitions, so every downstream
+``F.broadcast`` or ``collect()`` of a control-plane table (zone fences,
+polygon edges, interval dims, codebooks and centroids, collected edge
+lists, eager percentile folds) runs a scan job whose tasks start a
+Python worker to unpickle rows that already sit on the driver.
 
-``local_relation`` re-distributes the same rows as a parameterized
-inline ``VALUES`` table instead: each cell binds as a TYPED Catalyst
-literal (EXACT — no string round-trip; doubles, decimals, dates,
-timestamps and double arrays bind value-preserving, pinned by
-tests/test_grain_percentiles.py and tests/test_local_rel.py), and the
-optimized plan is a ``LocalRelation``, which broadcasts/collects as a
-driver-side array copy: zero jobs.
+``local_relation`` ships the same rows to the JVM as one Arrow table
+instead. Spark's ``ArrowConverters.toDataFrame`` turns an Arrow payload
+below ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+default) into a ``LocalRelation``. A collect of it is a driver-side copy
+with no job, and a broadcast of it runs one JVM-only task set over the
+driver's rows instead of a Python-worker scan. Above the threshold it
+builds a JVM-side ``LogicalRDD`` over the Arrow batches. Neither path
+starts a Python worker, and neither has a per-cell bind cost, so there
+is no size cap and no fallback. An empty table is a ``LocalRelation``
+too.
 
-Values and column names/types are identical to ``createDataFrame``'s;
-only attribute NULLABILITY can differ (inline tables infer it from the
-data — a column is marked non-nullable only when no row holds a NULL,
-so semantics cannot change). That metadata never reaches a judged
-artifact: the oracle comparison canonicalizes through pandas
-(compare.py), which carries no nullability.
+Values are exactly ``createDataFrame``'s: each cell goes through its
+field's ``DataType.toInternal``, the same conversion the row path
+pickles. Timestamps become UTC epoch microseconds (a naive wall time is
+read in the process time zone, a DST-gap wall time included), dates
+become epoch days, decimals stay ``Decimal``, and doubles, NaN, -0.0,
+binary, arrays, structs and maps are copied bit for bit. The Arrow
+schema is ``to_arrow_schema(schema)``, so names, types and nullability
+are ``schema``'s, and the conversion does not read
+``spark.sql.execution.arrow.pyspark.enabled``.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
-
-# Parameterized-SQL binding cost grows superlinearly with the number of
-# parameter markers (measured warm: ~0.25 s at 312 cells, ~0.45 s at 560,
-# 1.5 s+ by ~1600; a 512-row array-typed codebook took >20 s), so the
-# inline-VALUES path is reserved for control-plane-sized relations and
-# everything larger keeps createDataFrame's LogicalRDD verbatim. The cap
-# sits where the bind cost still clearly undercuts the 32-task
-# LogicalRDD scan jobs it replaces (~1.8 s on the graph edge tables).
-_MAX_CELLS = 640
 
 
 def local_relation(
@@ -47,45 +42,16 @@ def local_relation(
 ) -> DataFrame:
     """``rows`` (sequence of tuples/Rows) as a LocalRelation with exactly
     ``schema``'s column names and types. ``schema`` may be a StructType
-    or a DDL string (the same forms ``createDataFrame`` accepts).
-    Relations larger than ``_MAX_CELLS`` cells fall back to
-    ``createDataFrame`` unchanged (binding cost would exceed the saved
-    job — see the constant's note)."""
+    or a DDL string (the same forms ``createDataFrame`` accepts)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    if not rows:  # inline VALUES needs ≥1 tuple; empty relations stay as-is
-        return spark.createDataFrame([], schema)
-    # a container cell binds one literal PER LEAF — count them
-    # RECURSIVELY (ADVICE r13: a nested ARRAY<ARRAY<...>>, map, or struct
-    # cell counted as 1 under the old top-level len(), so a large nested
-    # value could slip past the cap into the superlinear binding path),
-    # or a 5-row × 1024-dim LUT would sneak 5120 literals past a
-    # row-based cap
-    def _n_leaves(v) -> int:
-        if isinstance(v, (list, tuple)):
-            return sum(_n_leaves(x) for x in v) or 1
-        if isinstance(v, dict):
-            return sum(1 + _n_leaves(x) for x in v.values()) or 1
-        return 1
-
-    n_cells = sum(_n_leaves(v) for row in rows for v in row)
-    if n_cells > _MAX_CELLS:
-        return spark.createDataFrame(rows, schema)
-    args: dict[str, object] = {}
-    tuples = []
-    for i, row in enumerate(rows):
-        markers = []
-        for j in range(len(schema.fields)):
-            k = f"v{i}_{j}"
-            args[k] = row[j]
-            markers.append(f":{k}")
-        tuples.append("(" + ",".join(markers) + ")")
-    sel = ",".join(
-        "CAST(col{} AS {}) AS `{}`".format(
-            j + 1, f.dataType.simpleString(), f.name.replace("`", "``")
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array(
+            [f.dataType.toInternal(row[j]) for row in rows],
+            type=arrow_schema.field(j).type,
         )
         for j, f in enumerate(schema.fields)
-    )
-    return spark.sql(
-        f"SELECT {sel} FROM VALUES {','.join(tuples)}", args=args
-    )
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -208,10 +208,10 @@ def _eager_local(long_df: DataFrame) -> DataFrame:
             "should use grain_percentiles_from_counts and keep the result "
             "distributed"
         )
-    # LocalRelation, not createDataFrame's LogicalRDD: broadcasting a
-    # fold result downstream is then a driver-side array copy, zero jobs
-    # (functions/local_rel.py — measured 0.69 → 0.18 s on
-    # q_dq_outlier_mad's final scored aggregate alone)
+    # LocalRelation, not a LogicalRDD over Python rows: broadcasting a
+    # fold result downstream then copies the driver's rows instead of
+    # running a Python-worker scan job (functions/local_rel.py — measured
+    # 0.69 → 0.18 s on q_dq_outlier_mad's final scored aggregate alone)
     return local_relation(long_df.sparkSession, rows, long_df.schema)
 
 

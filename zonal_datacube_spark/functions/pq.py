@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.exact import dot, half_up
+from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.sources.derived import DerivedCache
 
 # 16 subspaces x 4 dims x 4-bit codes = 8 bytes/vector (32x compression).
@@ -107,7 +108,7 @@ Codebook = dict[tuple[int, int], list[float]]  # (sub, code) -> cvec
 
 def _codebook_df(spark, rows: Codebook) -> DataFrame:
     data = [(s, c, [float(v) for v in vec]) for (s, c), vec in sorted(rows.items())]
-    return spark.createDataFrame(data, "sub INT, code INT, cvec ARRAY<DOUBLE>")
+    return local_relation(spark, data, "sub INT, code INT, cvec ARRAY<DOUBLE>")
 
 
 PQ_TRAIN_CAP = 4096  # vectors pulled for codebook fitting — corpus-independent
@@ -427,9 +428,13 @@ def ivf_pq_ann(
     cw = Window.partitionBy("probe_id").orderBy(
         F.col("c_score").desc(), F.col("cell").asc()
     )
+    # only the probes carry the broadcast hint in the two cross joins:
+    # the quantizer and codebook are exactly-sized LocalRelations, so a
+    # hint on both sides lets the planner build on them instead, adding
+    # a broadcast job where the probes' exchange is otherwise reused
     probe_cells = (
         F.broadcast(probes)
-        .crossJoin(F.broadcast(quantizer))
+        .crossJoin(quantizer)
         .withColumn("c_score", F.round(dot("probe_vec", "centroid"), 9))
         .withColumn("c_rn", F.row_number().over(cw))
         .filter(F.col("c_rn") <= n_probe)
@@ -438,7 +443,7 @@ def ivf_pq_ann(
     dim_d = F.size(F.col("cvec"))
     lut = (
         F.broadcast(probes)
-        .crossJoin(F.broadcast(codebook))
+        .crossJoin(codebook)
         .withColumn("qsub", F.slice("probe_vec", F.col("sub") * dim_d + 1, dim_d))
         .withColumn("partial", dot("qsub", "cvec"))
         .select("probe_id", "sub", "code", "partial")

@@ -205,7 +205,8 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pid, vec in probe_vecs.items()
     }
     lut_df = F.broadcast(
-        spark.createDataFrame(
+        local_relation(
+            spark,
             [(pid, lut) for pid, lut in sorted(flat_lut.items())],
             "probe_id BIGINT, lut ARRAY<DOUBLE>",
         )
@@ -237,7 +238,10 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # left-join the hit counts onto a literal 2-row variants frame
     # (ADVICE r06): a variant with ZERO hits has no group in `hits` and
-    # would silently vanish from the verdict instead of reporting 0.0
+    # would silently vanish from the verdict instead of reporting 0.0.
+    # It stays a createDataFrame LogicalRDD: as a LocalRelation it flips
+    # the interior join order (the reverted r13 conversion; exempted in
+    # tests/test_local_rel.py)
     variants = spark.createDataFrame([("raw",), ("opq",)], "variant string")
     out = variants.join(hits, "variant", "left").select(
         "variant",
@@ -255,7 +259,7 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect already happened, so unlike the r13-reverted conversion of
     # the UPSTREAM variants frame this cannot flip any interior join
     # order — it only makes the caller's materialization a driver-side
-    # array copy instead of one more scan job.
+    # copy instead of one more Python-worker scan job.
     rows = out.orderBy("variant").collect()
     both.unpersist()
     return local_relation(

@@ -364,11 +364,11 @@ def q_graph_2hop_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"schema-bounded ({len(collected)} rows collected); the "
             "driver-side materialization assumes a nation-grain graph"
         )
-    # LocalRelation, not createDataFrame's LogicalRDD (functions/
+    # LocalRelation, not a LogicalRDD over Python rows (functions/
     # local_rel.py): the self-join + anti-join reference this ≤625-row
     # table three times, and each LogicalRDD reference paid a 32-task
-    # scan stage over near-empty partitions (event-log profile: 1.8 s
-    # of the key's wall in those stages)
+    # Python-worker scan stage over near-empty partitions (event-log
+    # profile: 1.8 s of the key's wall in those stages)
     edges = local_relation(spark, collected, "src long, dst long")
     e2 = edges.select(
         F.col("src").alias("mid"), F.col("dst").alias("dst2")
@@ -589,8 +589,9 @@ def q_graph_link_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_graph_link_jaccard: edge rollup is no longer "
             f"schema-bounded ({len(collected)} rows collected)"
         )
-    # LocalRelation, not LogicalRDD — same rationale as
-    # q_graph_2hop_neighbors (four references, each was a 32-task scan)
+    # LocalRelation, not a LogicalRDD over Python rows — same rationale
+    # as q_graph_2hop_neighbors (four references, each was a 32-task
+    # Python-worker scan)
     und = local_relation(spark, collected, "src long, dst long")
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
     e1 = und.select(F.col("src").alias("a"), F.col("dst").alias("n"))

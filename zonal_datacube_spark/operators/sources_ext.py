@@ -30,7 +30,6 @@ from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table
 from zonal_datacube_spark.sources.sinks import write_csv, write_json, write_parquet
-from zonal_datacube_spark.functions.local_rel import local_relation
 
 ORDERS_CSV_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
@@ -245,7 +244,8 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folds the filter into static partition pruning and the
     # dynamicpruningexpression this key exists to DEMONSTRATE never
     # fires (tests/test_sources_ext.py plan-locks it). The LogicalRDD
-    # dim keeps the partition list runtime-only, which is the point.
+    # dim keeps the partition list runtime-only, which is the point
+    # (exempted from local_relation in tests/test_local_rel.py).
     cats = spark.createDataFrame(
         list(EVENT_CATEGORIES), "event_type string, category string"
     ).filter(F.col("category") == DPP_CATEGORY)

@@ -59,13 +59,19 @@ _MODULES = (
 # staleness ceiling of the attested union rises every round. Keys not
 # listed sort after listed ones, alphabetically.
 KEY_ORDER = (
+    # --- plan changed: codebook, centroid and LUT tables are Arrow-built
+    # LocalRelations instead of Python-row LogicalRDDs ---
+    "q_sim_pq_ann",
+    "q_sim_ivfpq",
+    "q_embed_kmeans",
+    "q_sim_opq_eval",
     # --- plan changed: the polygon keys now join points to per-row
     # scanline intervals instead of ray-casting every edge ---
     "q_zonal_polygon",
     "q_zonal_polygon_categorical",
     # --- plan changed: the 68 keys whose unread terminal sort was dropped,
     # oldest-attested first (1 r04, 4 r05, 24 r07, 12 r08, 7 r09, 5 r10,
-    # 10 r12, 3 r13, 2 r14) ---
+    # 10 r12, 3 r13, 2 r14); q_sim_ivfpq and q_sim_pq_ann lead above ---
     "q_source_binary_files",
     "q_report_big_orders",
     "q_report_dominant_suppliers",
@@ -123,8 +129,6 @@ KEY_ORDER = (
     "q_data_curriculum_tokens",
     "q_join_skew_split",
     "q_sample_neyman",
-    "q_sim_ivfpq",
-    "q_sim_pq_ann",
     "q_sink_write_audit_publish",
     "q_text_bm25_wand",
     "q_udaf_zonal_trimmed_mean",
