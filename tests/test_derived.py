@@ -206,6 +206,11 @@ def _package_modules():
             yield rel, path
 
 
+def _tool_modules():
+    for path in sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))):
+        yield os.path.relpath(path, REPO), path
+
+
 def _module_level_mappings(tree: ast.Module):
     for node in tree.body:
         if isinstance(node, ast.Assign):
@@ -239,4 +244,13 @@ def test_only_the_derived_module_decides_derived_state():
         for name in _module_level_mappings(ast.parse(src)):
             if (rel, name) not in _MAPPING_ALLOWED:
                 offences.append(f"{rel}: module-level mapping {name}")
+    for rel, path in _tool_modules():
+        src = open(path).read()
+        if "'_SUCCESS'" in src or '"_SUCCESS"' in src:
+            offences.append(f"{rel}: _SUCCESS completeness check")
+        if "gettempdir(" in src:
+            offences.append(f"{rel}: gettempdir() cache root")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Constant) and str(node.value).startswith("/tmp"):
+                offences.append(f"{rel}:{node.lineno}: literal /tmp root")
     assert offences == []

@@ -15,7 +15,7 @@ from zonal_datacube_spark.functions.multimodal import (
 )
 from zonal_datacube_spark.functions.range_bucket import bucketed_range_join
 from zonal_datacube_spark.functions.udfs import per_group_zscore, zonal_trimmed_mean
-from zonal_datacube_spark.operators.zonal import zones_df
+from zonal_datacube_spark.operators.zonal import assign_zones, zones_df
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -49,10 +49,7 @@ def test_relational_keys_match_pandas_kernels(spark):
     )
 
     cells = load_table(spark, SF_SMOKE, "events")
-    zones = F.broadcast(zones_df(spark))
-    assigned = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi)
-    ).select("zone_id", "value")
+    assigned = assign_zones(cells).select("zone_id", "value")
     pandas_tm = {
         r.zone_id: r.trimmed_mean for r in zonal_trimmed_mean(assigned).collect()
     }
@@ -110,18 +107,25 @@ def test_resize_is_stubbed():
 
 def test_bucketed_range_join_equivalent(spark):
     """The §4.3 rewrite returns exactly the rows of the naive NLJ range
-    join — including an interval whose hi sits on a bucket edge."""
+    join (``zonal.assign_zones``) — including an interval whose hi sits
+    on a bucket edge. On the band edges ``lo`` is inside and ``hi`` is
+    not; a value past the last ``hi``, below the first ``lo``, or NULL
+    matches no zone."""
     ev = load_table(spark, SF_SMOKE, "events")
-    zones = zones_df(spark)
-    naive = (
-        ev.join(zones, (ev.value >= zones.lo) & (ev.value < zones.hi))
-        .select("event_id", "zone_id")
-        .collect()
+    edges = spark.createDataFrame(
+        [(1, 0.0), (2, 24.99), (3, 25.0), (4, 150.0), (5, 349.99)]
+        + [(6, 350.0), (7, -0.01), (8, None)],
+        "event_id BIGINT, value DOUBLE",
     )
-    rewritten = (
-        bucketed_range_join(ev, zones, "value", width=25.0)
-        .select("event_id", "zone_id")
-        .collect()
-    )
-    assert sorted(map(tuple, naive)) == sorted(map(tuple, rewritten))
-    assert len(naive) > 0
+    got = {}
+    for name, cells in (("events", ev), ("edges", edges)):
+        naive = assign_zones(cells).select("event_id", "zone_id").collect()
+        rewritten = (
+            bucketed_range_join(cells, zones_df(spark), "value", width=25.0)
+            .select("event_id", "zone_id")
+            .collect()
+        )
+        got[name] = sorted(map(tuple, naive))
+        assert got[name] == sorted(map(tuple, rewritten))
+    assert len(got["events"]) > 0
+    assert got["edges"] == [(1, 0), (2, 0), (3, 1), (4, 5), (5, 6)]

@@ -14,6 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from zonal_datacube_spark.sources import derived
 from zonal_datacube_spark.sources.loader import load_table
 
 TOOL = os.path.join(
@@ -28,9 +29,11 @@ spec.loader.exec_module(sp4)
 N = 2
 
 
-def test_sf1x_synthesis_properties(spark, tmp_path):
-    dest = str(tmp_path / "sfx")
-    sp4.build_sf1x(spark, rebuild=True, base_sf=SF_SMOKE, dest=dest, n_copies=N)
+def test_sf1x_synthesis_properties(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(derived, "LAYOUT_ROOT", str(tmp_path))
+    dest = sp4.build_sf1x(spark, base_sf=SF_SMOKE, n_copies=N)
+    assert dest.startswith(str(tmp_path))
+    assert sp4.build_sf1x(spark, base_sf=SF_SMOKE, n_copies=N) == dest
 
     base_o = load_table(spark, SF_SMOKE, "orders")
     base_l = load_table(spark, SF_SMOKE, "lineitem")

@@ -57,8 +57,8 @@ The layout is a derived layout of the corpus (``sources/derived.py``):
 it lands under ``$TMPDIR/zds_layouts/<corpus tag>/rehearsal``, keyed by
 the content stamp of every fixture table, and is built temp-then-rename,
 so a regenerated corpus gets a fresh copy and two concurrent rehearsals
-never read a half-written one. ``rm -rf "${TMPDIR:-/tmp}/zds_layouts"``
-forces a rebuild.
+never read a half-written one. Deleting ``zds_layouts`` under the temp
+root forces a rebuild.
 
 Usage:
   python tools/scale_rehearsal.py [sf_dir] [key ...]   # default sf0.1

@@ -41,8 +41,13 @@ t(sf1x)/t(sf0.1) divided by grain growth must stay ≤ ~2× — the sweep's
 cost is its grain, so a flat normalized ratio IS the asymptote argument
 even where the grain itself still grows.
 
+The synthetic corpora are derived layouts of the base corpus
+(``sources/derived.py``): each lands under
+``$TMPDIR/zds_layouts/<corpus tag>/<name>``, is built once, and is
+rebuilt when the base corpus changes.
+
 Writes SCALING4.json + SCALING4.md. Usage:
-  python tools/scaling_point4.py [--rebuild] [key ...]
+  python tools/scaling_point4.py [--saturation-only] [key ...]
 """
 
 from __future__ import annotations
@@ -57,12 +62,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.exact import cents
 from zonal_datacube_spark.registry import all_queries
 from zonal_datacube_spark.session import get_spark
+from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import TABLES, load_table
 
 BASE_SF = "/root/testdata/sf0.1"
-DEST = "/tmp/zds_sf1x"
 N_COPIES = 10
 ID_OFF = 1_000_000_000
 N_RUNS = 3
@@ -98,9 +104,7 @@ GRAINS = {
     ),
     "events (type, value cents)": (
         "events",
-        lambda df: df.select(
-            "event_type", F.floor(F.col("value") * 100 + 0.5).alias("vc")
-        ),
+        lambda df: df.select("event_type", cents(F.col("value")).alias("vc")),
     ),
     "documents (token count)": (
         "documents",
@@ -178,74 +182,61 @@ KEY_GRAIN = {
 }
 
 
-def build_sf1x(
+def fan_out(
     spark,
-    rebuild: bool,
-    base_sf: str = BASE_SF,
-    dest: str = DEST,
-    n_copies: int = N_COPIES,
+    base_sf: str,
+    dest: str,
+    n_copies: int,
+    repls: dict[str, dict[str, F.Column]],
 ) -> None:
-    marker = os.path.join(dest, "_SF1X_OK")
-    # v2 layout (r12): embeddings and part fan out too, so the
-    # iterative/join-heavy class measures a genuinely 10x corpus — a v1
-    # marker (or any mismatch) forces a rebuild
-    stamp = f"v2 {base_sf} x{n_copies}\n"
-    if os.path.exists(marker) and not rebuild:
-        with open(marker) as fh:
-            if fh.read() == stamp:
-                return
-    if os.path.isdir(dest):
-        shutil.rmtree(dest)
+    """Write each table named in ``repls`` ``n_copies``x to ``dest``, its
+    columns replaced per copy by expressions over the copy index ``_cp``;
+    copy every other table verbatim."""
     os.makedirs(dest)
-    cp = F.col("_cp")
-
-    def fan(table: str, repl: dict[str, F.Column]):
-        df = load_table(spark, base_sf, table)
-        wide = df.crossJoin(
-            spark.range(n_copies).select(F.col("id").alias("_cp"))
-        )
-        cols = [
-            (repl[c] if c in repl else F.col(c)).alias(c) for c in df.columns
-        ]
-        wide.select(*cols).repartition(16).write.mode("overwrite").parquet(
-            os.path.join(dest, f"{table}.parquet")
-        )
-
-    fan(
-        "orders",
-        {
-            "o_orderkey": F.col("o_orderkey") + cp * ID_OFF,
-            "o_totalprice": F.col("o_totalprice") + cp * F.lit(0.01),
-        },
-    )
-    fan(
-        "lineitem",
-        {
-            "l_orderkey": F.col("l_orderkey") + cp * ID_OFF,
-            "l_extendedprice": F.col("l_extendedprice") + cp * F.lit(0.01),
-        },
-    )
-    fan(
-        "events",
-        {
-            "event_id": F.col("event_id") + cp * ID_OFF,
-            "value": F.col("value") + cp * F.lit(0.01),
-        },
-    )
-    fan("documents", {"doc_id": F.col("doc_id") + cp * ID_OFF})
-    # vectors and part rows duplicate VERBATIM under fresh keys — the
-    # duplicate-heavy corpus every real 10x ingest carries (exact twins
-    # are what dedup/LSH tiers exist to absorb; jitter would dodge the
-    # stress instead of measuring it)
-    fan("embeddings", {"vec_id": F.col("vec_id") + cp * ID_OFF})
-    fan("part", {"p_partkey": F.col("p_partkey") + cp * ID_OFF})
-    for t in TABLES:
-        if t in ("orders", "lineitem", "events", "documents", "embeddings", "part"):
+    copies = spark.range(n_copies).select(F.col("id").alias("_cp"))
+    for table in TABLES:
+        out = os.path.join(dest, f"{table}.parquet")
+        if table not in repls:
+            shutil.copyfile(os.path.join(base_sf, f"{table}.parquet"), out)
             continue
-        src = os.path.join(base_sf, f"{t}.parquet")
-        shutil.copyfile(src, os.path.join(dest, f"{t}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write(stamp)
+        df = load_table(spark, base_sf, table)
+        cols = [repls[table].get(c, F.col(c)).alias(c) for c in df.columns]
+        df.crossJoin(copies).select(*cols).repartition(16).write.parquet(out)
+
+
+def build_sf1x(spark, base_sf: str = BASE_SF, n_copies: int = N_COPIES) -> str:
+    """Path of the ``n_copies``x corpus, built on first use."""
+
+    def build(dest: str) -> None:
+        cp = F.col("_cp")
+        rekey = lambda c: F.col(c) + cp * ID_OFF  # noqa: E731
+        jitter = lambda c: F.col(c) + cp * F.lit(0.01)  # noqa: E731
+        fan_out(
+            spark,
+            base_sf,
+            dest,
+            n_copies,
+            {
+                "orders": {
+                    "o_orderkey": rekey("o_orderkey"),
+                    "o_totalprice": jitter("o_totalprice"),
+                },
+                "lineitem": {
+                    "l_orderkey": rekey("l_orderkey"),
+                    "l_extendedprice": jitter("l_extendedprice"),
+                },
+                "events": {"event_id": rekey("event_id"), "value": jitter("value")},
+                "documents": {"doc_id": rekey("doc_id")},
+                # vectors and part rows duplicate VERBATIM under fresh keys —
+                # the duplicate-heavy corpus every real 10x ingest carries
+                # (exact twins are what dedup/LSH tiers exist to absorb;
+                # jitter would dodge the stress instead of measuring it)
+                "embeddings": {"vec_id": rekey("vec_id")},
+                "part": {"p_partkey": rekey("p_partkey")},
+            },
+        )
+
+    return layout(base_sf, TABLES, f"sf1x-x{n_copies}", build)
 
 
 # ---- saturation bend (r13 — VERDICT r12 next-round #4) ----------------
@@ -261,8 +252,6 @@ def build_sf1x(
 # value-grain cells counted at each, and the grain-dominated keys timed
 # at both points. Done-bar: grain growth < 2x at 10x rows with the
 # wall tracking the grain, not the row count.
-SAT_DEST_1 = "/tmp/zds_sat1"
-SAT_DEST_10 = "/tmp/zds_sat10"
 SAT_CAP_LI = 60_000  # lineitem price cents wrap into [0, 600.00)
 SAT_CAP_ORD = 20_000  # orders totalprice cents wrap into [0, 200.00)
 SAT_KEYS = {
@@ -273,74 +262,51 @@ SAT_KEYS = {
 }
 
 
-def build_saturated(spark, dest: str, n_copies: int, rebuild: bool) -> None:
-    """Fan lineitem + orders ``n_copies``x with ids re-keyed and value
-    cents wrapped into the capped grids (a distinct prime stride per
-    copy mimics fresh draws from the bounded domain); every other table
-    copies verbatim — the measured keys read only lineitem/orders."""
-    marker = os.path.join(dest, "_SAT_OK")
-    stamp = f"v1 {BASE_SF} x{n_copies} li{SAT_CAP_LI} ord{SAT_CAP_ORD}\n"
-    if os.path.exists(marker) and not rebuild:
-        with open(marker) as fh:
-            if fh.read() == stamp:
-                return
-    if os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest)
-    cp = F.col("_cp")
+def build_saturated(spark, n_copies: int) -> str:
+    """Path of the capped corpus: lineitem + orders fanned ``n_copies``x
+    with ids re-keyed and value cents wrapped into the capped grids (a
+    distinct prime stride per copy mimics fresh draws from the bounded
+    domain); every other table copies verbatim — the measured keys read
+    only lineitem/orders. Built on first use."""
 
-    def wrap(col: str, cap: int) -> F.Column:
-        cents = F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-        return (
-            F.pmod(cents + cp * F.lit(9973), F.lit(cap)).cast("double") / 100.0
+    def build(dest: str) -> None:
+        cp = F.col("_cp")
+
+        def wrap(col: str, cap: int) -> F.Column:
+            return (
+                F.pmod(cents(F.col(col)) + cp * F.lit(9973), F.lit(cap)).cast("double")
+                / 100.0
+            )
+
+        fan_out(
+            spark,
+            BASE_SF,
+            dest,
+            n_copies,
+            {
+                "lineitem": {
+                    "l_orderkey": F.col("l_orderkey") + cp * ID_OFF,
+                    "l_extendedprice": wrap("l_extendedprice", SAT_CAP_LI),
+                },
+                "orders": {
+                    "o_orderkey": F.col("o_orderkey") + cp * ID_OFF,
+                    "o_totalprice": wrap("o_totalprice", SAT_CAP_ORD),
+                },
+            },
         )
 
-    def fan(table: str, repl: dict[str, F.Column]):
-        df = load_table(spark, BASE_SF, table)
-        wide = df.crossJoin(
-            spark.range(n_copies).select(F.col("id").alias("_cp"))
-        )
-        cols = [
-            (repl[c] if c in repl else F.col(c)).alias(c) for c in df.columns
-        ]
-        wide.select(*cols).repartition(16).write.mode("overwrite").parquet(
-            os.path.join(dest, f"{table}.parquet")
-        )
-
-    fan(
-        "lineitem",
-        {
-            "l_orderkey": F.col("l_orderkey") + cp * ID_OFF,
-            "l_extendedprice": wrap("l_extendedprice", SAT_CAP_LI),
-        },
-    )
-    fan(
-        "orders",
-        {
-            "o_orderkey": F.col("o_orderkey") + cp * ID_OFF,
-            "o_totalprice": wrap("o_totalprice", SAT_CAP_ORD),
-        },
-    )
-    for t in TABLES:
-        if t in ("lineitem", "orders"):
-            continue
-        shutil.copyfile(
-            os.path.join(BASE_SF, f"{t}.parquet"),
-            os.path.join(dest, f"{t}.parquet"),
-        )
-    with open(marker, "w") as fh:
-        fh.write(stamp)
+    name = f"sat-x{n_copies}-li{SAT_CAP_LI}-ord{SAT_CAP_ORD}"
+    return layout(BASE_SF, TABLES, name, build)
 
 
-def measure_saturation(spark, queries, rebuild: bool) -> dict:
-    build_saturated(spark, SAT_DEST_1, 1, rebuild)
-    build_saturated(spark, SAT_DEST_10, N_COPIES, rebuild)
+def measure_saturation(spark, queries) -> dict:
+    sat = {"sat1": build_saturated(spark, 1), "sat10": build_saturated(spark, N_COPIES)}
     out: dict = {"grains": {}, "results": {}}
     for gname, (table, proj) in GRAINS.items():
         if gname not in set(SAT_KEYS.values()):
             continue
-        g1 = proj(load_table(spark, SAT_DEST_1, table)).distinct().count()
-        g10 = proj(load_table(spark, SAT_DEST_10, table)).distinct().count()
+        g1 = proj(load_table(spark, sat["sat1"], table)).distinct().count()
+        g10 = proj(load_table(spark, sat["sat10"], table)).distinct().count()
         out["grains"][gname] = {
             "sat1": g1,
             "sat10": g10,
@@ -348,7 +314,7 @@ def measure_saturation(spark, queries, rebuild: bool) -> dict:
         }
     for k, gname in SAT_KEYS.items():
         times = {}
-        for label, dest in (("sat1", SAT_DEST_1), ("sat10", SAT_DEST_10)):
+        for label, dest in sat.items():
             queries[k](spark, dest).count()  # warm
             runs = []
             for _ in range(N_RUNS):
@@ -375,16 +341,15 @@ def measure_saturation(spark, queries, rebuild: bool) -> dict:
 
 
 def main() -> int:
-    rebuild = "--rebuild" in sys.argv[1:]
     if "--saturation-only" in sys.argv[1:]:
         # debug mode while iterating on the capped fan: measures and
         # prints the saturation section, writes NO artifacts (same
         # no-clobber rule as key subsets)
         spark = get_spark("zds-scaling4")
-        sat = measure_saturation(spark, all_queries(), rebuild)
+        sat = measure_saturation(spark, all_queries())
         print(json.dumps(sat))
         return 0
-    only = [a for a in sys.argv[1:] if a != "--rebuild"]
+    only = sys.argv[1:]
     queries = all_queries()
     # validate BEFORE the expensive corpus build: a key must exist, be in
     # one of the two measured classes (grain-bounded sweep, with a grain
@@ -416,22 +381,22 @@ def main() -> int:
         return 2
 
     spark = get_spark("zds-scaling4")
-    build_sf1x(spark, rebuild)
+    dest = build_sf1x(spark)
 
     grains: dict[str, dict[str, int]] = {}
     for gname, (table, proj) in GRAINS.items():
         grains[gname] = {
             "sf0.1": proj(load_table(spark, BASE_SF, table)).distinct().count(),
-            "sf1x": proj(load_table(spark, DEST, table)).distinct().count(),
+            "sf1x": proj(load_table(spark, dest, table)).distinct().count(),
         }
 
     results: dict[str, dict[str, float]] = {}
     for k in keys:
-        queries[k](spark, DEST).count()  # warm
+        queries[k](spark, dest).count()  # warm
         times = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
-            queries[k](spark, DEST).count()
+            queries[k](spark, dest).count()
             times.append(time.perf_counter() - t0)
         times.sort()
         t1x = round(times[len(times) // 2], 3)
@@ -454,11 +419,11 @@ def main() -> int:
     iter_results: dict[str, dict] = {}
     for k in iter_keys:
         rows01 = queries[k](spark, BASE_SF).count()
-        rows1x = queries[k](spark, DEST).count()  # warm
+        rows1x = queries[k](spark, dest).count()  # warm
         times = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
-            queries[k](spark, DEST).count()
+            queries[k](spark, dest).count()
             times.append(time.perf_counter() - t0)
         times.sort()
         t1x = round(times[len(times) // 2], 3)
@@ -486,7 +451,7 @@ def main() -> int:
                           "subset": True}))
         return 0
 
-    saturation = measure_saturation(spark, queries, rebuild)
+    saturation = measure_saturation(spark, queries)
 
     with open("SCALING4.json", "w") as f:
         json.dump(

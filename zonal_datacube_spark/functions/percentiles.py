@@ -152,38 +152,19 @@ def grain_percentiles(
         counts.unpersist()
 
 
-def cached_grain_percentiles(
-    grain: DataFrame,
-    part_cols: Sequence[str],
-    val_col: str,
-    ps: Sequence[float],
-    *,
-    cnt_col: str = "_gc_c",
-    boundaries: str = "width",
-) -> DataFrame:
-    """``grain_percentiles`` over a SHARED pre-persisted grain (the
-    functions/grain_cache.py entries) — same eager |parts|·|ps| local
-    fold, but the grain's persist lifecycle belongs to the cache, so
-    nothing is unpersisted here and consecutive suite keys reuse one
-    fact-table scan between them (VERDICT r11 next-round #2)."""
-    return _eager_local(
-        grain_percentiles_from_counts(
-            grain, part_cols, val_col, cnt_col, ps, boundaries=boundaries
-        )
-    )
-
-
 def cached_swept_percentiles(
     swept: DataFrame,
     part_cols: Sequence[str],
     val_col: str,
     ps: Sequence[float],
 ) -> DataFrame:
-    """``cached_grain_percentiles`` over a SHARED pre-SWEPT grain
-    (functions/grain_cache.table_swept_grain): the per-key work is one
-    filter + tiny aggregate + the same eager |parts|·|ps| local fold —
-    the prefix sweep itself ran once per axis at cache fill (r13;
-    guide §2.4). Identical values to the per-key sweep path."""
+    """``grain_percentiles`` over a SHARED pre-SWEPT grain
+    (functions/grain_cache.table_swept_grain), whose persist lifecycle
+    belongs to the cache: the per-key work is one filter + tiny
+    aggregate + the same eager |parts|·|ps| local fold — the prefix
+    sweep itself ran once per axis at cache fill, so consecutive keys
+    share one fact-table scan. Identical values to the per-key sweep
+    path, and nothing is unpersisted here."""
     return _eager_local(
         percentiles_from_swept(swept, part_cols, val_col, ps)
     )

@@ -356,7 +356,7 @@ def q_behavior_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell SUM, not avg: monetary sits on the 1e-2 decimal grid, so the
     # sum rounds exactly at 2dp on both engines — an avg divides by the
     # cell count and can land exactly on a half-cent midpoint, where
-    # Spark (HALF_UP) and DuckDB (half-to-even) disagree (hit at sf0.001)
+    # Spark and DuckDB round differently (functions/exact.py; hit at sf0.001)
     return scored.groupBy("r_score", "f_score", "m_score").agg(
         F.count("*").alias("n_customers"),
         F.round(F.sum("monetary"), 2).alias("cell_monetary"),

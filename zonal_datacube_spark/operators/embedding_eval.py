@@ -20,7 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import G6_SQL, dot, g6, half_up, micro_units
+from zonal_datacube_spark.functions.exact import (
+    G6_SQL,
+    dot,
+    g6,
+    half_up,
+    micro_units,
+    wide,
+)
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.operators.similarity import (
     _BUCKET_SQL,
@@ -390,7 +397,7 @@ def q_embed_pca_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         emb.mapInPandas(gram_partials, schema="i long, j long, v long")
         .groupBy("i", "j")
-        .agg(F.sum(F.col("v").cast("decimal(38,0)")).alias("v"))
+        .agg(F.sum(wide(F.col("v"))).alias("v"))
     )
     rows = cells.collect()  # ≤ d(d+1)/2 + d + 1 rows — bounded by schema
     gram = np.zeros((d, d))

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import micro_units
+from zonal_datacube_spark.functions.exact import micro_mean, micro_units, wide
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -142,18 +142,11 @@ def q_zonal_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     inside = points_in_polygons(pts, edges_df(spark))
-    # 6dp mean folds on the exact 1e-6 grid (q_zonal_stats r11
-    # discipline — order-independent integer sums, one trailing division)
     v6 = micro_units(F.col("value"))
     return inside.withColumn("_v6", v6).groupBy("zone_id").agg(
         F.count("*").alias("n_points"),
         F.round(F.sum("value"), 2).alias("sum_value"),
-        F.round(
-            F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-            / F.count("*")
-            / 1000000,
-            6,
-        ).alias("mean_value"),
+        micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias("mean_value"),
     )
 
 

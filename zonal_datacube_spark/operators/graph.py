@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from zonal_datacube_spark.functions.exact import G6_SQL, g6
+from zonal_datacube_spark.functions.exact import G6_SQL, g6, wide
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
 from zonal_datacube_spark.sources.loader import load_table
@@ -415,20 +415,20 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     outw = edges.groupBy("src").agg(F.sum("w").alias("x"))
     inw = edges.groupBy("dst").agg(F.sum("w").alias("y"))
     e = edges.join(F.broadcast(outw), "src").join(F.broadcast(inw), "dst")
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    w, x, y = (wide(F.col(c)) for c in ("w", "x", "y"))
     m = e.agg(
         F.count("*").alias("n_edges"),
         F.sum("w").alias("w_tot"),
-        F.sum(dec("w") * dec("x")).alias("wsx"),
-        F.sum(dec("w") * dec("y")).alias("wsy"),
-        F.sum(dec("w") * dec("x") * dec("x")).alias("wsxx"),
-        F.sum(dec("w") * dec("y") * dec("y")).alias("wsyy"),
-        F.sum(dec("w") * dec("x") * dec("y")).alias("wsxy"),
-        F.sum(dec("x")).alias("sx"),
-        F.sum(dec("y")).alias("sy"),
-        F.sum(dec("x") * dec("x")).alias("sxx"),
-        F.sum(dec("y") * dec("y")).alias("syy"),
-        F.sum(dec("x") * dec("y")).alias("sxy"),
+        F.sum(w * x).alias("wsx"),
+        F.sum(w * y).alias("wsy"),
+        F.sum(w * x * x).alias("wsxx"),
+        F.sum(w * y * y).alias("wsyy"),
+        F.sum(w * x * y).alias("wsxy"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+        F.sum(x * y).alias("sxy"),
     )
     nodes = (
         edges.select(F.col("src").alias("node"))

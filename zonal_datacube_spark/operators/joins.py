@@ -19,9 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import half_up, revenue
+from zonal_datacube_spark.functions.exact import half_up, revenue, wide
 from zonal_datacube_spark.functions.local_rel import local_relation
-from zonal_datacube_spark.operators.zonal import ZONES_SQL_VALUES, zones_df
+from zonal_datacube_spark.operators.zonal import (
+    ZONES_SQL_VALUES,
+    assign_zones,
+    zones_df,
+)
 from zonal_datacube_spark.sources.loader import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -151,8 +155,7 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     event assigned to its value band. BroadcastNestedLoopJoin with the tiny
     zone side broadcast; see §4.3 bucketing rewrite for the 100 TB path."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    zones = F.broadcast(zones_df(spark))
-    return ev.join(zones, (ev.value >= zones.lo) & (ev.value < zones.hi)).select(
+    return assign_zones(ev).select(
         "event_id", "zone_id", F.round("value", 2).alias("value_r")
     )
 
@@ -569,7 +572,7 @@ def _skew_join_fold(li: DataFrame, orders: DataFrame) -> DataFrame:
             # BIGINT would re-introduce the overflow, a double would
             # round above 2^53). DuckDB accumulates HUGEINT and renders
             # the same digits.
-            F.sum(F.col("rev_e4").cast("decimal(38,0)"))
+            F.sum(wide(F.col("rev_e4")))
             .cast("string")
             .alias("revenue_e4"),
         )

@@ -227,7 +227,8 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier compression next to PQ: 4× smaller than float32, SIMD-friendly):
     per vector, scale = max|v|/127, codes = floor(v/s + 0.5); report
     per-label reconstruction error. floor(x + 0.5) is used instead of
-    round() because Spark rounds HALF_UP and DuckDB half-to-even — floor
+    round() because the engines split on decimal midpoints (Spark rounds
+    the shortest decimal string HALF_UP, DuckDB the binary value) — floor
     arithmetic is bit-identical in both. All JVM-side higher-order array
     functions; one groupBy(label) shuffle."""
     emb = (

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import micro_units
+from zonal_datacube_spark.functions.exact import micro_mean, micro_units, wide
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -117,7 +117,6 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction from events.props, aggregated by the value."""
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
-    # 6dp mean on the exact 1e-6 grid (q_zonal_stats r11 discipline)
     v6 = micro_units(F.col("value"))
     return (
         ev.withColumn("k", k)
@@ -125,12 +124,7 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-                / F.count("*")
-                / 1000000,
-                6,
-            ).alias("avg_value"),
+            micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias("avg_value"),
         )
     )
 

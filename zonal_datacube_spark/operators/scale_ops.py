@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import micro_units, revenue
+from zonal_datacube_spark.functions.exact import micro_mean, micro_units, revenue, wide
 from zonal_datacube_spark.functions.merge import upsert
 from zonal_datacube_spark.functions.salting import salted_join, salted_zonal_stats
 from zonal_datacube_spark.sources.derived import corpus_tag, layout
@@ -309,14 +309,7 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin")
         .agg(
             F.count("*").alias("n"),
-            # 6dp mean on the exact 1e-6 grid (q_zonal_stats r11
-            # discipline — bins are corpus-sized groups)
-            F.round(
-                F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-                / F.count("*")
-                / 1000000,
-                6,
-            ).alias("avg_in_bin"),
+            micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias("avg_in_bin"),
         )
     )
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.banded_lsh import banded_cosine_join
-from zonal_datacube_spark.functions.exact import dot, half_up
+from zonal_datacube_spark.functions.exact import dot, half_up, wide
 from zonal_datacube_spark.sources.derived import corpus_key
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -323,7 +323,7 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical under any partitioning. |sim| ≤ 1 ⇒ ≤ 1e9/row: no
     # magnitude bound to document.
     assigned = assign_cells(emb, centroids, keep_sim=True)
-    sim_e9 = half_up(F.col("sim"), F.lit(1e9)).cast("decimal(38,0)")
+    sim_e9 = wide(half_up(F.col("sim"), F.lit(1e9)))
     by_label = assigned.groupBy("cell", "label").agg(
         F.count("*").alias("n_label"),
         F.sum(sim_e9).alias("sum_sim_e9"),

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import G6_SQL, g6, half_up
+from zonal_datacube_spark.functions.exact import G6_SQL, g6, half_up, wide
 from zonal_datacube_spark.functions.prefix_sweep import (
     ntile_from_row_number,
     prefix_sweep,
@@ -357,16 +357,9 @@ def q_agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         F.round(F.exp(F.avg(F.log("o_totalprice"))), 6).alias("geo_mean"),
-        # exact cent-grid fold (q_agg_global r11 discipline): totalprice
-        # sits on the cent grid, and a raw double avg over ~1e5-magnitude
-        # values accumulates enough order-dependent noise to flip a 6dp
-        # rounding under partition relayout
+        # exact cent-grid fold (functions/exact.py)
         F.round(
-            F.sum(
-                half_up(F.col("o_totalprice"), 100).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            F.sum(wide(half_up(F.col("o_totalprice"), 100))).cast("double")
             / F.count("*")
             / 100,
             6,
@@ -722,7 +715,7 @@ def q_stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer to the same double before the closed form."""
     li = load_table(spark, sf_dir, "lineitem")
     qcols = {
-        name: half_up(F.col(src), scale).cast("decimal(38,0)")
+        name: wide(half_up(F.col(src), scale))
         for name, src, scale in _CORR_MEASURES
     }
     aggs = [F.count("*").alias("n")]

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import CENTS_SQL, G6_SQL, cents, g6
+from zonal_datacube_spark.functions.exact import CENTS_SQL, G6_SQL, cents, g6, wide
 from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
 from zonal_datacube_spark.operators.timeseries_forecast import (
     DAILY_GRAIN_SQL,
@@ -541,32 +541,32 @@ def _spearman_fold(li: DataFrame, ranks: DataFrame | None = None) -> DataFrame:
         F.col("val").alias("l_extendedprice"),
         F.col("u").alias("uy"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     # price-grain partial moments of the x-rank (exact integers: count,
     # Σux, Σux² per (flag, price)). n_p is counted HERE, not taken from
     # the y-grain's n_v: the statistic's row universe is rows that
     # inner-join BOTH grains (the oracle's JOIN xr JOIN yr), and a row
     # with a NULL quantity is in the y-grain but not here.
+    ux = wide(F.col("ux"))
     pg = (
         li.join(xr, ["l_returnflag", "l_quantity"])
         .groupBy("l_returnflag", "l_extendedprice")
         .agg(
             F.count("*").alias("n_p"),
-            F.sum(dec(F.col("ux"))).alias("sux"),
-            F.sum(dec(F.col("ux")) * dec(F.col("ux"))).alias("suxx"),
+            F.sum(ux).alias("sux"),
+            F.sum(ux * ux).alias("suxx"),
         )
     )
     joined = pg.join(yr, ["l_returnflag", "l_extendedprice"])
-    npd = dec(F.col("n_p"))
+    npd, uy = wide(F.col("n_p")), wide(F.col("uy"))
     s = joined.groupBy("l_returnflag").agg(
         F.sum("n_p").alias("n_rows"),
         F.sum(F.col("sux")).alias("su"),
-        F.sum(npd * dec(F.col("uy"))).alias("sv"),
-        F.sum(F.col("sux") * dec(F.col("uy"))).alias("suv"),
+        F.sum(npd * uy).alias("sv"),
+        F.sum(F.col("sux") * uy).alias("suv"),
         F.sum(F.col("suxx")).alias("suu"),
-        F.sum(npd * dec(F.col("uy")) * dec(F.col("uy"))).alias("svv"),
+        F.sum(npd * uy * uy).alias("svv"),
     )
-    n = dec(F.col("n_rows"))
+    n = wide(F.col("n_rows"))
     num = (n * F.col("suv") - F.col("su") * F.col("sv")).cast("double")
     a = (n * F.col("suu") - F.col("su") * F.col("su")).cast("double")
     b = (n * F.col("svv") - F.col("sv") * F.col("sv")).cast("double")

@@ -29,7 +29,14 @@ from zonal_datacube_spark.functions.chunked_window import (
     with_banded_range_window,
     with_trailing_range_window,
 )
-from zonal_datacube_spark.functions.exact import G6_SQL, cents, g6, micro_units
+from zonal_datacube_spark.functions.exact import (
+    G6_SQL,
+    cents,
+    g6,
+    micro_mean,
+    micro_units,
+    wide,
+)
 from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -85,28 +92,16 @@ def q_ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("timestampdiff(MICROSECOND, ts, next_ts)").alias("dt_us"),
         )
     )
-    # 6dp means fold on the exact 1e-6 grid (q_zonal_stats r11
-    # discipline): v6·dt_us can reach ~1.7e19 per row, so the product is
-    # taken IN DECIMAL (casting after a BIGINT multiply would overflow
-    # first) and both sums accumulate order-independently
+    # v6·dt_us can reach ~1.7e19 per row, so the product is taken wide
     v6 = micro_units(F.col("value"))
     spans = spans.withColumn("_v6", v6)
     return spans.groupBy("event_type").agg(
         F.count("*").alias("n_spans"),
         F.sum("dt_us").alias("total_us"),
-        F.round(
-            F.sum(F.col("_v6").cast("decimal(38,0)") * F.col("dt_us"))
-            .cast("double")
-            / F.sum("dt_us")
-            / 1000000,
-            6,
+        micro_mean(
+            F.sum(wide(F.col("_v6")) * F.col("dt_us")), F.sum("dt_us")
         ).alias("tw_avg"),
-        F.round(
-            F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-            / F.count("*")
-            / 1000000,
-            6,
-        ).alias("naive_avg"),
+        micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias("naive_avg"),
     )
 
 
@@ -995,14 +990,14 @@ def q_ts_acf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "mvi", "s.lag", "s.prev")
         .filter(F.col("prev").isNotNull())
     )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    x, y = wide(F.col("mvi")), wide(F.col("prev"))
     m = stacked.groupBy("event_type", "lag").agg(
         F.count("*").alias("n_pairs"),
-        F.sum(dec("mvi")).alias("sx"),
-        F.sum(dec("prev")).alias("sy"),
-        F.sum(dec("mvi") * dec("mvi")).alias("sxx"),
-        F.sum(dec("prev") * dec("prev")).alias("syy"),
-        F.sum(dec("mvi") * dec("prev")).alias("sxy"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+        F.sum(x * y).alias("sxy"),
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     corr = (d("n_pairs") * d("sxy") - d("sx") * d("sy")) / F.sqrt(

@@ -24,8 +24,10 @@ from zonal_datacube_spark.functions.exact import (
     CENTS_SQL,
     G6_SQL,
     cents,
+    from_micro,
     g6,
     micro_units,
+    wide,
 )
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.functions.prefix_sweep import prefix_sweep
@@ -173,14 +175,13 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.count("*").over(full).alias("n_days"),
     ).filter(F.col("rn") < F.col("n_days"))  # right segment non-empty
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     nr = F.col("nt") - F.col("nl")
     sr = F.col("st") - F.col("sl")
     term = lambda s, n: (s * s).cast("double") / n.cast("double")  # noqa: E731
     gain = (
-        term(dec("sl"), F.col("nl"))
-        + term(sr.cast("decimal(38,0)"), nr)
-        - term(dec("st"), F.col("nt"))
+        term(wide(F.col("sl")), F.col("nl"))
+        + term(wide(sr), nr)
+        - term(wide(F.col("st")), F.col("nt"))
     )
     scored = cum.select(
         "event_type",
@@ -265,15 +266,17 @@ def q_ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dow",
             "n_days",
             g6(
-                F.col("sum_dt").cast("double")
-                / F.col("n_days").cast("double")
-                / 1000000
+                from_micro(
+                    F.col("sum_dt").cast("double")
+                    / F.col("n_days").cast("double")
+                )
                 / 100
             ).alias("seasonal_usd"),
             g6(
-                F.col("sum_abs_dt").cast("double")
-                / F.col("n_days").cast("double")
-                / 1000000
+                from_micro(
+                    F.col("sum_abs_dt").cast("double")
+                    / F.col("n_days").cast("double")
+                )
                 / 100
             ).alias("mean_abs_resid_usd"),
         )
@@ -344,9 +347,10 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n_days") > 1,
             g6(
-                F.col("aem").cast("double")
-                / (F.col("n_days") - 1).cast("double")
-                / 1_000_000
+                from_micro(
+                    F.col("aem").cast("double")
+                    / (F.col("n_days") - 1).cast("double")
+                )
                 / 100
             ),
         ).alias("mae_usd"),
@@ -480,20 +484,18 @@ def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("d")
         .rowsBetween(-BOLL_WINDOW, -1)
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    sd = wide(F.col("sd"))
     framed = daily.select(
         "event_type",
         "d",
         F.col("sd").alias("x"),
         F.count("*").over(w).alias("n"),
         F.sum("sd").over(w).alias("sx"),
-        F.sum(dec(F.col("sd")) * dec(F.col("sd"))).over(w).alias("sxx"),
+        F.sum(sd * sd).over(w).alias("sxx"),
     ).filter(F.col("n") >= BOLL_MIN_N)
-    lhs = dec(F.col("x")) * dec(F.col("n")) - dec(F.col("sx"))
-    rhs = 4 * (
-        dec(F.col("n")) * F.col("sxx")
-        - dec(F.col("sx")) * dec(F.col("sx"))
-    )
+    x, n, sx = wide(F.col("x")), wide(F.col("n")), wide(F.col("sx"))
+    lhs = x * n - sx
+    rhs = 4 * (n * F.col("sxx") - sx * sx)
     scored = framed.select(
         "event_type",
         (lhs * lhs > rhs).alias("breakout"),

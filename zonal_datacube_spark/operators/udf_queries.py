@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import micro_units
-from zonal_datacube_spark.operators.zonal import ZONES_SQL_VALUES, zones_df
+from zonal_datacube_spark.functions.exact import micro_mean, micro_units, wide
+from zonal_datacube_spark.operators.zonal import ZONES_SQL_VALUES, assign_zones
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -28,11 +28,9 @@ def q_udaf_zonal_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial/final aggregate; semantics identical to the pandas kernel
     (``int(n*0.1) == n div 10`` for all n here). Equal values trim the
     same multiset whichever tie order row_number picks."""
-    cells = load_table(spark, sf_dir, "events")
-    zones = F.broadcast(zones_df(spark))
-    assigned = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi)
-    ).select("zone_id", "value")
+    assigned = assign_zones(load_table(spark, sf_dir, "events")).select(
+        "zone_id", "value"
+    )
     w = Window.partitionBy("zone_id")
     ranked = assigned.select(
         "zone_id",
@@ -43,19 +41,11 @@ def q_udaf_zonal_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed = ranked.filter(
         (F.col("rn") > F.expr("n div 10")) & (F.col("rn") <= F.col("n") - F.expr("n div 10"))
     )
-    # 6dp mean on the exact 1e-6 grid (q_zonal_stats r11 discipline)
     v6 = micro_units(F.col("value"))
     return (
         trimmed.withColumn("_v6", v6)
         .groupBy("zone_id")
-        .agg(
-            F.round(
-                F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-                / F.count("*")
-                / 1000000,
-                6,
-            ).alias("trimmed_mean")
-        )
+        .agg(micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias("trimmed_mean"))
     )
 
 

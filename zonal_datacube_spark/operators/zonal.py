@@ -24,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.functions.exact import micro_units
+from zonal_datacube_spark.functions.exact import (
+    from_micro,
+    micro_mean,
+    micro_units,
+    wide,
+)
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.sources.loader import load_table
 
@@ -47,44 +52,42 @@ def zones_df(spark: SparkSession) -> DataFrame:
     return local_relation(spark, ZONES, "zone_id INT, lo DOUBLE, hi DOUBLE")
 
 
+def assign_zones(cells: DataFrame) -> DataFrame:
+    """``cells`` joined to the broadcast ``ZONES`` table on the half-open
+    band ``lo <= value < hi``: one output row per cell inside a zone,
+    carrying ``zone_id``, ``lo`` and ``hi``. A NULL or out-of-band value
+    matches no zone."""
+    zones = F.broadcast(zones_df(cells.sparkSession))
+    return cells.join(
+        zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
+    )
+
+
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-zone count/sum/mean/min/max/stddev of cell values.
 
     Flagship query: scan → broadcast range join → partial+final groupBy.
 
-    The 6dp moments fold on the exact 1e-6 integer grid (r11): a double
-    avg/stddev accumulates in partition order, and the multi-file
-    rehearsal sweep caught exactly this class flipping a 6dp rounding
-    boundary under relayout (q_zonal_timeseries). Here S1/S2 accumulate
-    as DECIMAL(38,0) (order-independent exact integers; v6² ≤ 4e16 per
-    row and the decimal sum is exact to 1e38 — far past 100 TB zone
-    populations), then mean/stddev are ONE fixed double chain per group
-    identical in both engines. The 2dp sum keeps the raw double fold:
-    its rounding grain is ~7 orders above the accumulation noise."""
-    cells = load_table(spark, sf_dir, "events")
-    zones = F.broadcast(zones_df(spark))
-    joined = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
-    ).withColumn(
+    Mean and stddev are exact folds on the 1e-6 grid (functions/exact.py;
+    v6² ≤ 4e16 per row). The 2dp sum keeps the raw double fold: its
+    rounding grain is ~7 orders above the accumulation noise."""
+    joined = assign_zones(load_table(spark, sf_dir, "events")).withColumn(
         "_v6", micro_units(F.col("value"))
     )
     n = F.count("*")
-    s1 = F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-    s2 = F.sum(
-        (F.col("_v6") * F.col("_v6")).cast("decimal(38,0)")
-    ).cast("double")
+    t1 = F.sum(wide(F.col("_v6")))
+    s1 = t1.cast("double")
+    s2 = F.sum(wide(F.col("_v6") * F.col("_v6"))).cast("double")
     stddev = F.when(
         n > 1,
-        F.round(
-            F.sqrt((s2 - s1 * s1 / n) / (n - F.lit(1))) / 1000000, 6
-        ),
+        F.round(from_micro(F.sqrt((s2 - s1 * s1 / n) / (n - F.lit(1)))), 6),
     )
     return (
         joined.groupBy("zone_id")
         .agg(
             n.alias("n_cells"),
             F.round(F.sum("value"), 2).alias("sum_value"),
-            F.round(s1 / n / 1000000, 6).alias("mean_value"),
+            micro_mean(t1, n).alias("mean_value"),
             F.round(F.min("value"), 2).alias("min_value"),
             F.round(F.max("value"), 2).alias("max_value"),
             stddev.alias("stddev_value"),
@@ -96,11 +99,7 @@ def q_zonal_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical zonal histogram: per-zone per-category cell counts,
     pivoted wide via conditional aggregation (engine-portable column names,
     FIXTURES.md parity rule 5)."""
-    cells = load_table(spark, sf_dir, "events")
-    zones = F.broadcast(zones_df(spark))
-    joined = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
-    )
+    joined = assign_zones(load_table(spark, sf_dir, "events"))
     cats = ["click", "error", "purchase", "signup", "view"]
     aggs = [
         F.count(F.when(F.col("event_type") == c, F.lit(1))).alias(f"n_{c}")
@@ -115,32 +114,13 @@ def q_zonal_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied along the cube's time axis). Same broadcast range join as the
     flagship; the grouping key widens to (zone, day), which stays
     high-cardinality and skew-free at any scale."""
-    cells = load_table(spark, sf_dir, "events")
-    zones = F.broadcast(zones_df(spark))
-    joined = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
-    )
-    # mean folds on the exact 1e-6 integer grid (one trailing division):
-    # a double avg's partial order is partition-layout dependent, and the
-    # r11 multi-file rehearsal caught it flipping the 6dp rounding on a
-    # boundary cell (FIXTURES.md rule 6/15). The micro-unit sum
-    # accumulates as DECIMAL(38,0) like the sibling migrations
-    # (q_zonal_stats/weighted/change) — exact to 1e38, so no per-group
-    # row-count bound at all (ADVICE r11: the raw BIGINT form held to
-    # 4e10 rows/(zone,day) but wraps silently past int64 in non-ANSI
-    # Spark, and the inconsistency invited copy-paste of the weaker
-    # form). DuckDB's sum(BIGINT) is HUGEINT — already exact.
+    joined = assign_zones(load_table(spark, sf_dir, "events"))
     val_e6 = micro_units(F.col("value"))
     return joined.groupBy(
         "zone_id", F.date_trunc("day", "ts").alias("day")
     ).agg(
         F.count("*").alias("n_cells"),
-        F.round(
-            F.sum(val_e6.cast("decimal(38,0)")).cast("double")
-            / F.count("*")
-            / 1000000,
-            6,
-        ).alias("mean_value"),
+        micro_mean(F.sum(wide(val_e6)), F.count("*")).alias("mean_value"),
         F.round(F.max("value"), 2).alias("max_value"),
     )
 
@@ -188,32 +168,19 @@ def q_zonal_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = load_table(spark, sf_dir, "events").withColumn(
         "w", F.get_json_object("props", "$.k").cast("double")
     )
-    zones = F.broadcast(zones_df(spark))
-    joined = cells.join(
-        zones, (cells.value >= zones.lo) & (cells.value < zones.hi), "inner"
-    )
-    # 6dp means fold on the exact 1e-6 grid (the q_zonal_stats r11
-    # discipline): w is integer-valued, so w·v6 is an exact integer and
-    # both sums accumulate order-independently as DECIMAL(38,0)
+    # w is integer-valued, so w·v6 is an exact integer
     v6 = micro_units(F.col("value"))
     wl = F.col("w").cast("bigint")
-    joined = joined.withColumn("_v6", v6).withColumn("_wl", wl)
+    joined = assign_zones(cells).withColumn("_v6", v6).withColumn("_wl", wl)
     return joined.groupBy("zone_id").agg(
         F.count("*").alias("n_cells"),
         F.round(F.sum("w"), 2).alias("sum_weight"),
-        F.round(
-            F.sum((F.col("_wl") * F.col("_v6")).cast("decimal(38,0)"))
-            .cast("double")
-            / F.sum("_wl")
-            / 1000000,
-            6,
+        micro_mean(
+            F.sum(wide(F.col("_wl") * F.col("_v6"))), F.sum("_wl")
         ).alias("weighted_mean"),
-        F.round(
-            F.sum(F.col("_v6").cast("decimal(38,0)")).cast("double")
-            / F.count("*")
-            / 1000000,
-            6,
-        ).alias("unweighted_mean"),
+        micro_mean(F.sum(wide(F.col("_v6"))), F.count("*")).alias(
+            "unweighted_mean"
+        ),
     )
 
 
@@ -236,11 +203,8 @@ def q_zonal_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mid_us")
         )
     )
-    zones = F.broadcast(zones_df(spark))
     joined = (
-        cells.join(
-            zones, (cells.value >= zones.lo) & (cells.value < zones.hi)
-        )
+        assign_zones(cells)
         .crossJoin(bounds)
         .withColumn(
             "in_p1", F.expr(us.format("ts")) < F.col("mid_us")
@@ -248,21 +212,16 @@ def q_zonal_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p1v = F.when(F.col("in_p1"), F.col("value"))
     p2v = F.when(~F.col("in_p1"), F.col("value"))
-    # epoch means fold on the exact 1e-6 grid (q_zonal_stats r11
-    # discipline) — conditional integer sums, one trailing division
     v6 = micro_units(F.col("value"))
-    p1v6 = F.when(F.col("in_p1"), v6).cast("decimal(38,0)")
-    p2v6 = F.when(~F.col("in_p1"), v6).cast("decimal(38,0)")
-    mean = lambda s, c: F.round(  # noqa: E731
-        F.sum(s).cast("double") / F.count(c) / 1000000, 6
-    )
+    p1v6 = wide(F.when(F.col("in_p1"), v6))
+    p2v6 = wide(F.when(~F.col("in_p1"), v6))
     return (
         joined.groupBy("zone_id")
         .agg(
             F.count(p1v).alias("n_p1"),
             F.count(p2v).alias("n_p2"),
-            mean(p1v6, p1v).alias("mean_p1"),
-            mean(p2v6, p2v).alias("mean_p2"),
+            micro_mean(F.sum(p1v6), F.count(p1v)).alias("mean_p1"),
+            micro_mean(F.sum(p2v6), F.count(p2v)).alias("mean_p2"),
         )
         .select(
             "zone_id",
