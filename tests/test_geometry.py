@@ -1,7 +1,8 @@
 """Polygon containment: the scanline-interval pipeline agrees with an
 independent Python ray-casting reference over a dense probe grid, a
 ~1000-vertex concave ring, probes on crossings and null coordinates; an
-unclosed ring raises; and the polygon keys join on the row, not on pid."""
+unclosed ring raises; the polygon keys join on the row, not on pid; and
+that join emits one row per (point, containing zone)."""
 
 from __future__ import annotations
 
@@ -131,6 +132,36 @@ def test_zonal_polygon_joins_points_on_the_row(spark):
         plan,
     )
     assert any("py#" in left and "row#" in right for left, right in keys), plan
+
+
+def _final_plan_nodes(node):
+    """Every node of an executed plan, through adaptive and query-stage
+    wrappers."""
+    todo, out = [node], []
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        out.append((kind, node))
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_zonal_polygon_join_rows_equal_contained_points(spark):
+    """Cost linear in points: the row-interval join emits exactly one row
+    per (point, containing zone), with no per-edge fan-out."""
+    df = q_zonal_polygon(spark, SF_SMOKE)
+    n_inside = sum(r.n_points for r in df.collect())
+    nodes = _final_plan_nodes(df._jdf.queryExecution().executedPlan())
+    joins = [node for kind, node in nodes if kind == "BroadcastHashJoinExec"]
+    assert len(joins) == 1, [kind for kind, _ in nodes]
+    assert n_inside > 0
+    assert joins[0].metrics().get("numOutputRows").get().value() == n_inside
 
 
 def test_concave_notch_is_outside(spark):

@@ -26,10 +26,13 @@ inside on ``lo`` and outside on ``hi``, exactly as ``px < c`` counts it.
 Precondition: every ring is closed, so n is even per (zone, row). An odd
 count is an unclosed ring and raises; no crossing is ever dropped.
 
-The interval table holds at most zones × distinct rows × crossings/2
-rows, and crossings per (zone, row) never exceed the zone's edge count —
-a vector-side size that does not grow with the number of points. It is
-broadcast, so the fact side pays one hash probe on the row plus a range
+The interval table holds one row per inside interval of each distinct
+point row ``py`` that a zone spans: at most Σ over zones of
+(distinct ``py`` within the zone's y-extent) × edges/2 rows. For grid rows
+that count is fixed by the grid, not by the points (the fixtures put
+every point on one of 200 rows), but when ``py`` is continuous nearly
+every point brings its own row and the table grows with the points. It
+is broadcast, so the fact side pays one hash probe on the row plus a range
 check per candidate interval instead of one predicate per edge, and no
 per-point aggregate or re-join. Every step is a broadcast join, codegen'd
 arithmetic or a small hash aggregate — no UDF.
@@ -111,10 +114,11 @@ def points_in_polygons(points: DataFrame, edges: DataFrame) -> DataFrame:
     are sorted and paired into intervals [c₂ₖ, c₂ₖ₊₁) — the even-odd rule,
     since a closed ring crosses a row an even number of times and
     px ∈ [c₂ₖ, c₂ₖ₊₁) ⇔ an odd number of crossings lie east of px. The
-    interval table (≤ zones × rows × edges/2 rows) is broadcast and the
-    points join it on ``py = row AND lo <= px < hi``. An odd crossing
-    count (an unclosed ring) raises instead of dropping a crossing. A
-    null px or py matches no zone. Expressions are SQL strings: each
+    interval table (≤ zones × distinct py × edges/2 rows: bounded for
+    grid rows, growing with the points when py is continuous) is
+    broadcast and the points join it on ``py = row AND lo <= px < hi``.
+    An odd crossing count (an unclosed ring) raises instead of dropping a
+    crossing. A null px or py matches no zone. Expressions are SQL strings: each
     Column built in Python is a JVM round trip, and this runs per call."""
     intervals = (
         points.select("py")

@@ -73,6 +73,10 @@ def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -
         # Scale-neutral: this is driver compile caching, independent of
         # data volume or cluster size.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python workers fork from a daemon that re-reads a zipped import
+        # path (pyspark.zip, py4j) only when the archive changed, instead
+        # of before every task (worker_daemon's docstring has the cost).
+        .config("spark.python.daemon.module", "zonal_datacube_spark.worker_daemon")
         # no derby.system.home java option: extraJavaOptions set at
         # session-build time cannot reach an already-launched client-mode
         # driver JVM (ADVICE r12), and no Hive catalog is enabled — the
