@@ -25,3 +25,24 @@ def test_stateful_profiles_match_batch(spark):
     }
     assert final == batch
 
+
+
+def test_stateful_profile_column_types_are_pinned(spark):
+    """The key's columns keep the declared Arrow types. Each call logs
+    pandas FutureWarnings ("concatenation with empty or all-NA entries"),
+    but they come from PySpark's own all-NA padding frames in the
+    applyInPandasWithState serializer, which then converts with these
+    declared types; nothing the key builds can shift them."""
+    from zonal_datacube_spark.operators.streaming_batch import (
+        q_stream_stateful_profile,
+    )
+
+    want = [
+        ("user_id", "bigint"),
+        ("n_events", "bigint"),
+        ("sum_value", "double"),
+        ("last_us", "bigint"),
+    ]
+    sink = run_stateful_demo(spark, SF_SMOKE, table="zds_stateful_types")
+    assert sink.dtypes == want
+    assert q_stream_stateful_profile(spark, SF_SMOKE).dtypes == want

@@ -42,6 +42,7 @@ from zonal_datacube_spark.streaming.demo import (
     run_stream_upsert,
     tumbling_counts,
 )
+from zonal_datacube_spark.streaming.drain import drain
 
 
 def _rows(df):
@@ -135,17 +136,16 @@ def test_python_sink_appends_exactly_once_across_restart(
     register_jsonl_sink(spark)
 
     def run():
-        q = (
+        drain(
+            spark,
             events_stream(spark, sf_dir)
             .select("event_id", "user_id", "event_type")
             .writeStream.format(JSONL_SINK_NAME)
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
-        q.awaitTermination(120)
 
     run()
     n_phase1 = sum(r["total_rows"] for r in read_stream_manifest(out))

@@ -31,13 +31,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.streaming_batch import STREAM_SHUFFLE_CONFS
-from zonal_datacube_spark.session import scoped_conf
 from zonal_datacube_spark.sources.loader import load_table
 from zonal_datacube_spark.streaming.demo import (
     view_purchase_join,
     view_purchase_left_join,
 )
+from zonal_datacube_spark.streaming.drain import drain
 
 N_FILES = 8
 # join bound (1h) + watermark (1h) + margin: rows older than this behind
@@ -103,18 +102,15 @@ def _run(spark, src, schema, builder, out_dir, max_files):
     def write_batch(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out_dir)
 
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(180)
-        if not finished:
-            q.stop()  # don't leave a live query writing while we read
-        assert finished, "availableNow drain did not finish within 180 s"
-        progress = q.recentProgress
+    # drain stops the query and raises if it does not finish in time, so
+    # no live query writes while we read
+    q = drain(
+        spark,
+        result.writeStream.foreachBatch(write_batch)
+        .outputMode("append")
+        .trigger(availableNow=True),
+    )
+    progress = q.recentProgress
     states = [
         op["numRowsTotal"]
         for p in progress

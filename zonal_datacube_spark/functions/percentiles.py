@@ -102,7 +102,7 @@ from zonal_datacube_spark.session import scoped_conf
 #   1.8 → 1.3 s per sweep (r12, the q_dq_outlier_mad breakdown); at
 #   100 TB this knob scales with GRAIN size (tens of millions of rows ⇒
 #   raise it), not corpus size — the same sizing contract as
-#   streaming_batch.STREAM_SHUFFLE_CONFS.
+#   streaming/drain.STREAM_CONFS.
 # - AQE off (r13, guide §1.2): at the fixed 8-partition width AQE has
 #   nothing to coalesce or re-strategize, but with it on every exchange
 #   materializes as its own stage-job with a driver re-optimization

@@ -7,9 +7,8 @@ unbounded garbage).
 Contract: ``fresh_dirs(key, *prefixes)`` deletes the dirs the SAME key
 created on its previous invocation, then hands back fresh ones. Deleting
 on the NEXT call (not atexit-only) keeps the returned lazy DataFrames
-readable until the caller has consumed them — the same lifecycle the
-q_sink_python_ds_write `_LAST_SINK_DIR` fix established. An atexit hook
-sweeps whatever the final invocation left behind.
+readable until the caller has consumed them. An atexit hook sweeps
+whatever the final invocation left behind.
 """
 
 from __future__ import annotations

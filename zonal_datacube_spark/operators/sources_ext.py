@@ -30,6 +30,7 @@ from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table
 from zonal_datacube_spark.sources.sinks import write_csv, write_json, write_parquet
+from zonal_datacube_spark.streaming.drain import drain
 
 ORDERS_CSV_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
@@ -374,17 +375,6 @@ TICK_STREAM_ROWS = 16
 TICK_VAL_BUCKET = 10
 
 
-def _await_drained(q, timeout_s: int = 240) -> None:
-    """availableNow queries must actually DRAIN before the read-back; a
-    timeout would otherwise surface as silent partial results (and leave
-    an orphan query appending behind the reader)."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain did not finish within {timeout_s}s"
-        )
-
-
 def _tick_bucket_census(landed: DataFrame) -> DataFrame:
     """The shared value-bucket census both tick-stream keys aggregate —
     one definition, so the connector keys and their common oracle cannot
@@ -424,14 +414,13 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_tick", TICK_STREAM_ROWS)
         .load()
     )
-    q = (
+    drain(
+        spark,
         stream.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    _await_drained(q)
     return _tick_bucket_census(spark.read.parquet(out))
 
 
@@ -469,14 +458,13 @@ def q_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_tick", TICK_STREAM_ROWS)
         .load()
     )
-    q = (
+    drain(
+        spark,
         stream.writeStream.format(JSONL_SINK_NAME)
         .option("path", out)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    _await_drained(q)
     committed = [
         f"{out}/{name}"
         for rec in read_stream_manifest(out)

@@ -30,9 +30,6 @@ allocations are exact integers; money sums round on their data grid.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,15 +44,12 @@ from zonal_datacube_spark.functions.prefix_sweep import (
     ntile_from_row_number,
     prefix_sweep,
 )
+from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
 
 VAR_MIN_QTY = 30.0
 VAR_FLAG = "R"
-
-# most recent sink output dir — each q_sink_python_ds_write invocation
-# removes its predecessor's, bounding on-disk accumulation to one run
-_LAST_SINK_DIR: str | None = None
 
 
 def q_sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,11 +162,7 @@ def q_sink_python_ds_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             round4_half_up(F.sum(revenue())).alias("revenue"),
         )
     )
-    global _LAST_SINK_DIR
-    if _LAST_SINK_DIR is not None:
-        shutil.rmtree(_LAST_SINK_DIR, ignore_errors=True)
-    out = tempfile.mkdtemp(prefix="zds_jsonl_sink_")
-    _LAST_SINK_DIR = out
+    (out,) = fresh_dirs("q_sink_python_ds_write", "zds_jsonl_sink_")
     result.write.format(JSONL_SINK_NAME).option("path", out).mode(
         "append"
     ).save()

@@ -19,20 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.session import scoped_conf
 from zonal_datacube_spark.sources.derived import layout
 from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.streaming.drain import drain
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
 
-
-# Shuffle partitions for a TRUE-streaming run. Each shuffle partition
-# materializes one state-store instance per stateful operator per
-# micro-batch — at fixture scale 32 instances are pure setup overhead
-# (~2-4s/query); 8 keeps the identical plan shape. At 100 TB this knob
-# goes UP with key cardinality, and is pinned thereafter by the first
-# run's checkpoint.
-STREAM_SHUFFLE_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 # Drop the trailing NO-DATA micro-batch for a streaming run whose OUTPUT
 # cannot depend on it (r14, guide §1.2 — don't run work whose result is
@@ -87,9 +81,8 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot. The oracle is q_stream_tumbling's SQL — stream ≡ batch on
     the finite fixture is exactly the semantics Structured Streaming
     promises. The sink dir is a fresh temp dir per call, left on disk
-    because the returned DataFrame reads it lazily."""
-    import tempfile
-
+    until the next call because the returned DataFrame reads it
+    lazily."""
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         read_foreach_batch_result,
@@ -97,11 +90,8 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         tumbling_counts,
     )
 
-    out = tempfile.mkdtemp(prefix="zds_foreach_")
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        run_stream_foreach_batch(
-            tumbling_counts(events_stream(spark, sf_dir)), spark, out
-        )
+    (out,) = fresh_dirs("q_stream_foreach_roundtrip", "zds_foreach_")
+    run_stream_foreach_batch(tumbling_counts(events_stream(spark, sf_dir)), spark, out)
     return read_foreach_batch_result(spark, out)
 
 
@@ -113,22 +103,19 @@ def q_stream_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert sink folds them into serving state — the O(changed keys) shape
     that survives when complete-mode snapshots stop fitting. Final state ≡
     the batch tumbling aggregate (same oracle as q_stream_tumbling)."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_upsert,
         tumbling_counts,
     )
 
-    out = tempfile.mkdtemp(prefix="zds_upsert_")
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        return run_stream_upsert(
-            tumbling_counts(events_stream(spark, sf_dir)),
-            spark,
-            out,
-            keys=["bucket_start", "event_type"],
-        )
+    (out,) = fresh_dirs("q_stream_upsert_roundtrip", "zds_upsert_")
+    return run_stream_upsert(
+        tumbling_counts(events_stream(spark, sf_dir)),
+        spark,
+        out,
+        keys=["bucket_start", "event_type"],
+    )
 
 
 TUMBLING_PART_DAYS = ("2024-01-05", "2024-01-14")  # inclusive day range
@@ -294,15 +281,13 @@ def q_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = enriched_segment_counts(
         events_stream(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        q = (
-            result.writeStream.format("memory")
-            .queryName("zds_stream_enrich")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    drain(
+        spark,
+        result.writeStream.format("memory")
+        .queryName("zds_stream_enrich")
+        .outputMode("complete")
+        .trigger(availableNow=True),
+    )
     return spark.table("zds_stream_enrich")
 
 
@@ -313,20 +298,18 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bound join condition is what lets each side's state store evict
     — unbounded stream-stream joins are rejected by Spark outright. The
     oracle is the equivalent batch self-join."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_append,
         view_purchase_join,
     )
 
-    out = tempfile.mkdtemp(prefix="zds_ssjoin_")
+    (out,) = fresh_dirs("q_stream_stream_join", "zds_ssjoin_")
     # stream-stream joins keep one state store PER JOIN SIDE per partition
-    # — the shared 8-partition pin matters double here. The inner join
-    # emits matches eagerly, so the trailing no-data batch would only
+    # — the stream scope's 8-partition pin matters double here. The inner
+    # join emits matches eagerly, so the trailing no-data batch would only
     # evict state this availableNow run discards — skip it (r14).
-    with scoped_conf(spark, {**STREAM_SHUFFLE_CONFS, **NO_DATA_BATCH_OFF}):
+    with scoped_conf(spark, NO_DATA_BATCH_OFF):
         run_stream_append(
             view_purchase_join(events_stream(spark, sf_dir)), spark, out
         )
@@ -343,19 +326,16 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, null-emission depends on where the final watermark stops —
     both engine and oracle apply the identical cutoff, so the compared
     region is exactly the deterministic one."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_append,
         view_purchase_left_join,
     )
 
-    out = tempfile.mkdtemp(prefix="zds_ssouter_")
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        run_stream_append(
-            view_purchase_left_join(events_stream(spark, sf_dir)), spark, out
-        )
+    (out,) = fresh_dirs("q_stream_outer_join", "zds_ssouter_")
+    run_stream_append(
+        view_purchase_left_join(events_stream(spark, sf_dir)), spark, out
+    )
     res = spark.read.parquet(out)
     cutoff = F.broadcast(
         load_table(spark, sf_dir, "events").agg(
@@ -393,27 +373,24 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch groupBy: hash-matching it proves the store's contents,
     the reader's decode, and the stream's exactly-once accumulation all
     at once."""
-    import tempfile
     import uuid
 
     from zonal_datacube_spark.streaming.demo import events_stream
 
-    ckpt = tempfile.mkdtemp(prefix="zds_statereader_")
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        agg = (
-            events_stream(spark, sf_dir)
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_v"))
-        )
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(f"zds_sr_{uuid.uuid4().hex[:8]}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    (ckpt,) = fresh_dirs("q_stream_state_reader", "zds_statereader_")
+    agg = (
+        events_stream(spark, sf_dir)
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_v"))
+    )
+    drain(
+        spark,
+        agg.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(f"zds_sr_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -432,8 +409,7 @@ def q_stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once contract for custom stateful operators."""
     from zonal_datacube_spark.streaming.stateful import run_stateful_demo
 
-    with scoped_conf(spark, STREAM_SHUFFLE_CONFS):
-        sink = run_stateful_demo(spark, sf_dir, table="zds_stateful_key")
+    sink = run_stateful_demo(spark, sf_dir, table="zds_stateful_key")
     return sink.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.expr("max_by(sum_value, n_events)").alias("sum_value"),

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
 from zonal_datacube_spark.sources.loader import ensure_session_confs
+from zonal_datacube_spark.streaming.drain import drain
+
 
 def _events_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, StructType]:
     """Resolve the events stream source and return (raw stream, schema).
@@ -165,8 +167,7 @@ def run_stream_foreach_batch(
         # a second start() with the same dir resumes exactly where the
         # first stopped (tests/test_stream_restart.py)
         w = w.option("checkpointLocation", checkpoint)
-    q = w.start()
-    q.awaitTermination(120)
+    drain(spark, w)
 
 
 def read_foreach_batch_result(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -244,8 +245,7 @@ def run_stream_upsert(
     )
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
-    q = w.start()
-    q.awaitTermination(120)
+    drain(spark, w)
     result = read_versioned_state(spark, state_dir)
     assert result is not None, "stream produced no batches"
     return result
@@ -255,29 +255,27 @@ def run_stream_to_memory(
     stream_df: DataFrame, spark: SparkSession, table: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Drive any finite streaming frame to a memory sink and return it."""
-    q = (
+    drain(
+        spark,
         stream_df.writeStream.format("memory")
         .queryName(table)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination(120)
     return spark.table(table)
 
 
 def run_tumbling_demo(spark: SparkSession, sf_dir: str, table: str = "zds_stream_demo") -> DataFrame:
     """Execute the streaming pipeline to completion over the finite fixture
     and return the materialized result."""
-    q = (
+    drain(
+        spark,
         tumbling_counts(events_stream(spark, sf_dir))
         .writeStream.format("memory")
         .queryName(table)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination(120)
     return spark.table(table)
 
 
@@ -394,10 +392,9 @@ def run_stream_append(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
+    drain(
+        spark,
         stream_result.writeStream.foreachBatch(write_batch)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination(120)

@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from zonal_datacube_spark.streaming.drain import drain
+
 STATE_SCHEMA = StructType(
     [
         StructField("n", LongType()),
@@ -94,13 +96,12 @@ def run_stateful_demo(spark, sf_dir: str, table: str = "zds_stateful_demo") -> D
     profile (asserted equal to the batch aggregate in tests)."""
     from zonal_datacube_spark.streaming.demo import events_stream
 
-    q = (
+    drain(
+        spark,
         user_profiles(events_stream(spark, sf_dir))
         .writeStream.format("memory")
         .queryName(table)
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination(120)
     return spark.table(table)
