@@ -3,7 +3,6 @@
 The reference's per-tile analysis-function registry — user code applied to
 each raster tile — maps to Spark's Arrow-vectorized Python boundary:
 
-- ``pandas_udf`` scalar: element-wise kernels over Arrow batches;
 - ``pandas_udf`` GROUPED_AGG: custom per-zone aggregates;
 - ``applyInPandas``: whole-group kernels (the per-tile worker function).
 
@@ -21,14 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
-
-
-@pandas_udf(DoubleType())
-def cosine_to_unit_first_axis(v: pd.Series) -> pd.Series:
-    """Vectorized scalar kernel: cosine of each embedding against the unit
-    vector e1 (== first component for unit-norm inputs). Demonstrates the
-    Arrow array-of-float path."""
-    return v.map(lambda arr: float(arr[0]) if arr is not None and len(arr) else None)
 
 
 @pandas_udf(DoubleType())

@@ -27,6 +27,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
+# Built from jvm/NoForkLocalFileSystem.java by tools/build_jvm.py.
+JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "zds-jvm.jar")
+LOCAL_FS_CLASS = "zonal_datacube_spark.jvm.NoForkLocalFileSystem"
+
 # Per-PROCESS warehouse for managed tables (q_join_bucketed's bucketed
 # fixtures). A shared repo-root spark-warehouse made `pytest tests/` fail
 # under any concurrent session writing the same table dirs (VERDICT r11
@@ -77,6 +81,13 @@ def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -
         # path (pyspark.zip, py4j) only when the archive changed, instead
         # of before every task (worker_daemon's docstring has the cost).
         .config("spark.python.daemon.module", "zonal_datacube_spark.worker_daemon")
+        # file: paths go through a local filesystem that sets permissions
+        # with chmod(2) from the JVM; without libhadoop.so the stock one
+        # forks a chmod process for every file and dir it creates. In
+        # local[k] the executors run in the driver JVM, so the driver
+        # classpath is the only one.
+        .config("spark.driver.extraClassPath", JVM_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
         # no derby.system.home java option: extraJavaOptions set at
         # session-build time cannot reach an already-launched client-mode
         # driver JVM (ADVICE r12), and no Hive catalog is enabled — the
