@@ -85,7 +85,7 @@ def test_spearman_single_stacked_sweep(spark):
     moment fold's price-grain partial aggregate."""
     from zonal_datacube_spark.functions import grain_cache
 
-    grain_cache.clear_grain_cache()
+    grain_cache._GRAINS.clear()
     df = Q["q_stats_spearman"](spark, SF_SMOKE)
     plan = formatted_plan(df)
     assert "stack" not in plan, "rank sweep re-scans the fact table"

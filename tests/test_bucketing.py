@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
-from zonal_datacube_spark.sources.bucketing import bucketed_join, write_bucketed
+from zonal_datacube_spark.sources.bucketing import write_bucketed
 from zonal_datacube_spark.sources.loader import load_table
 
 
@@ -33,15 +33,16 @@ def bucketed_tables(spark):
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     lt, rt = bucketed_tables
-    joined = bucketed_join(spark, lt, rt, "o_orderkey", "l_orderkey")
+    left, right = spark.table(lt), spark.table(rt)
+    joined = left.join(right, left.o_orderkey == right.l_orderkey)
     plan = formatted_plan(joined)
     assert not re.findall(r"\+- Exchange", plan), "bucketed join still shuffles:\n" + plan[:2000]
 
 
 def test_bucketed_join_correct(spark, bucketed_tables):
     lt, rt = bucketed_tables
-    joined = bucketed_join(spark, lt, rt, "o_orderkey", "l_orderkey")
-    n = joined.count()
+    left, right = spark.table(lt), spark.table(rt)
+    n = left.join(right, left.o_orderkey == right.l_orderkey).count()
     orders = load_table(spark, SF_SMOKE, "orders")
     li = load_table(spark, SF_SMOKE, "lineitem")
     expected = orders.join(li, orders.o_orderkey == li.l_orderkey).count()

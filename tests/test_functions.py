@@ -7,12 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.functions.multimodal import (
-    decode_media_stats,
-    frame_sample_plan,
-    resize_stub,
-    synthetic_media,
-)
+from zonal_datacube_spark.functions.multimodal import decode_media_stats, synthetic_media
 from zonal_datacube_spark.functions.range_bucket import bucketed_range_join
 from zonal_datacube_spark.functions.udfs import per_group_zscore, zonal_trimmed_mean
 from zonal_datacube_spark.operators.zonal import assign_zones, zones_df
@@ -88,21 +83,6 @@ def test_multimodal_decode_batches(spark):
     again = {r.media_id: (r.mean_r, r.mean_g, r.mean_b) for r in decode_media_stats(media).collect()}
     for r in rows:
         assert again[r.media_id] == (r.mean_r, r.mean_g, r.mean_b)
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, 6)
-    frames = frame_sample_plan(media, every_n=50).collect()
-    # videos have 120 frames → sampled at 0, 50, 100
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    assert all(sorted(v) == [0, 50, 100] for v in by_media.values())
-
-
-def test_resize_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        resize_stub(b"x", 10, 10)
 
 
 def test_bucketed_range_join_equivalent(spark):

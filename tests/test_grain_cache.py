@@ -25,9 +25,9 @@ from zonal_datacube_spark.sources.loader import load_table
 
 @pytest.fixture(autouse=True)
 def _fresh_cache():
-    grain_cache.clear_grain_cache()
+    grain_cache._GRAINS.clear()
     yield
-    grain_cache.clear_grain_cache()
+    grain_cache._GRAINS.clear()
 
 
 def test_same_axis_is_cached_distinct_axes_are_not(spark):

@@ -1,10 +1,26 @@
-"""Distributed k-means: determinism, improvement over seeds, IVF fit."""
+"""k-means: determinism, improvement over seeds, the distributed referee."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.functions.kmeans import assign_cells, inertia, kmeans_fit
+from zonal_datacube_spark.functions.exact import dot
+from zonal_datacube_spark.functions.kmeans import assign_cells, kmeans_fit
 from zonal_datacube_spark.sources.loader import load_table
+
+
+def inertia(emb: DataFrame, centroids: DataFrame) -> float:
+    """Mean best-similarity (higher = tighter clustering, cosine world)."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell").asc())
+    best = (
+        emb.crossJoin(F.broadcast(centroids))
+        .withColumn("sim", dot("embedding", "centroid"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+    )
+    return best.agg(F.avg("sim")).collect()[0][0]
 
 
 def test_kmeans_improves_and_is_deterministic(spark):
@@ -16,6 +32,14 @@ def test_kmeans_improves_and_is_deterministic(spark):
     a = sorted((r.cell, tuple(round(v, 9) for v in r.centroid)) for r in fitted.collect())
     b = sorted((r.cell, tuple(round(v, 9) for v in r.centroid)) for r in again.collect())
     assert a == b  # deterministic
+
+
+def test_kmeans_always_returns_k_cells(spark):
+    """Empty cells keep their previous centroid instead of silently
+    vanishing (duplicate/collinear seeds make shrinkage likely)."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    for iters in (0, 1, 3):
+        assert kmeans_fit(emb, k=8, iters=iters).count() == 8
 
 
 def test_assignment_partitions_corpus(spark):

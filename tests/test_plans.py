@@ -6,16 +6,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zonal_datacube_spark.operators.joins import q_join_broadcast
-from zonal_datacube_spark.operators.scans import q_scan_filter_pushdown, q_scan_project
-from zonal_datacube_spark.operators.zonal import q_zonal_stats
-from zonal_datacube_spark.plans.diagnostics import (
+from tests.plan_checks import (
     assert_broadcast_join,
     assert_pushed_filter,
     assert_read_schema_pruned,
-    formatted_plan,
     plan_has,
 )
+from zonal_datacube_spark.operators.joins import q_join_broadcast
+from zonal_datacube_spark.operators.scans import q_scan_filter_pushdown, q_scan_project
+from zonal_datacube_spark.operators.zonal import q_zonal_stats
+from zonal_datacube_spark.plans.diagnostics import formatted_plan
 
 
 def test_filter_reaches_parquet(spark):

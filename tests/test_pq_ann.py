@@ -112,6 +112,22 @@ def test_pq_encode_takes_exactly_one_codebook(spark):
         pq_encode(emb)
 
 
+def test_pq_encode_rejects_a_codebook_hole_before_any_job(spark):
+    """A ``codebook_rows`` grid missing one (sub, code) cell raises a
+    ValueError naming the cell (not an assert that ``python -O`` strips),
+    and it does so before the encode resolves ``dim`` with a job."""
+    import pytest
+
+    rows = {(s, c): [0.1 * c, 0.2 * s] for s in range(2) for c in range(3)}
+    del rows[(1, 1)]
+    emb = spark.range(4).selectExpr("id AS vec_id", "array(1.0D, 2.0D) AS embedding")
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    with pytest.raises(ValueError, match=r"\(1, 1\)"):
+        pq_encode(emb, m=2, codebook_rows=rows)
+    assert tracker.getJobIdsForGroup(None) == before
+
+
 def test_pq_encode_kernel_matches_join_formulation(spark):
     """r11: pq_encode became a map-only numpy kernel (the faiss encode
     arrangement); the retired explode→join→collect_list form stays as

@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 
 from tests.conftest import SF_SMOKE
+from tests.plan_checks import plan_has
 from zonal_datacube_spark.operators.reports import (
     Q18_QTY_THRESHOLD,
     q_report_big_orders,
@@ -16,7 +17,7 @@ from zonal_datacube_spark.operators.reports import (
     q_report_returned_items,
     q_report_shipping_priority,
 )
-from zonal_datacube_spark.plans.diagnostics import formatted_plan, plan_has
+from zonal_datacube_spark.plans.diagnostics import formatted_plan
 
 
 def test_shipping_priority_topk_and_broadcast(spark):

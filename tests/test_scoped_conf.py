@@ -4,7 +4,7 @@ Pins: (1) the conf is restored when the block raises, and a nested scope
 restores the outer scope's value; (2) a key unset before the scope is
 unset again after it; (3) a second thread cannot open a scope on the
 SparkContext while another thread's scope is open; (4) no package module
-other than session.py and sources/loader.py sets session conf itself."""
+other than session.py sets session conf itself."""
 
 from __future__ import annotations
 
@@ -67,7 +67,7 @@ def test_scope_from_a_second_thread_raises(spark):
 
 
 def test_only_session_and_loader_set_session_conf():
-    allowed = {"session.py", os.path.join("sources", "loader.py")}
+    allowed = {"session.py"}
     offences = []
     for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
         rel = os.path.relpath(path, PACKAGE)

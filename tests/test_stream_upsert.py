@@ -3,8 +3,11 @@ and versioned-state idempotence under multi-batch + retry sequences."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 from zonal_datacube_spark.operators.streaming_batch import q_stream_tumbling
+from zonal_datacube_spark.streaming import demo
 from zonal_datacube_spark.streaming.demo import (
     events_stream,
     read_versioned_state,
@@ -27,6 +30,21 @@ def test_stream_upsert_matches_batch(spark, tmp_path):
         keys=["bucket_start", "event_type"],
     )
     assert _rows(final) == _rows(q_stream_tumbling(spark, SF_SMOKE))
+
+
+def test_stream_upsert_with_no_batch_raises(spark, tmp_path, monkeypatch):
+    """A run that lands no state version raises (not an assert that
+    ``python -O`` strips, which would return None as the state table)."""
+    monkeypatch.setattr(demo, "drain", lambda spark, writer: None)
+    state_dir = tmp_path / "state_empty"
+    state_dir.mkdir()
+    with pytest.raises(RuntimeError, match="no batches"):
+        run_stream_upsert(
+            tumbling_counts(events_stream(spark, SF_SMOKE)),
+            spark,
+            str(state_dir),
+            keys=["bucket_start", "event_type"],
+        )
 
 
 def test_versioned_state_multi_batch_and_retry(spark, tmp_path):

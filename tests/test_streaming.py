@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 from tests.conftest import SF_SMOKE
+from tests.stream_twins import run_stream_to_memory
 from zonal_datacube_spark.operators.streaming_batch import q_stream_tumbling
-from zonal_datacube_spark.streaming.demo import run_tumbling_demo
+from zonal_datacube_spark.streaming.demo import events_stream, tumbling_counts
 
 
 def _key(rows):
@@ -12,7 +13,9 @@ def _key(rows):
 
 
 def test_stream_equals_batch_tumbling(spark):
-    stream_rows = run_tumbling_demo(spark, SF_SMOKE).collect()
+    stream_rows = run_stream_to_memory(
+        tumbling_counts(events_stream(spark, SF_SMOKE)), spark, "zds_stream_demo"
+    ).collect()
     batch_rows = q_stream_tumbling(spark, SF_SMOKE).collect()
     assert len(stream_rows) > 0
     assert _key(stream_rows) == _key(batch_rows)

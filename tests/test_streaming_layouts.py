@@ -20,13 +20,10 @@ import shutil
 import pytest
 
 from tests.conftest import SF_SMOKE
+from tests.stream_twins import run_stream_to_memory
 from zonal_datacube_spark.operators.streaming_batch import q_stream_tumbling
 from zonal_datacube_spark.sources.loader import load_table
-from zonal_datacube_spark.streaming.demo import (
-    events_stream,
-    run_stream_to_memory,
-    tumbling_counts,
-)
+from zonal_datacube_spark.streaming.demo import events_stream, tumbling_counts
 
 
 @pytest.fixture(scope="module")

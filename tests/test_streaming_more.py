@@ -5,14 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from tests.stream_twins import dedup_stream, run_stream_to_memory, sliding_counts
 from zonal_datacube_spark.operators.streaming_batch import q_stream_sliding
 from zonal_datacube_spark.sources.loader import load_table
-from zonal_datacube_spark.streaming.demo import (
-    dedup_stream,
-    events_stream,
-    run_stream_to_memory,
-    sliding_counts,
-)
+from zonal_datacube_spark.streaming.demo import events_stream
 
 
 def test_stream_sliding_equals_batch(spark):

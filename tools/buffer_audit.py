@@ -15,8 +15,9 @@ be inside a BOUNDED window frame (ROWS BETWEEN -N AND M — at most
 N+M+1 elements per buffer) or appear on the whitelist below with the
 bound spelled out.
 
-Exit 0 iff no unexplained buffering aggregate exists. Run time
-~5-8 min (one plan per key at sf0.001).
+Exit 0 iff no unexplained buffering aggregate exists and every
+whitelist entry waived at least one hit. Run time ~5-8 min (one plan
+per key at sf0.001).
 
 Usage: python tools/buffer_audit.py [sf_dir]
 """
@@ -53,7 +54,8 @@ DENSE_IDX_ORDER = re.compile(r"\bidx#\d+L? ASC")
 
 # groupBy-side buffering aggregates whose element count is bounded by a
 # DIMENSION, not by the fact stream — each entry names the bound; a key
-# hitting BUFFER_FNS outside a bounded frame and absent here FLAGS.
+# hitting BUFFER_FNS outside a bounded frame and absent here FLAGS, and
+# an entry that waives no hit in the run FLAGS too (stale waiver).
 BOUNDED_GROUPS = {
     "q_cohort_retention": (
         "collect_set(week) per user: bounded by the CALENDAR span "
@@ -68,14 +70,6 @@ BOUNDED_GROUPS = {
         "collect_set(o_orderpriority) per group: the 5-value priority "
         "enum (aggregations.py:411)"
     ),
-    "q_sim_pq_ann": (
-        "collect_list((sub, code)) per vector: one element per PQ "
-        "subspace (M=8, functions/pq.py:299)"
-    ),
-    "q_sim_opq_eval": (
-        "collect_list((sub, code)) per vector: one element per PQ "
-        "subspace (M=8, functions/pq.py:299)"
-    ),
     "q_zonal_polygon": (
         "sort_array(collect_list(c)) per (zone, row): the ray crossings "
         "of one polygon with one row, at most that zone's edge count -- "
@@ -88,10 +82,6 @@ BOUNDED_GROUPS = {
         "a vector-side size that does not grow with points "
         "(geometry.py:points_in_polygons)"
     ),
-    "q_sim_ivfpq": (
-        "collect_list((sub, code)) / ((pos, m)) per vector: one element "
-        "per subspace (functions/pq.py:299, ivf_ann.py:33)"
-    ),
 }
 
 
@@ -101,6 +91,7 @@ def main() -> int:
     flagged: list[tuple[str, str]] = []
     waived_frames = 0
     waived_groups = 0
+    used: set[str] = set()
     for key, fn in sorted(all_queries().items()):
         try:
             plan = formatted_plan(fn(spark, sf_dir))
@@ -129,6 +120,7 @@ def main() -> int:
                 continue
             if key in BOUNDED_GROUPS:
                 waived_groups += 1
+                used.add(key)
                 continue
             unexplained.append(line.strip()[:140])
         for line in unexplained:
@@ -141,7 +133,10 @@ def main() -> int:
     )
     for key, line in flagged:
         print(f"[FLAG] {key}: {line}")
-    return 1 if flagged else 0
+    unused = sorted(set(BOUNDED_GROUPS) - used)
+    for key in unused:
+        print(f"[FLAG] {key}: whitelisted, but no buffering aggregate was waived")
+    return 1 if flagged or unused else 0
 
 
 if __name__ == "__main__":

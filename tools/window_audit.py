@@ -19,8 +19,9 @@ whose expressions contain parentheses, ADVICE r08):
   NO_PARTITION_BOUNDED whitelist, which names the bounded intermediate
   each such window runs over.
 
-Exit 0 iff no unexplained window exists. Run time ~5-8 min (one plan
-per key at sf0.001).
+Exit 0 iff no unexplained window exists and every whitelist entry
+waived at least one window (an entry that waives nothing is stale).
+Run time ~5-8 min (one plan per key at sf0.001).
 
 Usage: python tools/window_audit.py [sf_dir]
 """
@@ -100,6 +101,7 @@ def main() -> int:
     flagged: list[tuple[str, str]] = []
     waived_enum = 0
     waived_np = 0
+    used: set[str] = set()
     for key, fn in sorted(all_queries().items()):
         try:
             plan = formatted_plan(fn(spark, sf_dir))
@@ -114,12 +116,14 @@ def main() -> int:
                 # one-reducer window: bounded-input whitelist or flag
                 if key in NO_PARTITION_BOUNDED:
                     waived_np += 1
+                    used.add(key)
                     continue
                 flagged.append((key, "NO-PARTITION: " + spec[:130]))
                 continue
             if ENUM_COLS.search(" ".join(parts)) and DATA_ORDER.search(spec):
                 if key in GRAIN_BOUNDED:
                     waived_enum += 1
+                    used.add(key)
                     continue
                 flagged.append((key, spec[:140]))
     print(
@@ -130,7 +134,10 @@ def main() -> int:
     )
     for key, spec in flagged:
         print(f"[FLAG] {key}: {spec}")
-    return 1 if flagged else 0
+    unused = sorted((set(GRAIN_BOUNDED) | set(NO_PARTITION_BOUNDED)) - used)
+    for key in unused:
+        print(f"[FLAG] {key}: whitelisted, but no window was waived")
+    return 1 if flagged or unused else 0
 
 
 if __name__ == "__main__":

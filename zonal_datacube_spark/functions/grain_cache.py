@@ -178,8 +178,3 @@ def table_swept_grain(
         return swept
 
     return _GRAINS.get_or_build(spark, key, build)
-
-
-def clear_grain_cache() -> None:
-    """Unpersist and drop every cached grain (test hook)."""
-    _GRAINS.clear()

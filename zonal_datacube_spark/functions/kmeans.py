@@ -1,5 +1,5 @@
 """k-means (Lloyd) over embedding arrays — fits the IVF coarse quantizer
-when no label/cluster column exists (pairs with functions/ivf_ann.py).
+when no label/cluster column exists (the cells of ``pq.ivf_pq_ann``).
 
 Two formulations, one spec:
 - ``kmeans_fit`` (default): driver-side numpy Lloyd over a bounded
@@ -7,8 +7,8 @@ Two formulations, one spec:
   the coarse quantizer is control-plane-sized and production ANN tiers
   train it from a sample while the cluster does the data-scaled work.
 - ``kmeans_fit_distributed``: ONE job + ONE shuffle per iteration,
-  O(k·dim) driver traffic — the full-corpus path, and the differential
-  referee for the sample fit (tests/test_kmeans.py).
+  O(k·dim) driver traffic — the differential referee for the sample fit
+  (tests/test_kmeans.py).
 
 ``assign_cells`` (the data-scaled corpus assignment) is always
 distributed.
@@ -19,7 +19,7 @@ assignment break on the lower cell id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.exact import dot
@@ -156,10 +156,8 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
 
 def kmeans_fit_distributed(emb: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
     """The distributed Lloyd formulation — ONE job and ONE shuffle per
-    iteration, O(k·dim) driver traffic — kept as the full-corpus
-    training path for callers whose quantizer genuinely needs more than
-    a ``KMEANS_TRAIN_CAP`` sample, and as the differential referee for
-    the driver-side ``kmeans_fit`` (tests/test_kmeans.py pins the two
+    iteration, O(k·dim) driver traffic — kept as the differential referee
+    for the driver-side ``kmeans_fit`` (tests/test_kmeans.py pins the two
     equal on the fixture, where the sample IS the corpus)."""
     spark = emb.sparkSession
     current = [
@@ -211,15 +209,3 @@ def kmeans_fit_distributed(emb: DataFrame, k: int = 8, iters: int = 3) -> DataFr
         updated = {r.cell: list(r.centroid) for r in new_rows}
         current = [(c, updated.get(c, vec)) for c, vec in current]
     return _centroids_to_rows(spark, current)
-
-
-def inertia(emb: DataFrame, centroids: DataFrame) -> float:
-    """Mean best-similarity (higher = tighter clustering, cosine world)."""
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell").asc())
-    best = (
-        emb.crossJoin(F.broadcast(centroids))
-        .withColumn("sim", dot("embedding", "centroid"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    return best.agg(F.avg("sim")).collect()[0][0]

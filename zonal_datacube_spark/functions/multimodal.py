@@ -1,8 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
-The container has no image/audio codecs, so the *decode* kernels are
-deliberately stubbed (deterministic fake or NotImplementedError) — what is
-real and tested is everything Spark-side:
+The container has no image/audio codecs, so the *decode* kernel is a
+deterministic fake — what is real and tested is everything Spark-side:
 
 - schema: ``binary`` payload + typed metadata struct;
 - partition-safe batch iteration via ``mapInPandas`` (one Arrow batch in,
@@ -24,7 +23,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id BIGINT, kind STRING, payload BINARY, "
@@ -82,24 +80,3 @@ def decode_media_stats(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, DECODE_OUT_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: exposes which frames a decoder would
-    extract (metadata-only arithmetic, JVM-side). The decode itself is the
-    stubbed boundary above."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n))).alias(
-                "frame_idx"
-            ),
-        )
-    )
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """STUB: real image resize requires a codec not present in this
-    container."""
-    raise NotImplementedError("image resize requires PIL/cv2 — not available here")

@@ -255,9 +255,6 @@ def pq_encode(
 
     if (codebook is None) == (codebook_rows is None):
         raise ValueError("pass exactly one of codebook or codebook_rows")
-    if dim is None:
-        dim = len(emb.select("embedding").first()[0])
-    d = dim // m
     if codebook_rows is not None:
         entries = [(s, c, v) for (s, c), v in codebook_rows.items()]
     else:
@@ -267,7 +264,16 @@ def pq_encode(
     cb_list = [[None] * ksub_eff for _ in range(m)]
     for s, c, v in entries:
         cb_list[s][c] = [float(x) for x in v]
-    assert all(all(c is not None for c in sub) for sub in cb_list)
+    # explicit raise, not assert: a hole in the grid must fail under
+    # python -O too, not reach the kernel as a None centroid
+    missing = [
+        (s, c) for s in range(m) for c in range(ksub_eff) if cb_list[s][c] is None
+    ]
+    if missing:
+        raise ValueError(f"codebook has no centroid for (sub, code) {missing[0]}")
+    if dim is None:
+        dim = len(emb.select("embedding").first()[0])
+    d = dim // m
 
     def encode_batches(batches):
         cb = np.array(cb_list, dtype=np.float64)  # m × ksub × d
@@ -290,8 +296,8 @@ def pq_encode_joins(
     emb: DataFrame, codebook: DataFrame, m: int = PQ_M, dim: int | None = None
 ) -> DataFrame:
     """The pure-JVM encode formulation (explode → broadcast join →
-    min-struct → collect_list) — kept as the Arrow-free fallback and as
-    the differential referee for the kernel ``pq_encode``."""
+    min-struct → collect_list) — kept as the differential referee for the
+    kernel ``pq_encode``."""
     if dim is None:
         dim = len(emb.select("embedding").first()[0])
     assigned = _assign(_subvectors(emb, m, dim), codebook, dim // m)
@@ -485,8 +491,8 @@ def pq_ann(
     shortlist of ``refine·k`` per probe → exact re-rank of the shortlist
     against the raw vectors (the standard PQ refinement: the expensive
     exact dot runs on refine·k rows per probe, not the corpus). Composing
-    with IVF cell pruning (ivf_ann_quantized) bounds the ADC-scored set
-    at scale.
+    with IVF cell pruning (``ivf_pq_ann``) bounds the ADC-scored set at
+    scale.
 
     ``train_mod`` > 1 trains codebooks on the deterministic 1/train_mod
     slice ``vec_id % train_mod == 0`` — codebooks need ~100·K points per

@@ -55,8 +55,8 @@ FRAME_EVERY_N = 30
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plan over fixture-derived metadata: treat each
     document as a video of ``n_chars % 300 + 30`` frames and emit every
-    30th frame index — the metadata-only arithmetic a decoder consumes
-    (functions/multimodal.py frame_sample_plan), JVM-side sequence+explode.
+    30th frame index — the metadata-only arithmetic a decoder consumes,
+    JVM-side sequence+explode.
     Unlike the decode kernel this is fully relational, so it carries a real
     oracle: frame selection at 100 TB must be plan-side (which byte ranges
     to fetch), never decode-side (fetch everything, drop most)."""

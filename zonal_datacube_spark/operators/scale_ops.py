@@ -37,8 +37,7 @@ from zonal_datacube_spark.sources.derived import corpus_tag, layout
 from zonal_datacube_spark.sources.loader import load_orc, load_table
 from zonal_datacube_spark.sources.sinks import write_orc
 
-SAMPLE_BUCKETS = 256
-SAMPLE_KEEP = 51  # ~20% Bernoulli
+SAMPLE_KEEP = 51  # of 256 md5 buckets: ~20% Bernoulli
 STRATIFIED_FRACTION = 0.1
 
 

@@ -132,28 +132,6 @@ def q_set_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGE_SIZE = 20
 
 
-def keyset_page_after(
-    orders: DataFrame, last_price, last_key, page_size: int = PAGE_SIZE
-) -> DataFrame:
-    """API-edge keyset fetch: the page after cursor (last_price, last_key)
-    under ORDER BY price DESC, o_orderkey ASC. The cursor is CLIENT state —
-    the caller collects the previous page (O(page) rows) and passes the
-    last row's keys in; the engine never materializes more than one page.
-    The predicate is a sargable row-comparison parquet row-group stats can
-    skip on."""
-    return (
-        orders.filter(
-            (F.col("price") < F.lit(last_price))
-            | (
-                (F.col("price") == F.lit(last_price))
-                & (F.col("o_orderkey") > F.lit(last_key))
-            )
-        )
-        .orderBy(F.col("price").desc(), F.col("o_orderkey").asc())
-        .limit(page_size)
-    )
-
-
 def q_sort_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyset (seek) pagination — the scale-safe replacement for
     OFFSET/LIMIT: page N is fetched with WHERE key > last_seen ORDER BY
@@ -167,8 +145,9 @@ def q_sort_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back as a cross join, so no driver round-trip happens at
     declaration time and short/empty inputs degrade to an empty page
     (the null cursor predicate matches nothing) instead of IndexError.
-    The client-cursor protocol itself (collect at the API edge, pass the
-    seek key back in) is `keyset_page_after` above."""
+    An API edge runs the same seek with a client-held cursor: it collects
+    one page and passes that page's last (price, key) back as literals
+    in the same predicate."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.round("o_totalprice", 2).alias("price")
     )

@@ -649,7 +649,6 @@ def q_text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jensen–Shannon divergence between language distributions
 # --------------------------------------------------------------------------
 
-JS_LANGS = ("en", "de", "fr", "es", "zh")
 _JS_GRID = 1_000_000_000  # 1e-9 grid for per-term contributions
 
 

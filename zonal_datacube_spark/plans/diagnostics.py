@@ -1,9 +1,12 @@
-"""Physical-plan diagnostics: assert the plan we designed is the plan we
-got (SURVEY.md §4.2 — 'verify with explain during development').
+"""Physical-plan diagnostics: read the plan we got back, so it can be
+checked against the plan we designed (SURVEY.md §4.2 — 'verify with
+explain during development').
 
-Used by tests/test_plans.py to lock in the scale-critical properties:
-filters reach the parquet scan, projections prune ReadSchema, dim joins
-broadcast, hot paths stay inside WholeStageCodegen.
+``formatted_plan`` feeds the scale audits and the plan tools;
+``window_specs``/``partition_args`` parse window partitioning for
+tools/window_audit.py; ``unobserved_sort`` is the parity gate's
+unread-sort check (compare.py). The plan-shape assertions the tests make
+live in tests/plan_checks.py.
 """
 
 from __future__ import annotations
@@ -87,35 +90,3 @@ def unobserved_sort(df: DataFrame) -> bool:
     while node.nodeName() in ("Project", "SubqueryAlias"):
         node = node.child()
     return node.nodeName() == "Sort" and bool(getattr(node, "global")())
-
-
-def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
-    plan = formatted_plan(df)
-    return {n: (n in plan) for n in needles}
-
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    plan = formatted_plan(df)
-    assert "PushedFilters" in plan, "no PushedFilters section in scan node"
-    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
-    assert any(fragment in line for line in pushed), (
-        f"filter fragment {fragment!r} not pushed; pushed lines: {pushed}"
-    )
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = formatted_plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, (
-        "expected a broadcast join in:\n" + plan[:4000]
-    )
-
-
-def assert_read_schema_pruned(df: DataFrame, max_cols: int) -> None:
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "ReadSchema" in line:
-            schema_part = line.split("ReadSchema:", 1)[1]
-            n = schema_part.count(":")
-            assert n <= max_cols, f"ReadSchema has {n} cols (> {max_cols}): {line.strip()}"
-            return
-    raise AssertionError("no ReadSchema in plan")

@@ -51,6 +51,40 @@ def _warehouse_dir() -> str:
     return _WAREHOUSE_DIR
 
 
+# Confs the engine depends on for oracle parity. get_spark builds them in;
+# ensure_session_confs sets them idempotently at load time because the
+# harness may hand us a session it built itself:
+# - UTC session TZ + NTZ inference → tz-naive fixture timestamps read as the
+#   same wall time DuckDB sees (FIXTURES.md parity rules);
+# - nanosAsLong → events.ts is TIMESTAMP(NANOS) parquet, which Spark 4
+#   refuses natively; we read raw int64 nanos and rebuild a TIMESTAMP_NTZ.
+_SESSION_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+# Sessions whose confs were already pinned — every conf.get/.set is a
+# py4j round trip, and ensure_session_confs runs on EVERY table load
+# (r13, guide §1.2 per-task work: ~3 driver round trips × several loads
+# × 345 bench keys was pure fixed overhead). Nothing on a declared path
+# unsets these confs after pinning: every mid-session conf change goes
+# through scoped_conf (shuffle partitions, AQE, no-data micro-batches),
+# none of them in this set.
+_CONFS_PINNED: set[str] = set()
+
+
+def ensure_session_confs(spark: SparkSession) -> None:
+    app = spark.sparkContext.applicationId
+    if app in _CONFS_PINNED:
+        return
+    for k, v in _SESSION_CONFS.items():
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
+    _CONFS_PINNED.add(app)
+
+
 def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     master = f"local[{cpus or DEFAULT_CPUS}]"
@@ -62,11 +96,9 @@ def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        .config(map=_SESSION_CONFS)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Whole-stage-codegen compile cache (r13, guide §1.2 per-task
         # work): the default 100-entry cache cannot hold one pass of a
         # 345-query suite (~5+ generated classes per query), so EVERY

@@ -13,7 +13,7 @@ the partitioning once, amortize it across every downstream analysis.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -28,13 +28,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(key)
     writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, left_key: str, right_key: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket keys — plans with zero
-    Exchange nodes when bucket counts match."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, left[left_key] == right[right_key])

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from zonal_datacube_spark.session import ensure_session_confs
 from zonal_datacube_spark.sources.derived import DerivedCache, corpus_key
 
 TABLES = (
@@ -27,39 +28,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# Confs the engine depends on for oracle parity, set idempotently at load
-# time because the harness may hand us a session it built itself:
-# - UTC session TZ + NTZ inference → tz-naive fixture timestamps read as the
-#   same wall time DuckDB sees (FIXTURES.md parity rules);
-# - nanosAsLong → events.ts is TIMESTAMP(NANOS) parquet, which Spark 4
-#   refuses natively; we read raw int64 nanos and rebuild a TIMESTAMP_NTZ.
-_SESSION_CONFS = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-}
-
-
-# Sessions whose confs were already pinned — every conf.get/.set is a
-# py4j round trip, and ensure_session_confs runs on EVERY table load
-# (r13, guide §1.2 per-task work: ~3 driver round trips × several loads
-# × 345 bench keys was pure fixed overhead). Nothing on a declared path
-# unsets these confs after pinning: every mid-session conf change goes
-# through session.scoped_conf (shuffle partitions, AQE, no-data
-# micro-batches, the RocksDB state store), none of them in this set.
-_CONFS_PINNED: set[str] = set()
-
-
-def ensure_session_confs(spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    if app in _CONFS_PINNED:
-        return
-    for k, v in _SESSION_CONFS.items():
-        if spark.conf.get(k, None) != v:
-            spark.conf.set(k, v)
-    _CONFS_PINNED.add(app)
 
 
 # Memo of the lazy table DataFrames. This caches the RELATION — file

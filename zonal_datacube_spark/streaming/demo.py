@@ -1,8 +1,10 @@
 """True Structured Streaming pipeline over the events fixture.
 
 The batch-emulated queries in ``operators/streaming_batch.py`` are the
-oracle-checked surface; this module is the genuine ``readStream`` pipeline
-for the tumbling case, asserted batch≡stream in tests/test_streaming.py.
+oracle-checked surface; this module holds the genuine ``readStream``
+pipelines and sinks the stream keys run. tests/test_streaming.py asserts
+the tumbling pipeline batch≡stream; the tests' other stream twins and their
+memory-sink runner are in tests/stream_twins.py.
 
 Design:
 - file source (parquet) with an explicit schema — a streaming source cannot
@@ -12,8 +14,8 @@ Design:
 - event-time watermark bounds state: windows older than the watermark are
   finalized and their state evicted — this is what makes the aggregation
   runnable over an unbounded stream;
-- ``Trigger.AvailableNow`` + complete-mode memory sink makes the finite
-  fixture run deterministic for the equivalence test.
+- ``Trigger.AvailableNow`` drains the finite fixture and stops, so every
+  run over it is deterministic.
 
 At scale the same plan runs on a Kafka/file-stream source with
 ``outputMode("update")`` and a real sink; nothing in the transformation
@@ -28,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
-from zonal_datacube_spark.sources.loader import ensure_session_confs
+from zonal_datacube_spark.session import ensure_session_confs
 from zonal_datacube_spark.streaming.drain import drain
 
 
@@ -106,35 +108,6 @@ def tumbling_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
             "sum_value",
         )
     )
-
-
-def sliding_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """1-day windows sliding 6h — streaming twin of q_stream_sliding."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day", "6 hours").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def dedup_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming dedup on (user_id, minute) within the watermark horizon —
-    the true-streaming twin of q_stream_dedup's semantics (state for keys
-    older than the watermark is evicted, bounding the store)."""
-    keyed = stream.select(
-        "user_id",
-        F.date_trunc("minute", "ts").alias("minute_ts"),
-        "event_id",
-    ).withWatermark("minute_ts", watermark)
-    return keyed.dropDuplicatesWithinWatermark(["user_id", "minute_ts"])
 
 
 def run_stream_foreach_batch(
@@ -247,36 +220,11 @@ def run_stream_upsert(
         w = w.option("checkpointLocation", checkpoint)
     drain(spark, w)
     result = read_versioned_state(spark, state_dir)
-    assert result is not None, "stream produced no batches"
+    if result is None:
+        # explicit raise, not assert: under python -O an empty run would
+        # otherwise hand the caller None as if it were the state table
+        raise RuntimeError(f"stream produced no batches under {state_dir!r}")
     return result
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, spark: SparkSession, table: str, output_mode: str = "complete"
-) -> DataFrame:
-    """Drive any finite streaming frame to a memory sink and return it."""
-    drain(
-        spark,
-        stream_df.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(output_mode)
-        .trigger(availableNow=True),
-    )
-    return spark.table(table)
-
-
-def run_tumbling_demo(spark: SparkSession, sf_dir: str, table: str = "zds_stream_demo") -> DataFrame:
-    """Execute the streaming pipeline to completion over the finite fixture
-    and return the materialized result."""
-    drain(
-        spark,
-        tumbling_counts(events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-    )
-    return spark.table(table)
 
 
 def enriched_segment_counts(stream: DataFrame, customer: DataFrame) -> DataFrame:
