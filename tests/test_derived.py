@@ -5,14 +5,18 @@ the same time both read the complete copy and leave no temp copy behind;
 (2) a failed build leaves nothing at the final path; (3) the in-process
 cache caps, evicts with unpersist, counts, keys on the applicationId,
 re-persists a hit whose storage was cleared and builds a key once under
-concurrent callers; (4) no other package module decides how derived
-state is identified, built, checked or evicted."""
+concurrent callers; (4) relations are read once per content stamp: a
+warm layout key starts no job, ``read_layout`` sees a layout rewritten
+in place and raises on a deleted one; (5) no other package module
+decides how derived state is identified, built, checked or evicted, and
+every layout read goes through ``read_layout``."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import shutil
 import subprocess
 import sys
 import threading
@@ -23,8 +27,10 @@ import pytest
 from pyspark.storagelevel import StorageLevel
 
 from tests.conftest import SF_SMOKE
+from zonal_datacube_spark.registry import all_queries
 from zonal_datacube_spark.sources import derived
 from zonal_datacube_spark.sources.derived import DerivedCache
+from zonal_datacube_spark.sources.loader import read_layout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(REPO, "zonal_datacube_spark")
@@ -190,6 +196,42 @@ def test_concurrent_callers_build_each_key_once():
     assert cache.stats["hits"] == n_threads * rounds - n_keys
 
 
+# --- relations: resolved once per content stamp -----------------------------
+
+
+def test_warm_mv_rewrite_starts_no_job(spark):
+    """The MV layout's relation is memoized: a warm q_mv_rewrite build
+    runs no schema-inference job before it returns."""
+    key = all_queries()["q_mv_rewrite"]
+    key(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    sc.setJobGroup("zds-mv-warm", "warm build")
+    try:
+        key(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("zds-mv-warm") == []
+
+
+def test_read_layout_sees_a_rewrite_in_place(spark, tmp_path):
+    path = str(tmp_path / "layout")
+    spark.range(3).write.parquet(path)
+    assert read_layout(spark, path).count() == 3
+    assert read_layout(spark, path) is read_layout(spark, path)
+    spark.range(5).write.mode("overwrite").parquet(path)
+    assert read_layout(spark, path).count() == 5
+
+
+def test_read_layout_of_a_deleted_layout_raises(spark, tmp_path):
+    path = str(tmp_path / "layout")
+    spark.range(3).write.parquet(path)
+    assert read_layout(spark, path).count() == 3
+    shutil.rmtree(path)
+    with pytest.raises(FileNotFoundError):
+        read_layout(spark, path)
+
+
 # --- guard: derived state is decided in ONE module ------------------------
 
 # Module-level mappings that hold something other than derived state.
@@ -253,4 +295,67 @@ def test_only_the_derived_module_decides_derived_state():
         for node in ast.walk(ast.parse(src)):
             if isinstance(node, ast.Constant) and str(node.value).startswith("/tmp"):
                 offences.append(f"{rel}:{node.lineno}: literal /tmp root")
+    assert offences == []
+
+
+def _layout_path_functions(trees) -> set[str]:
+    """Names of the package functions that return ``layout(...)``."""
+    names = set()
+    for tree in trees:
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Return)
+                    and isinstance(node.value, ast.Call)
+                    and _called_name(node.value) == "layout"
+                ):
+                    names.add(fn.name)
+    return names
+
+
+def _called_name(call: ast.Call) -> str | None:
+    func = call.func
+    return func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+
+
+def _reader_chain(call: ast.Call) -> list[str] | None:
+    """The attribute names of a ``<x>.read....<fmt>(...)`` call chain,
+    outermost first, or None when the chain is not rooted at ``.read``."""
+    names, node = [], call.func
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            if node.attr == "read":
+                return names
+            node = node.value
+        else:
+            return None
+
+
+def test_layout_reads_go_through_read_layout():
+    """A layout read with ``spark.read`` infers its schema again on every
+    call; ``loader.read_layout`` resolves it once per content stamp. A
+    chain that declares ``.schema(...)`` infers nothing and is allowed."""
+    trees = {
+        path: ast.parse(open(path).read())
+        for path in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
+    }
+    layout_fns = _layout_path_functions(trees.values())
+    assert "daily_events_mv_path" in layout_fns  # the scan sees the builders
+    offences = []
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            chain = _reader_chain(node)
+            if chain is None or "schema" in chain:
+                continue
+            for arg in [*node.args, *(k.value for k in node.keywords)]:
+                if isinstance(arg, ast.Call) and _called_name(arg) in layout_fns:
+                    rel = os.path.relpath(path, PACKAGE)
+                    offences.append(f"{rel}:{node.lineno}: {_called_name(arg)}")
     assert offences == []

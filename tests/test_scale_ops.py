@@ -15,7 +15,7 @@ from zonal_datacube_spark.operators.scale_ops import (
     q_sample_hash,
     q_sample_stratified,
 )
-from zonal_datacube_spark.sources.loader import load_orc, load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 from zonal_datacube_spark.sources.sinks import write_orc
 
 
@@ -144,7 +144,7 @@ def test_orc_roundtrip_row_fidelity(spark, tmp_path):
     orders = load_table(spark, SF_SMOKE, "orders")
     path = str(tmp_path / "orders_orc")
     write_orc(orders, path)
-    back = load_orc(spark, path)
+    back = read_layout(spark, path, "orc")
     assert back.schema == orders.schema
     key = lambda r: r.o_orderkey  # noqa: E731
     assert sorted(back.collect(), key=key) == sorted(orders.collect(), key=key)

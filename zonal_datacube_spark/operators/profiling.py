@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.sources.derived import layout
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 
 PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
@@ -81,13 +81,11 @@ def evolved_orders_path(spark: SparkSession, sf_dir: str) -> str:
 def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mergeSchema read across the two generations: pre-evolution rows
     surface the new column as NULL; the aggregate coalesces them into an
-    explicit '<pre-schema>' bucket. mergeSchema costs a footer merge at
-    planning time — at 100 TB pin the merged schema in a catalog instead,
-    but reads must still null-fill old files exactly like this."""
-    df = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(evolved_orders_path(spark, sf_dir))
-    )
+    explicit '<pre-schema>' bucket. mergeSchema costs a footer merge over
+    every file, paid once per layout stamp (``read_layout``) — at 100 TB
+    pin the merged schema in a catalog instead, but reads must still
+    null-fill old files exactly like this."""
+    df = read_layout(spark, evolved_orders_path(spark, sf_dir), mergeSchema="true")
     return (
         df.groupBy(
             F.coalesce("o_orderpriority", F.lit("<pre-schema>")).alias("priority"),

@@ -34,7 +34,7 @@ from zonal_datacube_spark.functions.exact import micro_mean, micro_units, revenu
 from zonal_datacube_spark.functions.merge import upsert
 from zonal_datacube_spark.functions.salting import salted_join, salted_zonal_stats
 from zonal_datacube_spark.sources.derived import corpus_tag, layout
-from zonal_datacube_spark.sources.loader import load_orc, load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 from zonal_datacube_spark.sources.sinks import write_orc
 
 SAMPLE_KEEP = 51  # of 256 md5 buckets: ~20% Bernoulli
@@ -183,7 +183,7 @@ def q_source_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs the same band over the raw parquet — hash-equality
     proves the Morton rewrite is content-preserving while the layout prunes
     files on either filter dimension."""
-    ev = spark.read.parquet(zorder_events_path(spark, sf_dir))
+    ev = read_layout(spark, zorder_events_path(spark, sf_dir))
     return (
         ev.filter(F.col("value").between(50, 100))
         .groupBy("event_type")
@@ -198,7 +198,7 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over the ORC copy of orders; the oracle aggregates the
     parquet original — a hash-equal result proves the ORC write/read path
     is lossless for int/double/string/timestamp columns."""
-    orders = load_orc(spark, orc_orders_path(spark, sf_dir))
+    orders = read_layout(spark, orc_orders_path(spark, sf_dir), "orc")
     return orders.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("sum_total"),

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
-from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table
+from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table, read_layout
 from zonal_datacube_spark.sources.sinks import write_csv, write_json, write_parquet
 from zonal_datacube_spark.streaming.drain import drain
 
@@ -98,7 +98,7 @@ def q_source_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout: the filter prunes to a single partition directory at planning
     time (asserted in tests/test_sources_ext.py). The oracle scans the
     flat original — identical results, 1/5th the I/O here, 1/k at scale."""
-    ev = spark.read.parquet(partitioned_events_by_type_path(spark, sf_dir))
+    ev = read_layout(spark, partitioned_events_by_type_path(spark, sf_dir))
     return (
         ev.filter(F.col("event_type") == PRUNE_EVENT_TYPE)
         .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"))
@@ -186,7 +186,7 @@ def q_source_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite. Small-files is THE silent killer of 100 TB scans (one task +
     one footer fetch per file); compaction is a repartition-write whose
     only observable change is the file count (asserted in tests)."""
-    ev = spark.read.parquet(compacted_events_path(spark, sf_dir))
+    ev = read_layout(spark, compacted_events_path(spark, sf_dir))
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(F.col("event_id") % 9973).alias("id_checksum"),
@@ -212,7 +212,7 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity is order-free (md5 min/max + length sum), so the key is
     layout-independent — exactly how a 100 TB crawl dump is first
     touched: no schema, no delimiters, line-split only."""
-    lines = spark.read.text(text_lines_path(spark, sf_dir))
+    lines = read_layout(spark, text_lines_path(spark, sf_dir), "text")
     return lines.agg(
         F.count("*").alias("n_lines"),
         F.sum(F.length("value")).alias("total_chars"),
@@ -240,7 +240,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-locked in tests). This is the join-shaped twin of
     q_source_partitioned_pruning's static pruning — at 100 TB, star-join
     dashboards live or die by DPP."""
-    ev = spark.read.parquet(partitioned_events_by_type_path(spark, sf_dir))
+    ev = read_layout(spark, partitioned_events_by_type_path(spark, sf_dir))
     # NOT a LocalRelation (r13 note): with a literal inline dim Catalyst
     # folds the filter into static partition pruning and the
     # dynamicpruningexpression this key exists to DEMONSTRATE never
@@ -403,6 +403,7 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         TICK_STREAM_NAME,
         register_tick_stream_source,
     )
+    from zonal_datacube_spark.streaming.demo import read_sink
 
     register_tick_stream_source(spark)
     out, ck = fresh_dirs(
@@ -421,7 +422,7 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", ck)
         .trigger(availableNow=True),
     )
-    return _tick_bucket_census(spark.read.parquet(out))
+    return _tick_bucket_census(read_sink(spark, out, stream.schema))
 
 
 def q_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,7 +46,7 @@ from zonal_datacube_spark.functions.prefix_sweep import (
 )
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 
 VAR_MIN_QTY = 30.0
 VAR_FLAG = "R"
@@ -471,7 +471,7 @@ def q_scan_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage accounting back to the flat original, which is what the
     oracle scans (it cannot see Spark's hidden columns — the pinned
     literals ARE the cross-engine contract)."""
-    ev = spark.read.parquet(_metadata_layout_path(spark, sf_dir))
+    ev = read_layout(spark, _metadata_layout_path(spark, sf_dir))
     return (
         ev.select(
             "event_type",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.session import scoped_conf
 from zonal_datacube_spark.sources.derived import layout
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 from zonal_datacube_spark.streaming.drain import drain
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
@@ -91,8 +91,9 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (out,) = fresh_dirs("q_stream_foreach_roundtrip", "zds_foreach_")
-    run_stream_foreach_batch(tumbling_counts(events_stream(spark, sf_dir)), spark, out)
-    return read_foreach_batch_result(spark, out)
+    counts = tumbling_counts(events_stream(spark, sf_dir))
+    run_stream_foreach_batch(counts, spark, out)
+    return read_foreach_batch_result(spark, out, counts.schema)
 
 
 def q_stream_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,7 +129,7 @@ def q_stream_tumbling_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     10 of ~31 day directories are scanned. 1-day tumbling windows are
     epoch-aligned UTC, so window start == partition day exactly."""
     lo, hi = TUMBLING_PART_DAYS
-    ev = spark.read.parquet(partitioned_events_path(spark, sf_dir)).filter(
+    ev = read_layout(spark, partitioned_events_path(spark, sf_dir)).filter(
         F.col("day").between(lo, hi)
     )
     return (
@@ -300,20 +301,20 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the equivalent batch self-join."""
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
+        read_sink,
         run_stream_append,
         view_purchase_join,
     )
 
     (out,) = fresh_dirs("q_stream_stream_join", "zds_ssjoin_")
     # stream-stream joins keep one state store PER JOIN SIDE per partition
-    # — the stream scope's 8-partition pin matters double here. The inner
+    # — the stream scope's min(8, slots) width matters double here. The inner
     # join emits matches eagerly, so the trailing no-data batch would only
     # evict state this availableNow run discards — skip it (r14).
+    joined = view_purchase_join(events_stream(spark, sf_dir))
     with scoped_conf(spark, NO_DATA_BATCH_OFF):
-        run_stream_append(
-            view_purchase_join(events_stream(spark, sf_dir)), spark, out
-        )
-    return spark.read.parquet(out)
+        run_stream_append(joined, spark, out)
+    return read_sink(spark, out, joined.schema)
 
 
 def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,15 +329,15 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     region is exactly the deterministic one."""
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
+        read_sink,
         run_stream_append,
         view_purchase_left_join,
     )
 
     (out,) = fresh_dirs("q_stream_outer_join", "zds_ssouter_")
-    run_stream_append(
-        view_purchase_left_join(events_stream(spark, sf_dir)), spark, out
-    )
-    res = spark.read.parquet(out)
+    joined = view_purchase_left_join(events_stream(spark, sf_dir))
+    run_stream_append(joined, spark, out)
+    res = read_sink(spark, out, joined.schema)
     cutoff = F.broadcast(
         load_table(spark, sf_dir, "events").agg(
             F.expr(

@@ -25,7 +25,7 @@ from zonal_datacube_spark.functions.exact import CENTS_SQL, G6_SQL, cents, g6
 from zonal_datacube_spark.functions.local_rel import local_relation
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
 from zonal_datacube_spark.sources.derived import layout
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.sources.loader import load_table, read_layout
 
 EVENT_TYPES = ("signup", "click", "error", "view", "purchase")
 
@@ -109,7 +109,7 @@ def q_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly over base events, proving the MV path exact. At 100 TB the
     MV is ~3 orders of magnitude smaller than the fact table, which is
     the entire point of a continuous aggregate."""
-    mv = spark.read.parquet(daily_events_mv_path(spark, sf_dir))
+    mv = read_layout(spark, daily_events_mv_path(spark, sf_dir))
     return mv.groupBy(
         F.date_format(F.date_trunc("month", "day"), "yyyy-MM").alias("month"),
         "event_type",

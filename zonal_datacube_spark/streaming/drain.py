@@ -16,15 +16,20 @@ from zonal_datacube_spark.session import scoped_conf
 
 DRAIN_TIMEOUT_S = 240
 
+# Confs of every stream run. ``drain`` adds the shuffle width,
+# ``spark.sql.shuffle.partitions`` = min(8, task slots): each shuffle
+# partition is one state-store instance per stateful operator per
+# micro-batch, and each instance loads and commits its own checkpoint
+# files. At fixture scale 8 instances keep the plan shape that 32 would
+# give at a quarter of the commits, and the min() keeps the state stage
+# to one wave of tasks: 8 partitions on a 4-slot `local[4]` run as two
+# waves, the second waiting for the first's store load/commit (on a
+# 4-core host q_stream_foreach_roundtrip's micro-batch went 0.30 → 0.26 s
+# at sf0.1 with 4 partitions). 8- and 32-core runs keep 8. At
+# 100 TB this width goes UP with key cardinality, and is pinned
+# thereafter by the first run's checkpoint (a restart resumes at the
+# width it started with).
 STREAM_CONFS = {
-    # Shuffle partitions for a TRUE-streaming run. Each shuffle partition
-    # opens one state-store instance per stateful operator per
-    # micro-batch, and every instance commits its own checkpoint files;
-    # at fixture scale 32 instances are pure setup overhead, 8 keeps the
-    # identical plan shape. At 100 TB this knob goes UP with key
-    # cardinality, and is pinned thereafter by the first run's
-    # checkpoint.
-    "spark.sql.shuffle.partitions": "8",
     # Commit checkpoint files through Hadoop FileSystem.rename instead of
     # the default FileContext manager. Without libhadoop, FileContext's
     # rename stats source and destination by forking `readlink` (~3.5 ms
@@ -49,12 +54,14 @@ def drain(
     writer: DataStreamWriter,
     timeout_s: float = DRAIN_TIMEOUT_S,
 ) -> StreamingQuery:
-    """Start ``writer`` under ``STREAM_CONFS`` and wait
-    until its query terminates. A query still running after
+    """Start ``writer`` under ``STREAM_CONFS`` and a shuffle width of
+    min(8, task slots), and wait until its query terminates. A query
+    still running after
     ``timeout_s`` seconds (or when ``timeout_s <= 0``) is stopped and
     ``TimeoutError`` raised; a query that failed re-raises its error.
     Returns the terminated query (for ``recentProgress``)."""
-    with scoped_conf(spark, STREAM_CONFS):
+    width = min(8, spark.sparkContext.defaultParallelism)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width), **STREAM_CONFS}):
         q = writer.start()
         drained = False
         try:
